@@ -328,6 +328,11 @@ object Dedup {
   def dedupGroupsResult(ids: DataFrame, idCol: String, pairs: DataFrame,
                         maxIters: Int = 50): GroupsResult = {
     import org.apache.spark.storage.StorageLevel
+    // a cap of zero rounds allows no propagation at all: identity labels,
+    // and no evidence of convergence
+    if (maxIters < 1)
+      return GroupsResult(ids.select(col(idCol), col(idCol).as("group_id")),
+        converged = false, rounds = 0)
     // Both edge directions from ONE evaluation of `pairs` (explode of a
     // 2-struct array), not union(pairs, pairs.swap): the union shape
     // evaluates the whole upstream candidate pipeline TWICE inside the

@@ -46,7 +46,7 @@ object DialectDetector {
     for (d <- Seq(',', ';', '\t', '|'); q <- Seq('"', '\'')) yield (d, q)
 
   def detect(content: String): Dialect = {
-    val sample = content.substring(0, math.min(SampleSize, content.length))
+    val sample = detectionSample(content)
     var best: Option[(Char, Char)] = None
     var bestScore = -1.0
     for ((d, q) <- Candidates) {
@@ -65,6 +65,19 @@ object DialectDetector {
     }
     best.map { case (d, q) => Dialect(d, q) }.getOrElse(Dialect.Excel)
   }
+
+  /** The first [[SampleSize]] chars, ended at their last line break so the
+    * strict parse never hits EOF inside a quoted field cut mid-way (which
+    * would reject every `"` candidate of a fully-quoted file). A sample
+    * without a line break is kept whole.
+    */
+  private def detectionSample(content: String): String =
+    if (content.length <= SampleSize) content
+    else {
+      val head = content.substring(0, SampleSize)
+      val cut = head.lastIndexOf('\n')
+      if (cut > 0) head.substring(0, cut + 1) else head
+    }
 
   /** P = (1/K) · Σ_k N_k · max(α, L_k − 1) / L_k over distinct row lengths.
     * Penalizes jagged layouts; α rescues single-column files.

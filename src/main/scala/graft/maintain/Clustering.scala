@@ -11,8 +11,10 @@ import graft.lake.{DataFile, LakeTable, Snapshot}
   * The job is split into GROUPS of input files (~groupTargetBytes each,
   * grouped by conv range so already-clustered tables re-cluster
   * incrementally). Each group independently: scan -> zkey ->
-  * range-repartition (salted) -> sort -> write -> ledger checkpoint. The
-  * final snapshot commit swaps all inputs for all outputs atomically.
+  * range-repartition (salted) -> sort -> write. Groups run through the
+  * ledger's job protocol ([[Ledger.planOrResume]], [[Ledger.runJob]]):
+  * each checkpoints before the one snapshot commit that swaps all inputs
+  * for all outputs atomically.
   *
   * Why groups: (a) the checkpoint ledger gets real per-partition resume
   * granularity — a job killed at group 7/10 redoes only 3 groups; (b) at
@@ -30,19 +32,17 @@ object Clustering {
   final case class Result(snapshot: Snapshot, groups: Int, resumedGroups: Int,
                           rowsRewritten: Long)
 
+  /** Salt buckets breaking ties between duplicate keys inside
+    * `repartitionByRange`'s sampled boundaries.
+    */
+  private val Salts = 16
+
   /** `interruptAfter`: chaos/testing hook — abort (like a crash) after N
     * groups have checkpointed, exercising ledger resume.
-    */
-  /** `curve`: "z" (default, bit-interleave) or "hilbert" (better worst-case
+    *
+    * `curve`: "z" (default, bit-interleave) or "hilbert" (better worst-case
     * locality, no curve jumps). Persisted in the plan so a resumed job
     * keeps the exact curve it started with.
-    */
-  /** `reuseCuts`: when true (default) and the table was ALREADY clustered,
-    * recluster jobs reuse the previous cluster job's persisted quantile
-    * cuts instead of re-running the sample pass — quantiles drift slowly
-    * under incremental merges, and the cuts only steer layout (never
-    * correctness), so skipping the one serial-ish plan scan shrinks the
-    * maintenance cadence's fixed cost.
     *
     * `incremental`: when true (default) and the table was already
     * clustered, ONLY groups containing at least one file added since that
@@ -55,124 +55,51 @@ object Clustering {
   def cluster(table: LakeTable, jobId: String,
               targetFileRows: Long = 1L << 20,
               groupTargetBytes: Long = 256L << 20,
-              salts: Int = 16,
               interruptAfter: Int = Int.MaxValue,
               curve: String = "z",
-              reuseCuts: Boolean = true,
               incremental: Boolean = true): Result = {
-    val spark = table.spark
-
-    // Idempotence: a snapshot already committed by THIS CLUSTER job wins
-    // outright (operation-scoped: a compact job sharing the id must not
-    // masquerade as the cluster result). O(1) ledger marker, not a
-    // full-history walk.
-    Ledger.committedJobSnapshot(table, jobId, "cluster").foreach { s =>
-      return Result(s, 0, 0, 0L)
-    }
-
     // Plan (or resume a previously persisted plan — NEVER replan mid-job;
     // the quantile cuts ARE the curve, so they persist with the plan).
-    val plan = Ledger.readPlan(table, jobId) match {
-      case Some(p) =>
-        require(p.kind.isEmpty || p.kind == "cluster",
-          s"ledger id collision: plan for $jobId belongs to a '${p.kind}' job")
-        require(table.currentSnapshotId.contains(p.baseSnapshotId),
-          s"ledger plan for $jobId was computed on snapshot ${p.baseSnapshotId} " +
-            s"but current is ${table.currentSnapshotId}; stale plan")
-        p
-      case None =>
-        val tPlan = System.nanoTime()
-        val files = table.currentFiles
-          .sortBy(f => (f.minConv.getOrElse(""), f.minTurn.getOrElse(0)))
-        val allGroups = planGroups(files, groupTargetBytes)
-        val toDo = if (incremental) dirtyGroups(table, allGroups) else allGroups
-        val planned = toDo.map(_.map(_.path))
-        val (convCuts, turnCuts) =
-          (if (reuseCuts) previousCuts(table) else None)
-            .getOrElse(quantileCuts(table, files))
-        val base = table.currentSnapshotId.get
-        Ledger.writePlan(table, jobId, base, planned, convCuts, turnCuts, curve,
-          kind = "cluster")
-        logInfoTime("cluster plan (incl. quantile pass)", tPlan)
-        Ledger.readPlan(table, jobId).get
+    val plan = Ledger.planOrResume(table, jobId, "cluster", kind = "cluster") {
+      val files = table.currentFiles
+        .sortBy(f => (f.minConv.getOrElse(""), f.minTurn.getOrElse(0)))
+      val allGroups = planGroups(files, groupTargetBytes)
+      val toDo = if (incremental) dirtyGroups(table, allGroups) else allGroups
+      // quantiles drift slowly under merges and only steer layout, never
+      // correctness: a recluster reuses the last job's cuts, no sample pass
+      val (convCuts, turnCuts) = previousCuts(table).getOrElse(quantileCuts(table, files))
+      Ledger.Plan(table.currentSnapshotId.get, toDo.map(_.map(_.path)),
+        convCuts, turnCuts, curve)
+    } match {
+      case Left(s) => return Result(s, 0, 0, 0L) // committed, or nothing dirty
+      case Right(p) => p
     }
-    val groups = plan.groups
-    if (groups.isEmpty) // nothing dirty: the table is already clustered
-      return Result(table.currentSnapshot.get, 0, 0, 0L)
 
-    val entryByPath = table.currentEntries.map(e => e.file.path -> e).toMap
-    val byPath = (p: String) => entryByPath(p).file
-    val done = Ledger.readTasks(table, jobId).filter(_._2.state == "done")
-    val resumedCount = new java.util.concurrent.atomic.AtomicInteger(0)
-    val rewrittenRows = new java.util.concurrent.atomic.AtomicLong(0L)
-    val executedCount = new java.util.concurrent.atomic.AtomicInteger(0)
-
-    def runGroup(paths: Vector[String], gi: Int): Vector[DataFile] =
-      done.get(gi) match {
-        case Some(t) => resumedCount.incrementAndGet(); t.outFiles
-        case None =>
-          val t0 = System.nanoTime()
-          val inFiles = paths.map(byPath(_))
-          val bytes = inFiles.map(_.bytes).sum
-          val rows = inFiles.map(_.rows).sum
-          try {
-            if (executedCount.getAndIncrement() >= interruptAfter)
-              throw new InterruptedException(s"chaos interrupt after $interruptAfter groups")
-            val nOut = math.max(1, math.ceil(rows.toDouble / targetFileRows).toInt)
-
-            val zkey =
-              if (plan.curve == "hilbert")
-                ZOrder.quantileHilbertKey(col("conv_id"), col("turn_idx"),
-                  plan.convCuts, plan.turnCuts)
-              else ZOrder.quantileClusterKey(col("conv_id"), col("turn_idx"),
-                plan.convCuts, plan.turnCuts)
-            val salt = pmod(xxhash64(col("conv_id"), col("turn_idx")), lit(salts))
-            val df = table.readData(paths.map(table.absData))
-              .withColumn("__zkey", zkey)
-              .withColumn("__salt", salt)
-              .repartitionByRange(nOut, col("__zkey"), col("__salt"))
-              .sortWithinPartitions(col("__zkey"))
-              .drop("__zkey", "__salt")
-
-            val out = table.writeDataFiles(df, s"$jobId-g$gi")
-            rewrittenRows.addAndGet(rows)
-            Ledger.writeTask(table, Ledger.TaskRow(
-              jobId, gi, "done", paths, out, rows, bytes,
-              (System.nanoTime() - t0) / 1000000))
-            out
-          } catch { case e: Throwable =>
-            // Failed groups leave an `error` row with the message (reference
-            // parity: file_repository.py:95-109); resume recomputes them —
-            // writeTask's atomic replace flips error -> done on success.
-            Ledger.writeTask(table, Ledger.TaskRow(jobId, gi, "error", paths,
-              Vector.empty, rows, bytes, (System.nanoTime() - t0) / 1000000,
-              errorMessage = String.valueOf(e.getMessage)))
-            throw e
-          }
-      }
-
-    // Groups are independent: submit concurrently (each is its own shuffle)
-    // unless the chaos-interrupt test hook needs deterministic order.
-    val indexed = groups.zipWithIndex
-    val outputs =
-      if (interruptAfter != Int.MaxValue) indexed.map { case (p, gi) => runGroup(p, gi) }
-      else Parallel.mapInParallel(indexed,
-        parallelism = math.max(2, spark.sparkContext.defaultParallelism / 8)) {
-        case (p, gi) => runGroup(p, gi)
-      }
-    val resumed = resumedCount.get()
-    val rewritten = rewrittenRows.get()
-
-    val tCommit = System.nanoTime()
-    val inputSet = groups.flatten.toSet
-    val removed = inputSet.toVector.sorted.map(entryByPath(_))
-    val snap = table.commitDelta(outputs.flatten, removed, "cluster",
-      summary = Map("job_id" -> jobId,
-        "groups" -> groups.size.toString,
-        "rows_rewritten" -> rewritten.toString))
-    Ledger.markCommitted(table, jobId, "cluster", snap.id)
-    logInfoTime("cluster commit", tCommit)
-    Result(snap, groups.size, resumed, rewritten)
+    // Groups are independent shuffles: submitted concurrently.
+    def rewritten(tasks: Vector[(Ledger.TaskRow, Boolean)]): Long =
+      tasks.collect { case (t, false) => t.rows }.sum
+    val (snap, tasks) = Ledger.runJob(table, jobId, "cluster", plan,
+      parallelism = Ledger.shuffleParallelism(table), interruptAfter) { (in, gi) =>
+      val nOut = math.max(1, math.ceil(in.map(_.rows).sum.toDouble / targetFileRows).toInt)
+      val zkey =
+        if (plan.curve == "hilbert")
+          ZOrder.quantileHilbertKey(col("conv_id"), col("turn_idx"),
+            plan.convCuts, plan.turnCuts)
+        else ZOrder.quantileClusterKey(col("conv_id"), col("turn_idx"),
+          plan.convCuts, plan.turnCuts)
+      val salt = pmod(xxhash64(col("conv_id"), col("turn_idx")), lit(Salts))
+      val df = table.readData(in.map(f => table.absData(f.path)))
+        .withColumn("__zkey", zkey)
+        .withColumn("__salt", salt)
+        .repartitionByRange(nOut, col("__zkey"), col("__salt"))
+        .sortWithinPartitions(col("__zkey"))
+        .drop("__zkey", "__salt")
+      table.writeDataFiles(df, s"$jobId-g$gi")
+    } { tasks =>
+      Map("groups" -> plan.groups.size.toString,
+        "rows_rewritten" -> rewritten(tasks).toString)
+    }
+    Result(snap, plan.groups.size, tasks.count(_._2), rewritten(tasks))
   }
 
   /** The most recent cluster commit, resolved in O(1) metadata reads via
@@ -211,9 +138,6 @@ object Clustering {
       .flatMap(_.summary.get("job_id"))
       .flatMap(jid => Ledger.readPlan(table, jid))
       .collect { case p if p.convCuts.nonEmpty => (p.convCuts, p.turnCuts) }
-
-  private def logInfoTime(what: String, t0: Long): Unit =
-    System.err.println(f"[graft.cluster] $what: ${(System.nanoTime() - t0) / 1e9}%.2f s")
 
   /** One approxQuantile pass at plan time computes the bucket cuts for both
     * Z dimensions — quantiles, not min/max, so key-space outliers cannot

@@ -2,15 +2,15 @@ package graft.maintain
 
 import org.apache.spark.sql.functions._
 
-import graft.functions.ZOrder
 import graft.lake.{DataFile, LakeTable, Snapshot}
 
 /** Bin-packing small-file compaction: files below `smallFileBytes` are
   * packed first-fit-decreasing into ~targetBytes bins; each bin is read,
   * re-sorted on the cluster key and rewritten as ONE file — a pure
   * coalesce, NO shuffle (the expensive global ordering work belongs to
-  * [[Clustering]], not here). Each bin checkpoints to the ledger, so a
-  * restarted job skips finished bins.
+  * [[Clustering]], not here). Bins run through the ledger's job protocol
+  * ([[Ledger.planOrResume]], [[Ledger.runJob]]), so a restarted job skips
+  * finished bins.
   */
 object Compaction {
 
@@ -27,80 +27,32 @@ object Compaction {
               smallFileBytes: Long = 32L << 20,
               targetBytes: Long = 128L << 20,
               excludePaths: Set[String] = Set.empty): Result = {
-    val spark = table.spark
-
-    // operation-scoped idempotence: only a COMPACT snapshot with this job
-    // id short-circuits (see the matching guard in Clustering). O(1) ledger
-    // marker, not a full-history walk.
-    Ledger.committedJobSnapshot(table, jobId, "compact").foreach { s =>
-      return Result(Some(s), 0, 0, 0)
+    val plan = Ledger.planOrResume(table, jobId, "compact", kind = "compact") {
+      val small = table.currentFiles.filter(f =>
+        f.bytes < smallFileBytes && !excludePaths(f.path))
+      val bins = firstFitDecreasing(small, targetBytes)
+        .filter(_.size > 1) // a lone small file gains nothing from rewrite
+        .map(_.map(_.path))
+      Ledger.Plan(table.currentSnapshotId.get, bins)
+    } match {
+      case Left(s) => return Result(Some(s), 0, 0, 0)
+      case Right(p) => p
     }
-
-    val plannedBins = Ledger.readPlan(table, jobId) match {
-      case Some(p) =>
-        require(p.kind.isEmpty || p.kind == "compact",
-          s"ledger id collision: plan for $jobId belongs to a '${p.kind}' job")
-        require(table.currentSnapshotId.contains(p.baseSnapshotId),
-          s"stale compaction plan for $jobId (base ${p.baseSnapshotId})")
-        p.groups
-      case None =>
-        val small = table.currentFiles.filter(f =>
-          f.bytes < smallFileBytes && !excludePaths(f.path))
-        val bins = firstFitDecreasing(small, targetBytes)
-          .filter(_.size > 1) // a lone small file gains nothing from rewrite
-          .map(_.map(_.path))
-        Ledger.writePlan(table, jobId, table.currentSnapshotId.get, bins, kind = "compact")
-        bins
-    }
-
-    if (plannedBins.isEmpty) return Result(None, 0, 0, 0)
-
-    val entryByPath = table.currentEntries.map(e => e.file.path -> e).toMap
-    val byPath = (p: String) => entryByPath(p).file
-    val done = Ledger.readTasks(table, jobId).filter(_._2.state == "done")
-    val resumedCount = new java.util.concurrent.atomic.AtomicInteger(0)
 
     // Bins are single-task coalesce jobs: submit them CONCURRENTLY so they
     // fill the executors instead of running one task at a time.
-    val outputs = Parallel.mapInParallel(plannedBins.zipWithIndex,
-      parallelism = spark.sparkContext.defaultParallelism) {
-      case (paths, bi) =>
-        done.get(bi) match {
-          case Some(t) => resumedCount.incrementAndGet(); t.outFiles
-          case None =>
-            val t0 = System.nanoTime()
-            val inFiles = paths.map(byPath(_))
-            try {
-              val df = table.readData(paths.map(table.absData))
-                .coalesce(1) // merge partitions without shuffling
-                .sortWithinPartitions(col("conv_id"), col("turn_idx"))
-              val out = table.writeDataFiles(df, s"$jobId-b$bi")
-              Ledger.writeTask(table, Ledger.TaskRow(jobId, bi, "done", paths, out,
-                inFiles.map(_.rows).sum, inFiles.map(_.bytes).sum,
-                (System.nanoTime() - t0) / 1000000))
-              out
-            } catch { case e: Throwable =>
-              // Failed tasks leave an `error` row (reference parity:
-              // file_repository.py:95-109 pending->processed/error with
-              // error_message); resume recomputes them.
-              Ledger.writeTask(table, Ledger.TaskRow(jobId, bi, "error", paths,
-                Vector.empty, inFiles.map(_.rows).sum, inFiles.map(_.bytes).sum,
-                (System.nanoTime() - t0) / 1000000,
-                errorMessage = String.valueOf(e.getMessage)))
-              throw e
-            }
-        }
+    val nCompacted = plan.groups.flatten.distinct.size
+    val (snap, tasks) = Ledger.runJob(table, jobId, "compact", plan,
+      parallelism = table.spark.sparkContext.defaultParallelism) { (in, bi) =>
+      val df = table.readData(in.map(f => table.absData(f.path)))
+        .coalesce(1) // merge partitions without shuffling
+        .sortWithinPartitions(col("conv_id"), col("turn_idx"))
+      table.writeDataFiles(df, s"$jobId-b$bi")
+    } { _ =>
+      Map("bins" -> plan.groups.size.toString,
+        "files_compacted" -> nCompacted.toString)
     }
-    val resumed = resumedCount.get()
-
-    val inputSet = plannedBins.flatten.toSet
-    val removed = inputSet.toVector.sorted.map(entryByPath(_))
-    val snap = table.commitDelta(outputs.flatten, removed, "compact",
-      summary = Map("job_id" -> jobId,
-        "bins" -> plannedBins.size.toString,
-        "files_compacted" -> inputSet.size.toString))
-    Ledger.markCommitted(table, jobId, "compact", snap.id)
-    Result(Some(snap), plannedBins.size, resumed, inputSet.size)
+    Result(Some(snap), plan.groups.size, tasks.count(_._2), nCompacted)
   }
 
   /** Classic FFD: sort descending by size, place each file into the first

@@ -1,6 +1,6 @@
 package graft.maintain
 
-import java.nio.file.{Files, Paths, StandardCopyOption}
+import java.nio.file.{Files, StandardCopyOption}
 
 import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
@@ -38,7 +38,9 @@ import graft.lake.{DataFile, LakeTable, Snapshot}
   * is O(files containing victims): each ledger-checkpointed task anti-joins
   * one bounded file group against ITS OWN victims (pre-filtered by file
   * provenance), so a pass removing 0.1% of turns rewrites ~0.1% of files.
-  * Resume skips finished groups exactly like [[Clustering]].
+  * The groups run through the ledger's job protocol
+  * ([[Ledger.planOrResume]], [[Ledger.runJob]]), so resume skips finished
+  * groups.
   *
   * Rows with empty normalized text are never deduplicated (a transcript's
   * legitimately empty turns are not "duplicates" of each other), and
@@ -68,10 +70,6 @@ object Dedupe {
     require(Set("turn", "conversation")(unit), s"unknown dedupe unit $unit")
     val spark = table.spark
 
-    Ledger.committedJobSnapshot(table, jobId, "dedupe").foreach { s =>
-      return Result(s, 0L, 0, 0, 0, converged = true)
-    }
-
     // empty table: nothing to dedupe — a no-op, not an error, so a
     // maintenance cycle with dedupe enabled runs cleanly on a fresh table
     if (table.currentFiles.isEmpty)
@@ -79,8 +77,7 @@ object Dedupe {
         throw new IllegalStateException(s"no table at ${table.root}")),
         0L, 0, 0, 0, converged = true)
 
-    val jobDir = table.ledgerDir.resolve(jobId)
-    val victimsDir = jobDir.resolve("victims.parquet")
+    val victimsDir = table.ledgerDir.resolve(jobId).resolve("victims.parquet")
     // the plan kind pins the SEMANTICS-BEARING parameters: a resume with a
     // different mode/unit/minTokens must fail loudly instead of silently
     // applying a victim set computed under other rules (Clustering pins its
@@ -90,127 +87,76 @@ object Dedupe {
       else s"dedupe:$mode:$unit:$minTokens"
 
     // ---- plan: compute + persist the victim set, group touched files ----
-    val plan = Ledger.readPlan(table, jobId) match {
-      case Some(p) =>
-        require(p.kind == planKind,
-          s"ledger plan for $jobId is '${p.kind}' but this invocation is " +
-            s"'$planKind' — job-id collision or changed parameters; use a " +
-            "fresh jobId")
-        require(table.currentSnapshotId.contains(p.baseSnapshotId),
-          s"ledger plan for $jobId was computed on snapshot ${p.baseSnapshotId} " +
-            s"but current is ${table.currentSnapshotId}; stale plan")
-        require(Files.exists(victimsDir),
-          s"dedupe plan for $jobId exists but its victim set is missing")
-        p
-      case None =>
-        val victims =
-          if (unit == "conversation")
-            computeConvVictims(table, mode, minTokens, minJaccard, maxIters,
-              maxConvChars)
-          else computeVictims(table, mode, minTokens, minJaccard, maxIters)
-        // atomic publish: write to a tmp dir, move over — a crash mid-write
-        // can never leave a torn victim set a resume would trust
-        val tmp = jobDir.resolve("victims.parquet.tmp")
-        LakeTable.deleteRecursively(tmp)
-        victims.write.mode("overwrite").parquet(tmp.toString)
-        victims.unpersist() // no-op for the exact mode's unpersisted frame
-        LakeTable.deleteRecursively(victimsDir)
-        Files.move(tmp, victimsDir, StandardCopyOption.ATOMIC_MOVE)
+    val plan = Ledger.planOrResume(table, jobId, "dedupe", planKind) {
+      val victims =
+        if (unit == "conversation")
+          computeConvVictims(table, mode, minTokens, minJaccard, maxIters,
+            maxConvChars)
+        else computeVictims(table, mode, minTokens, minJaccard, maxIters)
+      // atomic publish: write to a tmp dir, move over — a crash mid-write
+      // can never leave a torn victim set a resume would trust
+      val tmp = victimsDir.resolveSibling("victims.parquet.tmp")
+      LakeTable.deleteRecursively(tmp)
+      victims.write.mode("overwrite").parquet(tmp.toString)
+      victims.unpersist() // no-op for the exact mode's unpersisted frame
+      LakeTable.deleteRecursively(victimsDir)
+      Files.move(tmp, victimsDir, StandardCopyOption.ATOMIC_MOVE)
 
-        // touched files = those holding at least one victim row; everything
-        // else carries forward without being read again
-        val touchedPaths = spark.read.parquet(victimsDir.toString)
-          .select("__src").distinct().collect().map(_.getString(0)).toVector.sorted
-        val byPath = table.currentFiles.map(f => f.path -> f).toMap
-        val touched = touchedPaths.map(byPath(_))
-        val groups = Clustering.greedyGroups(
-          touched.sortBy(f => (f.minConv.getOrElse(""), f.minTurn.getOrElse(0))),
-          groupTargetBytes).filter(_.nonEmpty)
-        Ledger.writePlan(table, jobId, table.currentSnapshotId.get,
-          groups.map(_.map(_.path)), kind = planKind)
-        Ledger.readPlan(table, jobId).get
+      // touched files = those holding at least one victim row; everything
+      // else carries forward without being read again
+      val touchedPaths = spark.read.parquet(victimsDir.toString)
+        .select("__src").distinct().collect().map(_.getString(0)).toVector.sorted
+      val byPath = table.currentFiles.map(f => f.path -> f).toMap
+      val touched = touchedPaths.map(byPath(_))
+      val groups = Clustering.greedyGroups(
+        touched.sortBy(f => (f.minConv.getOrElse(""), f.minTurn.getOrElse(0))),
+        groupTargetBytes).filter(_.nonEmpty)
+      Ledger.Plan(table.currentSnapshotId.get, groups.map(_.map(_.path)))
+    } match {
+      case Left(s) => return Result(s, 0L, 0, 0, 0, converged = true)
+      case Right(p) => p
     }
-
-    if (plan.groups.isEmpty || plan.groups.forall(_.isEmpty)) {
-      // nothing to remove: no commit, no empty files (same rule as a no-op
-      // merge); the job is still marked so replays stay O(1)
-      val cur = table.currentSnapshot.get
-      Ledger.markCommitted(table, jobId, "dedupe", cur.id)
-      return Result(cur, 0L, 0, 0, 0, converged = true)
-    }
+    require(Files.exists(victimsDir),
+      s"dedupe plan for $jobId exists but its victim set is missing")
 
     val victims = spark.read.parquet(victimsDir.toString)
       .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
     val nVictims = victims.count()
+    val nTouched = plan.groups.map(_.size).sum
 
-    val entryByPath = table.currentEntries.map(e => e.file.path -> e).toMap
-    val done = Ledger.readTasks(table, jobId).filter(_._2.state == "done")
-    val resumedCount = new java.util.concurrent.atomic.AtomicInteger(0)
-    val executedCount = new java.util.concurrent.atomic.AtomicInteger(0)
-
-    def runGroup(paths: Vector[String], gi: Int): Vector[DataFile] =
-      done.get(gi) match {
-        case Some(t) => resumedCount.incrementAndGet(); t.outFiles
-        case None =>
-          val t0 = System.nanoTime()
-          val inFiles = paths.map(entryByPath(_).file)
-          val rows = inFiles.map(_.rows).sum
-          val bytes = inFiles.map(_.bytes).sum
-          try {
-            if (executedCount.getAndIncrement() >= interruptAfter)
-              throw new InterruptedException(s"chaos interrupt after $interruptAfter groups")
-            // this group's victims only: provenance pre-filter keeps the
-            // anti-join proportional to the group, not the whole pass
-            val groupVictims = victims.where(col("__src").isin(paths: _*))
-              .select("conv_id", "turn_idx")
-            // range-repartition on the key before writing: if the anti-join
-            // shuffled (hash on key), the survivors would otherwise land in
-            // hash-partitioned output files whose conv ranges span the whole
-            // group — wide min/max stats that gut pruning until the next
-            // recluster. The group is a conv-contiguous slab, so this is a
-            // small intra-slab exchange and the outputs keep TIGHT ranges.
-            val survivors = rows - groupVictims.count()
-            val nOut = math.max(1, math.ceil(survivors.toDouble / targetFileRows).toInt)
-            // a slab that was ENTIRELY duplicates leaves nothing to write:
-            // an empty parquet part would enter the manifest stats-less
-            // (never pruned) — same rule as the no-op merge
-            val out =
-              if (survivors == 0L) Vector.empty[graft.lake.DataFile]
-              else table.writeDataFiles(
-                table.readData(paths.map(table.absData))
-                  .join(groupVictims, Seq("conv_id", "turn_idx"), "left_anti")
-                  .repartitionByRange(nOut, col("conv_id"), col("turn_idx"))
-                  .sortWithinPartitions("conv_id", "turn_idx"),
-                s"$jobId-g$gi")
-            Ledger.writeTask(table, Ledger.TaskRow(jobId, gi, "done", paths,
-              out, rows, bytes, (System.nanoTime() - t0) / 1000000))
-            out
-          } catch { case e: Throwable =>
-            Ledger.writeTask(table, Ledger.TaskRow(jobId, gi, "error", paths,
-              Vector.empty, rows, bytes, (System.nanoTime() - t0) / 1000000,
-              errorMessage = String.valueOf(e.getMessage)))
-            throw e
-          }
-      }
-
-    val indexed = plan.groups.zipWithIndex
-    val outputs =
-      if (interruptAfter != Int.MaxValue) indexed.map { case (p, gi) => runGroup(p, gi) }
-      else Parallel.mapInParallel(indexed,
-        parallelism = math.max(2, spark.sparkContext.defaultParallelism / 8)) {
-        case (p, gi) => runGroup(p, gi)
-      }
-    victims.unpersist()
-
-    val removed = plan.groups.flatten.sorted.map(entryByPath(_))
-    val snap = table.commitDelta(outputs.flatten, removed, "dedupe",
-      summary = Map("job_id" -> jobId,
-        "mode" -> mode,
+    val (snap, tasks) = Ledger.runJob(table, jobId, "dedupe", plan,
+      parallelism = Ledger.shuffleParallelism(table), interruptAfter) { (in, gi) =>
+      val paths = in.map(_.path)
+      // this group's victims only: provenance pre-filter keeps the
+      // anti-join proportional to the group, not the whole pass
+      val groupVictims = victims.where(col("__src").isin(paths: _*))
+        .select("conv_id", "turn_idx")
+      // range-repartition on the key before writing: if the anti-join
+      // shuffled (hash on key), the survivors would otherwise land in
+      // hash-partitioned output files whose conv ranges span the whole
+      // group — wide min/max stats that gut pruning until the next
+      // recluster. The group is a conv-contiguous slab, so this is a
+      // small intra-slab exchange and the outputs keep TIGHT ranges.
+      val survivors = in.map(_.rows).sum - groupVictims.count()
+      val nOut = math.max(1, math.ceil(survivors.toDouble / targetFileRows).toInt)
+      // a slab that was ENTIRELY duplicates leaves nothing to write:
+      // an empty parquet part would enter the manifest stats-less
+      // (never pruned) — same rule as the no-op merge
+      if (survivors == 0L) Vector.empty[DataFile]
+      else table.writeDataFiles(
+        table.readData(paths.map(table.absData))
+          .join(groupVictims, Seq("conv_id", "turn_idx"), "left_anti")
+          .repartitionByRange(nOut, col("conv_id"), col("turn_idx"))
+          .sortWithinPartitions("conv_id", "turn_idx"),
+        s"$jobId-g$gi")
+    } { _ =>
+      Map("mode" -> mode,
         "duplicate_rows" -> nVictims.toString,
-        "touched_files" -> removed.size.toString))
-    Ledger.markCommitted(table, jobId, "dedupe", snap.id)
-    Result(snap, nVictims, removed.size, plan.groups.size,
-      resumedCount.get(), converged = true)
+        "touched_files" -> nTouched.toString)
+    }
+    victims.unpersist()
+    Result(snap, nVictims, nTouched, plan.groups.size, tasks.count(_._2),
+      converged = true)
   }
 
   /** One corpus pass producing the victim rows: (conv_id, turn_idx, __src)

@@ -1,6 +1,6 @@
 package graft.maintain
 
-import java.nio.file.Files
+import com.fasterxml.jackson.databind.JsonNode
 
 import org.apache.spark.sql.functions._
 
@@ -66,168 +66,121 @@ object DeleteFrom {
       convRange.map(r => s"|conv:${r._1}..${r._2}").getOrElse("") +
       turnRange.map(r => s"|turn:${r._1}..${r._2}").getOrElse("")
 
-    Ledger.committedJobSnapshot(table, jobId, "delete").foreach { s =>
-      return Result(s, 0L, 0, 0L, 0)
-    }
     val snap0 = table.currentSnapshot.getOrElse(
       throw new IllegalStateException(s"no table at ${table.root}"))
     if (table.currentFiles.isEmpty)
       return Result(snap0, 0L, 0, 0L, 0)
 
     val pred = expr(predSql)
-    val totalFiles = snap0.manifests.map(_.entryCount).sum
+    def fileCount(s: Snapshot): Long = s.manifests.map(_.entryCount).sum
+    val totalFiles = fileCount(snap0)
 
     // ---- plan: predicate-derived pruning + per-file victim counts -------
-    val (plan, counts) = Ledger.readPlan(table, jobId) match {
-      case Some(p) =>
-        require(p.kind == planKind,
-          s"ledger plan for $jobId is '${p.kind}' but this invocation is " +
-            s"'$planKind' — job-id collision or changed predicate; use a " +
-            "fresh jobId")
-        require(table.currentSnapshotId.contains(p.baseSnapshotId),
-          s"stale plan for $jobId (base ${p.baseSnapshotId}, " +
-            s"current ${table.currentSnapshotId})")
-        val c = readCounts(table, jobId).getOrElse(throw new IllegalStateException(
-          s"delete plan for $jobId exists but its victim counts are missing"))
-        (p, c)
-      case None =>
-        // The prune boxes come from the PREDICATE — hints are validated,
-        // never trusted: a hint that cannot contain every derived box means
-        // the predicate may match outside it (a partial DELETE that would
-        // look successful), so fail loudly instead.
-        val boxes = IntervalDnf.extract(
-          IntervalDnf.analyzedCondition(spark, table.schema.toStruct, predSql))
-        convRange.foreach { case (lo, hi) =>
-          require(boxes.forall(_.conv.within(lo, hi)),
-            s"convRange hint [$lo..$hi] is narrower than what the predicate " +
-              s"'$predSql' can match — a hinted DELETE must never silently " +
-              "skip matching rows; drop the hint or widen it")
-        }
-        turnRange.foreach { case (lo, hi) =>
-          require(boxes.forall(_.turn.within(lo, hi)),
-            s"turnRange hint [$lo..$hi] is narrower than what the predicate " +
-              s"'$predSql' can match; drop the hint or widen it")
-        }
-        val pruned = table.overlappingEntriesBoxes(snap0, boxes)
-        // ONE pass over the candidates: matching rows per file. Catalyst
-        // prunes the read to the predicate's columns; the result is
-        // metadata-sized (one row per file WITH victims).
-        val perFile: Map[String, Long] =
-          if (pruned.entries.isEmpty) Map.empty
-          else table.readData(pruned.entries.map(e => table.absData(e.file.path)))
-            .where(coalesce(pred.cast("boolean"), lit(false)))
-            .groupBy(concat(lit("data/"),
-              element_at(split(input_file_name(), "/"), -1)).as("__src"))
-            .count().collect().map(r => r.getString(0) -> r.getLong(1)).toMap
-        // counts sidecar FIRST, plan second: a plan on disk implies its
-        // counts exist, so resume never trusts a half-planned job
-        writeCounts(table, jobId, predSql, perFile,
-          prunedCandidates = pruned.entries.size.toLong)
-        val byPath = pruned.entries.map(e => e.file.path -> e.file).toMap
-        val withVictims = perFile.keys.toVector.sorted.map(byPath(_))
-        val groups = Clustering.greedyGroups(
-          withVictims.sortBy(f => (f.minConv.getOrElse(""), f.minTurn.getOrElse(0))),
-          groupTargetBytes).filter(_.nonEmpty)
-        Ledger.writePlan(table, jobId, snap0.id, groups.map(_.map(_.path)),
-          kind = planKind)
-        (Ledger.readPlan(table, jobId).get, perFile)
-    }
-    if (plan.groups.isEmpty || plan.groups.forall(_.isEmpty)) {
-      // predicate matched nothing: commit NOTHING — zero file churn
-      Ledger.markCommitted(table, jobId, "delete", snap0.id)
-      return Result(snap0, 0L, 0, totalFiles, 0,
-        candidateFiles = 0L, totalFiles = totalFiles)
-    }
-
-    val entryByPath = table.currentEntries.map(e => e.file.path -> e).toMap
-    val done = Ledger.readTasks(table, jobId).filter(_._2.state == "done")
-    val resumedCount = new java.util.concurrent.atomic.AtomicInteger(0)
-    val executedCount = new java.util.concurrent.atomic.AtomicInteger(0)
-    val deletedRows = new java.util.concurrent.atomic.AtomicLong(0L)
-
-    def runGroup(paths: Vector[String], gi: Int): Vector[DataFile] =
-      done.get(gi) match {
-        case Some(t) =>
-          resumedCount.incrementAndGet()
-          deletedRows.addAndGet(t.rows - t.outFiles.map(_.rows).sum)
-          t.outFiles
-        case None =>
-          val t0 = System.nanoTime()
-          val inFiles = paths.map(entryByPath(_).file)
-          val rows = inFiles.map(_.rows).sum
-          val bytes = inFiles.map(_.bytes).sum
-          val victims = paths.map(counts.getOrElse(_, 0L)).sum
-          val nSurv = rows - victims
-          try {
-            if (executedCount.getAndIncrement() >= interruptAfter)
-              throw new InterruptedException(s"chaos interrupt after $interruptAfter groups")
-            val out =
-              if (nSurv == 0L) Vector.empty[DataFile]
-              else {
-                val nOut = math.max(1, math.ceil(nSurv.toDouble / targetFileRows).toInt)
-                // survivors = NOT matching; null predicate results survive
-                // too (SQL DELETE: only rows where the condition is TRUE
-                // are deleted). Single scan — no separate count.
-                table.writeDataFiles(
-                  table.readData(paths.map(table.absData))
-                    .where(!coalesce(pred.cast("boolean"), lit(false)))
-                    .repartitionByRange(nOut, col("conv_id"), col("turn_idx"))
-                    .sortWithinPartitions("conv_id", "turn_idx"),
-                  s"$jobId-g$gi")
-              }
-            val written = out.map(_.rows).sum
-            require(written == nSurv,
-              s"DELETE group $gi wrote $written survivors but the plan " +
-                s"counted $nSurv — non-deterministic predicate? refusing to commit")
-            deletedRows.addAndGet(victims)
-            Ledger.writeTask(table, Ledger.TaskRow(jobId, gi, "done", paths,
-              out, rows, bytes, (System.nanoTime() - t0) / 1000000))
-            out
-          } catch { case e: Throwable =>
-            Ledger.writeTask(table, Ledger.TaskRow(jobId, gi, "error", paths,
-              Vector.empty, rows, bytes, (System.nanoTime() - t0) / 1000000,
-              errorMessage = String.valueOf(e.getMessage)))
-            throw e
-          }
+    val plan = Ledger.planOrResume(table, jobId, "delete", planKind) {
+      // The prune boxes come from the PREDICATE — hints are validated,
+      // never trusted: a hint that cannot contain every derived box means
+      // the predicate may match outside it (a partial DELETE that would
+      // look successful), so fail loudly instead.
+      val boxes = IntervalDnf.extract(
+        IntervalDnf.analyzedCondition(spark, table.schema.toStruct, predSql))
+      convRange.foreach { case (lo, hi) =>
+        require(boxes.forall(_.conv.within(lo, hi)),
+          s"convRange hint [$lo..$hi] is narrower than what the predicate " +
+            s"'$predSql' can match — a hinted DELETE must never silently " +
+            "skip matching rows; drop the hint or widen it")
       }
-
-    val indexed = plan.groups.zipWithIndex
-    val outputs =
-      if (interruptAfter != Int.MaxValue) indexed.map { case (p, gi) => runGroup(p, gi) }
-      else Parallel.mapInParallel(indexed,
-        parallelism = math.max(2, spark.sparkContext.defaultParallelism / 8)) {
-        case (p, gi) => runGroup(p, gi)
+      turnRange.foreach { case (lo, hi) =>
+        require(boxes.forall(_.turn.within(lo, hi)),
+          s"turnRange hint [$lo..$hi] is narrower than what the predicate " +
+            s"'$predSql' can match; drop the hint or widen it")
       }
-
+      val pruned = table.overlappingEntriesBoxes(snap0, boxes)
+      // ONE pass over the candidates: matching rows per file. Catalyst
+      // prunes the read to the predicate's columns; the result is
+      // metadata-sized (one row per file WITH victims).
+      val perFile: Map[String, Long] =
+        if (pruned.entries.isEmpty) Map.empty
+        else table.readData(pruned.entries.map(e => table.absData(e.file.path)))
+          .where(coalesce(pred.cast("boolean"), lit(false)))
+          .groupBy(concat(lit("data/"),
+            element_at(split(input_file_name(), "/"), -1)).as("__src"))
+          .count().collect().map(r => r.getString(0) -> r.getLong(1)).toMap
+      // counts sidecar FIRST, plan second: a plan on disk implies its
+      // counts exist, so resume never trusts a half-planned job
+      writeCounts(table, jobId, predSql, perFile,
+        prunedCandidates = pruned.entries.size.toLong)
+      val byPath = pruned.entries.map(e => e.file.path -> e.file).toMap
+      val withVictims = perFile.keys.toVector.sorted.map(byPath(_))
+      val groups = Clustering.greedyGroups(
+        withVictims.sortBy(f => (f.minConv.getOrElse(""), f.minTurn.getOrElse(0))),
+        groupTargetBytes).filter(_.nonEmpty)
+      Ledger.Plan(snap0.id, groups.map(_.map(_.path)))
+    } match {
+      // committed earlier, or the predicate matched nothing (then nothing
+      // is committed: zero file churn) — either way every file carries
+      case Left(s) =>
+        return Result(s, 0L, 0, fileCount(s), 0, totalFiles = fileCount(s))
+      case Right(p) => p
+    }
+    val sidecar = Ledger.readJobFile(table, jobId, VictimsFile).getOrElse(
+      throw new IllegalStateException(
+        s"delete plan for $jobId exists but its victim counts are missing"))
+    val counts = readCounts(sidecar)
     // removed = ONLY the files with victims — everything else (files AND
     // manifests) carries forward untouched, names unchanged
-    val removed = plan.groups.flatten.sorted.map(entryByPath(_))
-    val nDeleted = deletedRows.get()
-    val carried = totalFiles - removed.size
-    val snap = table.commitDelta(outputs.flatten, removed, "delete",
-      summary = Map("job_id" -> jobId,
-        "predicate" -> predSql,
-        "deleted_rows" -> nDeleted.toString,
-        "touched_files" -> removed.size.toString))
-    Ledger.markCommitted(table, jobId, "delete", snap.id)
-    Result(snap, nDeleted, removed.size, carried, resumedCount.get(),
+    val touched = plan.groups.map(_.size).sum
+
+    val (snap, tasks) = Ledger.runJob(table, jobId, "delete", plan,
+      parallelism = Ledger.shuffleParallelism(table), interruptAfter) { (in, gi) =>
+      val paths = in.map(_.path)
+      val nSurv = in.map(_.rows).sum - paths.map(counts.getOrElse(_, 0L)).sum
+      val out =
+        if (nSurv == 0L) Vector.empty[DataFile]
+        else {
+          val nOut = math.max(1, math.ceil(nSurv.toDouble / targetFileRows).toInt)
+          // survivors = NOT matching; null predicate results survive
+          // too (SQL DELETE: only rows where the condition is TRUE
+          // are deleted). Single scan — no separate count.
+          table.writeDataFiles(
+            table.readData(paths.map(table.absData))
+              .where(!coalesce(pred.cast("boolean"), lit(false)))
+              .repartitionByRange(nOut, col("conv_id"), col("turn_idx"))
+              .sortWithinPartitions("conv_id", "turn_idx"),
+            s"$jobId-g$gi")
+        }
+      val written = out.map(_.rows).sum
+      require(written == nSurv,
+        s"DELETE group $gi wrote $written survivors but the plan " +
+          s"counted $nSurv — non-deterministic predicate? refusing to commit")
+      out
+    } { tasks =>
+      Map("predicate" -> predSql,
+        "deleted_rows" -> deleted(tasks).toString,
+        "touched_files" -> touched.toString)
+    }
+    Result(snap, deleted(tasks), touched, totalFiles - touched, tasks.count(_._2),
       candidateFiles = counts.size.toLong, totalFiles = totalFiles,
-      prunedCandidateFiles = readPrunedCandidates(table, jobId)
-        .getOrElse(counts.size.toLong))
+      prunedCandidateFiles = Option(sidecar.get("pruned_candidates"))
+        .map(_.asLong).getOrElse(counts.size.toLong))
   }
+
+  /** Rows a job deleted: what its groups read minus what they wrote —
+    * resumed groups count exactly like executed ones.
+    */
+  private def deleted(tasks: Vector[(Ledger.TaskRow, Boolean)]): Long =
+    tasks.map { case (t, _) => t.rows - t.outFiles.map(_.rows).sum }.sum
 
   /** The predicate a previously PLANNED (possibly crashed) invocation of
     * `jobId` pinned — so retry paths (e.g. a re-run maintenance cycle whose
     * default `nowMs` moved) can replay the exact original condition instead
     * of tripping the changed-predicate guard.
     */
-  def plannedPredicate(table: LakeTable, jobId: String): Option[String] = {
-    val p = table.ledgerDir.resolve(jobId).resolve("delete-victims.json")
-    if (!Files.exists(p)) None
-    else Some(MetaJson.read(Files.readString(p)).get("predicate").asText)
-  }
+  def plannedPredicate(table: LakeTable, jobId: String): Option[String] =
+    Ledger.readJobFile(table, jobId, VictimsFile).map(_.get("predicate").asText)
 
   // ---- per-file victim counts sidecar (atomic, beside the ledger plan) --
+
+  private val VictimsFile = "delete-victims.json"
 
   private def writeCounts(table: LakeTable, jobId: String, predSql: String,
                           counts: Map[String, Long],
@@ -241,31 +194,13 @@ object DeleteFrom {
     o.put("pruned_candidates", prunedCandidates)
     val c = o.putObject("counts")
     counts.toSeq.sortBy(_._1).foreach { case (k, v) => c.put(k, v) }
-    val dir = table.ledgerDir.resolve(jobId)
-    Files.createDirectories(dir)
-    val tmp = dir.resolve("delete-victims.json.tmp")
-    Files.writeString(tmp, MetaJson.write(o))
-    Files.move(tmp, dir.resolve("delete-victims.json"),
-      java.nio.file.StandardCopyOption.ATOMIC_MOVE,
-      java.nio.file.StandardCopyOption.REPLACE_EXISTING)
+    Ledger.atomicWrite(table, jobId, VictimsFile, MetaJson.write(o))
   }
 
-  private def readPrunedCandidates(table: LakeTable, jobId: String): Option[Long] = {
-    val p = table.ledgerDir.resolve(jobId).resolve("delete-victims.json")
-    if (!Files.exists(p)) None
-    else Option(MetaJson.read(Files.readString(p)).get("pruned_candidates"))
-      .map(_.asLong)
-  }
-
-  private def readCounts(table: LakeTable, jobId: String): Option[Map[String, Long]] = {
-    val p = table.ledgerDir.resolve(jobId).resolve("delete-victims.json")
-    if (!Files.exists(p)) None
-    else {
-      val n = MetaJson.read(Files.readString(p)).get("counts")
-      val it = n.fields()
-      val b = Map.newBuilder[String, Long]
-      while (it.hasNext) { val e = it.next(); b += e.getKey -> e.getValue.asLong }
-      Some(b.result())
-    }
+  private def readCounts(sidecar: JsonNode): Map[String, Long] = {
+    val it = sidecar.get("counts").fields()
+    val b = Map.newBuilder[String, Long]
+    while (it.hasNext) { val e = it.next(); b += e.getKey -> e.getValue.asLong }
+    b.result()
   }
 }

@@ -1,6 +1,7 @@
 package graft.maintain
 
-import java.nio.file.{Files, Paths}
+import java.nio.file.Files
+import java.util.concurrent.atomic.AtomicInteger
 
 import com.fasterxml.jackson.databind.JsonNode
 import com.fasterxml.jackson.databind.node.ObjectNode
@@ -19,6 +20,11 @@ import scala.jdk.CollectionConverters._
   * (file_service.py:113-137: cached artifact served, missing one rebuilt)
   * generalized to distributed maintenance.
   *
+  * The job protocol lives here once — [[planOrResume]] then [[runJob]] —
+  * and every group-rewrite operation ([[Compaction]], [[Clustering]],
+  * [[Dedupe]], [[DeleteFrom]]) runs through it, supplying only how it
+  * plans groups, what it writes for one group, and how it reports.
+  *
   * Each task row is its own atomically-moved JSON file, so a crash
   * mid-write can never corrupt previously checkpointed tasks.
   */
@@ -36,7 +42,8 @@ object Ledger {
   // ---- plan -------------------------------------------------------------
 
   final case class Plan(baseSnapshotId: Long, groups: Vector[Vector[String]],
-                        convCuts: Array[Long], turnCuts: Array[Long],
+                        convCuts: Array[Long] = Array.empty,
+                        turnCuts: Array[Long] = Array.empty,
                         curve: String = "z", kind: String = "")
 
   /** Persist the job plan (task -> input files, base snapshot, quantile
@@ -60,22 +67,18 @@ object Ledger {
     atomicWrite(table, jobId, "plan.json", MetaJson.write(o))
   }
 
-  def readPlan(table: LakeTable, jobId: String): Option[Plan] = {
-    val p = jobDir(table, jobId).resolve("plan.json")
-    if (!Files.exists(p)) None
-    else {
-      val n = MetaJson.read(Files.readString(p))
+  def readPlan(table: LakeTable, jobId: String): Option[Plan] =
+    readJobFile(table, jobId, "plan.json").map { n =>
       val groups = n.get("groups").elements().asScala.map { g =>
         g.elements().asScala.map(_.asText).toVector
       }.toVector
       def longs(k: String): Array[Long] = Option(n.get(k)).map(
         _.elements().asScala.map(_.asLong).toArray).getOrElse(Array.empty)
-      Some(Plan(n.get("base_snapshot_id").asLong, groups,
+      Plan(n.get("base_snapshot_id").asLong, groups,
         longs("conv_cuts"), longs("turn_cuts"),
         Option(n.get("curve")).map(_.asText).getOrElse("z"),
-        Option(n.get("kind")).map(_.asText).getOrElse("")))
+        Option(n.get("kind")).map(_.asText).getOrElse(""))
     }
-  }
 
   // ---- job commit marker (O(1) idempotence) ------------------------------
 
@@ -108,10 +111,8 @@ object Ledger {
     // per-operation marker first, then the legacy single marker (matching
     // operation only). A marker for a DIFFERENT operation proves nothing
     // about this one — fall through to the chain walk, never early-None.
-    val dir = jobDir(table, jobId)
-    val marker = Seq(dir.resolve(s"commit-$operation.json"), dir.resolve("commit.json"))
-      .find(Files.exists(_))
-      .map(p => MetaJson.read(Files.readString(p)))
+    val marker = readJobFile(table, jobId, s"commit-$operation.json")
+      .orElse(readJobFile(table, jobId, "commit.json"))
       .filter(_.get("operation").asText == operation)
     marker.foreach { n =>
       val sid = n.get("snapshot_id").asLong
@@ -238,7 +239,128 @@ object Ledger {
     ExpireResult(deleted.result(), failures.result())
   }
 
-  private def atomicWrite(table: LakeTable, jobId: String, name: String, body: String): Unit = {
+  // ---- job protocol -----------------------------------------------------
+
+  /** Idempotence guard, then resume-or-plan. `Left(snapshot)` means there
+    * is nothing to run: the job already committed (its snapshot), or its
+    * plan has no groups — then the job is marked committed at the current
+    * snapshot, so a replay is O(1) and the ledger dir is swept like any
+    * finished job's. `Right(plan)` is the persisted plan to run.
+    *
+    * A stored plan is reused, NEVER recomputed (its groups, cuts and curve
+    * are the job), and must match this invocation: same `kind` — the
+    * operation plus whatever parameters change its meaning — and a base
+    * snapshot that is still current. A kind that is just the operation
+    * name pins no parameters, so it also accepts a legacy kind-less plan.
+    * `compute` runs only when no plan exists; its plan is persisted (with
+    * `kind`) before any group starts.
+    */
+  def planOrResume(table: LakeTable, jobId: String, operation: String,
+                   kind: String)(compute: => Plan): Either[Snapshot, Plan] = {
+    committedJobSnapshot(table, jobId, operation).foreach(s => return Left(s))
+    val plan = readPlan(table, jobId) match {
+      case Some(p) =>
+        require(p.kind == kind || (p.kind.isEmpty && kind == operation),
+          s"ledger plan for $jobId is '${p.kind}' but this invocation is " +
+            s"'$kind' — job-id collision, changed parameters or changed " +
+            "predicate; use a fresh jobId")
+        require(table.currentSnapshotId.contains(p.baseSnapshotId),
+          s"stale $operation plan for $jobId: computed on snapshot " +
+            s"${p.baseSnapshotId} but current is ${table.currentSnapshotId}")
+        p
+      case None =>
+        val p = compute.copy(kind = kind)
+        writePlan(table, jobId, p.baseSnapshotId, p.groups, p.convCuts,
+          p.turnCuts, p.curve, p.kind)
+        p
+    }
+    if (plan.groups.forall(_.isEmpty)) {
+      // nothing to rewrite: no commit, no empty files (same rule as a
+      // no-op merge); the job is still marked so replays stay O(1)
+      val cur = table.currentSnapshot.get
+      markCommitted(table, jobId, operation, cur.id)
+      Left(cur)
+    } else Right(plan)
+  }
+
+  /** Group parallelism for jobs whose groups are shuffles: a few at a time,
+    * each already fans out over the executors. Single-task coalesce groups
+    * (compaction bins) use `defaultParallelism` instead.
+    */
+  def shuffleParallelism(table: LakeTable): Int =
+    math.max(2, table.spark.sparkContext.defaultParallelism / 8)
+
+  /** Run every group of `plan` and commit the job. A group with a `done`
+    * row is not run again: its checkpointed outputs are reused verbatim.
+    * Any other group runs `rewrite(inputFiles, groupIndex)` and checkpoints
+    * a `done` row — or, if it throws, an `error` row with the message
+    * (reference parity: file_repository.py:95-109), which a rerun
+    * recomputes and flips to `done`. Groups are independent and submitted
+    * `parallelism` at a time, except under `interruptAfter` — a chaos hook
+    * that aborts like a crash once that many groups have run — which needs
+    * deterministic order.
+    *
+    * The commit swaps exactly the plan's inputs for all group outputs in
+    * one [[LakeTable.commitDelta]] (`summarize(tasks)` plus the job id as
+    * its summary), then marks the job committed. Returns the snapshot and
+    * every group's task row, flagged `true` when it was resumed.
+    */
+  def runJob(table: LakeTable, jobId: String, operation: String, plan: Plan,
+             parallelism: Int, interruptAfter: Int = Int.MaxValue)(
+      rewrite: (Vector[DataFile], Int) => Vector[DataFile])(
+      summarize: Vector[(TaskRow, Boolean)] => Map[String, String])
+      : (Snapshot, Vector[(TaskRow, Boolean)]) = {
+    val entryByPath = table.currentEntries.map(e => e.file.path -> e).toMap
+    val done = readTasks(table, jobId).filter(_._2.state == "done")
+    val executed = new AtomicInteger(0)
+
+    def runGroup(paths: Vector[String], gi: Int): (TaskRow, Boolean) =
+      done.get(gi) match {
+        case Some(t) => (t, true)
+        case None =>
+          val t0 = System.nanoTime()
+          val inFiles = paths.map(entryByPath(_).file)
+          def row(state: String, out: Vector[DataFile], error: String = "") =
+            TaskRow(jobId, gi, state, paths, out, inFiles.map(_.rows).sum,
+              inFiles.map(_.bytes).sum, (System.nanoTime() - t0) / 1000000, error)
+          try {
+            if (executed.getAndIncrement() >= interruptAfter)
+              throw new InterruptedException(s"chaos interrupt after $interruptAfter groups")
+            val r = row("done", rewrite(inFiles, gi))
+            writeTask(table, r)
+            (r, false)
+          } catch { case e: Throwable =>
+            writeTask(table, row("error", Vector.empty, String.valueOf(e.getMessage)))
+            throw e
+          }
+      }
+
+    val indexed = plan.groups.zipWithIndex
+    val tasks =
+      if (interruptAfter != Int.MaxValue) indexed.map { case (p, gi) => runGroup(p, gi) }
+      else Parallel.mapInParallel(indexed, parallelism) { case (p, gi) => runGroup(p, gi) }
+
+    val removed = plan.groups.flatten.distinct.sorted.map(entryByPath(_))
+    val snap = table.commitDelta(tasks.flatMap(_._1.outFiles), removed, operation,
+      summary = Map("job_id" -> jobId) ++ summarize(tasks))
+    markCommitted(table, jobId, operation, snap.id)
+    (snap, tasks)
+  }
+
+  // ---- job files ----------------------------------------------------------
+
+  /** A JSON file of `jobId`'s ledger dir, if it exists. */
+  private[maintain] def readJobFile(table: LakeTable, jobId: String,
+                                    name: String): Option[JsonNode] = {
+    val p = jobDir(table, jobId).resolve(name)
+    if (Files.exists(p)) Some(MetaJson.read(Files.readString(p))) else None
+  }
+
+  /** Write one file of `jobId`'s ledger dir atomically (tmp + move): a crash
+    * mid-write leaves the previous version or none, never a torn file.
+    */
+  private[maintain] def atomicWrite(table: LakeTable, jobId: String, name: String,
+                                    body: String): Unit = {
     val dir = jobDir(table, jobId)
     Files.createDirectories(dir)
     val tmp = dir.resolve(name + ".tmp")

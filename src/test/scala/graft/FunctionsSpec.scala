@@ -315,6 +315,16 @@ class DedupSpec extends AnyFunSuite {
     assert(full.groups.select("group_id").as[Long].collect().toSet == Set(1L))
   }
 
+  test("dedupGroups: a zero-round cap returns identity labels, not converged") {
+    import spark.implicits._
+    val ids = (1L to 4L).map(Tuple1(_)).toDF("doc_id")
+    val pairs = Seq((1L, 2L), (3L, 4L)).toDF("id_a", "id_b")
+    val r = Dedup.dedupGroupsResult(ids, "doc_id", pairs, maxIters = 0)
+    assert(!r.converged && r.rounds == 0)
+    val got = r.groups.orderBy("doc_id").collect().map(x => (x.getLong(0), x.getLong(1))).toSeq
+    assert(got == (1L to 4L).map(i => (i, i)))
+  }
+
   test("dedupGroups: string ids propagate without casting (no null collapse)") {
     import spark.implicits._
     // a non-numeric id column must keep its type — the old long cast turned

@@ -103,6 +103,22 @@ class DialectDetectorSpec extends AnyFunSuite {
   test("garbage falls back to excel (:114-124)") {
     assert(DialectDetector.detect("!!!@@@###$$$%%%^^^&&&***(((") == Dialect.Excel)
   }
+
+  test("fully-quoted files over the 8 KB sample keep their quote char") {
+    // every field quoted, some holding another candidate delimiter: the
+    // sample boundary falls inside a quoted field at a different offset
+    // in each input
+    for (i <- 0 until 60) {
+      val d = Seq(',', ';', '\t', '|')(i % 4)
+      def row(cells: String*) = cells.map(c => "\"" + c + "\"").mkString(d.toString)
+      val lines = row("id", "name", "note", "amount") +: (0 until 400).map { r =>
+        row(f"$r%05d", "user " + ("x" * ((r * 7 + i) % 23)), "a, b; c | d", s"${r * 3 + i}.5")
+      }
+      val content = lines.mkString("\n")
+      assert(content.length > DialectDetector.SampleSize)
+      assert(DialectDetector.detect(content) == Dialect(d, '"'), s"input $i")
+    }
+  }
 }
 
 class SanitizeSpec extends AnyFunSuite {

@@ -1070,6 +1070,74 @@ class LakeSpec extends AnyFunSuite {
     assert(replay.rowsRewritten == 0L)
   }
 
+  test("maintenance on a clean table: empty jobs are marked, swept and replayable") {
+    import spark.implicits._
+    val t = LakeTable.create(spark, tmpTable("empty-plan"), TranscriptSynth.schema)
+    t.append(synth(60).repartition(6), "init")
+    Seq("cyc-1", "cyc-2", "cyc-3").foreach(c => Maintenance.runCycle(t, c, targetFileRows = 100))
+    // cycles 2 and 3 found nothing to compact or recluster: their jobs are
+    // still marked committed, exactly like a job that rewrote files
+    for (c <- Seq("cyc-2", "cyc-3"); op <- Seq("compact", "cluster"))
+      assert(Files.exists(t.ledgerDir.resolve(s"$c-$op/commit-$op.json")),
+        s"empty job $c-$op must be marked committed")
+
+    // replaying a cycle after a later commit answers from the markers
+    // instead of failing on a stale empty plan
+    val staged = Seq(("c00000003", "0", "user", "LATE-PATCH", "", 0L))
+      .toDF("conv_id", "turn_idx", "role", "text", "tool", "_seq")
+    MergeInto.merge(t, staged, "late-drop", targetFileRows = 100)
+    val current = t.currentSnapshotId.get
+    val replay = Maintenance.runCycle(t, "cyc-2", targetFileRows = 100)
+    assert(replay.compact.bins == 0 && replay.cluster.groups == 0)
+    assert(t.currentSnapshotId.get == current, "a replayed cycle commits nothing")
+
+    // marked jobs age out of the ledger like any finished job
+    val swept = Ledger.expireJobs(t, olderThanMs = 0,
+      nowMs = System.currentTimeMillis() + 10L * 24 * 3600 * 1000)
+    val all = for (c <- 1 to 3; op <- Seq("cluster", "compact")) yield s"cyc-$c-$op"
+    assert(swept.deletedJobs.sorted == all.sorted, s"swept ${swept.deletedJobs}")
+  }
+
+  test("job protocol: a failed group checkpoints an error, the rerun reuses done outputs") {
+    val t = LakeTable.create(spark, tmpTable("job-crash"), TranscriptSynth.schema)
+    t.append(synth(40).repartition(8), "init")
+    val pre = sortedRows(t.scan().df)
+    val before = t.currentSnapshotId.get
+    val files = t.currentFiles.map(_.path).sorted
+    val inputs = files.take(6) // three bins of two; two files stay out of the plan
+    val jobId = "crash-compact"
+    val plan = Ledger.planOrResume(t, jobId, "compact", kind = "compact")(
+      Ledger.Plan(before, inputs.grouped(2).toVector)).toOption.get
+
+    // group 1 fails; one-at-a-time submission stops there
+    val e = intercept[IllegalStateException] {
+      Ledger.runJob(t, jobId, "compact", plan, parallelism = 1) { (in, gi) =>
+        if (gi == 1) throw new IllegalStateException("bin 1 failed")
+        t.writeDataFiles(t.readData(in.map(f => t.absData(f.path))).coalesce(1),
+          s"$jobId-b$gi")
+      }(_ => Map.empty)
+    }
+    assert(e.getMessage == "bin 1 failed")
+    val crashed = Ledger.readTasks(t, jobId)
+    assert(crashed(0).state == "done")
+    assert(crashed(1).state == "error" && crashed(1).errorMessage == "bin 1 failed")
+    assert(!crashed.contains(2))
+    assert(t.currentSnapshotId.get == before, "a failed job commits nothing")
+
+    // compaction resumes the same plan: bin 0 reused, bins 1-2 rewritten
+    val res = Compaction.compact(t, jobId)
+    assert(res.bins == 3 && res.resumedBins == 1 && res.filesCompacted == 6)
+    val after = Ledger.readTasks(t, jobId)
+    assert(after.size == 3 && after.values.forall(_.state == "done"),
+      "the rerun flips the error row to done")
+    assert(after(0).outFiles.map(_.path) == crashed(0).outFiles.map(_.path),
+      "a done group's output files are reused verbatim")
+    // the commit removed exactly the plan's inputs
+    val outputs = after.values.flatMap(_.outFiles.map(_.path)).toSet
+    assert(t.currentFiles.map(_.path).toSet == (files.toSet -- inputs) ++ outputs)
+    assert(sortedRows(t.scan().df) == pre, "resume must reproduce exact content")
+  }
+
   test("orphan GC sweeps unreferenced metadata (crashed-commit residue)") {
     val t = LakeTable.create(spark, tmpTable("orphan-meta-gc"), TranscriptSynth.schema)
     t.append(synth(10), "first")
