@@ -1,10 +1,9 @@
 package graft.ingest
 
-import java.nio.charset.StandardCharsets
-import java.nio.file.{Files, Paths}
-
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
+
+import graft.lake.FileIO
 
 /** Adaptive ingest pipeline: Detect -> Decide -> Parse -> Sanitize
   * (reference: docs/processing-engine.md:20; csv_handler.py:114-148).
@@ -28,20 +27,22 @@ object Ingest {
     */
   def validateDropFile(path: String,
                        contentType: Option[String] = None): Either[String, Unit] = {
-    val p = Paths.get(path)
     val ctOk = contentType.map(_.toLowerCase).forall(ct =>
       ct.startsWith("text/csv") || ct == "application/vnd.ms-excel")
     if (!path.toLowerCase.endsWith(".csv")) Left(s"invalid extension: $path")
     else if (!ctOk) Left(s"invalid CSV content type: ${contentType.getOrElse("")}")
-    else if (!Files.exists(p)) Left(s"missing file: $path")
-    else if (Files.size(p) > MaxFileSizeBytes) Left(s"file exceeds 50MB cap: $path")
-    else Right(())
+    else FileIO.Local.stat(path) match {
+      case None => Left(s"missing file: $path")
+      case Some(st) if st.size > MaxFileSizeBytes => Left(s"file exceeds 50MB cap: $path")
+      case _ => Right(())
+    }
   }
 
-  /** UTF-8 (BOM-tolerant, like utf-8-sig) decode of a whole drop file. */
+  /** UTF-8 (BOM-tolerant, like utf-8-sig; malformed bytes replaced)
+    * decode of a whole drop file.
+    */
   def readContent(path: String): String = {
-    val bytes = Files.readAllBytes(Paths.get(path))
-    val s = new String(bytes, StandardCharsets.UTF_8)
+    val s = FileIO.Local.read(path).getOrElse(FileIO.missing(path))
     if (s.nonEmpty && s.charAt(0) == '﻿') s.substring(1) else s
   }
 

@@ -1,13 +1,8 @@
 package graft.lake
 
-import java.nio.charset.StandardCharsets
-import java.nio.file.{Files, FileAlreadyExistsException, Path, Paths, StandardCopyOption, StandardOpenOption}
-
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types.StructType
-
-import scala.jdk.CollectionConverters._
 
 /** The lakehouse table: immutable Parquet data files + versioned JSON
   * metadata, with snapshot-isolated reads and stats-pruned scans.
@@ -26,6 +21,8 @@ import scala.jdk.CollectionConverters._
   * writers racing to the same parent cannot both win: the loser gets
   * [[CommitConflictException]] instead of silently clobbering the other's
   * commit), then atomically move a temp version-hint over the pointer.
+  * Every file operation goes through `io` ([[FileIO]]; the local
+  * filesystem unless a test injects faults).
   * Readers resolve the pointer once and pin that snapshot — maintenance
   * committing S+1 never disturbs a reader of S (immutable files + versioned
   * metadata = snapshot isolation).
@@ -40,23 +37,22 @@ import scala.jdk.CollectionConverters._
   *     without opening them; only overlapping manifests are parsed, then
   *     per-file stats prune within them.
   */
-class LakeTable(val root: String, val spark: SparkSession) {
+class LakeTable(val root: String, val spark: SparkSession,
+                private[graft] val io: FileIO = FileIO.Local) {
   import LakeTable._
 
-  private def metaDir = Paths.get(root, "metadata")
-  private def dataDir = Paths.get(root, "data")
-  def ledgerDir: Path = Paths.get(root, "_ledger")
+  private def meta(name: String) = FileIO.path(root, "metadata", name)
+  private def hintPath = meta("version-hint.txt")
+  def ledgerDir: String = FileIO.path(root, "_ledger")
 
   // ---- snapshot access -------------------------------------------------
 
-  def currentSnapshotId: Option[Long] = {
-    val hint = metaDir.resolve("version-hint.txt")
-    if (Files.exists(hint)) Some(Files.readString(hint).trim.toLong) else None
-  }
+  def currentSnapshotId: Option[Long] = io.read(hintPath).map(_.trim.toLong)
 
-  def snapshot(id: Long): Snapshot =
-    MetaJson.snapshotFromJson(MetaJson.read(
-      Files.readString(metaDir.resolve(s"snap-$id.json"))))
+  def snapshot(id: Long): Snapshot = {
+    val p = meta(s"snap-$id.json")
+    MetaJson.snapshotFromJson(MetaJson.read(io.read(p).getOrElse(FileIO.missing(p))))
+  }
 
   def currentSnapshot: Option[Snapshot] = currentSnapshotId.map(snapshot)
 
@@ -68,8 +64,7 @@ class LakeTable(val root: String, val spark: SparkSession) {
   def allSnapshots: Vector[Snapshot] = allSnapshotIds.map(snapshot)
 
   def allSnapshotIds: Vector[Long] =
-    LakeTable.listDir(metaDir)
-      .map(_.getFileName.toString)
+    io.list(FileIO.path(root, "metadata"))
       .filter(n => n.startsWith("snap-") && n.endsWith(".json"))
       .map(n => n.stripPrefix("snap-").stripSuffix(".json").toLong)
       .sorted
@@ -97,8 +92,13 @@ class LakeTable(val root: String, val spark: SparkSession) {
   }
 
   def manifest(path: String): Manifest =
-    MetaJson.manifestFromJson(path, MetaJson.read(
-      Files.readString(metaDir.resolve(path))))
+    manifestIfPresent(path).getOrElse(FileIO.missing(meta(path)))
+
+  /** None when the manifest file is gone (e.g. deleted by a half-failed
+    * expire); any other read or parse error still throws.
+    */
+  def manifestIfPresent(path: String): Option[Manifest] =
+    io.read(meta(path)).map(s => MetaJson.manifestFromJson(path, MetaJson.read(s)))
 
   def dataFiles(s: Snapshot): Vector[DataFile] =
     s.manifests.flatMap(r => manifest(r.path).entries)
@@ -110,13 +110,6 @@ class LakeTable(val root: String, val spark: SparkSession) {
   def fileEntries(s: Snapshot): Vector[FileEntry] =
     s.manifests.flatMap(r => manifest(r.path).entries.map(FileEntry(r.path, _)))
 
-  /** Data-file paths referenced by a set of manifests, each manifest parsed
-    * ONCE (manifests are shared across snapshots by commitDelta's
-    * carry-forward, so per-snapshot walks re-parse them).
-    */
-  def dataPathsOf(manifestPaths: Seq[String]): Vector[String] =
-    manifestPaths.distinct.toVector.flatMap(p => manifest(p).entries.map(_.path))
-
   def currentFiles: Vector[DataFile] = currentSnapshot.map(dataFiles).getOrElse(Vector.empty)
 
   def currentEntries: Vector[FileEntry] =
@@ -125,7 +118,7 @@ class LakeTable(val root: String, val spark: SparkSession) {
   def schema: TableSchema = currentSnapshot.map(_.schema).getOrElse(
     throw new IllegalStateException(s"table at $root has no snapshot"))
 
-  def absData(rel: String): String = Paths.get(root, rel).toString
+  def absData(rel: String): String = FileIO.path(root, rel)
 
   // ---- encryption at rest ------------------------------------------------
 
@@ -270,7 +263,7 @@ class LakeTable(val root: String, val spark: SparkSession) {
     // Restrict to a charset no URI encoder touches.
     val safeTag = tag.replaceAll("[^A-Za-z0-9._-]", "_")
     val unique = java.util.UUID.randomUUID().toString.take(8)
-    val staging = Paths.get(root, s"_staging-$safeTag-$unique")
+    val staging = FileIO.path(root, s"_staging-$safeTag-$unique")
     // TIMESTAMP_MICROS (not Spark's INT96 default): INT96 persists NO
     // footer statistics, and the event-time min/max per file is what lets
     // a row-retention DELETE prune to the files that can contain expired
@@ -287,28 +280,23 @@ class LakeTable(val root: String, val spark: SparkSession) {
     // PME write options ride along (per-job datasource options — never a
     // global conf, so unrelated writes in the session stay plaintext).
     try df.write.mode("overwrite").options(dataWriteOptions)
-      .option("compression", "zstd").parquet(staging.toString)
+      .option("compression", "zstd").parquet(staging)
     finally LakeTable.popMicrosTimestampConf(spark)
-    Files.createDirectories(dataDir)
     val conf = spark.sessionState.newHadoopConf()
     if (encrypted) Crypto.configureRead(conf, masterKeyB64)
-    val parts = LakeTable.listDir(staging)
-      .filter(_.getFileName.toString.endsWith(".parquet")).sortBy(_.toString)
+    val parts = io.list(staging).filter(_.endsWith(".parquet"))
     // Footer reads are independent metadata fetches — do them concurrently.
+    // Data files are immutable: rename refuses to overwrite an existing one.
     val entries = graft.maintain.Parallel.mapInParallel(parts.zipWithIndex, 16) {
-      case (p, i) =>
+      case (name, i) =>
         val rel = s"data/$safeTag-$unique-$i.parquet"
-        val target = Paths.get(root, rel)
-        if (Files.exists(target))
-          throw new FileAlreadyExistsException(target.toString,
-            null, "data files are immutable; refusing to overwrite")
-        Files.move(p, target, StandardCopyOption.ATOMIC_MOVE)
-        val st = ParquetStats.read(target.toString, conf)
-        DataFile(rel, st.rows, Files.size(target),
+        io.rename(FileIO.path(staging, name), absData(rel))
+        val st = ParquetStats.read(absData(rel), conf)
+        DataFile(rel, st.rows, st.bytes,
           st.minConv, st.maxConv, st.minTurn, st.maxTurn,
           minTsUs = st.minTsUs, maxTsUs = st.maxTsUs)
     }
-    deleteRecursively(staging)
+    io.delete(staging)
     // An ACTIVE sketch store rides along with every write: computeBatch
     // re-reads the just-written parquet (page-cache hot, not in-memory
     // hot), so signatures cost one extra cached-read pass over this
@@ -379,7 +367,6 @@ class LakeTable(val root: String, val spark: SparkSession) {
                            newSchema: Option[TableSchema],
                            summary: Map[String, String],
                            entriesPerManifest: Int): Snapshot = {
-    Files.createDirectories(metaDir)
     val id = parent.map(_.id + 1).getOrElse(1L)
     val seq = parent.map(_.sequence + 1).getOrElse(1L)
     val sch = newSchema.orElse(parent.map(_.schema)).getOrElse(
@@ -394,8 +381,9 @@ class LakeTable(val root: String, val spark: SparkSession) {
     val newRefs = sorted.grouped(entriesPerManifest).zipWithIndex.map {
       case (group, k) =>
         val rel = s"manifest-$id-$unique-$k.json"
-        writeString(metaDir.resolve(rel),
-          MetaJson.write(MetaJson.manifestToJson(Manifest(rel, group.toVector))))
+        if (!io.createNew(meta(rel),
+            MetaJson.write(MetaJson.manifestToJson(Manifest(rel, group.toVector)))))
+          throw new IllegalStateException(s"manifest $rel already exists (table $root)")
         ManifestRef.of(rel, group.toVector)
     }.toVector
 
@@ -452,23 +440,20 @@ class LakeTable(val root: String, val spark: SparkSession) {
     //     mid-write of those very bytes — hands off, retryable conflict
     //     (once it finishes, the retry adopts; if it crashed, the retry
     //     supersedes after the age gate).
-    val snapPath = metaDir.resolve(s"snap-$id.json")
-    val body = MetaJson.write(MetaJson.snapshotToJson(snap)).getBytes(StandardCharsets.UTF_8)
-    def tryCreateNew(): Boolean =
-      try { Files.write(snapPath, body, StandardOpenOption.CREATE_NEW); true }
-      catch { case _: FileAlreadyExistsException => false }
+    val snapPath = meta(s"snap-$id.json")
+    val body = MetaJson.write(MetaJson.snapshotToJson(snap))
+    def tryCreateNew(): Boolean = io.createNew(snapPath, body)
     if (!tryCreateNew()) {
-      val ageMs =
-        try System.currentTimeMillis() - Files.getLastModifiedTime(snapPath).toMillis
-        catch { case _: Exception => 0L } // vanished: treat as fresh, conflict below
+      val ageMs = io.stat(snapPath) // vanished: treat as fresh, conflict below
+        .fold(0L)(st => System.currentTimeMillis() - st.mtimeMs)
       val orphanOk =
         try { snapshot(id); true } catch { case _: Exception => false }
       val pointerAtParent = currentSnapshotId == parent.map(_.id)
       val superseded = pointerAtParent && ageMs >= OrphanAdoptMaxAgeMs && {
-        val quarantine = metaDir.resolve(
-          s"snap-$id.json.superseded-${java.util.UUID.randomUUID().toString.take(8)}")
+        val quarantine =
+          meta(s"snap-$id.json.superseded-${java.util.UUID.randomUUID().toString.take(8)}")
         val won =
-          try { Files.move(snapPath, quarantine, StandardCopyOption.ATOMIC_MOVE); true }
+          try { io.rename(snapPath, quarantine); true }
           catch { case _: Exception => false } // another superseder won the move
         won && tryCreateNew()
       }
@@ -480,10 +465,7 @@ class LakeTable(val root: String, val spark: SparkSession) {
         // filesystems lack; the residual window is the nanoseconds between
         // re-read and rename, vs seconds-long commits).
         if (orphanOk && ageMs < OrphanAdoptMaxAgeMs && currentSnapshotId == parent.map(_.id)) {
-          val tmpA = metaDir.resolve(s"version-hint.adopt-$id")
-          writeString(tmpA, id.toString)
-          Files.move(tmpA, metaDir.resolve("version-hint.txt"),
-            StandardCopyOption.ATOMIC_MOVE, StandardCopyOption.REPLACE_EXISTING)
+          io.replace(hintPath, id.toString)
           throw new CommitConflictException(
             s"snapshot $id was written by an interrupted commit; adopted it as " +
               s"current (table $root) — re-read the table and retry the operation")
@@ -495,10 +477,7 @@ class LakeTable(val root: String, val spark: SparkSession) {
     }
 
     // Atomic pointer swing — the only mutation in the whole protocol.
-    val tmp = metaDir.resolve(s"version-hint.tmp-$id")
-    writeString(tmp, id.toString)
-    Files.move(tmp, metaDir.resolve("version-hint.txt"),
-      StandardCopyOption.ATOMIC_MOVE, StandardCopyOption.REPLACE_EXISTING)
+    io.replace(hintPath, id.toString)
     snap
   }
 }
@@ -559,8 +538,6 @@ object LakeTable {
   def create(spark: SparkSession, root: String, schema: StructType,
              encrypted: Boolean = false): LakeTable = {
     val t = new LakeTable(root, spark)
-    Files.createDirectories(Paths.get(root, "metadata"))
-    Files.createDirectories(Paths.get(root, "data"))
     if (encrypted) { // fail at CREATE, not first write, if no key is set
       require(spark.conf.get(Crypto.SessionKeyConf, "").nonEmpty,
         s"encrypted table needs ${Crypto.SessionKeyConf} set on the session")
@@ -576,28 +553,5 @@ object LakeTable {
     t
   }
 
-  private[lake] def writeString(p: Path, s: String): Unit = {
-    Files.createDirectories(p.getParent)
-    Files.write(p, s.getBytes(StandardCharsets.UTF_8))
-  }
-
-  /** Files.list with the stream CLOSED — the bare iterator() holds the
-    * directory fd open until GC, which leaks under a maintenance cadence.
-    */
-  def listDir(p: Path): Vector[Path] = {
-    val s = Files.list(p)
-    try s.iterator().asScala.toVector finally s.close()
-  }
-
-  /** Files.walk, stream closed (see [[listDir]]). */
-  def walkDir(p: Path): Vector[Path] = {
-    val s = Files.walk(p)
-    try s.iterator().asScala.toVector finally s.close()
-  }
-
-  def deleteRecursively(p: Path): Unit = {
-    if (Files.exists(p)) {
-      walkDir(p).reverse.foreach(Files.deleteIfExists(_))
-    }
-  }
+  def deleteRecursively(p: java.nio.file.Path): Unit = FileIO.Local.delete(p.toString)
 }

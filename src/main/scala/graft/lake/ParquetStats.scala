@@ -20,7 +20,7 @@ import scala.jdk.CollectionConverters._
 object ParquetStats {
 
   final case class FileStats(
-      rows: Long,
+      rows: Long, bytes: Long,
       minConv: Option[String], maxConv: Option[String],
       minTurn: Option[Int], maxTurn: Option[Int],
       minTsUs: Option[Long] = None, maxTsUs: Option[Long] = None)
@@ -85,7 +85,7 @@ object ParquetStats {
       // TIMESTAMP_MICROS (INT64) — INT96 carries no stats, and the all-null
       // / missing-column cases degrade to None exactly like conv/turn
       val (minTs, maxTs) = ranged(tsCol, asLong)
-      FileStats(rows, minC, maxC, minT, maxT, minTs, maxTs)
+      FileStats(rows, in.getLength, minC, maxC, minT, maxT, minTs, maxTs)
     } finally reader.close()
   }
 }

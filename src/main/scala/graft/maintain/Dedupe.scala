@@ -1,12 +1,10 @@
 package graft.maintain
 
-import java.nio.file.{Files, StandardCopyOption}
-
 import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 
 import graft.functions.Dedup
-import graft.lake.{DataFile, LakeTable, Snapshot}
+import graft.lake.{DataFile, FileIO, LakeTable, Snapshot}
 
 /** Lake-integrated deduplication: the dedup suite's groups APPLIED to the
   * transcript table as a maintenance operation — the reference's core
@@ -77,7 +75,7 @@ object Dedupe {
         throw new IllegalStateException(s"no table at ${table.root}")),
         0L, 0, 0, 0, converged = true)
 
-    val victimsDir = table.ledgerDir.resolve(jobId).resolve("victims.parquet")
+    val victimsDir = FileIO.path(table.ledgerDir, jobId, "victims.parquet")
     // the plan kind pins the SEMANTICS-BEARING parameters: a resume with a
     // different mode/unit/minTokens must fail loudly instead of silently
     // applying a victim set computed under other rules (Clustering pins its
@@ -93,18 +91,18 @@ object Dedupe {
           computeConvVictims(table, mode, minTokens, minJaccard, maxIters,
             maxConvChars)
         else computeVictims(table, mode, minTokens, minJaccard, maxIters)
-      // atomic publish: write to a tmp dir, move over — a crash mid-write
+      // atomic publish: write to a tmp dir, rename over — a crash mid-write
       // can never leave a torn victim set a resume would trust
-      val tmp = victimsDir.resolveSibling("victims.parquet.tmp")
-      LakeTable.deleteRecursively(tmp)
-      victims.write.mode("overwrite").parquet(tmp.toString)
+      val tmp = victimsDir + ".tmp"
+      table.io.delete(tmp)
+      victims.write.mode("overwrite").parquet(tmp)
       victims.unpersist() // no-op for the exact mode's unpersisted frame
-      LakeTable.deleteRecursively(victimsDir)
-      Files.move(tmp, victimsDir, StandardCopyOption.ATOMIC_MOVE)
+      table.io.delete(victimsDir)
+      table.io.rename(tmp, victimsDir)
 
       // touched files = those holding at least one victim row; everything
       // else carries forward without being read again
-      val touchedPaths = spark.read.parquet(victimsDir.toString)
+      val touchedPaths = spark.read.parquet(victimsDir)
         .select("__src").distinct().collect().map(_.getString(0)).toVector.sorted
       val byPath = table.currentFiles.map(f => f.path -> f).toMap
       val touched = touchedPaths.map(byPath(_))
@@ -116,10 +114,10 @@ object Dedupe {
       case Left(s) => return Result(s, 0L, 0, 0, 0, converged = true)
       case Right(p) => p
     }
-    require(Files.exists(victimsDir),
+    require(table.io.stat(victimsDir).isDefined,
       s"dedupe plan for $jobId exists but its victim set is missing")
 
-    val victims = spark.read.parquet(victimsDir.toString)
+    val victims = spark.read.parquet(victimsDir)
       .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
     val nVictims = victims.count()
     val nTouched = plan.groups.map(_.size).sum

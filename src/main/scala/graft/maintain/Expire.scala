@@ -1,10 +1,8 @@
 package graft.maintain
 
-import java.nio.file.{Files, Paths}
+import scala.collection.mutable.Builder
 
-import scala.jdk.CollectionConverters._
-
-import graft.lake.LakeTable
+import graft.lake.{FileIO, LakeTable}
 
 /** Snapshot expiry + physical GC — the reference's retention cleanup
   * (cleanup.py:16-54: cutoff = now - retention, scan-and-delete with
@@ -65,53 +63,42 @@ object Expire {
     // aborts — an IO hiccup must not silently shrink the keep set and let
     // live data be swept.
     val keepManifests = retained.flatMap(_.manifestPaths).toSet
-    val keepData = tolerantDataPaths(table, keepManifests.toSeq, failures).toSet
+    val keepData = tolerantEntries(table, keepManifests.toSeq, failures).map(_.path).toSet
     val dropManifests = expired.flatMap(_.manifestPaths)
       .distinct.filterNot(keepManifests)
-    val dropData = tolerantDataPaths(table, dropManifests, failures)
+    val dropData = tolerantEntries(table, dropManifests, failures).map(_.path)
       .distinct.filterNot(keepData)
     val deletedData = Vector.newBuilder[String]
     val deletedMeta = Vector.newBuilder[String]
 
     // Per-file error isolation: one failed delete must not abort the sweep
     // (reference cleanup.py:43-46 "skip failures, keep going").
-    def tryDelete(abs: java.nio.file.Path, label: String): Boolean =
-      try Files.deleteIfExists(abs)
+    def tryDelete(abs: String, label: String): Boolean =
+      try table.io.delete(abs)
       catch { case e: Exception => failures += s"$label: ${e.getMessage}"; false }
 
     dropData.foreach { rel =>
-      if (tryDelete(Paths.get(table.absData(rel)), rel)) deletedData += rel
+      if (tryDelete(table.absData(rel), rel)) deletedData += rel
     }
-    dropManifests.foreach { rel =>
-      if (tryDelete(Paths.get(table.root, "metadata", rel), rel)) deletedMeta += rel
-    }
-    expired.foreach { s =>
-      val rel = s"snap-${s.id}.json"
-      if (tryDelete(Paths.get(table.root, "metadata", rel), rel)) deletedMeta += rel
+    (dropManifests ++ expired.map(s => s"snap-${s.id}.json")).foreach { rel =>
+      if (tryDelete(FileIO.path(table.root, "metadata", rel), rel)) deletedMeta += rel
     }
 
     Result(expired.map(_.id), deletedData.result(), deletedMeta.result(), failures.result())
   }
 
-  /** [[LakeTable.dataPathsOf]] with per-manifest NoSuchFile tolerance (each
-    * manifest still parsed once); other exceptions propagate — see the
-    * caller's rationale.
+  /** The entries of a set of manifests, each parsed ONCE (manifests are
+    * shared across snapshots by commitDelta's carry-forward). A MISSING
+    * manifest is reported and skipped; any other read or parse error
+    * propagates — see the caller's rationale.
     */
-  private[maintain] def tolerantDataPaths(
-      table: LakeTable, manifestPaths: Seq[String],
-      failures: scala.collection.mutable.Builder[String, Vector[String]]): Vector[String] =
-    tolerantEntries(table, manifestPaths, failures).map(_.path)
-
-  /** Full entries variant (paths + sketch-batch refs), same tolerance. */
   private[maintain] def tolerantEntries(
       table: LakeTable, manifestPaths: Seq[String],
-      failures: scala.collection.mutable.Builder[String, Vector[String]]): Vector[graft.lake.DataFile] =
+      failures: Builder[String, Vector[String]]): Vector[graft.lake.DataFile] =
     manifestPaths.distinct.toVector.flatMap { p =>
-      try table.manifest(p).entries
-      catch {
-        case e: java.nio.file.NoSuchFileException =>
-          failures += s"$p: missing (skipped): ${e.getMessage}"
-          Vector.empty
+      table.manifestIfPresent(p).map(_.entries).getOrElse {
+        failures += s"$p: missing (skipped): ${FileIO.path(table.root, "metadata", p)}"
+        Vector.empty
       }
     }
 }
@@ -120,7 +107,8 @@ object Expire {
   * snapshot — the residue of write attempts that crashed before their
   * commit (data-file and manifest names are unique per attempt precisely so
   * a retry cannot overwrite, which means the failed attempt's files
-  * linger). Mirrors Iceberg's remove_orphan_files: only files older than
+  * linger), plus the `_staging-*` dirs of crashed data and sketch writes.
+  * Mirrors Iceberg's remove_orphan_files: only files older than
   * `olderThanMs` are candidates, so an in-flight writer's
   * staged-but-uncommitted output is never swept.
   *
@@ -149,36 +137,36 @@ object OrphanGc {
     val deleted = Vector.newBuilder[String]
     val deletedMeta = Vector.newBuilder[String]
     val failures = Vector.newBuilder[String]
-    val metaDir = Paths.get(table.root, "metadata")
-    def oldEnough(p: java.nio.file.Path): Boolean =
-      Files.getLastModifiedTime(p).toMillis < nowMs - olderThanMs
+    // Per-file error isolation: delete `rel` (under the root) once its
+    // mtime is at or before `cutoffMs` (so a zero grace sweeps every file
+    // present at the call, whatever the clock's resolution); a file another
+    // process removed since the listing stats as absent and is skipped.
+    def sweep(rel: String, label: String, into: Builder[String, Vector[String]],
+              cutoffMs: Long = nowMs - olderThanMs): Unit = {
+      val p = FileIO.path(table.root, rel)
+      try if (table.io.stat(p).exists(_.mtimeMs <= cutoffMs) && table.io.delete(p)) into += label
+      catch { case e: Exception => failures += s"$label: ${e.getMessage}" }
+    }
 
     // ---- metadata sweep --------------------------------------------------
     // 1. orphan snapshots: snap files beyond the pointer, past grace AND
     // past the adoption guard (see the object docstring)
     val pointer = table.currentSnapshotId.getOrElse(-1L)
-    def pastAdoptGuard(p: java.nio.file.Path): Boolean =
-      Files.getLastModifiedTime(p).toMillis < nowMs - adoptGuardMs
     table.allSnapshotIds.filter(_ > pointer).foreach { id =>
-      val p = metaDir.resolve(s"snap-$id.json")
-      try if (Files.exists(p) && oldEnough(p) && pastAdoptGuard(p)) {
-        Files.deleteIfExists(p); deletedMeta += s"snap-$id.json"
-      } catch { case e: Exception => failures += s"snap-$id.json: ${e.getMessage}" }
+      sweep(s"metadata/snap-$id.json", s"snap-$id.json", deletedMeta,
+        nowMs - math.max(olderThanMs, adoptGuardMs))
     }
-    // 2. manifests referenced by NO remaining snapshot, past grace.
-    // ONE metadata parse serves both this sweep and the data sweep below
-    // (nothing between them deletes snapshots).
+    // 2. manifests referenced by NO remaining snapshot, pointer temps and
+    // quarantined stale-orphan snapshots, past grace. ONE metadata parse
+    // serves both this sweep and the data sweep below (nothing between
+    // them deletes snapshots).
     val remaining = table.allSnapshotsTolerant
     val liveManifests = remaining.flatMap(_.manifestPaths).toSet
-    if (Files.exists(metaDir)) LakeTable.listDir(metaDir).foreach { p =>
-      val n = p.getFileName.toString
-      val sweepable = n.startsWith("manifest-") && n.endsWith(".json") ||
-        n.startsWith("version-hint.tmp-") || n.startsWith("version-hint.adopt-") ||
-        n.contains(".json.superseded-") // quarantined stale-orphan snapshots
-      if (sweepable && !liveManifests(n)) {
-        try if (oldEnough(p)) { Files.deleteIfExists(p); deletedMeta += n }
-        catch { case e: Exception => failures += s"$n: ${e.getMessage}" }
-      }
+    table.io.list(FileIO.path(table.root, "metadata")).foreach { n =>
+      val sweepable = n.startsWith("manifest-") && n.endsWith(".json") && !liveManifests(n) ||
+        FileIO.isTemp(n) || n.startsWith("version-hint.adopt-") ||
+        n.contains(".json.superseded-")
+      if (sweepable) sweep(s"metadata/$n", n, deletedMeta)
     }
 
     // ---- data sweep ------------------------------------------------------
@@ -187,30 +175,25 @@ object OrphanGc {
     // live only in the ledger until the final commit — sweeping them would
     // make the resumed job publish a snapshot over deleted files.
     // (Manifests are SHARED across snapshots; each parses once. A manifest
-    // a prior half-failed expire already removed reads as empty — only
-    // NoSuchFile is tolerated, an IO error must not shrink the set.)
+    // a prior half-failed expire already removed reads as empty — only a
+    // missing file is tolerated, an IO error must not shrink the set.)
     val remainingEntries =
       Expire.tolerantEntries(table, remaining.flatMap(_.manifestPaths), failures)
     val ledgerOut = Ledger.allTaskRows(table).flatMap(_.outFiles)
     val referenced = remainingEntries.map(_.path).toSet ++ ledgerOut.map(_.path)
-    val dataDir = Paths.get(table.root, "data")
-    if (Files.exists(dataDir)) {
-      val stream = Files.list(dataDir)
-      try stream.iterator().asScala.foreach { p =>
-        val rel = s"data/${p.getFileName}"
-        if (!referenced(rel) && oldEnough(p)) {
-          try { Files.deleteIfExists(p); deleted += rel }
-          catch { case e: Exception => failures += s"$rel: ${e.getMessage}" }
-        }
-      } finally stream.close()
+    table.io.list(FileIO.path(table.root, "data")).foreach { n =>
+      if (!referenced(s"data/$n")) sweep(s"data/$n", s"data/$n", deleted)
     }
+    // a crashed or failed data write leaves its `_staging-*` dir behind
+    table.io.list(table.root).filter(_.startsWith("_staging-"))
+      .foreach(n => sweep(n, n, deletedMeta))
 
     // ---- sketch sweep ----------------------------------------------------
     // a batch dir stays while ANY snapshot entry or ledger checkpoint
     // still points at it; past that it is dead weight
     val referencedBatches =
       (remainingEntries.flatMap(_.sketch) ++ ledgerOut.flatMap(_.sketch)).toSet
-    Sketches.sweepOrphans(table, referencedBatches, oldEnough, deletedMeta, failures)
+    Sketches.orphans(table, referencedBatches).foreach(rel => sweep(rel, rel, deletedMeta))
 
     Result(deleted.result(), failures.result(), deletedMeta.result())
   }

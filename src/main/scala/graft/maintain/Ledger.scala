@@ -1,6 +1,5 @@
 package graft.maintain
 
-import java.nio.file.Files
 import java.util.concurrent.atomic.AtomicInteger
 
 import com.fasterxml.jackson.databind.JsonNode
@@ -8,7 +7,7 @@ import com.fasterxml.jackson.databind.node.ObjectNode
 
 import org.apache.spark.sql.{DataFrame, SparkSession}
 
-import graft.lake.{DataFile, LakeTable, MetaJson, Snapshot}
+import graft.lake.{DataFile, FileIO, LakeTable, MetaJson, Snapshot}
 
 import scala.jdk.CollectionConverters._
 
@@ -25,7 +24,7 @@ import scala.jdk.CollectionConverters._
   * [[Dedupe]], [[DeleteFrom]]) runs through it, supplying only how it
   * plans groups, what it writes for one group, and how it reports.
   *
-  * Each task row is its own atomically-moved JSON file, so a crash
+  * Each task row is its own atomically-replaced JSON file, so a crash
   * mid-write can never corrupt previously checkpointed tasks.
   */
 object Ledger {
@@ -37,7 +36,7 @@ object Ledger {
       errorMessage: String = "")
 
   private def jobDir(table: LakeTable, jobId: String) =
-    table.ledgerDir.resolve(jobId)
+    FileIO.path(table.ledgerDir, jobId)
 
   // ---- plan -------------------------------------------------------------
 
@@ -154,32 +153,24 @@ object Ledger {
     atomicWrite(table, row.jobId, f"task-${row.taskId}%05d.json", MetaJson.write(o))
   }
 
-  /** A COMPLETE task row file: atomicWrite's crash residue (`task-*.json.tmp`,
-    * truncated) must never poison resume — only the atomically-moved final
-    * name counts.
+  /** `jobId`'s COMPLETE task rows: a crashed write's temp residue
+    * (`task-*.json.tmp-*`) must never poison resume — only the atomically
+    * replaced final name counts. A row whose job dir vanished since the
+    * listing (swept by [[expireJobs]]) is skipped.
     */
-  private def isTaskFile(p: java.nio.file.Path): Boolean = {
-    val n = p.getFileName.toString
-    n.startsWith("task-") && n.endsWith(".json")
-  }
+  private def taskRows(table: LakeTable, jobId: String): Vector[TaskRow] =
+    table.io.list(jobDir(table, jobId))
+      .filter(n => n.startsWith("task-") && n.endsWith(".json"))
+      .flatMap(n => readJobFile(table, jobId, n).map(taskFromJson))
 
-  def readTasks(table: LakeTable, jobId: String): Map[Int, TaskRow] = {
-    val dir = jobDir(table, jobId)
-    if (!Files.exists(dir)) Map.empty
-    else LakeTable.listDir(dir)
-      .filter(isTaskFile)
-      .map { p => taskFromJson(MetaJson.read(Files.readString(p))) }
-      .map(t => t.taskId -> t).toMap
-  }
+  def readTasks(table: LakeTable, jobId: String): Map[Int, TaskRow] =
+    taskRows(table, jobId).map(t => t.taskId -> t).toMap
 
   /** Every task row across all jobs — OrphanGc consults this so checkpointed
     * outputs of in-flight/interrupted jobs are never swept as orphans.
     */
   def allTaskRows(table: LakeTable): Vector[TaskRow] =
-    if (!Files.exists(table.ledgerDir)) Vector.empty
-    else LakeTable.walkDir(table.ledgerDir)
-      .filter(isTaskFile)
-      .map(p => taskFromJson(MetaJson.read(Files.readString(p))))
+    table.io.list(table.ledgerDir).flatMap(taskRows(table, _))
 
   private def taskFromJson(n: JsonNode): TaskRow = TaskRow(
     n.get("job_id").asText, n.get("task_id").asInt, n.get("state").asText,
@@ -218,23 +209,18 @@ object Ledger {
                  nowMs: Long = System.currentTimeMillis()): ExpireResult = {
     val deleted = Vector.newBuilder[String]
     val failures = Vector.newBuilder[String]
-    if (Files.exists(table.ledgerDir)) {
-      LakeTable.listDir(table.ledgerDir).filter(Files.isDirectory(_)).foreach { dir =>
-        val jobId = dir.getFileName.toString
-        try {
-          val files = LakeTable.listDir(dir)
-          val committed = files.exists { f =>
-            val n = f.getFileName.toString
-            n.startsWith("commit") && n.endsWith(".json")
-          }
-          val allOld = files.nonEmpty &&
-            files.forall(f => Files.getLastModifiedTime(f).toMillis < nowMs - olderThanMs)
-          if (committed && allOld) {
-            LakeTable.deleteRecursively(dir)
-            deleted += jobId
-          }
-        } catch { case e: Exception => failures += s"$jobId: ${e.getMessage}" }
-      }
+    table.io.list(table.ledgerDir).foreach { jobId =>
+      val dir = jobDir(table, jobId)
+      try {
+        val files = table.io.list(dir) // empty for a stray non-directory
+        val committed = files.exists(n => n.startsWith("commit") && n.endsWith(".json"))
+        val allOld = files.nonEmpty && files.forall(n =>
+          table.io.stat(FileIO.path(dir, n)).forall(_.mtimeMs < nowMs - olderThanMs))
+        if (committed && allOld) {
+          table.io.delete(dir)
+          deleted += jobId
+        }
+      } catch { case e: Exception => failures += s"$jobId: ${e.getMessage}" }
     }
     ExpireResult(deleted.result(), failures.result())
   }
@@ -351,22 +337,13 @@ object Ledger {
 
   /** A JSON file of `jobId`'s ledger dir, if it exists. */
   private[maintain] def readJobFile(table: LakeTable, jobId: String,
-                                    name: String): Option[JsonNode] = {
-    val p = jobDir(table, jobId).resolve(name)
-    if (Files.exists(p)) Some(MetaJson.read(Files.readString(p))) else None
-  }
+                                    name: String): Option[JsonNode] =
+    table.io.read(FileIO.path(jobDir(table, jobId), name)).map(MetaJson.read)
 
-  /** Write one file of `jobId`'s ledger dir atomically (tmp + move): a crash
-    * mid-write leaves the previous version or none, never a torn file.
+  /** Write one file of `jobId`'s ledger dir atomically ([[FileIO.replace]]):
+    * a crash mid-write leaves the previous version or none, never a torn file.
     */
   private[maintain] def atomicWrite(table: LakeTable, jobId: String, name: String,
-                                    body: String): Unit = {
-    val dir = jobDir(table, jobId)
-    Files.createDirectories(dir)
-    val tmp = dir.resolve(name + ".tmp")
-    Files.writeString(tmp, body)
-    Files.move(tmp, dir.resolve(name),
-      java.nio.file.StandardCopyOption.ATOMIC_MOVE,
-      java.nio.file.StandardCopyOption.REPLACE_EXISTING)
-  }
+                                    body: String): Unit =
+    table.io.replace(FileIO.path(jobDir(table, jobId), name), body)
 }

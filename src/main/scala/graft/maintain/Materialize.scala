@@ -1,8 +1,6 @@
 package graft.maintain
 
-import java.nio.file.{Files, Paths}
-
-import graft.lake.LakeTable
+import graft.lake.{FileIO, LakeTable}
 
 /** User-facing cached-vs-rebuild materialization (the reference's download
   * path, file_service.py:105-139: serve the stored sanitized artifact when
@@ -36,14 +34,14 @@ object Materialize {
       val d = md.digest((lo + "\u0000" + hi).getBytes(java.nio.charset.StandardCharsets.UTF_8))
       "r" + d.take(8).map("%02x".format(_)).mkString
     }
-    val dir = Paths.get(outRoot, s"$name-snap$snap-$rangeKey")
-    if (Files.exists(dir.resolve("_SUCCESS")))
-      Artifact(dir.toString, snap, rebuilt = false)
+    val dir = FileIO.path(outRoot, s"$name-snap$snap-$rangeKey")
+    if (table.io.stat(FileIO.path(dir, "_SUCCESS")).isDefined)
+      Artifact(dir, snap, rebuilt = false)
     else {
       val df = table.scan(convRange = convRange, snapshotId = Some(snap)).df
         .orderBy("conv_id", "turn_idx")
-      graft.ingest.Ingest.writeSanitizedCsv(df, dir.toString)
-      Artifact(dir.toString, snap, rebuilt = true)
+      graft.ingest.Ingest.writeSanitizedCsv(df, dir)
+      Artifact(dir, snap, rebuilt = true)
     }
   }
 }

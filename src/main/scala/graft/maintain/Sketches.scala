@@ -1,13 +1,11 @@
 package graft.maintain
 
-import java.nio.file.{Files, Path, Paths, StandardCopyOption}
-
 import org.apache.spark.sql.{DataFrame, Encoders}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types._
 
 import graft.functions.Dedup
-import graft.lake.{DataFile, LakeTable, MetaJson}
+import graft.lake.{DataFile, FileIO, LakeTable, MetaJson}
 
 /** Lake-managed sketch columns: MinHash signatures + SimHash fingerprints
   * of each turn's normalized text, computed ONCE per immutable data file
@@ -40,8 +38,8 @@ import graft.lake.{DataFile, LakeTable, MetaJson}
   *     plus a METADATA-ONLY commit stamping their entries.
   *
   * Params are pinned store-wide in `_meta.json`: two signature generations
-  * must never silently mix into one banding pass. GC: [[sweepOrphans]]
-  * removes batch dirs referenced by no snapshot or ledger checkpoint.
+  * must never silently mix into one banding pass. GC: [[orphans]] names
+  * the batch dirs referenced by no snapshot or ledger checkpoint.
   */
 object Sketches {
 
@@ -64,13 +62,8 @@ object Sketches {
     StructField("n_tokens", IntegerType),
     StructField("__src", StringType)))
 
-  private def storeDir(table: LakeTable): Path = Paths.get(table.root, "sketches")
-  private def metaPath(table: LakeTable): Path = storeDir(table).resolve("_meta.json")
-
-  /** The store is ACTIVE once `_meta.json` exists (the first `ensure`
-    * writes it); only then do writes pay the sketch pass.
-    */
-  def isActive(table: LakeTable): Boolean = Files.exists(metaPath(table))
+  private def storeDir(table: LakeTable): String = FileIO.path(table.root, "sketches")
+  private def metaPath(table: LakeTable): String = FileIO.path(storeDir(table), "_meta.json")
 
   private def canSketch(table: LakeTable): Boolean = {
     val names = table.currentSnapshot.map(_.schema.fieldNames.toSet)
@@ -84,10 +77,9 @@ object Sketches {
     */
   def sketchOnWrite(table: LakeTable, entries: Vector[DataFile],
                     tag: String): Vector[DataFile] = {
-    if (entries.isEmpty || !isActive(table) || !canSketch(table)) entries
-    else {
-      val params = readParams(table)
-      val batch = computeBatch(table, entries.map(f => table.absData(f.path)), tag, params)
+    val params = if (entries.isEmpty) None else readParams(table)
+    params.filter(_ => canSketch(table)).fold(entries) { p =>
+      val batch = computeBatch(table, entries.map(f => table.absData(f.path)), tag, p)
       entries.map(_.copy(sketch = Some(batch)))
     }
   }
@@ -102,14 +94,13 @@ object Sketches {
     */
   def ensure(table: LakeTable, params: Params = Params()): EnsureResult = {
     val spark = table.spark
-    Files.createDirectories(storeDir(table))
     checkOrWriteMeta(table, params)
 
     val entries = table.currentEntries
     // O(batches) dir stats — NOT per-file: a batch is shared by a write's
     // whole output, and a covered table has zero missing batches
     val liveBatch: Set[String] = entries.flatMap(_.file.sketch).distinct
-      .filter(b => Files.isDirectory(Paths.get(table.root, b))).toSet
+      .filter(b => table.io.stat(table.absData(b)).exists(_.isDir)).toSet
     val missing = entries.filter(e => !e.file.sketch.exists(liveBatch))
 
     val computed =
@@ -136,8 +127,7 @@ object Sketches {
     val spark = table.spark
     val entries = table.currentEntries
     val batches = entries.flatMap(_.file.sketch).distinct
-      .map(b => Paths.get(table.root, b)).filter(Files.isDirectory(_))
-      .map(_.toString)
+      .map(table.absData).filter(p => table.io.stat(p).exists(_.isDir))
     val base =
       if (batches.isEmpty)
         spark.createDataFrame(new java.util.ArrayList[org.apache.spark.sql.Row](),
@@ -151,17 +141,14 @@ object Sketches {
   }
 
   /** One Spark job sketches a set of files into one consolidated batch dir,
-    * published with an atomic move (a torn write is re-staged, never
-    * trusted). `__src` is a regular COLUMN (table-relative data path), not
-    * a partition dir — no per-file directories, no partition-name escaping
+    * published with a rename (a torn write is re-staged, never trusted).
+    * `__src` is a regular COLUMN (table-relative data path), not a
+    * partition dir — no per-file directories, no partition-name escaping
     * hazards.
     */
   private def computeBatch(table: LakeTable, absPaths: Vector[String],
                            tag: String, params: Params): String = {
-    val spark = table.spark
-    val store = storeDir(table)
-    Files.createDirectories(store)
-    val staging = store.resolve(s"_staging-$tag")
+    val staging = FileIO.path(storeDir(table), s"_staging-$tag")
     val rows = table.readData(absPaths)
       .select(col("conv_id"), col("turn_idx"),
         Dedup.normalizedText(col("text")).as("__tn"),
@@ -178,59 +165,44 @@ object Sketches {
           .otherwise(size(split(col("__tn"), " "))).cast("int").as("n_tokens"),
         col("__src"))
     rows.write.mode("overwrite").options(table.dataWriteOptions)
-      .option("compression", "zstd").parquet(staging.toString)
+      .option("compression", "zstd").parquet(staging)
     val rel = s"sketches/batch-$tag"
-    Files.move(staging, Paths.get(table.root, rel), StandardCopyOption.ATOMIC_MOVE)
+    table.io.rename(staging, table.absData(rel))
     rel
   }
 
-  /** Sweep batch dirs referenced by NO snapshot entry and NO ledger
-    * checkpoint (`referencedBatches` = relative `sketches/batch-...`
-    * paths), plus crashed `_staging-*` residue — called from [[OrphanGc]].
-    * `_meta.json` is a file, untouched.
+  /** The store's sweep candidates for [[OrphanGc]] (which applies the grace
+    * age), as relative `sketches/...` paths: batch dirs referenced by NO
+    * snapshot entry and NO ledger checkpoint (`referencedBatches`), crashed
+    * `_staging-*` residue and `_meta.json` temps. `_meta.json` itself stays.
     */
-  private[maintain] def sweepOrphans(
-      table: LakeTable, referencedBatches: Set[String],
-      oldEnough: Path => Boolean,
-      deleted: scala.collection.mutable.Builder[String, Vector[String]],
-      failures: scala.collection.mutable.Builder[String, Vector[String]]): Unit = {
-    val store = storeDir(table)
-    if (!Files.exists(store)) return
-    LakeTable.listDir(store).filter(Files.isDirectory(_)).foreach { d =>
-      val name = d.getFileName.toString
-      val sweepable =
-        if (name.startsWith("_staging-")) true
-        else !name.startsWith("_") && !referencedBatches(s"sketches/$name")
-      if (sweepable) {
-        try if (oldEnough(d)) {
-          LakeTable.deleteRecursively(d); deleted += s"sketches/$name"
-        } catch { case e: Exception => failures += s"sketches/$name: ${e.getMessage}" }
-      }
-    }
-  }
+  private[maintain] def orphans(table: LakeTable,
+                                referencedBatches: Set[String]): Vector[String] =
+    table.io.list(storeDir(table)).filter { name =>
+      name.startsWith("_staging-") || FileIO.isTemp(name) ||
+        !name.startsWith("_") && !referencedBatches(s"sketches/$name")
+    }.map(name => s"sketches/$name")
 
-  private def readParams(table: LakeTable): Params = {
-    val n = MetaJson.read(Files.readString(metaPath(table)))
-    Params(n.get("shingle_k").asInt, n.get("num_hashes").asInt)
-  }
+  /** The store's pinned params. The store is ACTIVE once `_meta.json`
+    * exists (the first `ensure` writes it); only then do writes pay the
+    * sketch pass.
+    */
+  private def readParams(table: LakeTable): Option[Params] =
+    table.io.read(metaPath(table)).map(MetaJson.read).map(n =>
+      Params(n.get("shingle_k").asInt, n.get("num_hashes").asInt))
 
-  private def checkOrWriteMeta(table: LakeTable, params: Params): Unit = {
-    val meta = metaPath(table)
-    if (Files.exists(meta)) {
-      val existing = readParams(table)
-      require(existing == params,
-        s"sketch store at ${storeDir(table)} was built with $existing, called " +
-          s"with $params — two signature generations must not mix; delete the " +
-          "store to rebuild")
-    } else {
-      val o = MetaJson.mapper.createObjectNode()
-      o.put("shingle_k", params.shingleK)
-      o.put("num_hashes", params.numHashes)
-      o.put("normalization", "lower-ws-collapse")
-      val tmp = storeDir(table).resolve("_meta.json.tmp")
-      Files.writeString(tmp, MetaJson.write(o))
-      Files.move(tmp, meta, StandardCopyOption.ATOMIC_MOVE,
-        StandardCopyOption.REPLACE_EXISTING)
+  private def checkOrWriteMeta(table: LakeTable, params: Params): Unit =
+    readParams(table) match {
+      case Some(existing) =>
+        require(existing == params,
+          s"sketch store at ${storeDir(table)} was built with $existing, called " +
+            s"with $params — two signature generations must not mix; delete the " +
+            "store to rebuild")
+      case None =>
+        val o = MetaJson.mapper.createObjectNode()
+        o.put("shingle_k", params.shingleK)
+        o.put("num_hashes", params.numHashes)
+        o.put("normalization", "lower-ws-collapse")
+        table.io.replace(metaPath(table), MetaJson.write(o))
     }
-  }
 }

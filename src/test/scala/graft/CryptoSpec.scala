@@ -5,7 +5,7 @@ import java.nio.file.{Files, Paths}
 import org.scalatest.funsuite.AnyFunSuite
 import org.apache.spark.sql.functions._
 
-import graft.lake.{Crypto, LakeTable}
+import graft.lake.{Crypto, FileIO, LakeTable}
 import graft.maintain.{Clustering, Compaction, Dedupe, DeleteFrom, Maintenance, MergeInto}
 import graft.synth.TranscriptSynth
 
@@ -80,10 +80,11 @@ class CryptoSpec extends AnyFunSuite {
       val scan = t.scan(convRange = Some(("c00000010", "c00000019")))
       assert(scan.prune.ratio >= 0.5, s"prune over encrypted files: ${scan.prune.ratio}")
       // sketch batches are encrypted too
-      val batches = LakeTable.listDir(Paths.get(t.root, "sketches"))
+      val store = Paths.get(t.root, "sketches")
+      val batches = FileIO.Local.list(store.toString).map(store.resolve)
         .filter(p => Files.isDirectory(p) && p.getFileName.toString.startsWith("batch-"))
       assert(batches.nonEmpty, "minhash cycle must have built sketch batches")
-      val parts = batches.flatMap(LakeTable.listDir(_))
+      val parts = batches.flatMap(b => FileIO.Local.list(b.toString).map(b.resolve))
         .filter(_.getFileName.toString.endsWith(".parquet"))
       parts.foreach { p =>
         val hay = new String(Files.readAllBytes(p),

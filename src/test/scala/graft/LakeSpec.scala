@@ -988,8 +988,8 @@ class LakeSpec extends AnyFunSuite {
     // superseders can't both win, and a pointer-regression accident keeps
     // its data recoverable for the grace window); GC sweeps it past grace
     val metaDir = java.nio.file.Paths.get(t.root, "metadata")
-    val quarantined = LakeTable.listDir(metaDir)
-      .map(_.getFileName.toString).filter(_.contains(".json.superseded-"))
+    val quarantined = FileIO.Local.list(metaDir.toString)
+      .filter(_.contains(".json.superseded-"))
     assert(quarantined.size == 1, s"expected a quarantine file, got $quarantined")
     val gc = OrphanGc.removeOrphans(t, olderThanMs = 0,
       nowMs = System.currentTimeMillis() + 60000, adoptGuardMs = 0)
@@ -1030,7 +1030,7 @@ class LakeSpec extends AnyFunSuite {
     assert(r1.groups > 0)
     // marker is PER OPERATION: a different op sharing the jobId must not
     // see cluster's marker as its own
-    val marker = t.ledgerDir.resolve("job-A/commit-cluster.json")
+    val marker = Paths.get(t.ledgerDir, "job-A/commit-cluster.json")
     assert(java.nio.file.Files.exists(marker), "commit marker written after the snapshot")
     assert(Ledger.committedJobSnapshot(t, "job-A", "compact").isEmpty,
       "another operation must not inherit this op's marker")
@@ -1041,7 +1041,7 @@ class LakeSpec extends AnyFunSuite {
 
     // a LEGACY single marker (pre-per-op layouts) still short-circuits when
     // its operation matches
-    val legacy = t.ledgerDir.resolve("job-A/commit.json")
+    val legacy = Paths.get(t.ledgerDir, "job-A/commit.json")
     java.nio.file.Files.move(marker, legacy)
     assert(Ledger.committedJobSnapshot(t, "job-A", "cluster")
       .exists(_.id == r1.snapshot.id), "legacy commit.json must still count")
@@ -1063,7 +1063,7 @@ class LakeSpec extends AnyFunSuite {
     val future = System.currentTimeMillis() + 60000
     val res = Ledger.expireJobs(t, olderThanMs = 0, nowMs = future)
     assert(res.deletedJobs == Vector("old-cluster"), s"got ${res.deletedJobs}")
-    assert(java.nio.file.Files.exists(t.ledgerDir.resolve("unfinished-job/plan.json")),
+    assert(java.nio.file.Files.exists(Paths.get(t.ledgerDir, "unfinished-job/plan.json")),
       "an uncommitted job's checkpoints must never be swept")
     // replaying the swept job id is a cheap incremental no-op, not a rerun
     val replay = Clustering.cluster(t, "old-cluster")
@@ -1078,7 +1078,7 @@ class LakeSpec extends AnyFunSuite {
     // cycles 2 and 3 found nothing to compact or recluster: their jobs are
     // still marked committed, exactly like a job that rewrote files
     for (c <- Seq("cyc-2", "cyc-3"); op <- Seq("compact", "cluster"))
-      assert(Files.exists(t.ledgerDir.resolve(s"$c-$op/commit-$op.json")),
+      assert(Files.exists(Paths.get(t.ledgerDir, s"$c-$op/commit-$op.json")),
         s"empty job $c-$op must be marked committed")
 
     // replaying a cycle after a later commit answers from the markers
