@@ -1,6 +1,6 @@
 package graft.ingest
 
-import org.apache.spark.sql.{Column, DataFrame}
+import org.apache.spark.sql.{Column, DataFrame, Row}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types._
 
@@ -66,4 +66,8 @@ object Normalize {
     val ok = col("conv_id").isNotNull && col("conv_id") =!= "" && col("turn_idx").isNotNull
     (df.where(ok), df.where(!coalesce(ok, lit(false))))
   }
+
+  /** [[routeInvalid]]'s rule for a row already collected to the driver. */
+  def hasValidKey(r: Row, convIdx: Int, turnIdx: Int): Boolean =
+    !r.isNullAt(convIdx) && r.getString(convIdx).nonEmpty && !r.isNullAt(turnIdx)
 }

@@ -112,7 +112,8 @@ object Transposer {
     * The content is parsed ONCE on the driver; the pivot's key order is the
     * first-seen order of normalized keys over those same rows (identical to
     * the groupBy(min(line_no)) order — line_no IS the row index), so no
-    * Spark job is needed to discover it.
+    * Spark job is needed to discover it, and the transposition runs as one
+    * task.
     */
   def parseVerticalCsv(spark: SparkSession, content: String, dialect: Dialect): (DataFrame, Seq[String]) = {
     val rows = StrictCsv.parse(content, dialect.delimiter, dialect.quote, strict = false)
@@ -123,7 +124,9 @@ object Transposer {
         if (k.nonEmpty) seen += k
       }
     }
-    val out = transposeKv(kvFromRows(spark, "inline", rows), Some(seen.toSeq))
+    // One drop's rows sit in one partition, so the window, the pivot and
+    // the ordering all plan without an Exchange.
+    val out = transposeKv(kvFromRows(spark, "inline", rows).coalesce(1), Some(seen.toSeq))
     val fields = out.columns.filterNot(c => c == "file" || c == "rec_id").toSeq
     (out.drop("file", "rec_id"), fields)
   }

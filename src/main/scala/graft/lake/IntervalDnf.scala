@@ -16,13 +16,21 @@ import org.apache.spark.unsafe.types.UTF8String
   * analysis cannot bound degrades to the EVERYTHING box at exactly that
   * subtree — pruning is only ever a sound superset of the matching files.
   *
-  * Three dimensions: `conv_id` (string order), `turn_idx` (int), and `ts`
+  * Three dimensions: `conv_id` ([[ConvOrder]]), `turn_idx` (int), and `ts`
   * (event time, epoch MICROseconds — the unit Parquet TIMESTAMP_MICROS
   * stats persist), so a row-retention predicate like
   * `ts < timestamp_millis(...)` prunes candidate files exactly the way
   * conv ranges prune scans.
   */
 object IntervalDnf {
+
+  /** `conv_id` order: UTF-8 bytes, which is Spark's string order and the
+    * order of Parquet's binary min/max stats. `String.compareTo` (UTF-16
+    * code units) disagrees with it once a key holds a character above
+    * U+FFFF next to one in U+E000..U+FFFF.
+    */
+  val ConvOrder: Ordering[String] = (a: String, b: String) =>
+    UTF8String.fromString(a).compareTo(UTF8String.fromString(b))
 
   /** Possibly one-sided bounds; a missing side never prunes. */
   final case class Bounds[T](lo: Option[T], hi: Option[T]) {
@@ -53,15 +61,15 @@ object IntervalDnf {
     def isAll: Boolean = conv.isAll && turn.isAll && ts.isAll
     def intersect(o: Conj): Option[Conj] =
       for {
-        c <- conv.intersect(o.conv)
+        c <- conv.intersect(o.conv)(ConvOrder)
         t <- turn.intersect(o.turn)
         s <- ts.intersect(o.ts)
       } yield Conj(c, t, s)
     def overlapsFile(f: DataFile): Boolean =
-      conv.overlaps(f.minConv, f.maxConv) && turn.overlaps(f.minTurn, f.maxTurn) &&
+      conv.overlaps(f.minConv, f.maxConv)(ConvOrder) && turn.overlaps(f.minTurn, f.maxTurn) &&
         ts.overlaps(f.minTsUs, f.maxTsUs)
     def overlapsManifest(r: ManifestRef): Boolean =
-      conv.overlaps(r.minConv, r.maxConv) && turn.overlaps(r.minTurn, r.maxTurn) &&
+      conv.overlaps(r.minConv, r.maxConv)(ConvOrder) && turn.overlaps(r.minTurn, r.maxTurn) &&
         ts.overlaps(r.minTsUs, r.maxTsUs)
   }
   object Conj {
@@ -169,7 +177,7 @@ object IntervalDnf {
           case _ => None
         }
         if (pts.forall(_.isDefined))
-          pts.flatten.sorted.flatMap(v => conv(Some(v), Some(v))) else all
+          pts.flatten.sorted(ConvOrder).flatMap(v => conv(Some(v), Some(v))) else all
       case InSet(c, hs) if isCol(c, "turn_idx") && hs.size <= MaxBoxes =>
         val pts = hs.toSeq.map {
           case v: Int => Some(v)

@@ -255,7 +255,8 @@ class LakeTable(val root: String, val spark: SparkSession,
     * never silently overwrite files already referenced by a committed
     * snapshot — collisions fail loudly instead. Nothing is committed yet.
     */
-  def writeDataFiles(df: DataFrame, tag: String): Vector[DataFile] = {
+  def writeDataFiles(df: DataFrame, tag: String,
+                     maxRecordsPerFile: Long = 0L): Vector[DataFile] = {
     // Tags flow from caller-supplied job/cycle ids into data-file NAMES,
     // and several pipelines match files back by `input_file_name()` (which
     // URL-encodes anything unusual) — a space or '%' in a cycle id would
@@ -279,7 +280,11 @@ class LakeTable(val root: String, val spark: SparkSession,
     // scales with executors while disks don't. For an encrypted table the
     // PME write options ride along (per-job datasource options — never a
     // global conf, so unrelated writes in the session stay plaintext).
-    try df.write.mode("overwrite").options(dataWriteOptions)
+    // `maxRecordsPerFile` > 0 splits each write task's output into files of
+    // at most that many rows (0 keeps the session's setting).
+    val split = if (maxRecordsPerFile > 0) Map("maxRecordsPerFile" -> maxRecordsPerFile.toString)
+                else Map.empty[String, String]
+    try df.write.mode("overwrite").options(dataWriteOptions).options(split)
       .option("compression", "zstd").parquet(staging)
     finally LakeTable.popMicrosTimestampConf(spark)
     val conf = spark.sessionState.newHadoopConf()

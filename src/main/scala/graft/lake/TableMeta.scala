@@ -81,26 +81,9 @@ final case class DataFile(
     maxTurn: Option[Int],
     minTsUs: Option[Long] = None,
     maxTsUs: Option[Long] = None,
-    sketch: Option[String] = None) {
+    sketch: Option[String] = None)
 
-  def overlapsConv(lo: String, hi: String): Boolean = (minConv, maxConv) match {
-    case (Some(mn), Some(mx)) => !(mx < lo || mn > hi)
-    case _ => true
-  }
-  def overlapsTurn(lo: Int, hi: Int): Boolean = (minTurn, maxTurn) match {
-    case (Some(mn), Some(mx)) => !(mx < lo || mn > hi)
-    case _ => true
-  }
-  def overlapsTsUs(lo: Long, hi: Long): Boolean = (minTsUs, maxTsUs) match {
-    case (Some(mn), Some(mx)) => !(mx < lo || mn > hi)
-    case _ => true
-  }
-}
-
-final case class Manifest(path: String, entries: Vector[DataFile]) {
-  def minConv: Option[String] = { val ms = entries.flatMap(_.minConv); if (ms.isEmpty) None else Some(ms.min) }
-  def maxConv: Option[String] = { val ms = entries.flatMap(_.maxConv); if (ms.isEmpty) None else Some(ms.max) }
-}
+final case class Manifest(path: String, entries: Vector[DataFile])
 
 /** Snapshot-level manifest entry: path + aggregate stats persisted IN the
   * snapshot, so scan planning prunes whole manifests without opening them
@@ -117,21 +100,7 @@ final case class ManifestRef(
     maxTurn: Option[Int],
     bytes: Long = 0L, // 0 = written before byte sums were persisted
     minTsUs: Option[Long] = None,
-    maxTsUs: Option[Long] = None) {
-
-  def overlapsConv(lo: String, hi: String): Boolean = (minConv, maxConv) match {
-    case (Some(mn), Some(mx)) => !(mx < lo || mn > hi)
-    case _ => true
-  }
-  def overlapsTurn(lo: Int, hi: Int): Boolean = (minTurn, maxTurn) match {
-    case (Some(mn), Some(mx)) => !(mx < lo || mn > hi)
-    case _ => true
-  }
-  def overlapsTsUs(lo: Long, hi: Long): Boolean = (minTsUs, maxTsUs) match {
-    case (Some(mn), Some(mx)) => !(mx < lo || mn > hi)
-    case _ => true
-  }
-}
+    maxTsUs: Option[Long] = None)
 
 object ManifestRef {
   /** Aggregate a manifest's entries into its snapshot-level ref. A single
@@ -139,12 +108,13 @@ object ManifestRef {
     * manifest-level pruning exactly as safe as file-level pruning.
     */
   def of(path: String, entries: Vector[DataFile]): ManifestRef = {
-    def agg[T: Ordering](get: DataFile => Option[T], pick: Vector[T] => T): Option[T] = {
+    def agg[T](get: DataFile => Option[T], pick: Vector[T] => T): Option[T] = {
       val vs = entries.map(get)
       if (vs.isEmpty || vs.exists(_.isEmpty)) None else Some(pick(vs.flatten))
     }
     ManifestRef(path, entries.size.toLong, entries.map(_.rows).sum,
-      agg[String](_.minConv, _.min), agg[String](_.maxConv, _.max),
+      agg[String](_.minConv, _.min(IntervalDnf.ConvOrder)),
+      agg[String](_.maxConv, _.max(IntervalDnf.ConvOrder)),
       agg[Int](_.minTurn, _.min), agg[Int](_.maxTurn, _.max),
       bytes = entries.map(_.bytes).sum,
       minTsUs = agg[Long](_.minTsUs, _.min), maxTsUs = agg[Long](_.maxTsUs, _.max))

@@ -84,7 +84,7 @@ object DeleteFrom {
       val boxes = IntervalDnf.extract(
         IntervalDnf.analyzedCondition(spark, table.schema.toStruct, predSql))
       convRange.foreach { case (lo, hi) =>
-        require(boxes.forall(_.conv.within(lo, hi)),
+        require(boxes.forall(_.conv.within(lo, hi)(IntervalDnf.ConvOrder)),
           s"convRange hint [$lo..$hi] is narrower than what the predicate " +
             s"'$predSql' can match — a hinted DELETE must never silently " +
             "skip matching rows; drop the hint or widen it")

@@ -1,13 +1,15 @@
 package graft.maintain
 
-import org.apache.spark.sql.{Column, DataFrame}
+import scala.jdk.CollectionConverters._
+
+import org.apache.spark.sql.{DataFrame, Row}
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.graftx.Bridge
 import org.apache.spark.sql.types.StringType
 import org.apache.spark.storage.StorageLevel
 
 import graft.ingest.Normalize
-import graft.lake.{LakeTable, Snapshot}
-import graft.lake.LakeTable.FileEntry
+import graft.lake.{FieldDef, IntervalDnf, LakeTable, Snapshot, TableSchema}
 
 /** MERGE INTO keyed on (conv_id, turn_idx) with the reference's
   * non-empty-wins update semantics (`_group_records_by_id`,
@@ -15,27 +17,43 @@ import graft.lake.LakeTable.FileEntry
   * when non-empty; empty/"" never clobbers existing data; unmatched staged
   * keys insert.
   *
-  * Physical plan, scale-aware:
-  *   1. the staged pipeline (align -> validate -> in-batch dedup) is
-  *      persisted and evaluated ONCE — counts, the key-range agg and the
-  *      join all read the cached frame, not re-run the groupBy;
-  *   2. staged key range (one agg) -> TWO-LEVEL metadata pre-filter: only
-  *      manifests whose persisted conv range overlaps the staged range are
-  *      even OPENED (the rest carry forward unparsed), and within them only
-  *      files whose stats overlap are rewritten — a merge touching 0.1% of
-  *      conversations parses 0.1% of the manifests and rewrites 0.1% of the
-  *      table;
-  *   3. full-outer sort-merge join on the key (full outer cannot
-  *      broadcast; both sides shuffle once on the key);
-  *   4. per-column coalesce(nullif(staged, ''), target);
-  *   5. range-repartition + sort on the cluster key, write, commitDelta:
-  *      untouched files AND their manifests carry over verbatim.
+  * Physical plan. Two of Spark's own bounds choose it, so no option is
+  * added:
+  *   - a drop whose aligned plan is estimated at most
+  *     `spark.sql.autoBroadcastJoinThreshold` bytes (the size Spark would
+  *     collect to the driver for a broadcast anyway) is collected ONCE and
+  *     rebuilt as a local relation; its key count, `conv_id` range and
+  *     rejected rows come from those rows with no Spark action. A parsed
+  *     horizontal drop folds into a `LocalRelation`, so that collect runs
+  *     no job either;
+  *   - if, in addition, the rewrite set is at most
+  *     `spark.sql.files.maxPartitionBytes` (one scan split), both join sides
+  *     are coalesced to one partition: dedup, full-outer join, merge
+  *     projection and sort plan with no Exchange, and the writer's
+  *     `maxRecordsPerFile` splits the sorted output into key-tight files.
+  *     Such a merge is one Spark job, the write;
+  *   - any other drop is persisted (and released in a `finally`), its counts
+  *     and key range come from one aggregate, and the join and output
+  *     shuffle: a full-outer sort-merge join on the key, then a
+  *     range-repartition + sort on the key (full outer cannot broadcast).
+  *     A broadcast threshold of -1 sends every merge here.
+  * Shared by both: the staged key range drives a TWO-LEVEL metadata
+  * pre-filter (only manifests whose persisted conv range overlaps it are
+  * OPENED, and within them only overlapping files are rewritten), the
+  * per-column coalesce(nullif(staged, ''), target) projection, and
+  * commitDelta, which carries untouched files AND their manifests over
+  * verbatim.
   */
 object MergeInto {
 
   final case class Result(snapshot: Snapshot, touchedFiles: Int, carriedFiles: Int,
                           stagedRows: Long, rejectedRows: Long,
                           openedManifests: Int = 0, totalManifests: Int = 0)
+
+  /** A deduplicated drop and what pruning needs to know about it. */
+  private final case class Staged(dedup: DataFrame, rows: Long,
+                                  convRange: Option[(String, String)], rejected: Long,
+                                  local: Boolean)
 
   /** `staged`: an all-string (or already-typed) drop frame; columns are
     * aligned by trimmed name, schema evolves append-only. If `staged` has a
@@ -51,34 +69,59 @@ object MergeInto {
     val withSeq =
       if (staged.columns.contains("_seq")) staged
       else staged.withColumn("_seq", monotonically_increasing_id())
-    val (alignedAll, evolvedSchema) = Normalize.alignToSchema(
+    val (aligned, evolvedSchema) = Normalize.alignToSchema(
       withSeq, table.schema, passthrough = Seq("_seq"))
-    val aligned = alignedAll.persist(StorageLevel.MEMORY_AND_DISK)
-    val (valid0, rejected) = Normalize.routeInvalid(aligned)
-
-    // Resolve duplicate keys INSIDE the batch first (reference: later
-    // records in one file overwrite non-empty field-by-field).
     val dataFields = evolvedSchema.fields.filterNot(f =>
-      f.name == "conv_id" || f.name == "turn_idx")
-    val stagedSeq = valid0.withColumn("__ord", col("_seq"))
+      f.name == "conv_id" || f.name == "turn_idx").toSeq
+    def run(st: Staged) = rewrite(table, st, evolvedSchema, dataFields, tag, targetFileRows)
+
+    if (Bridge.sizeInBytes(aligned) <= spark.sessionState.conf.autoBroadcastJoinThreshold) {
+      val rows = aligned.collect()
+      val local = spark.createDataFrame(rows.toSeq.asJava, aligned.schema).coalesce(1)
+      val (ci, ti) = (aligned.schema.fieldIndex("conv_id"), aligned.schema.fieldIndex("turn_idx"))
+      val (valid, rejected) = rows.partition(Normalize.hasValidKey(_, ci, ti))
+      val keys = valid.map(r => (r.getString(ci), r.get(ti))).distinct
+      val convs = keys.map(_._1)
+      val range =
+        if (convs.isEmpty) None
+        else Some((convs.min(IntervalDnf.ConvOrder), convs.max(IntervalDnf.ConvOrder)))
+      run(Staged(dedupOf(Normalize.routeInvalid(local)._1, dataFields),
+        keys.length.toLong, range, rejected.length.toLong, local = true))
+    } else {
+      val cached = aligned.persist(StorageLevel.MEMORY_AND_DISK)
+      try {
+        val (valid, rejected) = Normalize.routeInvalid(cached)
+        val dedup = dedupOf(valid, dataFields).persist(StorageLevel.MEMORY_AND_DISK)
+        try {
+          // ONE action computes count + key range (materializing the cache);
+          // rejectedRows then reads the cached aligned frame.
+          val aggRow = dedup.agg(count(lit(1)), min("conv_id"), max("conv_id")).head()
+          val range = for (l <- Option(aggRow.getString(1)); h <- Option(aggRow.getString(2)))
+            yield (l, h)
+          run(Staged(dedup, aggRow.getLong(0), range, rejected.count(), local = false))
+        } finally dedup.unpersist()
+      } finally cached.unpersist()
+    }
+  }
+
+  /** Resolve duplicate keys INSIDE the batch (reference: later records in
+    * one file overwrite non-empty field-by-field), ordered by `_seq`.
+    */
+  private def dedupOf(valid: DataFrame, dataFields: Seq[FieldDef]): DataFrame = {
     val aggs = dataFields.map { f =>
       val w = if (f.dataType == StringType)
-        graft.ingest.Grouping.lastNonEmptyWins(col(s"`${f.name}`"), col("__ord"))
-      else graft.ingest.Grouping.lastNonNullWins(col(s"`${f.name}`"), col("__ord"))
+        graft.ingest.Grouping.lastNonEmptyWins(col(s"`${f.name}`"), col("_seq"))
+      else graft.ingest.Grouping.lastNonNullWins(col(s"`${f.name}`"), col("_seq"))
       w.as(f.name)
     }
-    val dedup0 =
-      if (aggs.isEmpty) stagedSeq.select("conv_id", "turn_idx").distinct()
-      else stagedSeq.groupBy(col("conv_id"), col("turn_idx")).agg(aggs.head, aggs.tail: _*)
-    val dedup = dedup0.persist(StorageLevel.MEMORY_AND_DISK)
+    if (aggs.isEmpty) valid.select("conv_id", "turn_idx").distinct()
+    else valid.groupBy(col("conv_id"), col("turn_idx")).agg(aggs.head, aggs.tail: _*)
+  }
 
-    // ONE action computes count + key range (materializing the cache);
-    // rejectedRows then reads the cached aligned frame.
-    val aggRow = dedup.agg(count(lit(1)), min("conv_id"), max("conv_id")).head()
-    val stagedRows = aggRow.getLong(0)
-    val (lo, hi) = (Option(aggRow.getString(1)), Option(aggRow.getString(2)))
-    val rejectedRows = rejected.count()
-
+  private def rewrite(table: LakeTable, st: Staged, evolvedSchema: TableSchema,
+                      dataFields: Seq[FieldDef], tag: String,
+                      targetFileRows: Long): Result = {
+    val spark = table.spark
     // Two-level pre-filter, same rule as LakeTable.scan: manifests whose
     // PERSISTED aggregate conv range misses the staged range are never
     // OPENED — a 0.1%-range merge on a 10^6-file table parses the one
@@ -86,14 +129,17 @@ object MergeInto {
     // manifests, per-file stats select the rewrite set.
     val snap = table.currentSnapshot.getOrElse(
       throw new IllegalStateException(s"no snapshot to merge into at ${table.root}"))
-    val pruned = (lo, hi) match {
-      case (Some(l), Some(h)) => table.overlappingEntries(snap, Some((l, h)))
-      case _ => // empty staged batch: nothing to rewrite, open NO manifests
+    val pruned = st.convRange match {
+      case Some(r) => table.overlappingEntries(snap, Some(r))
+      case None => // empty staged batch: nothing to rewrite, open NO manifests
         LakeTable.PrunedEntries(Vector.empty,
           snap.manifests.map(_.entryCount).sum, snap.manifests.size.toLong, 0L)
     }
     val touched = pruned.entries
-    val carried = (pruned.totalFiles - touched.size).toInt
+    def result(s: Snapshot) =
+      Result(s, touched.size, (pruned.totalFiles - touched.size).toInt, st.rows, st.rejected,
+        openedManifests = pruned.openedManifests.toInt,
+        totalManifests = pruned.totalManifests.toInt)
 
     // No-op merge (empty or all-rejected drop, nothing to rewrite): commit
     // NOTHING. Writing an empty data file per no-op merge would litter one
@@ -103,34 +149,22 @@ object MergeInto {
     // still carries NEW columns must commit the widened schema (metadata
     // only, no data files) — silently dropping the evolution would lose the
     // one thing that batch said.
-    if (stagedRows == 0 && touched.isEmpty) {
-      aligned.unpersist()
-      dedup.unpersist()
-      if (evolvedSchema != table.schema) {
-        val snapEv = table.commitDelta(Vector.empty, Vector.empty, "merge",
-          Some(evolvedSchema), Map("merge_tag" -> tag, "schema_only" -> "true"))
-        return Result(snapEv, 0, carried, 0L, rejectedRows,
-          openedManifests = pruned.openedManifests.toInt,
-          totalManifests = pruned.totalManifests.toInt)
-      }
-      val cur = table.currentSnapshot.get
-      return Result(cur, 0, carried, 0L, rejectedRows,
-        openedManifests = pruned.openedManifests.toInt,
-        totalManifests = pruned.totalManifests.toInt)
+    if (st.rows == 0 && touched.isEmpty) {
+      if (evolvedSchema == table.schema) return result(table.currentSnapshot.get)
+      return result(table.commitDelta(Vector.empty, Vector.empty, "merge",
+        Some(evolvedSchema), Map("merge_tag" -> tag, "schema_only" -> "true")))
     }
 
-    val st = evolvedSchema.toStruct
-    val target =
-      if (touched.isEmpty)
-        spark.createDataFrame(new java.util.ArrayList[org.apache.spark.sql.Row](), st)
+    val oneTask = st.local &&
+      touched.map(_.file.bytes).sum <= spark.sessionState.conf.filesMaxPartitionBytes
+    val target0 =
+      if (touched.isEmpty) spark.createDataFrame(List.empty[Row].asJava, evolvedSchema.toStruct)
       else table.readData(touched.map(e => table.absData(e.file.path)))
+    val target = if (oneTask) target0.coalesce(1) else target0
 
-    val t = target.as("t")
-    val s = dedup.as("s")
-    val joined = t.join(s,
+    val joined = target.as("t").join(st.dedup.as("s"),
       col("t.conv_id") === col("s.conv_id") && col("t.turn_idx") === col("s.turn_idx"),
       "full_outer")
-
     val targetCols = table.schema.fieldNames.toSet
     val mergedCols =
       coalesce(col("s.conv_id"), col("t.conv_id")).as("conv_id") +:
@@ -148,25 +182,25 @@ object MergeInto {
     val merged = joined.select(mergedCols: _*)
       .select(evolvedSchema.fieldNames.map(n => col(s"`$n`")): _*)
 
-    // Size output files by rows (we know exact input rows cheaply).
-    val totalRows = touched.map(_.file.rows).sum + stagedRows
+    // Size output files by rows (we know exact input rows cheaply), and
+    // keep each file's conv range tight (prunable): the one task writes its
+    // sorted rows in runs of maxRecordsPerFile; the shuffled plan
+    // range-partitions on the key. The balanced Z-curve belongs to
+    // Clustering.
+    val totalRows = touched.map(_.file.rows).sum + st.rows
     val nOut = math.max(1, math.ceil(totalRows.toDouble / targetFileRows).toInt)
-    // Range-partition directly on the key: merge outputs get tight per-file
-    // conv ranges (prunable); the balanced Z-curve belongs to Clustering.
-    val out = merged
-      .repartitionByRange(nOut, col("conv_id"), col("turn_idx"))
-      .sortWithinPartitions(col("conv_id"), col("turn_idx"))
-
-    val newEntries = table.writeDataFiles(out, tag)
-    aligned.unpersist()
-    dedup.unpersist()
-    val snap2 = table.commitDelta(newEntries, touched, "merge", Some(evolvedSchema),
+    val newEntries =
+      if (oneTask)
+        table.writeDataFiles(merged.sortWithinPartitions(col("conv_id"), col("turn_idx")), tag,
+          maxRecordsPerFile = math.ceil(totalRows.toDouble / nOut).toLong)
+      else
+        table.writeDataFiles(merged
+          .repartitionByRange(nOut, col("conv_id"), col("turn_idx"))
+          .sortWithinPartitions(col("conv_id"), col("turn_idx")), tag)
+    result(table.commitDelta(newEntries, touched, "merge", Some(evolvedSchema),
       Map("merge_tag" -> tag,
-        "staged_rows" -> stagedRows.toString,
-        "rejected_rows" -> rejectedRows.toString,
-        "touched_files" -> touched.size.toString))
-    Result(snap2, touched.size, carried, stagedRows, rejectedRows,
-      openedManifests = pruned.openedManifests.toInt,
-      totalManifests = pruned.totalManifests.toInt)
+        "staged_rows" -> st.rows.toString,
+        "rejected_rows" -> st.rejected.toString,
+        "touched_files" -> touched.size.toString)))
   }
 }

@@ -35,6 +35,13 @@ object Bridge {
     df.asInstanceOf[org.apache.spark.sql.classic.Dataset[org.apache.spark.sql.Row]]
       .queryExecution.analyzed
 
+  /** The optimizer's size estimate of a DataFrame's plan, in bytes — the
+    * figure Spark compares with `spark.sql.autoBroadcastJoinThreshold`.
+    */
+  def sizeInBytes(df: org.apache.spark.sql.DataFrame): BigInt =
+    df.asInstanceOf[org.apache.spark.sql.classic.Dataset[org.apache.spark.sql.Row]]
+      .queryExecution.optimizedPlan.stats.sizeInBytes
+
   /** The executed SparkPlan of a DataFrame — plan-evidence hook for tests
     * (file counts in FileSourceScanExec, codegen spans).
     */

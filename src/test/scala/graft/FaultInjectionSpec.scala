@@ -61,8 +61,13 @@ class FaultInjectionSpec extends AnyFunSuite {
     root.toString
   }
 
-  /** Crash `op` at each of its mutating storage calls; returns the count. */
-  private def crashAtEveryStep(name: String, template: Path)(op: LakeTable => Unit): Int = {
+  /** Crash `op` at each of its mutating storage calls; returns the count.
+    * With `checkReleased`, every crashed run must leave no frame cached
+    * that was not cached before.
+    */
+  private def crashAtEveryStep(name: String, template: Path, checkReleased: Boolean = false)(
+      op: LakeTable => Unit): Int = {
+    val cachedBefore = spark.sparkContext.getPersistentRDDs.keySet
     val tpl = LakeTable.load(spark, template.toString)
     val pinned = tpl.currentSnapshotId
     val pinnedRows = rows(tpl, pinned)
@@ -77,6 +82,10 @@ class FaultInjectionSpec extends AnyFunSuite {
     for (k <- 0 until n) {
       val root = copyOf(template, s"$name-crash-$k")
       Try(op(new LakeTable(root, spark, new CrashingIO(k))))
+      if (checkReleased) withClue(s"$name, crash at mutating call $k of $n: ") {
+        val leaked = spark.sparkContext.getPersistentRDDs.keySet -- cachedBefore
+        assert(leaked.isEmpty, s"cached RDDs left behind: $leaked")
+      }
       try op(LakeTable.load(spark, root))
       catch { case _: LakeTable.CommitConflictException => op(LakeTable.load(spark, root)) }
 
@@ -113,8 +122,13 @@ class FaultInjectionSpec extends AnyFunSuite {
       t.append(synth(3, "x"), "second")
     }
     val staged = drop(Seq("c00000001" -> "PATCHED", "c00000004" -> "", "n00000001" -> "NEW"))
-    val n = crashAtEveryStep("merge", tpl)(t => MergeInto.merge(t, staged, "drop-1"))
+    def crashMerges(name: String) =
+      crashAtEveryStep(name, tpl, checkReleased = true)(t => MergeInto.merge(t, staged, "drop-1"))
+    val n = crashMerges("merge")
     assert(n >= 4, s"only $n mutating calls")
+    // the persisted, shuffled plan releases its cached frames on a crash too
+    val m = TestSpark.withShuffledMerge(crashMerges("merge-shuffled"))
+    assert(m >= 4, s"only $m mutating calls")
   }
 
   test("crash at every storage step: compaction resumes its ledger job") {

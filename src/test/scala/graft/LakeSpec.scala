@@ -30,6 +30,14 @@ class LakeSpec extends AnyFunSuite {
 
   private def synth(nConvs: Int) = TranscriptSynth.turns(spark, nConvs, seed = 42L)
 
+  /** Run a MERGE test on both plans: the one-task plan a small drop takes,
+    * then the persisted, shuffled plan.
+    */
+  private def onBothMergePlans(body: => Unit): Unit = {
+    withClue("one-task plan: ")(body)
+    withClue("shuffled plan: ")(TestSpark.withShuffledMerge(body))
+  }
+
   test("lake writes restore the session's parquet timestamp type") {
     val key = "spark.sql.parquet.outputTimestampType"
     val before = spark.conf.get(key)
@@ -63,74 +71,175 @@ class LakeSpec extends AnyFunSuite {
   }
 
   test("merge: non-empty wins, inserts new keys, untouched files carried") {
-    import spark.implicits._
-    val t = LakeTable.create(spark, tmpTable("merge"), TranscriptSynth.schema)
-    val data = synth(40)
-    t.append(data.repartitionByRange(8, col("conv_id")), "init")
-    val before = t.currentFiles.size
+    onBothMergePlans {
+      import spark.implicits._
+      val t = LakeTable.create(spark, tmpTable("merge"), TranscriptSynth.schema)
+      val data = synth(40)
+      t.append(data.repartitionByRange(8, col("conv_id")), "init")
+      val before = t.currentFiles.size
 
-    // staged drop: update (c1,0) text; empty text for (c1,1) must NOT
-    // clobber; brand-new conversation inserts.
-    val staged = Seq(
-      ("c00000001", "0", "user", "UPDATED", "", "", 0L),
-      ("c00000001", "1", "", "", "", "", 1L),
-      ("c99999999", "0", "user", "new conv", "", "", 2L)
-    ).toDF("conv_id", "turn_idx", "role", "text", "tool", "ts_ignored", "_seq")
-      .drop("ts_ignored")
+      // staged drop: update (c1,0) text; empty text for (c1,1) must NOT
+      // clobber; brand-new conversation inserts.
+      val staged = Seq(
+        ("c00000001", "0", "user", "UPDATED", "", "", 0L),
+        ("c00000001", "1", "", "", "", "", 1L),
+        ("c99999999", "0", "user", "new conv", "", "", 2L)
+      ).toDF("conv_id", "turn_idx", "role", "text", "tool", "ts_ignored", "_seq")
+        .drop("ts_ignored")
 
-    val res = MergeInto.merge(t, staged, "drop1")
-    assert(res.stagedRows == 3)
-    assert(res.touchedFiles < before, "merge must not rewrite the whole table")
+      val res = MergeInto.merge(t, staged, "drop1")
+      assert(res.stagedRows == 3)
+      assert(res.touchedFiles < before, "merge must not rewrite the whole table")
 
-    val after = t.readOrdered().collect()
-    val m = after.map(r => (r.getString(0), r.getInt(1)) -> r).toMap
-    assert(m(("c00000001", 0)).getString(3) == "UPDATED")
-    val origText = data.where(col("conv_id") === "c00000001" && col("turn_idx") === 1)
-      .select("text").head().getString(0)
-    assert(m(("c00000001", 1)).getString(3) == origText, "empty must not clobber")
-    assert(m(("c99999999", 0)).getString(3) == "new conv")
-    assert(after.length == data.count() + 1)
+      val after = t.readOrdered().collect()
+      val m = after.map(r => (r.getString(0), r.getInt(1)) -> r).toMap
+      assert(m(("c00000001", 0)).getString(3) == "UPDATED")
+      val origText = data.where(col("conv_id") === "c00000001" && col("turn_idx") === 1)
+        .select("text").head().getString(0)
+      assert(m(("c00000001", 1)).getString(3) == origText, "empty must not clobber")
+      assert(m(("c99999999", 0)).getString(3) == "new conv")
+      assert(after.length == data.count() + 1)
+    }
   }
 
   test("merge: an empty drop commits nothing (no empty files, same snapshot)") {
-    import spark.implicits._
-    val t = LakeTable.create(spark, tmpTable("merge-empty"), TranscriptSynth.schema)
-    t.append(synth(10), "init")
-    val snapBefore = t.currentSnapshotId.get
-    val filesBefore = t.currentFiles.map(_.path)
+    onBothMergePlans {
+      import spark.implicits._
+      val t = LakeTable.create(spark, tmpTable("merge-empty"), TranscriptSynth.schema)
+      t.append(synth(10), "init")
+      val snapBefore = t.currentSnapshotId.get
+      val filesBefore = t.currentFiles.map(_.path)
 
-    // an EMPTY staged frame and an all-rejected one (unparseable turn_idx)
-    // must both be no-ops: no data file written, no snapshot committed
-    val empty = Seq.empty[(String, String, String, String, String, Long)]
-      .toDF("conv_id", "turn_idx", "role", "text", "tool", "_seq")
-    val r1 = MergeInto.merge(t, empty, "empty-drop")
-    assert(r1.stagedRows == 0 && r1.touchedFiles == 0)
-    val rejectedOnly = Seq(("c00000001", "not-a-number", "user", "x", "", 0L))
-      .toDF("conv_id", "turn_idx", "role", "text", "tool", "_seq")
-    val r2 = MergeInto.merge(t, rejectedOnly, "rejected-drop")
-    assert(r2.stagedRows == 0 && r2.rejectedRows == 1)
+      // an EMPTY staged frame and an all-rejected one (unparseable turn_idx)
+      // must both be no-ops: no data file written, no snapshot committed
+      val empty = Seq.empty[(String, String, String, String, String, Long)]
+        .toDF("conv_id", "turn_idx", "role", "text", "tool", "_seq")
+      val r1 = MergeInto.merge(t, empty, "empty-drop")
+      assert(r1.stagedRows == 0 && r1.touchedFiles == 0)
+      val rejectedOnly = Seq(("c00000001", "not-a-number", "user", "x", "", 0L))
+        .toDF("conv_id", "turn_idx", "role", "text", "tool", "_seq")
+      val r2 = MergeInto.merge(t, rejectedOnly, "rejected-drop")
+      assert(r2.stagedRows == 0 && r2.rejectedRows == 1)
 
-    assert(t.currentSnapshotId.get == snapBefore, "no-op merges must not commit")
-    assert(t.currentFiles.map(_.path) == filesBefore, "no empty data files")
+      assert(t.currentSnapshotId.get == snapBefore, "no-op merges must not commit")
+      assert(t.currentFiles.map(_.path) == filesBefore, "no empty data files")
+    }
   }
 
   test("merge evolves schema append-only with new columns") {
+    onBothMergePlans {
+      import spark.implicits._
+      val t = LakeTable.create(spark, tmpTable("evolve"), TranscriptSynth.schema)
+      t.append(synth(5), "init")
+      // drop_b fixture: extra `lang` column, padded header name
+      val staged = Seq(("c00000002", "0", "user", "hola", "es"))
+        .toDF("conv_id", "turn_idx", "role", "text", " lang ")
+      MergeInto.merge(t, staged, "drop2")
+      val sch = t.schema
+      assert(sch.fieldNames.last == "lang")
+      assert(sch.fields.last.id == sch.lastFieldId)
+      assert(sch.fields.map(_.name).take(6) == TranscriptSynth.schema.fieldNames.toVector)
+      val row = t.scan().df.where(col("conv_id") === "c00000002" && col("turn_idx") === 0)
+        .select("lang", "text").head()
+      assert(row.getString(0) == "es" && row.getString(1) == "hola")
+      // older rows read null for the new field
+      assert(t.scan().df.where(col("lang").isNull).count() > 0)
+    }
+  }
+
+  test("merge: a small horizontal drop is one write job, a vertical one two, no exchange") {
+    val t = LakeTable.create(spark, tmpTable("merge-jobs"), TranscriptSynth.schema)
+    t.append(synth(40).repartitionByRange(4, col("conv_id"), col("turn_idx"))
+      .sortWithinPartitions("conv_id", "turn_idx"), "init")
+    val horizontal = "conv_id,turn_idx,role,text\nc00000001,0,user,UPDATED\n" +
+      "c00000001,1,,\nc00000001,99,user,new turn\n"
+    def mergeDrop(content: String, tag: String) = {
+      val parsed = graft.ingest.Ingest.parseContent(spark, content)
+      (parsed.vertical, MergeInto.merge(t, parsed.records, tag))
+    }
+
+    val ((vertical, r), work) = TestSpark.countWork(mergeDrop(horizontal, "h"))
+    assert(!vertical && r.stagedRows == 3 && r.touchedFiles == 1)
+    assert(work == TestSpark.Work(jobs = 1, exchanges = 0))
+
+    val kv = "conv_id,c00000002\nturn_idx,0\ntext,VERTICAL\n" +
+      "conv_id,c00000003\nturn_idx,0\ntext,ALSO\n"
+    val ((vertical2, r2), work2) = TestSpark.countWork(mergeDrop(kv, "v"))
+    assert(vertical2 && r2.stagedRows == 2)
+    assert(work2.jobs <= 2 && work2.exchanges == 0, s"vertical drop: $work2")
+
+    // the counter sees the shuffled plan's jobs and exchanges
+    val (_, shuffled) = TestSpark.withShuffledMerge(
+      TestSpark.countWork(mergeDrop(horizontal, "s")))
+    assert(shuffled.jobs > 2 && shuffled.exchanges >= 2, s"shuffled plan: $shuffled")
+    info(s"horizontal: $work, vertical: $work2, shuffled: $shuffled")
+
+    val m = t.readOrdered().collect().map(r => (r.getString(0), r.getInt(1)) -> r.getString(3)).toMap
+    assert(m(("c00000001", 0)) == "UPDATED" && m(("c00000001", 99)) == "new turn")
+    assert(m(("c00000002", 0)) == "VERTICAL" && m(("c00000003", 0)) == "ALSO")
+    assert(m.size == synth(40).count() + 1)
+  }
+
+  test("merge: the one-task and shuffled plans commit the same rows and Results") {
     import spark.implicits._
-    val t = LakeTable.create(spark, tmpTable("evolve"), TranscriptSynth.schema)
-    t.append(synth(5), "init")
-    // drop_b fixture: extra `lang` column, padded header name
-    val staged = Seq(("c00000002", "0", "user", "hola", "es"))
-      .toDF("conv_id", "turn_idx", "role", "text", " lang ")
-    MergeInto.merge(t, staged, "drop2")
-    val sch = t.schema
-    assert(sch.fieldNames.last == "lang")
-    assert(sch.fields.last.id == sch.lastFieldId)
-    assert(sch.fields.map(_.name).take(6) == TranscriptSynth.schema.fieldNames.toVector)
-    val row = t.scan().df.where(col("conv_id") === "c00000002" && col("turn_idx") === 0)
-      .select("lang", "text").head()
-    assert(row.getString(0) == "es" && row.getString(1) == "hola")
-    // older rows read null for the new field
-    assert(t.scan().df.where(col("lang").isNull).count() > 0)
+    // keys whose UTF-16 and UTF-8 orders disagree: U+FF21 < U+1F600 in
+    // UTF-8 (Spark's and Parquet's order), but not in UTF-16 code units
+    val (wide, emoji) = ("c\uFF21-1", "c\uD83D\uDE00-1")
+    def newTable(name: String) = {
+      val t = LakeTable.create(spark, tmpTable(name), TranscriptSynth.schema)
+      t.append(synth(20), "init")
+      val one = synth(1).where(col("turn_idx") === 0)
+      t.append(one.withColumn("conv_id", lit(wide)), "wide")
+      t.append(one.withColumn("conv_id", lit(emoji)), "emoji")
+      t
+    }
+    def rowsOf(t: LakeTable) = t.scan().df.orderBy("conv_id", "turn_idx").collect().toSeq
+    val drops: Seq[DataFrame] = Seq(
+      // in-batch duplicate keys: last non-empty wins, empty never clobbers
+      Seq(("c00000001", "0", "user", "first", 0L), ("c00000001", "0", "", "", 1L),
+        ("c00000001", "0", "", "second", 2L), ("c00000002", "1", "", "", 3L),
+        ("c00000001", "99", "user", "new", 4L))
+        .toDF("conv_id", "turn_idx", "role", "text", "_seq"),
+      // rejected rows next to a valid one
+      Seq(("c00000003", "x", "user", "bad turn", 0L), ("", "0", "user", "no conv", 1L),
+        ("c00000003", "0", "user", "ok", 2L))
+        .toDF("conv_id", "turn_idx", "role", "text", "_seq"),
+      // schema evolution
+      Seq(("c00000004", "0", "user", "hola", "es", 0L))
+        .toDF("conv_id", "turn_idx", "role", "text", "lang", "_seq"),
+      // schema only: every row rejected, a new column
+      Seq(("c00000005", "nope", "user", "x", "calm", 0L))
+        .toDF("conv_id", "turn_idx", "role", "text", "mood", "_seq"),
+      // empty
+      Seq.empty[(String, String, String, Long)].toDF("conv_id", "turn_idx", "text", "_seq"),
+      // the two keys whose orders disagree, both updated in place
+      Seq((wide, "0", "WIDE", 0L), (emoji, "0", "EMOJI", 1L))
+        .toDF("conv_id", "turn_idx", "text", "_seq"))
+    def mergeAll(t: LakeTable) =
+      drops.zipWithIndex.map { case (d, i) => MergeInto.merge(t, d, s"parity-$i") }
+    def fields(r: MergeInto.Result) = (r.snapshot.id, r.touchedFiles, r.carriedFiles,
+      r.stagedRows, r.rejectedRows, r.openedManifests, r.totalManifests)
+
+    val (oneTask, shuffled) = (newTable("parity-one"), newTable("parity-shuffled"))
+    val before = oneTask.scan().df.count()
+    val ra = mergeAll(oneTask)
+    val rb = TestSpark.withShuffledMerge(mergeAll(shuffled))
+    assert(ra.map(fields) == rb.map(fields))
+    assert(oneTask.schema == shuffled.schema)
+    assert(rowsOf(oneTask) == rowsOf(shuffled))
+
+    assert(ra.map(r => (r.stagedRows, r.rejectedRows)) ==
+      Seq((3L, 0L), (1L, 2L), (1L, 0L), (0L, 1L), (0L, 0L), (2L, 0L)))
+    assert(ra.last.touchedFiles == 2, "both single-key files must be rewritten")
+    val m = oneTask.scan().df.collect()
+      .map(r => (r.getAs[String]("conv_id"), r.getAs[Int]("turn_idx")) -> r).toMap
+    assert(m.size == before + 1, "only (c00000001, 99) is new; every other key updates in place")
+    assert(m((wide, 0)).getAs[String]("text") == "WIDE")
+    assert(m((emoji, 0)).getAs[String]("text") == "EMOJI")
+    assert(m(("c00000001", 0)).getAs[String]("text") == "second")
+    assert(m(("c00000001", 0)).getAs[String]("role") == "user")
+    assert(m(("c00000004", 0)).getAs[String]("lang") == "es")
+    assert(oneTask.schema.fieldNames.contains("mood"))
   }
 
   private def dedupeFixtureRows: Seq[(String, Int, String, String, String, java.sql.Timestamp)] = {
@@ -662,23 +771,25 @@ class LakeSpec extends AnyFunSuite {
   }
 
   test("merge: a zero-row drop carrying NEW columns commits the widened schema") {
-    import spark.implicits._
-    val t = LakeTable.create(spark, tmpTable("merge-schema-only"), TranscriptSynth.schema)
-    t.append(synth(5), "init")
-    val snapBefore = t.currentSnapshotId.get
-    val filesBefore = t.currentFiles.map(_.path)
-    // all rows rejected (unparseable key), but the batch declares `lang`
-    val staged = Seq(("c00000001", "not-a-number", "user", "x", "", "es", 0L))
-      .toDF("conv_id", "turn_idx", "role", "text", "tool", "lang", "_seq")
-    val r = MergeInto.merge(t, staged, "schema-only-drop")
-    assert(r.stagedRows == 0 && r.rejectedRows == 1)
-    assert(t.currentSnapshotId.get == snapBefore + 1,
-      "schema-only evolution must commit (metadata only)")
-    assert(t.schema.fieldNames.contains("lang"),
-      "the widened schema must not be silently dropped")
-    assert(t.currentFiles.map(_.path) == filesBefore, "no data file churn")
-    // and the evolved column reads as null on existing rows
-    assert(t.scan().df.where(col("lang").isNull).count() == t.scan().df.count())
+    onBothMergePlans {
+      import spark.implicits._
+      val t = LakeTable.create(spark, tmpTable("merge-schema-only"), TranscriptSynth.schema)
+      t.append(synth(5), "init")
+      val snapBefore = t.currentSnapshotId.get
+      val filesBefore = t.currentFiles.map(_.path)
+      // all rows rejected (unparseable key), but the batch declares `lang`
+      val staged = Seq(("c00000001", "not-a-number", "user", "x", "", "es", 0L))
+        .toDF("conv_id", "turn_idx", "role", "text", "tool", "lang", "_seq")
+      val r = MergeInto.merge(t, staged, "schema-only-drop")
+      assert(r.stagedRows == 0 && r.rejectedRows == 1)
+      assert(t.currentSnapshotId.get == snapBefore + 1,
+        "schema-only evolution must commit (metadata only)")
+      assert(t.schema.fieldNames.contains("lang"),
+        "the widened schema must not be silently dropped")
+      assert(t.currentFiles.map(_.path) == filesBefore, "no data file churn")
+      // and the evolved column reads as null on existing rows
+      assert(t.scan().df.where(col("lang").isNull).count() == t.scan().df.count())
+    }
   }
 
   test("compaction: many small files bin-packed, content identical") {
