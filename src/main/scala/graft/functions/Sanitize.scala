@@ -21,8 +21,8 @@ object Sanitize {
     regexp_replace(c, "^\\s+|\\s+$", "")
 
   /** Driver-side scalar twin of [[stripWs]] — the SAME Java regex Spark's
-    * regexp_replace applies, so normalized keys computed on the driver
-    * (e.g. the transposer's pivot key order) match the Column path exactly.
+    * regexp_replace applies, so keys normalized on the driver (the
+    * transposer's) match the Column path exactly.
     */
   def stripWsScala(s: String): String =
     if (s == null) "" else s.replaceAll("^\\s+|\\s+$", "")
@@ -36,10 +36,12 @@ object Sanitize {
 
   /** Driver-side scalar twin of [[sanitizeCell]], for ingest paths that
     * sanitize before the data ever becomes a DataFrame (mirrors the
-    * reference applying sanitize during parse, csv_handler.py:107).
+    * reference applying sanitize during parse, csv_handler.py:107). It
+    * strips with [[stripWsScala]], not `String.trim`, whose set of
+    * whitespace (every char <= U+0020) is not the regex's.
     */
   def sanitizeCellScala(v: String): String = {
-    val t = if (v == null) "" else v.trim
+    val t = stripWsScala(v)
     if (t.nonEmpty && DangerousPrefixes.contains(t.substring(0, 1))) "'" + t
     else t
   }

@@ -1,6 +1,7 @@
 package graft.ingest
 
-import org.apache.spark.sql.{Column, DataFrame, Row}
+import org.apache.spark.sql.{Column, DataFrame}
+import org.apache.spark.sql.catalyst.InternalRow
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types._
 
@@ -68,6 +69,6 @@ object Normalize {
   }
 
   /** [[routeInvalid]]'s rule for a row already collected to the driver. */
-  def hasValidKey(r: Row, convIdx: Int, turnIdx: Int): Boolean =
-    !r.isNullAt(convIdx) && r.getString(convIdx).nonEmpty && !r.isNullAt(turnIdx)
+  def hasValidKey(r: InternalRow, convIdx: Int, turnIdx: Int): Boolean =
+    !r.isNullAt(convIdx) && r.getUTF8String(convIdx).numBytes > 0 && !r.isNullAt(turnIdx)
 }

@@ -10,11 +10,13 @@ import graft.lake.{DataFile, LakeTable, Snapshot}
   *
   * The job is split into GROUPS of input files (~groupTargetBytes each,
   * grouped by conv range so already-clustered tables re-cluster
-  * incrementally). Each group independently: scan -> zkey ->
-  * range-repartition (salted) -> sort -> write. Groups run through the
-  * ledger's job protocol ([[Ledger.planOrResume]], [[Ledger.runJob]]):
-  * each checkpoints before the one snapshot commit that swaps all inputs
-  * for all outputs atomically.
+  * incrementally). Each group independently: scan -> zkey -> sort ->
+  * write, through [[LakeTable.writeSorted]]: a group within one scan split
+  * and 16 MB is one task with no Exchange, split into files by row count;
+  * a larger one is range-repartitioned on (zkey, salt) first. Groups run
+  * through the ledger's job protocol ([[Ledger.planOrResume]],
+  * [[Ledger.runJob]]): each checkpoints before the one snapshot commit that
+  * swaps all inputs for all outputs atomically.
   *
   * Why groups: (a) the checkpoint ledger gets real per-partition resume
   * granularity — a job killed at group 7/10 redoes only 3 groups; (b) at
@@ -22,10 +24,11 @@ import graft.lake.{DataFile, LakeTable, Snapshot}
   * restartable nor schedulable, while bounded groups pipeline.
   *
   * Skew: hot conversations are handled twice over — the zkey itself spreads
-  * one conversation across its turn_idx bits, a salt column breaks ties for
-  * pathological duplicate keys inside `repartitionByRange`'s sampled
-  * boundaries, and AQE (spark.sql.adaptive.*) re-splits oversized shuffle
-  * partitions at runtime.
+  * one conversation across its turn_idx bits, and on the shuffled path a
+  * salt breaks ties for pathological duplicate keys inside
+  * `repartitionByRange`'s sampled boundaries (AQE re-splits oversized
+  * shuffle partitions at runtime). The one-task path splits by row count,
+  * so duplicate keys cannot skew its files.
   */
 object Clustering {
 
@@ -80,21 +83,18 @@ object Clustering {
       tasks.collect { case (t, false) => t.rows }.sum
     val (snap, tasks) = Ledger.runJob(table, jobId, "cluster", plan,
       parallelism = Ledger.shuffleParallelism(table), interruptAfter) { (in, gi) =>
-      val nOut = math.max(1, math.ceil(in.map(_.rows).sum.toDouble / targetFileRows).toInt)
       val zkey =
         if (plan.curve == "hilbert")
           ZOrder.quantileHilbertKey(col("conv_id"), col("turn_idx"),
             plan.convCuts, plan.turnCuts)
         else ZOrder.quantileClusterKey(col("conv_id"), col("turn_idx"),
           plan.convCuts, plan.turnCuts)
-      val salt = pmod(xxhash64(col("conv_id"), col("turn_idx")), lit(Salts))
-      val df = table.readData(in.map(f => table.absData(f.path)))
-        .withColumn("__zkey", zkey)
-        .withColumn("__salt", salt)
-        .repartitionByRange(nOut, col("__zkey"), col("__salt"))
-        .sortWithinPartitions(col("__zkey"))
-        .drop("__zkey", "__salt")
-      table.writeDataFiles(df, s"$jobId-g$gi")
+      table.writeSorted(
+        table.readData(in.map(f => table.absData(f.path))).withColumn("__zkey", zkey),
+        s"$jobId-g$gi", in.map(_.bytes).sum, in.map(_.rows).sum, targetFileRows,
+        Seq(col("__zkey")),
+        salt = Some(pmod(xxhash64(col("conv_id"), col("turn_idx")), lit(Salts))),
+        drop = Seq("__zkey"))
     } { tasks =>
       Map("groups" -> plan.groups.size.toString,
         "rows_rewritten" -> rewritten(tasks).toString)

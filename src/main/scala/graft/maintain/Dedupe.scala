@@ -2,6 +2,7 @@ package graft.maintain
 
 import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.types.{StringType, StructField, StructType}
 
 import graft.functions.Dedup
 import graft.lake.{DataFile, FileIO, LakeTable, Snapshot}
@@ -32,13 +33,18 @@ import graft.lake.{DataFile, FileIO, LakeTable, Snapshot}
   *
   * Scale shape (10^12 turns): the victim set is computed in one corpus
   * pass (groupBy on the text hash / LSH banding — both map-side-combining
-  * shuffles), persisted once under the job's ledger dir, and the rewrite
-  * is O(files containing victims): each ledger-checkpointed task anti-joins
-  * one bounded file group against ITS OWN victims (pre-filtered by file
-  * provenance), so a pass removing 0.1% of turns rewrites ~0.1% of files.
-  * The groups run through the ledger's job protocol
-  * ([[Ledger.planOrResume]], [[Ledger.runJob]]), so resume skips finished
-  * groups.
+  * shuffles) and persisted once under the job's ledger dir; ONE aggregate
+  * over it counts victims per data file, and those counts go to a sidecar
+  * beside the plan ([[Ledger.writeCounts]]). They give the touched files,
+  * the pass's duplicate rows and each group's expected survivors, which
+  * the group's write is checked against. The rewrite is O(files containing
+  * victims): each ledger-checkpointed task anti-joins one bounded file
+  * group against ITS OWN victims (pre-filtered by file provenance) and
+  * writes the survivors sorted ([[LakeTable.writeSorted]]: a group within
+  * one scan split and 16 MB is one task with no Exchange), so a pass
+  * removing 0.1% of turns rewrites ~0.1% of files. The groups run through
+  * the ledger's job protocol ([[Ledger.planOrResume]], [[Ledger.runJob]]),
+  * so resume skips finished groups.
   *
   * Rows with empty normalized text are never deduplicated (a transcript's
   * legitimately empty turns are not "duplicates" of each other), and
@@ -47,9 +53,17 @@ import graft.lake.{DataFile, FileIO, LakeTable, Snapshot}
   */
 object Dedupe {
 
+  /** `skippedConvs`: conversations a `unit = "conversation"` pass left out
+    * because their normalized text exceeds `maxConvChars` (kept verbatim,
+    * never victims).
+    */
   final case class Result(snapshot: Snapshot, duplicateRows: Long,
                           touchedFiles: Int, groupsRewritten: Int,
-                          resumedGroups: Int, converged: Boolean)
+                          resumedGroups: Int, converged: Boolean,
+                          skippedConvs: Long = 0L)
+
+  /** The per-file victim counts sidecar, beside the ledger plan. */
+  private val CountsFile = "dedupe-victims.json"
 
   /** Remove duplicate-text turns from the current snapshot. Idempotent per
     * (jobId): a committed pass returns its snapshot without rescanning.
@@ -66,7 +80,6 @@ object Dedupe {
               interruptAfter: Int = Int.MaxValue): Result = {
     require(Set("exact", "minhash", "simhash")(mode), s"unknown dedupe mode $mode")
     require(Set("turn", "conversation")(unit), s"unknown dedupe unit $unit")
-    val spark = table.spark
 
     // empty table: nothing to dedupe — a no-op, not an error, so a
     // maintenance cycle with dedupe enabled runs cleanly on a fresh table
@@ -84,13 +97,13 @@ object Dedupe {
       if (unit == "conversation") s"dedupe:$mode:$unit:$minTokens:cap$maxConvChars"
       else s"dedupe:$mode:$unit:$minTokens"
 
-    // ---- plan: compute + persist the victim set, group touched files ----
+    // ---- plan: compute + persist the victim set, count it per file ------
     val plan = Ledger.planOrResume(table, jobId, "dedupe", planKind) {
-      val victims =
+      val (victims, skipped) =
         if (unit == "conversation")
           computeConvVictims(table, mode, minTokens, minJaccard, maxIters,
             maxConvChars)
-        else computeVictims(table, mode, minTokens, minJaccard, maxIters)
+        else (computeVictims(table, mode, minTokens, minJaccard, maxIters), 0L)
       // atomic publish: write to a tmp dir, rename over — a crash mid-write
       // can never leave a torn victim set a resume would trust
       val tmp = victimsDir + ".tmp"
@@ -100,12 +113,13 @@ object Dedupe {
       table.io.delete(victimsDir)
       table.io.rename(tmp, victimsDir)
 
-      // touched files = those holding at least one victim row; everything
-      // else carries forward without being read again
-      val touchedPaths = spark.read.parquet(victimsDir)
-        .select("__src").distinct().collect().map(_.getString(0)).toVector.sorted
+      // Touched files = those holding at least one victim row; everything
+      // else carries forward without being read again. Counts first, plan
+      // second: a plan on disk implies its counts exist.
+      val counts = countVictims(table, victimsDir)
+      Ledger.writeCounts(table, jobId, CountsFile, counts, "skipped_convs" -> skipped)
       val byPath = table.currentFiles.map(f => f.path -> f).toMap
-      val touched = touchedPaths.map(byPath(_))
+      val touched = counts.keys.toVector.sorted.map(byPath(_))
       val groups = Clustering.greedyGroups(
         touched.sortBy(f => (f.minConv.getOrElse(""), f.minTurn.getOrElse(0))),
         groupTargetBytes).filter(_.nonEmpty)
@@ -116,45 +130,80 @@ object Dedupe {
     }
     require(table.io.stat(victimsDir).isDefined,
       s"dedupe plan for $jobId exists but its victim set is missing")
-
-    val victims = spark.read.parquet(victimsDir)
-      .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-    val nVictims = victims.count()
+    // a plan written before the counts sidecar existed has none: unlike
+    // DELETE's, these counts rebuild from the published victim set (the
+    // oversized-conversation count does not, and reads 0)
+    if (Ledger.readJobFile(table, jobId, CountsFile).isEmpty)
+      Ledger.writeCounts(table, jobId, CountsFile, countVictims(table, victimsDir),
+        "skipped_convs" -> 0L)
+    val (counts, sidecar) = Ledger.readCounts(table, jobId, CountsFile)
+    val nVictims = counts.values.sum
     val nTouched = plan.groups.map(_.size).sum
 
     val (snap, tasks) = Ledger.runJob(table, jobId, "dedupe", plan,
       parallelism = Ledger.shuffleParallelism(table), interruptAfter) { (in, gi) =>
       val paths = in.map(_.path)
-      // this group's victims only: provenance pre-filter keeps the
-      // anti-join proportional to the group, not the whole pass
-      val groupVictims = victims.where(col("__src").isin(paths: _*))
-        .select("conv_id", "turn_idx")
-      // range-repartition on the key before writing: if the anti-join
-      // shuffled (hash on key), the survivors would otherwise land in
-      // hash-partitioned output files whose conv ranges span the whole
-      // group — wide min/max stats that gut pruning until the next
-      // recluster. The group is a conv-contiguous slab, so this is a
-      // small intra-slab exchange and the outputs keep TIGHT ranges.
-      val survivors = in.map(_.rows).sum - groupVictims.count()
-      val nOut = math.max(1, math.ceil(survivors.toDouble / targetFileRows).toInt)
+      val inBytes = in.map(_.bytes).sum
+      val survivors = in.map(_.rows).sum - paths.map(counts.getOrElse(_, 0L)).sum
+      // a group in one task joins in one partition: both sides coalesced,
+      // and a sort-merge join (a small victim set would otherwise be
+      // broadcast) plans with no Exchange. The join is a left outer one
+      // keeping unmatched rows, not a left anti one, which the optimizer
+      // would push below the coalesce. It adds no column: a victim's key
+      // is never null, so a null one marks an unmatched row.
+      val oneTask = table.fitsOneTask(inBytes)
+      def part(df: DataFrame) = if (oneTask) df.coalesce(1) else df
+      // this group's victims only: provenance pre-filter keeps the join
+      // proportional to the group, not the whole pass
+      val groupVictims = part(readVictims(table, victimsDir)
+        .where(col("__src").isin(paths: _*))
+        .select("conv_id", "turn_idx")).as("v")
       // a slab that was ENTIRELY duplicates leaves nothing to write:
       // an empty parquet part would enter the manifest stats-less
       // (never pruned) — same rule as the no-op merge
-      if (survivors == 0L) Vector.empty[DataFile]
-      else table.writeDataFiles(
-        table.readData(paths.map(table.absData))
-          .join(groupVictims, Seq("conv_id", "turn_idx"), "left_anti")
-          .repartitionByRange(nOut, col("conv_id"), col("turn_idx"))
-          .sortWithinPartitions("conv_id", "turn_idx"),
-        s"$jobId-g$gi")
+      val out =
+        if (survivors == 0L) Vector.empty[DataFile]
+        else table.writeSorted(
+          part(table.readData(paths.map(table.absData))).as("t")
+            .join(if (oneTask) groupVictims.hint("merge") else groupVictims,
+              col("t.conv_id") === col("v.conv_id") &&
+                col("t.turn_idx") === col("v.turn_idx"), "left_outer")
+            .where(col("v.conv_id").isNull)
+            .select(col("t.*")),
+          s"$jobId-g$gi", inBytes, survivors, targetFileRows,
+          Seq(col("conv_id"), col("turn_idx")))
+      val written = out.map(_.rows).sum
+      require(written == survivors,
+        s"dedupe group $gi wrote $written survivors but the plan counted " +
+          s"$survivors — victim set out of step with the table? refusing to commit")
+      out
     } { _ =>
       Map("mode" -> mode,
         "duplicate_rows" -> nVictims.toString,
         "touched_files" -> nTouched.toString)
     }
-    victims.unpersist()
     Result(snap, nVictims, nTouched, plan.groups.size, tasks.count(_._2),
-      converged = true)
+      converged = true, skippedConvs = sidecar.get("skipped_convs").asLong)
+  }
+
+  /** Victims per data file: ONE aggregate over the published set, in one
+    * task with no Exchange when the set is small ([[LakeTable.fitsOneTask]]).
+    */
+  private def countVictims(table: LakeTable, victimsDir: String): Map[String, Long] = {
+    val published = readVictims(table, victimsDir)
+    val setBytes = table.io.list(victimsDir)
+      .flatMap(n => table.io.stat(FileIO.path(victimsDir, n))).map(_.size).sum
+    (if (table.fitsOneTask(setBytes)) published.coalesce(1) else published)
+      .groupBy("__src").count().collect().map(r => r.getString(0) -> r.getLong(1)).toMap
+  }
+
+  /** The published victim set: (conv_id, turn_idx, __src), read with its
+    * schema given, so no job infers it.
+    */
+  private def readVictims(table: LakeTable, dir: String): DataFrame = {
+    val st = table.schema.toStruct
+    table.spark.read.schema(StructType(Seq(st("conv_id"), st("turn_idx"),
+      StructField("__src", StringType)))).parquet(dir)
   }
 
   /** One corpus pass producing the victim rows: (conv_id, turn_idx, __src)
@@ -304,7 +353,8 @@ object Dedupe {
     }
   }
 
-  /** Victim rows for `unit = "conversation"`: whole conversations whose
+  /** Victim rows for `unit = "conversation"`, and the number of
+    * conversations skipped as oversized: whole conversations whose
     * CONCATENATED normalized text duplicates another conversation's are
     * removed entirely (all their turns), keeping the smallest conv_id —
     * the dedup granularity a training pipeline usually wants for dialog
@@ -322,7 +372,7 @@ object Dedupe {
                                            minTokens: Int,
                                            minJaccard: Double = 0.9,
                                            maxIters: Int = 50,
-                                           maxConvChars: Long = 8L << 20): DataFrame = {
+                                           maxConvChars: Long = 8L << 20): (DataFrame, Long) = {
     val spark = table.spark
     val paths = table.currentFiles.map(f => table.absData(f.path))
     val rows = table.readData(paths)
@@ -336,14 +386,11 @@ object Dedupe {
     // cheap map-side-combining agg, and only conversations under the cap
     // reach the collect_list — one degenerate 10^8-turn conversation must
     // fail GRACEFULLY (skipped with a loud note, never a victim) instead
-    // of OOMing the task that concatenates it.
+    // of OOMing the task that concatenates it. The count is reported as
+    // the Result's `skippedConvs`.
     val lens = rows.groupBy(col("conv_id"))
       .agg(sum(length(col("__tn")) + lit(1)).as("__clen"))
     val nOversized = lens.where(col("__clen") > maxConvChars).count()
-    if (nOversized > 0)
-      System.err.println(s"[graft.dedupe] conv-unit pass: skipping " +
-        s"$nOversized conversation(s) over $maxConvChars normalized chars " +
-        "(kept verbatim, excluded from dedup)")
     val eligible = lens.where(col("__clen") <= maxConvChars).select("conv_id")
 
     val conv = rows.join(eligible, Seq("conv_id"))
@@ -390,6 +437,6 @@ object Dedupe {
     out.count()
     rows.unpersist()
     victimConvs.unpersist() // no-op for the exact branch's unpersisted frame
-    out
+    (out, nOversized)
   }
 }

@@ -1,10 +1,8 @@
 package graft.maintain
 
-import com.fasterxml.jackson.databind.JsonNode
-
 import org.apache.spark.sql.functions._
 
-import graft.lake.{DataFile, IntervalDnf, LakeTable, MetaJson, Snapshot}
+import graft.lake.{DataFile, IntervalDnf, LakeTable, Snapshot}
 
 /** Row-level DELETE FROM: remove every row matching a predicate, rewriting
   * ONLY the data files that actually CONTAIN matching rows — the
@@ -27,8 +25,11 @@ import graft.lake.{DataFile, IntervalDnf, LakeTable, MetaJson, Snapshot}
   *      survives). The per-file counts persist beside the ledger plan, so
   *      a resume reuses them.
   *   3. each ledger-checkpointed task group reads its files ONCE, keeps
-  *      `NOT predicate` survivors, range-repartitions them (tight per-file
-  *      stats, pruning survives the rewrite) and writes — no second
+  *      `NOT predicate` survivors and writes them sorted on the key
+  *      ([[LakeTable.writeSorted]]: one task with no Exchange for a group
+  *      of at most one scan split and 16 MB, a range-repartition
+  *      otherwise), so per-file
+  *      stats stay tight and pruning survives the rewrite — no second
   *      counting scan; the expected survivor count is already known and
   *      cross-checked against the written files' stats. An all-deleted
   *      group writes nothing.
@@ -107,8 +108,12 @@ object DeleteFrom {
           .count().collect().map(r => r.getString(0) -> r.getLong(1)).toMap
       // counts sidecar FIRST, plan second: a plan on disk implies its
       // counts exist, so resume never trusts a half-planned job
-      writeCounts(table, jobId, predSql, perFile,
-        prunedCandidates = pruned.entries.size.toLong)
+      // the stats-prune candidate set (files the counting pass had to
+      // SCAN) is recorded beside the matching-file counts: candidateFiles
+      // alone (files that CONTAIN victims) would overstate prune
+      // effectiveness and hide the clean-file scan cost
+      Ledger.writeCounts(table, jobId, VictimsFile, perFile, "predicate" -> predSql,
+        "pruned_candidates" -> pruned.entries.size.toLong)
       val byPath = pruned.entries.map(e => e.file.path -> e.file).toMap
       val withVictims = perFile.keys.toVector.sorted.map(byPath(_))
       val groups = Clustering.greedyGroups(
@@ -122,10 +127,7 @@ object DeleteFrom {
         return Result(s, 0L, 0, fileCount(s), 0, totalFiles = fileCount(s))
       case Right(p) => p
     }
-    val sidecar = Ledger.readJobFile(table, jobId, VictimsFile).getOrElse(
-      throw new IllegalStateException(
-        s"delete plan for $jobId exists but its victim counts are missing"))
-    val counts = readCounts(sidecar)
+    val (counts, sidecar) = Ledger.readCounts(table, jobId, VictimsFile)
     // removed = ONLY the files with victims — everything else (files AND
     // manifests) carries forward untouched, names unchanged
     val touched = plan.groups.map(_.size).sum
@@ -134,20 +136,16 @@ object DeleteFrom {
       parallelism = Ledger.shuffleParallelism(table), interruptAfter) { (in, gi) =>
       val paths = in.map(_.path)
       val nSurv = in.map(_.rows).sum - paths.map(counts.getOrElse(_, 0L)).sum
+      // survivors = NOT matching; null predicate results survive too (SQL
+      // DELETE: only rows where the condition is TRUE are deleted). Single
+      // scan — no separate count.
       val out =
         if (nSurv == 0L) Vector.empty[DataFile]
-        else {
-          val nOut = math.max(1, math.ceil(nSurv.toDouble / targetFileRows).toInt)
-          // survivors = NOT matching; null predicate results survive
-          // too (SQL DELETE: only rows where the condition is TRUE
-          // are deleted). Single scan — no separate count.
-          table.writeDataFiles(
-            table.readData(paths.map(table.absData))
-              .where(!coalesce(pred.cast("boolean"), lit(false)))
-              .repartitionByRange(nOut, col("conv_id"), col("turn_idx"))
-              .sortWithinPartitions("conv_id", "turn_idx"),
-            s"$jobId-g$gi")
-        }
+        else table.writeSorted(
+          table.readData(paths.map(table.absData))
+            .where(!coalesce(pred.cast("boolean"), lit(false))),
+          s"$jobId-g$gi", in.map(_.bytes).sum, nSurv, targetFileRows,
+          Seq(col("conv_id"), col("turn_idx")))
       val written = out.map(_.rows).sum
       require(written == nSurv,
         s"DELETE group $gi wrote $written survivors but the plan " +
@@ -178,29 +176,6 @@ object DeleteFrom {
   def plannedPredicate(table: LakeTable, jobId: String): Option[String] =
     Ledger.readJobFile(table, jobId, VictimsFile).map(_.get("predicate").asText)
 
-  // ---- per-file victim counts sidecar (atomic, beside the ledger plan) --
-
+  /** The per-file victim counts sidecar, beside the ledger plan. */
   private val VictimsFile = "delete-victims.json"
-
-  private def writeCounts(table: LakeTable, jobId: String, predSql: String,
-                          counts: Map[String, Long],
-                          prunedCandidates: Long): Unit = {
-    val o = MetaJson.mapper.createObjectNode()
-    o.put("predicate", predSql)
-    // the stats-prune candidate set (files the counting pass had to SCAN)
-    // is recorded beside the matching-file counts: candidateFiles alone
-    // (files that CONTAIN victims) overstated prune effectiveness in the
-    // bench report and hid the clean-file scan cost
-    o.put("pruned_candidates", prunedCandidates)
-    val c = o.putObject("counts")
-    counts.toSeq.sortBy(_._1).foreach { case (k, v) => c.put(k, v) }
-    Ledger.atomicWrite(table, jobId, VictimsFile, MetaJson.write(o))
-  }
-
-  private def readCounts(sidecar: JsonNode): Map[String, Long] = {
-    val it = sidecar.get("counts").fields()
-    val b = Map.newBuilder[String, Long]
-    while (it.hasNext) { val e = it.next(); b += e.getKey -> e.getValue.asLong }
-    b.result()
-  }
 }

@@ -333,6 +333,36 @@ object Ledger {
     (snap, tasks)
   }
 
+  // ---- per-file counts sidecar --------------------------------------------
+
+  /** Persist a planned job's per-file row counts (keyed by data file path),
+    * with the planning facts a resume reuses (`facts`: each a String or a
+    * Long), atomically beside the plan. Written BEFORE the plan, so a plan
+    * on disk implies its counts exist.
+    */
+  def writeCounts(table: LakeTable, jobId: String, name: String,
+                  counts: Map[String, Long], facts: (String, Any)*): Unit = {
+    val o = MetaJson.mapper.createObjectNode()
+    facts.foreach {
+      case (k, v: Long) => o.put(k, v)
+      case (k, v) => o.put(k, String.valueOf(v))
+    }
+    val c = o.putObject("counts")
+    counts.toSeq.sortBy(_._1).foreach { case (k, v) => c.put(k, v) }
+    atomicWrite(table, jobId, name, MetaJson.write(o))
+  }
+
+  /** A planned job's counts sidecar `name`: its per-file counts, and the
+    * whole document for its facts. A plan without one fails loudly: the
+    * counts are what its groups check their writes against.
+    */
+  def readCounts(table: LakeTable, jobId: String,
+                 name: String): (Map[String, Long], JsonNode) = {
+    val n = readJobFile(table, jobId, name).getOrElse(throw new IllegalStateException(
+      s"plan for $jobId exists but its victim counts ($name) are missing"))
+    (n.get("counts").fields().asScala.map(e => e.getKey -> e.getValue.asLong).toMap, n)
+  }
+
   // ---- job files ----------------------------------------------------------
 
   /** A JSON file of `jobId`'s ledger dir, if it exists. */

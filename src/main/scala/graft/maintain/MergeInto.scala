@@ -3,9 +3,12 @@ package graft.maintain
 import scala.jdk.CollectionConverters._
 
 import org.apache.spark.sql.{DataFrame, Row}
+import org.apache.spark.sql.catalyst.InternalRow
+import org.apache.spark.sql.catalyst.expressions.GenericInternalRow
+import org.apache.spark.sql.catalyst.types.PhysicalDataType
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.graftx.Bridge
-import org.apache.spark.sql.types.StringType
+import org.apache.spark.sql.types.{StringType, StructType}
 import org.apache.spark.storage.StorageLevel
 
 import graft.ingest.Normalize
@@ -22,12 +25,13 @@ import graft.lake.{FieldDef, IntervalDnf, LakeTable, Snapshot, TableSchema}
   *   - a drop whose aligned plan is estimated at most
   *     `spark.sql.autoBroadcastJoinThreshold` bytes (the size Spark would
   *     collect to the driver for a broadcast anyway) is collected ONCE and
-  *     rebuilt as a local relation; its key count, `conv_id` range and
-  *     rejected rows come from those rows with no Spark action. A parsed
-  *     horizontal drop folds into a `LocalRelation`, so that collect runs
-  *     no job either;
-  *   - if, in addition, the rewrite set is at most
-  *     `spark.sql.files.maxPartitionBytes` (one scan split), both join sides
+  *     rebuilt as a local relation; its duplicate keys are resolved, and
+  *     its key count, `conv_id` range and rejected rows come, from those
+  *     rows on the driver, with no Spark action. A parsed drop, horizontal
+  *     or vertical, folds into a `LocalRelation`, so that collect runs no
+  *     job either;
+  *   - if, in addition, the rewrite set runs as one task
+  *     ([[LakeTable.fitsOneTask]]: one scan split, at most 16 MB), both join sides
   *     are coalesced to one partition: dedup, full-outer join, merge
   *     projection and sort plan with no Exchange, and the writer's
   *     `maxRecordsPerFile` splits the sorted output into key-tight files.
@@ -37,6 +41,8 @@ import graft.lake.{FieldDef, IntervalDnf, LakeTable, Snapshot, TableSchema}
   *     shuffle: a full-outer sort-merge join on the key, then a
   *     range-repartition + sort on the key (full outer cannot broadcast).
   *     A broadcast threshold of -1 sends every merge here.
+  * The output is written by [[LakeTable.writeSorted]], which makes the same
+  * one-task-or-range-repartition choice for every group rewrite.
   * Shared by both: the staged key range drives a TWO-LEVEL metadata
   * pre-filter (only manifests whose persisted conv range overlaps it are
   * OPENED, and within them only overlapping files are rewritten), the
@@ -76,17 +82,20 @@ object MergeInto {
     def run(st: Staged) = rewrite(table, st, evolvedSchema, dataFields, tag, targetFileRows)
 
     if (Bridge.sizeInBytes(aligned) <= spark.sessionState.conf.autoBroadcastJoinThreshold) {
-      val rows = aligned.collect()
-      val local = spark.createDataFrame(rows.toSeq.asJava, aligned.schema).coalesce(1)
-      val (ci, ti) = (aligned.schema.fieldIndex("conv_id"), aligned.schema.fieldIndex("turn_idx"))
-      val (valid, rejected) = rows.partition(Normalize.hasValidKey(_, ci, ti))
-      val keys = valid.map(r => (r.getString(ci), r.get(ti))).distinct
-      val convs = keys.map(_._1)
+      val st = aligned.schema
+      val (ci, ti) = (st.fieldIndex("conv_id"), st.fieldIndex("turn_idx"))
+      val (valid, rejected) =
+        Bridge.internalRows(aligned).partition(Normalize.hasValidKey(_, ci, ti))
+      val dedup = dedupRows(valid, st, dataFields)
+      val convs = dedup.map(_.getUTF8String(0).toString)
       val range =
         if (convs.isEmpty) None
         else Some((convs.min(IntervalDnf.ConvOrder), convs.max(IntervalDnf.ConvOrder)))
-      run(Staged(dedupOf(Normalize.routeInvalid(local)._1, dataFields),
-        keys.length.toLong, range, rejected.length.toLong, local = true))
+      // every column nullable: one schema, whatever columns the drop
+      // carries, keeps every drop on one plan (one set of generated classes)
+      val keyed = StructType(Seq(st(ci), st(ti)) ++ dataFields.map(f => st(f.name)))
+      run(Staged(Bridge.localRelation(spark, keyed, dedup).coalesce(1),
+        dedup.size.toLong, range, rejected.size.toLong, local = true))
     } else {
       val cached = aligned.persist(StorageLevel.MEMORY_AND_DISK)
       try {
@@ -116,6 +125,26 @@ object MergeInto {
     }
     if (aggs.isEmpty) valid.select("conv_id", "turn_idx").distinct()
     else valid.groupBy(col("conv_id"), col("turn_idx")).agg(aggs.head, aggs.tail: _*)
+  }
+
+  /** [[dedupOf]] on the driver, for a drop collected there: one row per key,
+    * (conv_id, turn_idx, dataFields...), each field the value of the last
+    * row by `_seq` that has one (non-null, and for a string non-empty), else
+    * the first row's. No Spark job, no generated code.
+    */
+  private def dedupRows(valid: Seq[InternalRow], st: StructType,
+                        dataFields: Seq[FieldDef]): Seq[InternalRow] = {
+    val Seq(ci, ti, si) = Seq("conv_id", "turn_idx", "_seq").map(st.fieldIndex)
+    val cols = dataFields.map(f => (st.fieldIndex(f.name), f.dataType))
+    def at(r: InternalRow, i: Int) = r.get(i, st(i).dataType)
+    valid.groupBy(r => (at(r, ci), at(r, ti))).values.toSeq.map { g =>
+      val bySeq = g.sortBy(at(_, si))(PhysicalDataType.ordering(st(si).dataType))
+      val vals = cols.map { case (i, dt) =>
+        bySeq.findLast(r => !r.isNullAt(i) && (dt != StringType || r.getUTF8String(i).numBytes > 0))
+          .getOrElse(bySeq.head).get(i, dt)
+      }
+      new GenericInternalRow((at(g.head, ci) +: at(g.head, ti) +: vals).toArray)
+    }
   }
 
   private def rewrite(table: LakeTable, st: Staged, evolvedSchema: TableSchema,
@@ -155,8 +184,10 @@ object MergeInto {
         Some(evolvedSchema), Map("merge_tag" -> tag, "schema_only" -> "true")))
     }
 
-    val oneTask = st.local &&
-      touched.map(_.file.bytes).sum <= spark.sessionState.conf.filesMaxPartitionBytes
+    // only a local drop can join in one partition: a larger one is never
+    // one task, whatever the rewrite set weighs
+    val inputBytes = if (st.local) touched.map(_.file.bytes).sum else Long.MaxValue
+    val oneTask = table.fitsOneTask(inputBytes)
     val target0 =
       if (touched.isEmpty) spark.createDataFrame(List.empty[Row].asJava, evolvedSchema.toStruct)
       else table.readData(touched.map(e => table.absData(e.file.path)))
@@ -182,21 +213,12 @@ object MergeInto {
     val merged = joined.select(mergedCols: _*)
       .select(evolvedSchema.fieldNames.map(n => col(s"`$n`")): _*)
 
-    // Size output files by rows (we know exact input rows cheaply), and
-    // keep each file's conv range tight (prunable): the one task writes its
-    // sorted rows in runs of maxRecordsPerFile; the shuffled plan
-    // range-partitions on the key. The balanced Z-curve belongs to
-    // Clustering.
+    // Size output files by rows (we know exact input rows cheaply) and keep
+    // each file's conv range tight (prunable). The balanced Z-curve belongs
+    // to Clustering.
     val totalRows = touched.map(_.file.rows).sum + st.rows
-    val nOut = math.max(1, math.ceil(totalRows.toDouble / targetFileRows).toInt)
-    val newEntries =
-      if (oneTask)
-        table.writeDataFiles(merged.sortWithinPartitions(col("conv_id"), col("turn_idx")), tag,
-          maxRecordsPerFile = math.ceil(totalRows.toDouble / nOut).toLong)
-      else
-        table.writeDataFiles(merged
-          .repartitionByRange(nOut, col("conv_id"), col("turn_idx"))
-          .sortWithinPartitions(col("conv_id"), col("turn_idx")), tag)
+    val newEntries = table.writeSorted(merged, tag, inputBytes, totalRows, targetFileRows,
+      Seq(col("conv_id"), col("turn_idx")))
     result(table.commitDelta(newEntries, touched, "merge", Some(evolvedSchema),
       Map("merge_tag" -> tag,
         "staged_rows" -> st.rows.toString,

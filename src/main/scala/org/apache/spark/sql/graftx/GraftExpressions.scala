@@ -5,12 +5,16 @@
   */
 package org.apache.spark.sql.graftx
 
-import org.apache.spark.sql.Column
+import org.apache.spark.sql.{classic, Column, DataFrame, Row, SparkSession}
+import org.apache.spark.sql.catalyst.InternalRow
 import org.apache.spark.sql.catalyst.expressions.{BinaryExpression, ExpectsInputTypes, Expression, ImplicitCastInputTypes, UnaryExpression}
 import org.apache.spark.sql.catalyst.expressions.codegen.{CodegenContext, ExprCode}
+import org.apache.spark.sql.catalyst.plans.logical.LocalRelation
+import org.apache.spark.sql.catalyst.types.DataTypeUtils
 import org.apache.spark.sql.catalyst.util.ArrayData
 import org.apache.spark.sql.classic.ExpressionUtils
-import org.apache.spark.sql.types.{AbstractDataType, ArrayType, DataType, DoubleType, FloatType, IntegerType, LongType, StringType, TypeCollection}
+import org.apache.spark.sql.execution.SQLExecution
+import org.apache.spark.sql.types.{AbstractDataType, ArrayType, DataType, DoubleType, FloatType, IntegerType, LongType, StringType, StructType, TypeCollection}
 import org.apache.spark.unsafe.types.UTF8String
 
 object Bridge {
@@ -41,6 +45,24 @@ object Bridge {
   def sizeInBytes(df: org.apache.spark.sql.DataFrame): BigInt =
     df.asInstanceOf[org.apache.spark.sql.classic.Dataset[org.apache.spark.sql.Row]]
       .queryExecution.optimizedPlan.stats.sizeInBytes
+
+  /** A DataFrame's rows as Catalyst rows: taken off the plan when the
+    * optimizer folded it into a local relation (no job, no generated
+    * code), collected otherwise, as a tracked SQL execution (listeners see
+    * its plan, as they do `Dataset.collect`'s).
+    */
+  def internalRows(df: DataFrame): Seq[InternalRow] = {
+    val qe = df.asInstanceOf[classic.Dataset[Row]].queryExecution
+    qe.optimizedPlan match {
+      case l: LocalRelation => l.data
+      case _ => SQLExecution.withNewExecutionId(qe, Some("collect"))(
+        qe.executedPlan.executeCollect().toSeq)
+    }
+  }
+
+  /** A local relation over Catalyst rows of `schema`, every column nullable. */
+  def localRelation(spark: SparkSession, schema: StructType, rows: Seq[InternalRow]): DataFrame =
+    ofRows(spark, LocalRelation(DataTypeUtils.toAttributes(schema.asNullable), rows))
 
   /** The executed SparkPlan of a DataFrame — plan-evidence hook for tests
     * (file counts in FileSourceScanExec, codegen spans).

@@ -26,7 +26,9 @@ import graft.synth.TranscriptSynth
   *   - after a post-grace orphan GC, `data/` holds exactly the referenced
   *     files and no `_staging-*` dir is left.
   * Templates keep every operation to one rewrite group, so a crashed run
-  * leaves no sibling Spark job writing behind the recovery.
+  * leaves no sibling Spark job writing behind the recovery. Dedupe and
+  * clustering crash on both rewrite plans, and every crashed run of them
+  * and of MERGE must leave no frame cached.
   */
 class FaultInjectionSpec extends AnyFunSuite {
   private lazy val spark = TestSpark.spark
@@ -150,6 +152,37 @@ class FaultInjectionSpec extends AnyFunSuite {
       DeleteFrom.run(t, "fault-delete", "turn_idx = 1 AND conv_id < 'x'")
     }
     assert(n >= 8, s"only $n mutating calls")
+  }
+
+  /** Crash `op` at every step on the one-task rewrite plan, then again on
+    * the range-repartitioned one; returns both call counts.
+    */
+  private def crashOnBothPlans(name: String, template: Path)(op: LakeTable => Unit): (Int, Int) =
+    (crashAtEveryStep(name, template, checkReleased = true)(op),
+      TestSpark.withShuffledRewrites(
+        crashAtEveryStep(s"$name-shuffled", template, checkReleased = true)(op)))
+
+  test("crash at every storage step: dedupe resumes its ledger job on both plans") {
+    val tpl = template("dedupe") { t =>
+      t.append(synth(4), "init")
+      // copies of two turns' texts under new keys: the victims
+      t.append(synth(4).where(col("turn_idx") === 0).orderBy("conv_id").limit(2)
+        .withColumn("conv_id", concat(lit("z"), col("conv_id"))), "copies")
+    }
+    val (n, m) = crashOnBothPlans("dedupe", tpl)(t => Dedupe.runPass(t, "fault-dedupe"))
+    // victims tmp + publish, counts sidecar, plan, task row, commit, marker
+    assert(n >= 9 && m >= 9, s"only $n / $m mutating calls")
+  }
+
+  test("crash at every storage step: clustering resumes its ledger job on both plans") {
+    val tpl = template("cluster") { t =>
+      t.append(synth(4), "init")
+      t.append(synth(3, "x"), "second")
+    }
+    val (n, m) = crashOnBothPlans("cluster", tpl) { t =>
+      Clustering.cluster(t, "fault-cluster", targetFileRows = 500)
+    }
+    assert(n >= 6 && m >= 6, s"only $n / $m mutating calls")
   }
 
   test("crash at every storage step: expire + orphan GC finish on rerun") {

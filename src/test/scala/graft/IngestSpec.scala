@@ -209,6 +209,65 @@ class TransposerSpec extends AnyFunSuite {
     assert(rows(0).getString(fields.indexOf("Name")) == "John\nDoe")
     assert(rows(1).getString(fields.indexOf("Name")) == "Jane")
   }
+
+  /** The window + pivot transposition the driver-side one replaced, kept as
+    * the reference: a running count of anchor keys numbers the records, and
+    * a pivot on the first-seen key order takes the last value per key.
+    */
+  private def windowPivotTranspose(content: String): (Seq[Seq[Any]], Seq[String]) = {
+    import org.apache.spark.sql.expressions.Window
+    import spark.implicits._
+    val raw = StrictCsv.parse(content, ',', '"', strict = false).zipWithIndex.collect {
+      case (r, i) if r.nonEmpty => ("inline", i.toLong, r.head, if (r.length > 1) r(1) else null)
+    }
+    val kv = raw.toDF("file", "line_no", "k", "v")
+      .withColumn("key", Sanitize.stripWs(coalesce(col("k"), lit(""))))
+      .where(col("key") =!= "")
+      .withColumn("val", Sanitize.sanitizeCell(col("v")))
+    val keyOrder = kv.groupBy("key").agg(min("line_no").as("first")).orderBy("first")
+      .select("key").as[String].collect().toSeq
+    val w = Window.partitionBy("file").orderBy("line_no")
+      .rowsBetween(Window.unboundedPreceding, Window.currentRow)
+    val out = kv.withColumn("anchor", first(col("key")).over(w))
+      .withColumn("rec_id",
+        greatest(sum(when(col("key") === col("anchor"), 1).otherwise(0)).over(w) - 1, lit(0)))
+      .groupBy(col("file"), col("rec_id")).pivot("key", keyOrder)
+      .agg(max_by(col("val"), col("line_no")))
+      .orderBy("file", "rec_id").drop("file", "rec_id")
+    (out.collect().map(_.toSeq).toSeq, keyOrder)
+  }
+
+  test("driver transpose == window + pivot reference over generated drops") {
+    import org.scalacheck.Gen
+    import org.scalacheck.rng.Seed
+    def field(s: String) =
+      if (s.exists(c => c == ',' || c == '"' || c == '\n')) "\"" + s.replace("\"", "\"\"") + "\""
+      else s
+    // repeated anchors, padded keys that strip to an anchor, empty and
+    // whitespace keys, missing values, formula cells, quoted newlines
+    val key = Gen.oneOf("Name", "Age", "City", " Name ", "Note", "", "  ", "\t")
+    val value = Gen.oneOf("John", "", "  padded  ", "=1+1", "+SUM(A1)", "-3", "@cmd",
+      "multi\nline", "a,b", "say \"hi\"")
+    val row = Gen.frequency(
+      8 -> (for (k <- key; v <- value) yield field(k) + "," + field(v)),
+      1 -> key.map(field), // a key with no value
+      1 -> Gen.const("")) // an empty row
+    val drop = for (n <- Gen.choose(1, 12); rows <- Gen.listOfN(n, row)) yield rows.mkString("\n")
+    var seed = Seed(7L)
+    var checked = 0
+    while (checked < 30) {
+      drop(Gen.Parameters.default, seed).foreach { content =>
+        val (df, fields) = Transposer.parseVerticalCsv(spark, content, Dialect.Excel)
+        val (refRows, refFields) = windowPivotTranspose(content)
+        withClue(s"drop ${content.replace("\n", "\\n")}: ") {
+          assert(fields == refFields)
+          assert(df.collect().map(_.toSeq).toSeq == refRows)
+        }
+        checked += 1
+      }
+      seed = seed.next
+    }
+  }
 }
 
 class MultilineHorizontalSpec extends AnyFunSuite {

@@ -214,23 +214,31 @@ class LakeSpec extends AnyFunSuite {
       Seq.empty[(String, String, String, Long)].toDF("conv_id", "turn_idx", "text", "_seq"),
       // the two keys whose orders disagree, both updated in place
       Seq((wide, "0", "WIDE", 0L), (emoji, "0", "EMOJI", 1L))
-        .toDF("conv_id", "turn_idx", "text", "_seq"))
-    def mergeAll(t: LakeTable) =
-      drops.zipWithIndex.map { case (d, i) => MergeInto.merge(t, d, s"parity-$i") }
+        .toDF("conv_id", "turn_idx", "text", "_seq"),
+      // a drop whose plan is not a local relation (it even shuffles):
+      // collected by a job
+      spark.range(3).repartition(2).select(format_string("c%08d", col("id") + 6).as("conv_id"),
+        lit("0").as("turn_idx"), lit("RANGED").as("text"), col("id").as("_seq")))
+    def mergeAll(t: LakeTable) = drops.zipWithIndex.map { case (d, i) =>
+      TestSpark.countWork(MergeInto.merge(t, d, s"parity-$i"))
+    }
     def fields(r: MergeInto.Result) = (r.snapshot.id, r.touchedFiles, r.carriedFiles,
       r.stagedRows, r.rejectedRows, r.openedManifests, r.totalManifests)
 
     val (oneTask, shuffled) = (newTable("parity-one"), newTable("parity-shuffled"))
     val before = oneTask.scan().df.count()
-    val ra = mergeAll(oneTask)
-    val rb = TestSpark.withShuffledMerge(mergeAll(shuffled))
+    val (ra, work) = mergeAll(oneTask).unzip
+    val rb = TestSpark.withShuffledMerge(mergeAll(shuffled)).map(_._1)
     assert(ra.map(fields) == rb.map(fields))
+    // the ranged drop's collect is a tracked SQL execution: the counter
+    // sees its Exchange, and the one-task write adds none
+    assert(work.last.exchanges == 1, s"ranged drop: ${work.last}")
     assert(oneTask.schema == shuffled.schema)
     assert(rowsOf(oneTask) == rowsOf(shuffled))
 
     assert(ra.map(r => (r.stagedRows, r.rejectedRows)) ==
-      Seq((3L, 0L), (1L, 2L), (1L, 0L), (0L, 1L), (0L, 0L), (2L, 0L)))
-    assert(ra.last.touchedFiles == 2, "both single-key files must be rewritten")
+      Seq((3L, 0L), (1L, 2L), (1L, 0L), (0L, 1L), (0L, 0L), (2L, 0L), (3L, 0L)))
+    assert(ra(5).touchedFiles == 2, "both single-key files must be rewritten")
     val m = oneTask.scan().df.collect()
       .map(r => (r.getAs[String]("conv_id"), r.getAs[Int]("turn_idx")) -> r).toMap
     assert(m.size == before + 1, "only (c00000001, 99) is new; every other key updates in place")
@@ -239,7 +247,180 @@ class LakeSpec extends AnyFunSuite {
     assert(m(("c00000001", 0)).getAs[String]("text") == "second")
     assert(m(("c00000001", 0)).getAs[String]("role") == "user")
     assert(m(("c00000004", 0)).getAs[String]("lang") == "es")
+    assert(m(("c00000007", 0)).getAs[String]("text") == "RANGED")
     assert(oneTask.schema.fieldNames.contains("mood"))
+  }
+
+  /** A table for the group rewrites: 40 conversations in four key-sorted
+    * files of ten each (the same files on every call), plus a fifth holding
+    * copies of four turns' texts, one from each of those files, under
+    * smaller keys (so the originals are the victims).
+    */
+  private def rewriteTable(name: String): LakeTable = {
+    val t = LakeTable.create(spark, tmpTable(name), TranscriptSynth.schema)
+    val base = synth(40)
+    for (i <- 0 until 4)
+      t.append(base.where(col("conv_id").between(f"c${10 * i}%08d", f"c${10 * i + 9}%08d"))
+        .coalesce(1).sortWithinPartitions("conv_id", "turn_idx"), s"init$i")
+    t.append(base.where(col("turn_idx") === 0 && col("conv_id").endsWith("3"))
+      .withColumn("conv_id", concat(lit("b"), col("conv_id"))).coalesce(1), "copies")
+    t
+  }
+
+  test("group rewrites: the one-task and shuffled plans commit the same rows, Results and files") {
+    // every Result field: the snapshot by id (its metadata paths are unique
+    // per table), the rest as they are
+    val ops: Seq[(String, LakeTable => Any)] = Seq(
+      "compact" -> { t =>
+        val r = Compaction.compact(t, "c", smallFileBytes = 1L << 30, targetBytes = 1L << 30)
+        (r.snapshot.map(_.id), r.copy(snapshot = None))
+      },
+      "dedupe" -> { t =>
+        val r = Dedupe.runPass(t, "d", targetFileRows = 50)
+        (r.snapshot.id, r.copy(snapshot = null))
+      },
+      "dedupe-minhash" -> { t =>
+        val r = Dedupe.runPass(t, "m", mode = "minhash", targetFileRows = 50)
+        (r.snapshot.id, r.copy(snapshot = null))
+      },
+      "delete" -> { t =>
+        val r = DeleteFrom.run(t, "x", "turn_idx = 1", targetFileRows = 50)
+        (r.snapshot.id, r.copy(snapshot = null))
+      },
+      "cluster" -> { t =>
+        val r = Clustering.cluster(t, "k", targetFileRows = 50)
+        (r.snapshot.id, r.copy(snapshot = null))
+      })
+    for ((name, op) <- ops) withClue(s"$name: ") {
+      val (a, b) = (rewriteTable(s"rw-$name-one"), rewriteTable(s"rw-$name-shuffled"))
+      val before = a.currentFiles.size
+      val inputs = (a.currentFiles ++ b.currentFiles).map(_.path).toSet
+      def outputs(t: LakeTable) = t.currentFiles.filterNot(f => inputs(f.path))
+      val (ra, one) = TestSpark.countWork(op(a))
+      val (rb, shuffled) = TestSpark.withShuffledRewrites(TestSpark.countWork(op(b)))
+      // compaction writes one file per bin in one task on either plan
+      if (name != "compact")
+        assert(shuffled.exchanges > one.exchanges, s"one task: $one, shuffled: $shuffled")
+      assert(ra == rb)
+      assert(sortedRows(a.scan().df) == sortedRows(b.scan().df))
+      val (oa, ob) = (outputs(a), outputs(b))
+      assert(oa.nonEmpty, "no output files")
+      assert(oa.size == ob.size, s"output files: ${oa.map(_.rows)} vs ${ob.map(_.rows)}")
+      assert(a.currentFiles.size < before + oa.size, "the rewrite removed its inputs")
+      if (name == "cluster")
+        for (t <- Seq(a, b)) {
+          val pr = t.scan(convRange = Some(("c00000010", "c00000011"))).prune
+          assert(pr.selectedFiles < oa.size, s"clustered files must prune: $pr")
+        }
+      else
+        for (o <- Seq(oa, ob)) {
+          // key-sorted outputs: each file's conv range ends where the next
+          // starts (a hot conversation may fill several files)
+          val byKey = o.sortBy(f => (f.minConv.get, f.maxConv.get))
+          byKey.zip(byKey.tail).foreach { case (x, y) =>
+            assert(x.maxConv.get <= y.minConv.get, s"overlapping ${x.path} and ${y.path}")
+          }
+        }
+      info(s"$name: ${oa.size} files; one task $one, shuffled $shuffled")
+    }
+  }
+
+  test("group rewrites: a group within one split is one job with no Exchange") {
+    val t = rewriteTable("rewrite-work")
+    val (_, compact) = TestSpark.countWork(
+      Compaction.compact(t, "c", smallFileBytes = 1L << 30, targetBytes = 1L << 30))
+    assert(compact == TestSpark.Work(1, 0))
+    // a dedupe or delete group alone: stop the job before its group, resume
+    intercept[InterruptedException](Dedupe.runPass(t, "d", interruptAfter = 0))
+    val (d, dedupe) = TestSpark.countWork(Dedupe.runPass(t, "d"))
+    assert(d.duplicateRows > 0 && d.groupsRewritten == 1)
+    assert(dedupe == TestSpark.Work(1, 0))
+    intercept[InterruptedException](DeleteFrom.run(t, "x", "turn_idx = 1", interruptAfter = 0))
+    val (x, delete) = TestSpark.countWork(DeleteFrom.run(t, "x", "turn_idx = 1"))
+    assert(x.deletedRows > 0 && delete == TestSpark.Work(1, 0))
+    // a recluster reuses the first clustering's cuts: one job per dirty group
+    Clustering.cluster(t, "k1", targetFileRows = 50)
+    MergeInto.merge(t, spark.createDataFrame(Seq(("c00000003", "0", "EDITED")))
+      .toDF("conv_id", "turn_idx", "text"), "edit")
+    val (k, cluster) = TestSpark.countWork(Clustering.cluster(t, "k2", targetFileRows = 50))
+    assert(k.groups == 1 && cluster == TestSpark.Work(1, 0))
+    // the counter sees the shuffled plan's exchange
+    intercept[InterruptedException](DeleteFrom.run(t, "y", "turn_idx = 2", interruptAfter = 0))
+    val (_, shuffled) = TestSpark.withShuffledRewrites(
+      TestSpark.countWork(DeleteFrom.run(t, "y", "turn_idx = 2")))
+    assert(shuffled.exchanges >= 1, s"shuffled group: $shuffled")
+  }
+
+  test("codegen: the third merge + maintenance cycle on a table compiles few classes") {
+    import org.apache.spark.metrics.source.CodegenMetrics
+    val t = LakeTable.create(spark, tmpTable("codegen-cycles"), TranscriptSynth.schema)
+    t.append(synth(40).repartitionByRange(4, col("conv_id"), col("turn_idx"))
+      .sortWithinPartitions("conv_id", "turn_idx"), "init")
+    def compiles = CodegenMetrics.METRIC_COMPILATION_TIME.getCount
+    // each drop edits a turn, adds two turns with one text (dedupe work) and
+    // one turn with an old event time (retention work)
+    def cycle(i: Int): Long = {
+      val c0 = compiles
+      val drop = "conv_id,turn_idx,role,text,ts\n" +
+        s"c0000000$i,0,user,edit $i,\nn$i,0,user,copy $i,\nn$i,1,user,copy $i,\n" +
+        s"o$i,0,user,old $i,2020-01-01 00:00:00\n"
+      MergeInto.merge(t, graft.ingest.Ingest.parseContent(spark, drop).records, s"drop-$i")
+      val r = Maintenance.runCycle(t, s"cycle-$i", smallFileBytes = 48L << 10,
+        targetBytes = 192L << 10, targetFileRows = 100, groupTargetBytes = 64L << 10,
+        retentionMs = None, dedupeMode = Some("exact"),
+        rowRetentionMs = Some(1000L), nowMs = 1600000000000L)
+      assert(r.dedupe.get.duplicateRows == 1 && r.rowRetention.get.deletedRows >= 1)
+      compiles - c0
+    }
+    val counts = (1 to 3).map(cycle)
+    info(s"classes compiled per cycle: ${counts.mkString(", ")}")
+    // run alone, the commit before the one-task group rewrites compiled
+    // 97, 27 and 26 classes here; this code compiles 74, 16 and 0
+    assert(counts(2) <= 10, s"third cycle compiled ${counts(2)} classes")
+  }
+
+  test("group rewrites: a column whose name starts with __ survives every rewrite") {
+    for (shuffled <- Seq(false, true)) withClue(s"shuffled = $shuffled: ") {
+      def run[T](body: => T): T = if (shuffled) TestSpark.withShuffledRewrites(body) else body
+      val t = rewriteTable(s"dunder-$shuffled")
+      // turn 1 of every conversation: in every data file, never a victim
+      val marked = synth(40).where(col("turn_idx") === 1)
+        .select(col("conv_id"), col("turn_idx").cast("string").as("turn_idx"),
+          concat(lit("x-"), col("conv_id")).as("__x"))
+      run(MergeInto.merge(t, marked, "mark"))
+      val expected = marked.select("conv_id", "__x").collect()
+        .map(r => r.getString(0) -> r.getString(1)).toMap
+      def check(step: String): Unit = withClue(s"after $step: ") {
+        assert(t.schema.fieldNames.contains("__x"))
+        val got = t.scan().df.where(col("turn_idx") === 1).select("conv_id", "__x").collect()
+          .map(r => r.getString(0) -> r.getString(1)).toMap
+        assert(got == expected)
+      }
+      check("merge")
+      run(Compaction.compact(t, "c", smallFileBytes = 1L << 30, targetBytes = 1L << 30))
+      check("compact")
+      assert(run(Dedupe.runPass(t, "d", targetFileRows = 50)).duplicateRows > 0)
+      check("dedupe")
+      assert(run(DeleteFrom.run(t, "x", "turn_idx = 0", targetFileRows = 50)).deletedRows > 0)
+      check("delete")
+      assert(run(Clustering.cluster(t, "k", targetFileRows = 50)).rowsRewritten > 0)
+      check("cluster")
+    }
+  }
+
+  test("dedupe rebuilds a plan's missing victim counts; delete fails loudly without them") {
+    val (t, ref) = (dedupeTable("missing-counts"), dedupeTable("missing-counts-ref"))
+    val expected = Dedupe.runPass(ref, "dm")
+    // a plan written before the counts sidecar existed
+    intercept[InterruptedException](Dedupe.runPass(t, "dm", interruptAfter = 0))
+    FileIO.Local.delete(FileIO.path(t.ledgerDir, "dm", "dedupe-victims.json"))
+    val r = Dedupe.runPass(t, "dm")
+    assert(r.copy(snapshot = null) == expected.copy(snapshot = null))
+    assert(sortedRows(t.scan().df) == sortedRows(ref.scan().df))
+    intercept[InterruptedException](DeleteFrom.run(t, "xm", "turn_idx = 0", interruptAfter = 0))
+    FileIO.Local.delete(FileIO.path(t.ledgerDir, "xm", "delete-victims.json"))
+    val e2 = intercept[IllegalStateException](DeleteFrom.run(t, "xm", "turn_idx = 0"))
+    assert(e2.getMessage.contains("victim counts"))
   }
 
   private def dedupeFixtureRows: Seq[(String, Int, String, String, String, java.sql.Timestamp)] = {
@@ -363,6 +544,7 @@ class LakeSpec extends AnyFunSuite {
 
     val res = Dedupe.runPass(t, "ddcap", unit = "conversation", maxConvChars = 100)
     assert(res.duplicateRows == 1, "only the under-cap duplicate conv is removed")
+    assert(res.skippedConvs == 2, "both oversized conversations are reported skipped")
     val after = t.scan().df.select("conv_id").as[String].collect().toSet
     assert(after == Set("a", "huge1", "huge2"),
       s"oversized conversations must survive verbatim (skipped, not victims): $after")

@@ -35,10 +35,20 @@ object TestSpark {
     * sends every MERGE down its persisted, shuffled plan; the session's own
     * value is restored afterwards.
     */
-  def withShuffledMerge[T](body: => T): T = {
-    val key = "spark.sql.autoBroadcastJoinThreshold"
+  def withShuffledMerge[T](body: => T): T =
+    withConf("spark.sql.autoBroadcastJoinThreshold", "-1")(body)
+
+  /** Run `body` with `spark.sql.files.maxPartitionBytes` at 1 KB, below any
+    * data file's size, which sends every dedupe, DELETE and cluster group
+    * (and the MERGE write) down its range-repartitioned plan; compaction
+    * bins stay one task. The session's own value is restored afterwards.
+    */
+  def withShuffledRewrites[T](body: => T): T =
+    withConf("spark.sql.files.maxPartitionBytes", "1024")(body)
+
+  private def withConf[T](key: String, value: String)(body: => T): T = {
     val before = spark.conf.getOption(key)
-    spark.conf.set(key, "-1")
+    spark.conf.set(key, value)
     try body
     finally before.fold(spark.conf.unset(key))(spark.conf.set(key, _))
   }
