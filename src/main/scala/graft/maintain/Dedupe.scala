@@ -1,6 +1,7 @@
 package graft.maintain
 
 import org.apache.spark.sql.DataFrame
+import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types.{StringType, StructField, StructType}
 
@@ -19,7 +20,7 @@ import graft.lake.{DataFile, FileIO, LakeTable, Snapshot}
   *
   * Modes:
   *   - `exact` (default): groups are identical normalized text (lower,
-  *     collapsed whitespace) — one groupBy, no candidate generation;
+  *     collapsed whitespace) — one window, no candidate generation;
   *   - `minhash`: near-duplicate groups from MinHash-LSH candidate pairs
   *     (shingle-Jaccard similarity) + min-key label propagation
   *     ([[Dedup.dedupGroupsResult]]);
@@ -31,20 +32,19 @@ import graft.lake.{DataFile, FileIO, LakeTable, Snapshot}
   * and REFUSE to delete when label propagation did not converge (partial
   * groups must never drive deletions).
   *
-  * Scale shape (10^12 turns): the victim set is computed in one corpus
-  * pass (groupBy on the text hash / LSH banding — both map-side-combining
-  * shuffles) and persisted once under the job's ledger dir; ONE aggregate
-  * over it counts victims per data file, and those counts go to a sidecar
-  * beside the plan ([[Ledger.writeCounts]]). They give the touched files,
-  * the pass's duplicate rows and each group's expected survivors, which
-  * the group's write is checked against. The rewrite is O(files containing
-  * victims): each ledger-checkpointed task anti-joins one bounded file
-  * group against ITS OWN victims (pre-filtered by file provenance) and
-  * writes the survivors sorted ([[LakeTable.writeSorted]]: a group within
-  * one scan split and 16 MB is one task with no Exchange), so a pass
-  * removing 0.1% of turns rewrites ~0.1% of files. The groups run through
-  * the ledger's job protocol ([[Ledger.planOrResume]], [[Ledger.runJob]]),
-  * so resume skips finished groups.
+  * Scale shape (10^12 turns): the victim set is computed in one corpus pass
+  * (a window over the text, or LSH banding) and persisted once under the
+  * job's ledger dir; ONE aggregate over it counts victims per data file into
+  * a sidecar beside the plan ([[Ledger.writeCounts]]). They give the touched
+  * files, the pass's duplicate rows and each group's expected survivors,
+  * which the group's write is checked against. The rewrite is O(files
+  * containing victims): each ledger-checkpointed task anti-joins one bounded
+  * file group against ITS OWN victims (pre-filtered by file provenance) and
+  * writes the survivors sorted ([[LakeTable.writeSorted]]: a group within one
+  * scan split and 16 MB is one task with no Exchange), so a pass removing
+  * 0.1% of turns rewrites ~0.1% of files. The groups run through the ledger's
+  * job protocol ([[Ledger.planOrResume]], [[Ledger.runJob]]), so resume skips
+  * finished groups.
   *
   * Rows with empty normalized text are never deduplicated (a transcript's
   * legitimately empty turns are not "duplicates" of each other), and
@@ -206,12 +206,6 @@ object Dedupe {
       StructField("__src", StringType)))).parquet(dir)
   }
 
-  /** One corpus pass producing the victim rows: (conv_id, turn_idx, __src)
-    * for every row that is NOT its duplicate group's keeper. Keeper = the
-    * smallest (conv_id, turn_idx) struct in the group — deterministic, and
-    * identical to the reference's first-occurrence-survives rule under the
-    * table's stable key ordering.
-    */
   /** Components over the DISTINCT sketches of `df` (must carry a `__sk`
     * column — minhash array signature or simhash long fingerprint — plus
     * the row-key column `keyCol`), with the verify gates applied on the
@@ -273,37 +267,38 @@ object Dedupe {
       () => { nodes.unpersist(); r.groups.unpersist(); () })
   }
 
+  /** The victim rows (conv_id, turn_idx, __src): every row that is NOT its
+    * duplicate group's keeper, the smallest (conv_id, turn_idx) struct in
+    * the group (rows sharing it all survive) — the reference's
+    * first-occurrence-survives rule under the table's stable key order.
+    * `exact` reads the files once into a window keyed on the full
+    * normalized text (no hash collision merges groups): one task with no
+    * Exchange when they fit one ([[LakeTable.fitsOneTask]]), else one
+    * hash Exchange on the text.
+    */
   private[maintain] def computeVictims(table: LakeTable, mode: String,
                                        minTokens: Int,
                                        minJaccard: Double = 0.9,
                                        maxIters: Int = 50): DataFrame = {
-    val spark = table.spark
     require(table.currentFiles.nonEmpty, s"no data files to dedupe at ${table.root}")
 
     mode match {
       case "exact" =>
-        val paths = table.currentFiles.map(f => table.absData(f.path))
-        val rows = table.readData(paths)
-          .select(col("conv_id"), col("turn_idx"), col("text"),
+        val files = table.currentFiles
+        val rows = table.readData(files.map(f => table.absData(f.path)))
+          .select(col("conv_id"), col("turn_idx"),
             // provenance as a TABLE-RELATIVE path, matching manifest entries
             concat(lit("data/"),
-              element_at(split(input_file_name(), "/"), -1)).as("__src"))
-          .withColumn("__tn", Dedup.normalizedText(col("text")))
-          .where(length(col("__tn")) > 0 &&
-            size(split(col("__tn"), " ")) >= minTokens)
-        // keeper per identical normalized text: one map-side-combining
-        // shuffle keyed on the 64-bit text hash (tiny shuffle key; the
-        // within-group min re-checks nothing because the FULL normalized
-        // text rides along in the grouping key, so hash collisions split
-        // into their true groups)
-        val keepers = rows
-          .groupBy(xxhash64(col("__tn")).as("__h"), col("__tn"))
-          .agg(min(struct(col("conv_id"), col("turn_idx"))).as("__keep"),
-            count(lit(1)).as("__n"))
-          .where(col("__n") > 1)
-          .select(col("__h"), col("__tn"), col("__keep"))
-        rows.join(keepers, Seq("__tn"))
-          .where(struct(col("conv_id"), col("turn_idx")) =!= col("__keep"))
+              element_at(split(input_file_name(), "/"), -1)).as("__src"),
+            Dedup.normalizedText(col("text")).as("__tn"))
+        val key = struct(col("conv_id"), col("turn_idx"))
+        // a non-empty text has at least one token: the token bar only
+        // filters when it is above one
+        val tokens = if (minTokens > 1) size(split(col("__tn"), " ")) >= minTokens else lit(true)
+        (if (table.fitsOneTask(files.map(_.bytes).sum)) rows.coalesce(1) else rows)
+          .where(length(col("__tn")) > 0 && tokens)
+          .withColumn("__keep", min(key).over(Window.partitionBy("__tn")))
+          .where(key =!= col("__keep"))
           .select("conv_id", "turn_idx", "__src")
 
       case "minhash" | "simhash" =>
@@ -373,7 +368,6 @@ object Dedupe {
                                            minJaccard: Double = 0.9,
                                            maxIters: Int = 50,
                                            maxConvChars: Long = 8L << 20): (DataFrame, Long) = {
-    val spark = table.spark
     val paths = table.currentFiles.map(f => table.absData(f.path))
     val rows = table.readData(paths)
       .select(col("conv_id"), col("turn_idx"),
@@ -403,12 +397,8 @@ object Dedupe {
 
     val victimConvs = mode match {
       case "exact" =>
-        val keepers = conv
-          .groupBy(xxhash64(col("__ctext")).as("__h"), col("__ctext"))
-          .agg(min(col("conv_id")).as("__keep"), count(lit(1)).as("__n"))
-          .where(col("__n") > 1)
-          .select(col("__ctext"), col("__keep"))
-        conv.join(keepers, Seq("__ctext"))
+        // the same window as the turn unit: `conv` is computed once
+        conv.withColumn("__keep", min(col("conv_id")).over(Window.partitionBy("__ctext")))
           .where(col("conv_id") =!= col("__keep"))
           .select("conv_id")
       case _ =>

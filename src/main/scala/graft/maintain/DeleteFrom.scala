@@ -19,7 +19,9 @@ import graft.lake.{DataFile, IntervalDnf, LakeTable, Snapshot}
   *      the per-file event-time stats, so a daily tick plans only the
   *      files old enough to hold expired rows.
   *   2. ONE planning pass over the candidates counts matching rows PER
-  *      FILE (reads only the predicate's columns); files with ZERO matches
+  *      FILE (reads only the predicate's columns; candidates that fit one
+  *      task, [[LakeTable.fitsOneTask]], are coalesced into one, so the
+  *      count is one job with no Exchange); files with ZERO matches
   *      leave the plan entirely — they are never read again, never
   *      rewritten, their names never churn (and their sketch coverage
   *      survives). The per-file counts persist beside the ledger plan, so
@@ -96,12 +98,15 @@ object DeleteFrom {
             s"'$predSql' can match; drop the hint or widen it")
       }
       val pruned = table.overlappingEntriesBoxes(snap0, boxes)
-      // ONE pass over the candidates: matching rows per file. Catalyst
-      // prunes the read to the predicate's columns; the result is
-      // metadata-sized (one row per file WITH victims).
+      // ONE pass over the candidates: matching rows per file, in one task
+      // when they fit one. Catalyst prunes the read to the predicate's
+      // columns; the result is metadata-sized (one row per file WITH
+      // victims).
+      val candidates = pruned.entries.map(_.file)
+      def scan = table.readData(candidates.map(f => table.absData(f.path)))
       val perFile: Map[String, Long] =
-        if (pruned.entries.isEmpty) Map.empty
-        else table.readData(pruned.entries.map(e => table.absData(e.file.path)))
+        if (candidates.isEmpty) Map.empty
+        else (if (table.fitsOneTask(candidates.map(_.bytes).sum)) scan.coalesce(1) else scan)
           .where(coalesce(pred.cast("boolean"), lit(false)))
           .groupBy(concat(lit("data/"),
             element_at(split(input_file_name(), "/"), -1)).as("__src"))
@@ -113,8 +118,8 @@ object DeleteFrom {
       // alone (files that CONTAIN victims) would overstate prune
       // effectiveness and hide the clean-file scan cost
       Ledger.writeCounts(table, jobId, VictimsFile, perFile, "predicate" -> predSql,
-        "pruned_candidates" -> pruned.entries.size.toLong)
-      val byPath = pruned.entries.map(e => e.file.path -> e.file).toMap
+        "pruned_candidates" -> candidates.size.toLong)
+      val byPath = candidates.map(f => f.path -> f).toMap
       val withVictims = perFile.keys.toVector.sorted.map(byPath(_))
       val groups = Clustering.greedyGroups(
         withVictims.sortBy(f => (f.minConv.getOrElse(""), f.minTurn.getOrElse(0))),

@@ -82,7 +82,7 @@ object Maintenance {
       excludePaths = clusteredClean)
     val deduped = dedupeMode.map(m =>
       Dedupe.runPass(table, s"$cycleId-dedupe", mode = m,
-        groupTargetBytes = groupTargetBytes))
+        targetFileRows = targetFileRows, groupTargetBytes = groupTargetBytes))
     val rowExpired = rowRetentionMs.map { age =>
       val jobId = s"$cycleId-rowexpire"
       // A re-invoked crashed cycle replays the predicate the ORIGINAL run
@@ -91,7 +91,8 @@ object Maintenance {
       // changed-predicate guard on the natural retry path.
       val predSql = DeleteFrom.plannedPredicate(table, jobId)
         .getOrElse(s"ts < timestamp_millis(${nowMs - age}L)")
-      DeleteFrom.run(table, jobId, predSql, groupTargetBytes = groupTargetBytes)
+      DeleteFrom.run(table, jobId, predSql, targetFileRows = targetFileRows,
+        groupTargetBytes = groupTargetBytes)
     }
     val clustered = Clustering.cluster(table, s"$cycleId-cluster",
       targetFileRows = targetFileRows, groupTargetBytes = groupTargetBytes)

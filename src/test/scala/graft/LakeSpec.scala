@@ -330,6 +330,17 @@ class LakeSpec extends AnyFunSuite {
     val (_, compact) = TestSpark.countWork(
       Compaction.compact(t, "c", smallFileBytes = 1L << 30, targetBytes = 1L << 30))
     assert(compact == TestSpark.Work(1, 0))
+    // whole passes on a one-task table: an exact dedupe publishes its
+    // victims, counts them and rewrites one group; a DELETE counts and
+    // rewrites one group (the keeper aggregate + join and the shuffled
+    // DELETE count gave Work(5, 2) and Work(3, 1))
+    val w = rewriteTable("rewrite-work-whole")
+    val (wd, wholeDedupe) = TestSpark.countWork(Dedupe.runPass(w, "dw"))
+    assert(wd.duplicateRows > 0 && wd.groupsRewritten == 1)
+    assert(wholeDedupe == TestSpark.Work(3, 0))
+    val (wx, wholeDelete) = TestSpark.countWork(DeleteFrom.run(w, "xw", "turn_idx = 1"))
+    assert(wx.deletedRows > 0 && wx.touchedFiles > 0)
+    assert(wholeDelete == TestSpark.Work(2, 0))
     // a dedupe or delete group alone: stop the job before its group, resume
     intercept[InterruptedException](Dedupe.runPass(t, "d", interruptAfter = 0))
     val (d, dedupe) = TestSpark.countWork(Dedupe.runPass(t, "d"))
@@ -1707,6 +1718,30 @@ class LakeSpec extends AnyFunSuite {
       groupTargetBytes = 64L << 10, retainLast = 2,
       rowRetentionMs = Some(age), nowMs = now)
     assert(rb.rowRetention.exists(_.deletedRows == 0) && t.scan().df.count() == expect)
+  }
+
+  test("maintenance cycle: dedupe and row retention write files of targetFileRows") {
+    val t = LakeTable.create(spark, tmpTable("cycle-file-rows"), TranscriptSynth.schema)
+    val base = synth(100)
+    val copies = base.where(col("conv_id") < "c00000030")
+      .withColumn("conv_id", concat(lit("z"), col("conv_id")))
+    // even turns are a day old, odd ones new: every file, however the
+    // dedupe rewrite sorted it, keeps some rows and expires others
+    val now = TranscriptSynth.BaseTsMillis + 86400000L
+    t.append(base.unionByName(copies).withColumn("ts",
+      when(col("turn_idx") % 2 === 0, timestamp_millis(lit(TranscriptSynth.BaseTsMillis)))
+        .otherwise(timestamp_millis(lit(now)))).repartition(4), "init")
+    val target = 20L
+    Maintenance.runCycle(t, "cyc-rows", targetFileRows = target,
+      groupTargetBytes = 64L << 10, retentionMs = None, dedupeMode = Some("exact"),
+      rowRetentionMs = Some(3600000L), nowMs = now)
+    for (phase <- Seq("dedupe", "rowexpire")) withClue(s"$phase: ") {
+      val tasks = Ledger.readTasks(t, s"cyc-rows-$phase").values.toSeq
+      val written = tasks.flatMap(_.outFiles)
+      assert(tasks.exists(_.outFiles.map(_.rows).sum > target),
+        "no group wrote more than one file's rows: the bound is not exercised")
+      assert(written.forall(_.rows <= target), s"file rows: ${written.map(_.rows)}")
+    }
   }
 
   test("maintenance cycle: compact+cluster+expire+gc in one idempotent call") {
