@@ -5,15 +5,19 @@ import java.util.concurrent.atomic.{AtomicInteger, AtomicLong}
 
 import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart, SparkListenerStageCompleted, SparkListenerTaskEnd}
 import org.apache.spark.sql.SparkSession
+import org.apache.spark.sql.graftx.Bridge
 
 /** Measurement-only harness for the optimization rounds (guide §1): times
   * individual SparkEntry queries in isolation with repeat counts, a
   * noop-sink mode (full-column materialization without sink cost), and a
   * per-query job/stage/task accounting via a SparkListener — so "where do
   * the seconds go" is answerable (scheduling overhead vs executor compute).
-  * Optionally dumps `.explain("formatted")` per query to plans/<tag>/.
+  * `--explain DIR` writes each query's EXPLAIN FORMATTED to `DIR/<q>.txt`
+  * and, after collecting its rows once, the final adaptive plan (reused
+  * exchanges, AQE-chosen joins) to `DIR/<q>-final.txt`. `--show` prints
+  * each query's first rows and row count instead of timing it.
   *
-  * Usage: runMain graft.BenchExtra [--reps N] [--noop] [--explain DIR] [q...]
+  * Usage: runMain graft.BenchExtra [--reps N] [--noop] [--explain DIR] [--show] [q...]
   * Bench.scala itself is FROZEN; this main adds measurements beside it.
   */
 object BenchExtra {
@@ -61,6 +65,7 @@ object BenchExtra {
     var reps = 1
     var noop = false
     var verbose = false
+    var show = false
     var explainDir: Option[String] = None
     val names = scala.collection.mutable.ArrayBuffer.empty[String]
     var i = 0
@@ -69,6 +74,7 @@ object BenchExtra {
         case "--reps" => reps = args(i + 1).toInt; i += 2
         case "--noop" => noop = true; i += 1
         case "--verbose" => verbose = true; i += 1
+        case "--show" => show = true; i += 1
         case "--explain" => explainDir = Some(args(i + 1)); i += 2
         case q => names += q; i += 1
       }
@@ -105,12 +111,21 @@ object BenchExtra {
     for (name <- qs) {
       explainDir.foreach { dir =>
         val df = SparkEntry.queries(name)(spark, sfDir)
-        val txt = org.apache.spark.sql.graftx.Bridge.explainFormatted(df)
+        def write(file: String, txt: String): Unit =
+          Files.write(Paths.get(dir, file), txt.getBytes("UTF-8"),
+            StandardOpenOption.CREATE, StandardOpenOption.TRUNCATE_EXISTING)
         Files.createDirectories(Paths.get(dir))
-        Files.write(Paths.get(dir, s"$name.txt"), txt.getBytes("UTF-8"),
-          StandardOpenOption.CREATE, StandardOpenOption.TRUNCATE_EXISTING)
+        write(s"$name.txt", Bridge.explainFormatted(df))
+        // collect(), not count(): count() plans a different query and
+        // leaves this Dataset's adaptive plan unfinalized
+        df.collect()
+        write(s"$name-final.txt", Bridge.executedPlanOf(df).toString)
       }
-      for (r <- 1 to reps) {
+      if (show) {
+        val df = SparkEntry.queries(name)(spark, sfDir)
+        df.show(5, truncate = false)
+        println(s"$name rows=${df.count()}")
+      } else for (r <- 1 to reps) {
         spark.sparkContext.setJobDescription(s"$name rep$r")
         acct.reset()
         val t0 = System.nanoTime()

@@ -12,12 +12,13 @@ import org.apache.spark.sql.types.LongType
   */
 object Dedup {
 
-  /** Exact-dedup key: xxhash64 of the normalized text (lower, collapsed
-    * whitespace). Collision-safe enough for candidate generation; final
-    * equality should re-check the normalized text.
+  /** The text duplicates are compared on: lower case, every whitespace
+    * run collapsed to one space, then trimmed. Collapsing first matters:
+    * Spark's `trim` strips only U+0020, so a tab or newline at either end
+    * must already be a space when it runs.
     */
   def normalizedText(text: Column): Column =
-    regexp_replace(lower(trim(coalesce(text, lit("")))), "\\s+", " ")
+    trim(regexp_replace(lower(coalesce(text, lit(""))), "\\s+", " "))
 
   /** k-word shingles as strings; shorter docs yield one whole-doc shingle. */
   def wordShingles(text: Column, k: Int): Column = {
@@ -26,18 +27,6 @@ object Dedup {
     when(n <= k, array(array_join(toks, " ")))
       .otherwise(transform(sequence(lit(1), n - k + 1),
         i => array_join(slice(toks, i, lit(k)), " ")))
-  }
-
-  /** MinHash signature: for seed s in [0, numHashes), min over shingles of
-    * xxhash64(shingle, s). Empty shingle set -> all Long.MaxValue.
-    */
-  def minhashSignature(shingleCol: Column, numHashes: Int): Column = {
-    val sigs = (0 until numHashes).map { s =>
-      coalesce(
-        array_min(transform(shingleCol, sh => xxhash64(sh, lit(s)))),
-        lit(Long.MaxValue))
-    }
-    array(sigs: _*)
   }
 
   /** LSH band hashes: split the signature into `bands` rows of length
@@ -425,15 +414,16 @@ object Dedup {
 
   /** MinHash-LSH near-duplicate candidate pairs over (idCol, textCol).
     *
-    * Signature shape, third iteration: the pure-Column signature
-    * (`minhashSignature`) was rejected because CollapseProject inlines the
-    * shingle array into all numHashes array_min calls (measured 40x
-    * slowdown); the explode->groupBy-min shape fixed that but paid a full
-    * extra stage per build. The NATIVE kernel expression
-    * ([[minhashSignatureNative]]) computes the whole signature in one
-    * codegen'd pass inside the projection — no explode, no shuffle, and
-    * immune to projection inlining — while staying bit-identical to both
-    * Column shapes (DedupSpec pins the parity).
+    * Signature shape, third iteration: a pure-Column signature (one
+    * `array_min(transform(shingles, xxhash64(_, seed)))` per seed) was
+    * rejected because CollapseProject inlines the shingle array into all
+    * numHashes array_min calls (measured 40x slowdown); the
+    * explode->groupBy-min shape fixed that but paid a full extra stage per
+    * build. The NATIVE kernel expression ([[minhashSignatureNative]])
+    * computes the whole signature in one codegen'd pass inside the
+    * projection — no explode, no shuffle, and immune to projection
+    * inlining — while staying bit-identical to the explode shape
+    * (FunctionsSpec pins the parity).
     *
     * Banding runs over DISTINCT signatures (exact duplicates — identical
     * shingle sets, hence identical signatures — collapse to one banded row

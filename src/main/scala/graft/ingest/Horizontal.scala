@@ -10,26 +10,10 @@ import graft.functions.Sanitize
   * header names trimmed, empty header names dropped, every cell trimmed +
   * formula-escape sanitized, null cells -> "".
   *
-  * Uses Spark's CSV datasource (uniVocity, vectorized) — the scan, the
-  * sanitize projection and any downstream filter all stay in one
-  * whole-stage-codegen pass.
+  * Parses with [[StrictCsv]] (CPython csv.reader parity) on the driver;
+  * the sanitize projection runs in Spark over the parsed rows.
   */
 object Horizontal {
-
-  def readCsv(spark: SparkSession, path: String, dialect: Dialect): DataFrame = {
-    val raw = spark.read
-      .option("header", "true")
-      .option("sep", dialect.delimiter.toString)
-      .option("quote", dialect.quote.toString)
-      .option("mode", "PERMISSIVE")
-      .option("inferSchema", "false")
-      // quoted fields may contain newlines (multi-line transcript text);
-      // multiLine parses each file whole instead of splitting on raw \n —
-      // fine for <=50 MB drops, where per-file parallelism is the unit anyway
-      .option("multiLine", "true")
-      .csv(path)
-    sanitizeColumns(raw)
-  }
 
   /** Parse an in-memory content string (single drop) with [[StrictCsv]] —
     * CPython csv.reader parity, so quoted fields containing embedded

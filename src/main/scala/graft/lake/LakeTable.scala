@@ -319,6 +319,10 @@ class LakeTable(val root: String, val spark: SparkSession,
     inputBytes <= math.min(spark.sessionState.conf.filesMaxPartitionBytes,
       LakeTable.OneTaskMaxBytes)
 
+  /** `df` coalesced into one partition when its input [[fitsOneTask]]. */
+  def oneTaskIfFits(df: DataFrame, inputBytes: Long): DataFrame =
+    if (fitsOneTask(inputBytes)) df.coalesce(1) else df
+
   /** THE sorted rewrite of one group (merge, dedupe, delete, clustering):
     * `rows` rows of `df` in about ceil(rows / targetFileRows) files, each
     * holding a tight range of `key`. A group whose input [[fitsOneTask]]
@@ -560,6 +564,12 @@ object LakeTable {
     * and its pointer rename for the two to overlap.
     */
   val OrphanAdoptMaxAgeMs: Long = 60L * 60 * 1000
+
+  /** `__src`: a row's data file as a TABLE-RELATIVE path, as in manifest
+    * entries. The one reader of `input_file_name`; [[LakeTable.writeDataFiles]]
+    * keeps names clear of what it URL-encodes. */
+  def sourceFile: Column =
+    concat(lit("data/"), element_at(split(input_file_name(), "/"), -1)).as("__src")
 
   /** A data file plus the manifest it currently lives in. */
   final case class FileEntry(manifest: String, file: DataFile)

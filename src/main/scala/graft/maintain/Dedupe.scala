@@ -6,7 +6,7 @@ import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types.{StringType, StructField, StructType}
 
 import graft.functions.Dedup
-import graft.lake.{DataFile, FileIO, LakeTable, Snapshot}
+import graft.lake.{FileIO, LakeTable, Snapshot}
 
 /** Lake-integrated deduplication: the dedup suite's groups APPLIED to the
   * transcript table as a maintenance operation — the reference's core
@@ -34,17 +34,11 @@ import graft.lake.{DataFile, FileIO, LakeTable, Snapshot}
   *
   * Scale shape (10^12 turns): the victim set is computed in one corpus pass
   * (a window over the text, or LSH banding) and persisted once under the
-  * job's ledger dir; ONE aggregate over it counts victims per data file into
-  * a sidecar beside the plan ([[Ledger.writeCounts]]). They give the touched
-  * files, the pass's duplicate rows and each group's expected survivors,
-  * which the group's write is checked against. The rewrite is O(files
-  * containing victims): each ledger-checkpointed task anti-joins one bounded
-  * file group against ITS OWN victims (pre-filtered by file provenance) and
-  * writes the survivors sorted ([[LakeTable.writeSorted]]: a group within one
-  * scan split and 16 MB is one task with no Exchange), so a pass removing
-  * 0.1% of turns rewrites ~0.1% of files. The groups run through the ledger's
-  * job protocol ([[Ledger.planOrResume]], [[Ledger.runJob]]), so resume skips
-  * finished groups.
+  * job's ledger dir; ONE aggregate over it counts victims per data file.
+  * [[Ledger.deleteRows]] then rewrites only the files containing victims,
+  * each bounded group anti-joined against ITS OWN victims (pre-filtered by
+  * file provenance), so a pass removing 0.1% of turns rewrites ~0.1% of
+  * files, and a resume skips finished groups.
   *
   * Rows with empty normalized text are never deduplicated (a transcript's
   * legitimately empty turns are not "duplicates" of each other), and
@@ -97,104 +91,65 @@ object Dedupe {
       if (unit == "conversation") s"dedupe:$mode:$unit:$minTokens:cap$maxConvChars"
       else s"dedupe:$mode:$unit:$minTokens"
 
-    // ---- plan: compute + persist the victim set, count it per file ------
-    val plan = Ledger.planOrResume(table, jobId, "dedupe", planKind) {
-      val (victims, skipped) =
-        if (unit == "conversation")
-          computeConvVictims(table, mode, minTokens, minJaccard, maxIters,
-            maxConvChars)
-        else (computeVictims(table, mode, minTokens, minJaccard, maxIters), 0L)
-      // atomic publish: write to a tmp dir, rename over — a crash mid-write
-      // can never leave a torn victim set a resume would trust
-      val tmp = victimsDir + ".tmp"
-      table.io.delete(tmp)
-      victims.write.mode("overwrite").parquet(tmp)
-      victims.unpersist() // no-op for the exact mode's unpersisted frame
-      table.io.delete(victimsDir)
-      table.io.rename(tmp, victimsDir)
-
-      // Touched files = those holding at least one victim row; everything
-      // else carries forward without being read again. Counts first, plan
-      // second: a plan on disk implies its counts exist.
-      val counts = countVictims(table, victimsDir)
-      Ledger.writeCounts(table, jobId, CountsFile, counts, "skipped_convs" -> skipped)
+    Ledger.deleteRows(table, jobId, "dedupe", planKind, CountsFile,
+      targetFileRows, groupTargetBytes, interruptAfter) { rebuild =>
+      // a plan written before the counts sidecar existed has none: unlike
+      // DELETE's, these counts rebuild from the published victim set (the
+      // oversized-conversation count does not, and reads 0)
+      val skipped =
+        if (rebuild) 0L
+        else {
+          val (victims, oversized) =
+            if (unit == "conversation")
+              computeConvVictims(table, mode, minTokens, minJaccard, maxIters,
+                maxConvChars)
+            else (computeVictims(table, mode, minTokens, minJaccard, maxIters), 0L)
+          // atomic publish: write to a tmp dir, rename over — a crash
+          // mid-write can never leave a torn victim set a resume would trust
+          val tmp = victimsDir + ".tmp"
+          table.io.delete(tmp)
+          victims.write.mode("overwrite").parquet(tmp)
+          victims.unpersist() // no-op for the exact mode's unpersisted frame
+          table.io.delete(victimsDir)
+          table.io.rename(tmp, victimsDir)
+          oversized
+        }
+      // touched files = those holding at least one victim row: ONE
+      // aggregate over the published set, in one task when it fits one
+      val setBytes = table.io.list(victimsDir)
+        .flatMap(n => table.io.stat(FileIO.path(victimsDir, n))).map(_.size).sum
       val byPath = table.currentFiles.map(f => f.path -> f).toMap
-      val touched = counts.keys.toVector.sorted.map(byPath(_))
-      val groups = Clustering.greedyGroups(
-        touched.sortBy(f => (f.minConv.getOrElse(""), f.minTurn.getOrElse(0))),
-        groupTargetBytes).filter(_.nonEmpty)
-      Ledger.Plan(table.currentSnapshotId.get, groups.map(_.map(_.path)))
-    } match {
-      case Left(s) => return Result(s, 0L, 0, 0, 0, converged = true)
-      case Right(p) => p
-    }
-    require(table.io.stat(victimsDir).isDefined,
-      s"dedupe plan for $jobId exists but its victim set is missing")
-    // a plan written before the counts sidecar existed has none: unlike
-    // DELETE's, these counts rebuild from the published victim set (the
-    // oversized-conversation count does not, and reads 0)
-    if (Ledger.readJobFile(table, jobId, CountsFile).isEmpty)
-      Ledger.writeCounts(table, jobId, CountsFile, countVictims(table, victimsDir),
-        "skipped_convs" -> 0L)
-    val (counts, sidecar) = Ledger.readCounts(table, jobId, CountsFile)
-    val nVictims = counts.values.sum
-    val nTouched = plan.groups.map(_.size).sum
-
-    val (snap, tasks) = Ledger.runJob(table, jobId, "dedupe", plan,
-      parallelism = Ledger.shuffleParallelism(table), interruptAfter) { (in, gi) =>
-      val paths = in.map(_.path)
-      val inBytes = in.map(_.bytes).sum
-      val survivors = in.map(_.rows).sum - paths.map(counts.getOrElse(_, 0L)).sum
+      val perFile = table.oneTaskIfFits(readVictims(table, victimsDir), setBytes)
+        .groupBy("__src").count().collect()
+        .map(r => byPath(r.getString(0)) -> r.getLong(1)).toMap
+      Ledger.Counted(perFile, "mode" -> mode, "skipped_convs" -> skipped)
+    } { (paths, oneTask) =>
+      require(table.io.stat(victimsDir).isDefined,
+        s"dedupe plan for $jobId exists but its victim set is missing")
       // a group in one task joins in one partition: both sides coalesced,
       // and a sort-merge join (a small victim set would otherwise be
       // broadcast) plans with no Exchange. The join is a left outer one
       // keeping unmatched rows, not a left anti one, which the optimizer
       // would push below the coalesce. It adds no column: a victim's key
       // is never null, so a null one marks an unmatched row.
-      val oneTask = table.fitsOneTask(inBytes)
       def part(df: DataFrame) = if (oneTask) df.coalesce(1) else df
       // this group's victims only: provenance pre-filter keeps the join
       // proportional to the group, not the whole pass
       val groupVictims = part(readVictims(table, victimsDir)
         .where(col("__src").isin(paths: _*))
         .select("conv_id", "turn_idx")).as("v")
-      // a slab that was ENTIRELY duplicates leaves nothing to write:
-      // an empty parquet part would enter the manifest stats-less
-      // (never pruned) — same rule as the no-op merge
-      val out =
-        if (survivors == 0L) Vector.empty[DataFile]
-        else table.writeSorted(
-          part(table.readData(paths.map(table.absData))).as("t")
-            .join(if (oneTask) groupVictims.hint("merge") else groupVictims,
-              col("t.conv_id") === col("v.conv_id") &&
-                col("t.turn_idx") === col("v.turn_idx"), "left_outer")
-            .where(col("v.conv_id").isNull)
-            .select(col("t.*")),
-          s"$jobId-g$gi", inBytes, survivors, targetFileRows,
-          Seq(col("conv_id"), col("turn_idx")))
-      val written = out.map(_.rows).sum
-      require(written == survivors,
-        s"dedupe group $gi wrote $written survivors but the plan counted " +
-          s"$survivors — victim set out of step with the table? refusing to commit")
-      out
-    } { _ =>
-      Map("mode" -> mode,
-        "duplicate_rows" -> nVictims.toString,
-        "touched_files" -> nTouched.toString)
+      part(table.readData(paths.map(table.absData))).as("t")
+        .join(if (oneTask) groupVictims.hint("merge") else groupVictims,
+          col("t.conv_id") === col("v.conv_id") &&
+            col("t.turn_idx") === col("v.turn_idx"), "left_outer")
+        .where(col("v.conv_id").isNull)
+        .select(col("t.*"))
+    } match {
+      case Left(s) => Result(s, 0L, 0, 0, 0, converged = true)
+      case Right(d) =>
+        Result(d.snapshot, d.rows, d.touchedFiles, d.groups, d.resumedGroups,
+          converged = true, skippedConvs = d.sidecar.get("skipped_convs").asLong)
     }
-    Result(snap, nVictims, nTouched, plan.groups.size, tasks.count(_._2),
-      converged = true, skippedConvs = sidecar.get("skipped_convs").asLong)
-  }
-
-  /** Victims per data file: ONE aggregate over the published set, in one
-    * task with no Exchange when the set is small ([[LakeTable.fitsOneTask]]).
-    */
-  private def countVictims(table: LakeTable, victimsDir: String): Map[String, Long] = {
-    val published = readVictims(table, victimsDir)
-    val setBytes = table.io.list(victimsDir)
-      .flatMap(n => table.io.stat(FileIO.path(victimsDir, n))).map(_.size).sum
-    (if (table.fitsOneTask(setBytes)) published.coalesce(1) else published)
-      .groupBy("__src").count().collect().map(r => r.getString(0) -> r.getLong(1)).toMap
   }
 
   /** The published victim set: (conv_id, turn_idx, __src), read with its
@@ -286,16 +241,13 @@ object Dedupe {
       case "exact" =>
         val files = table.currentFiles
         val rows = table.readData(files.map(f => table.absData(f.path)))
-          .select(col("conv_id"), col("turn_idx"),
-            // provenance as a TABLE-RELATIVE path, matching manifest entries
-            concat(lit("data/"),
-              element_at(split(input_file_name(), "/"), -1)).as("__src"),
+          .select(col("conv_id"), col("turn_idx"), LakeTable.sourceFile,
             Dedup.normalizedText(col("text")).as("__tn"))
         val key = struct(col("conv_id"), col("turn_idx"))
         // a non-empty text has at least one token: the token bar only
         // filters when it is above one
         val tokens = if (minTokens > 1) size(split(col("__tn"), " ")) >= minTokens else lit(true)
-        (if (table.fitsOneTask(files.map(_.bytes).sum)) rows.coalesce(1) else rows)
+        table.oneTaskIfFits(rows, files.map(_.bytes).sum)
           .where(length(col("__tn")) > 0 && tokens)
           .withColumn("__keep", min(key).over(Window.partitionBy("__tn")))
           .where(key =!= col("__keep"))
@@ -370,9 +322,7 @@ object Dedupe {
                                            maxConvChars: Long = 8L << 20): (DataFrame, Long) = {
     val paths = table.currentFiles.map(f => table.absData(f.path))
     val rows = table.readData(paths)
-      .select(col("conv_id"), col("turn_idx"),
-        concat(lit("data/"),
-          element_at(split(input_file_name(), "/"), -1)).as("__src"),
+      .select(col("conv_id"), col("turn_idx"), LakeTable.sourceFile,
         Dedup.normalizedText(col("text")).as("__tn"))
       .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
 

@@ -3,9 +3,9 @@ package graft.maintain
 import java.util.concurrent.atomic.AtomicInteger
 
 import com.fasterxml.jackson.databind.JsonNode
-import com.fasterxml.jackson.databind.node.ObjectNode
 
 import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.functions.col
 
 import graft.lake.{DataFile, FileIO, LakeTable, MetaJson, Snapshot}
 
@@ -333,35 +333,90 @@ object Ledger {
     (snap, tasks)
   }
 
-  // ---- per-file counts sidecar --------------------------------------------
+  // ---- row delete ---------------------------------------------------------
 
-  /** Persist a planned job's per-file row counts (keyed by data file path),
-    * with the planning facts a resume reuses (`facts`: each a String or a
-    * Long), atomically beside the plan. Written BEFORE the plan, so a plan
-    * on disk implies its counts exist.
+  /** Rows to delete per data file holding any, and the facts a resume
+    * reuses (each a String or a Long). */
+  final case class Counted(perFile: Map[DataFile, Long], facts: (String, Any)*)
+
+  /** A committed row delete; `sidecar` holds the counted facts. */
+  final case class Deleted(snapshot: Snapshot, rows: Long, touchedFiles: Int,
+                           groups: Int, resumedGroups: Int, sidecar: JsonNode)
+
+  /** THE row delete of DELETE FROM and dedupe: rewrite only the data files
+    * holding counted rows. A new plan runs `count(false)` and writes the
+    * sidecar `countsFile` BEFORE the plan, so a plan on disk implies its
+    * counts; groups cut the counted files in key order at
+    * `groupTargetBytes`. A resume whose sidecar is missing runs
+    * `count(true)`, which rebuilds it from what the plan published or
+    * refuses. Each group writes `survivors(paths, oneTask)` sorted on the
+    * key ([[LakeTable.writeSorted]], `oneTask` = [[LakeTable.fitsOneTask]]
+    * of its input) and must write its rows less its counts, or nothing
+    * commits; an all-deleted group writes no file (an empty part would
+    * enter the manifest stats-less, never pruned). The summary carries the
+    * sidecar's facts, `deleted_rows` and `touched_files`. Data work is
+    * O(files holding deleted rows), but [[runJob]] reads every manifest
+    * ([[LakeTable.currentEntries]]). `Left` is [[planOrResume]]'s.
     */
-  def writeCounts(table: LakeTable, jobId: String, name: String,
-                  counts: Map[String, Long], facts: (String, Any)*): Unit = {
-    val o = MetaJson.mapper.createObjectNode()
-    facts.foreach {
-      case (k, v: Long) => o.put(k, v)
-      case (k, v) => o.put(k, String.valueOf(v))
+  def deleteRows(table: LakeTable, jobId: String, operation: String, kind: String,
+                 countsFile: String, targetFileRows: Long, groupTargetBytes: Long,
+                 interruptAfter: Int)(count: Boolean => Counted)(
+      survivors: (Vector[String], Boolean) => DataFrame): Either[Snapshot, Deleted] = {
+    def writeCounts(c: Counted): JsonNode = {
+      val o = MetaJson.mapper.createObjectNode()
+      c.facts.foreach {
+        case (k, v: Long) => o.put(k, v)
+        case (k, v) => o.put(k, String.valueOf(v))
+      }
+      val counts = o.putObject("counts")
+      c.perFile.toSeq.map { case (f, n) => f.path -> n }.sorted
+        .foreach { case (p, n) => counts.put(p, n) }
+      atomicWrite(table, jobId, countsFile, MetaJson.write(o))
+      o
     }
-    val c = o.putObject("counts")
-    counts.toSeq.sortBy(_._1).foreach { case (k, v) => c.put(k, v) }
-    atomicWrite(table, jobId, name, MetaJson.write(o))
+    val plan = planOrResume(table, jobId, operation, kind) {
+      val base = table.currentSnapshotId.get
+      val c = count(false)
+      writeCounts(c)
+      val files = c.perFile.keys.toVector
+        .sortBy(f => (f.minConv.getOrElse(""), f.minTurn.getOrElse(0), f.path))
+      Plan(base, Clustering.greedyGroups(files, groupTargetBytes).map(_.map(_.path)))
+    } match {
+      case Left(s) => return Left(s)
+      case Right(p) => p
+    }
+    val sidecar = readJobFile(table, jobId, countsFile).getOrElse(writeCounts(count(true)))
+    val counts = sidecar.get("counts").fields().asScala
+      .map(e => e.getKey -> e.getValue.asLong).toMap
+    val touched = plan.groups.map(_.size).sum
+
+    val (snap, tasks) = runJob(table, jobId, operation, plan,
+      shuffleParallelism(table), interruptAfter) { (in, gi) =>
+      val paths = in.map(_.path)
+      val inBytes = in.map(_.bytes).sum
+      val expected = in.map(_.rows).sum - paths.map(counts.getOrElse(_, 0L)).sum
+      val out =
+        if (expected == 0L) Vector.empty[DataFile]
+        else table.writeSorted(survivors(paths, table.fitsOneTask(inBytes)),
+          s"$jobId-g$gi", inBytes, expected, targetFileRows,
+          Seq(col("conv_id"), col("turn_idx")))
+      val written = out.map(_.rows).sum
+      require(written == expected,
+        s"$operation group $gi wrote $written survivors but the plan counted " +
+          s"$expected: rows to delete out of step with the table (a " +
+          "non-deterministic predicate?); refusing to commit")
+      out
+    } { tasks =>
+      sidecar.fields().asScala.filter(_.getKey != "counts")
+        .map(e => e.getKey -> e.getValue.asText).toMap ++
+        Map("deleted_rows" -> deleted(tasks).toString, "touched_files" -> touched.toString)
+    }
+    Right(Deleted(snap, deleted(tasks), touched, plan.groups.size, tasks.count(_._2), sidecar))
   }
 
-  /** A planned job's counts sidecar `name`: its per-file counts, and the
-    * whole document for its facts. A plan without one fails loudly: the
-    * counts are what its groups check their writes against.
-    */
-  def readCounts(table: LakeTable, jobId: String,
-                 name: String): (Map[String, Long], JsonNode) = {
-    val n = readJobFile(table, jobId, name).getOrElse(throw new IllegalStateException(
-      s"plan for $jobId exists but its victim counts ($name) are missing"))
-    (n.get("counts").fields().asScala.map(e => e.getKey -> e.getValue.asLong).toMap, n)
-  }
+  /** Rows a job's groups read minus those they wrote, resumed ones too. */
+  private def deleted(tasks: Vector[(TaskRow, Boolean)]): Long =
+    tasks.map { case (t, _) => t.rows - t.outFiles.map(_.rows).sum }.sum
 
   // ---- job files ----------------------------------------------------------
 

@@ -187,11 +187,9 @@ object MergeInto {
     // only a local drop can join in one partition: a larger one is never
     // one task, whatever the rewrite set weighs
     val inputBytes = if (st.local) touched.map(_.file.bytes).sum else Long.MaxValue
-    val oneTask = table.fitsOneTask(inputBytes)
-    val target0 =
+    val target = table.oneTaskIfFits(
       if (touched.isEmpty) spark.createDataFrame(List.empty[Row].asJava, evolvedSchema.toStruct)
-      else table.readData(touched.map(e => table.absData(e.file.path)))
-    val target = if (oneTask) target0.coalesce(1) else target0
+      else table.readData(touched.map(e => table.absData(e.file.path))), inputBytes)
 
     val joined = target.as("t").join(st.dedup.as("s"),
       col("t.conv_id") === col("s.conv_id") && col("t.turn_idx") === col("s.turn_idx"),

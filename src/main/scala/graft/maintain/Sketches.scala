@@ -151,9 +151,7 @@ object Sketches {
     val staging = FileIO.path(storeDir(table), s"_staging-$tag")
     val rows = table.readData(absPaths)
       .select(col("conv_id"), col("turn_idx"),
-        Dedup.normalizedText(col("text")).as("__tn"),
-        concat(lit("data/"),
-          element_at(split(input_file_name(), "/"), -1)).as("__src"))
+        Dedup.normalizedText(col("text")).as("__tn"), LakeTable.sourceFile)
       .select(col("conv_id"), col("turn_idx"),
         Dedup.minhashSignatureNative(col("__tn"), params.shingleK, params.numHashes)
           .as("minhash"),

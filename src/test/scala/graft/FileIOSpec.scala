@@ -97,6 +97,21 @@ class FileIOSpec extends AnyFunSuite {
     assert(offenders.isEmpty, offenders.mkString("direct file I/O outside FileIO:\n", "\n", ""))
   }
 
+  test("only the lake package names a row's source file (input_file_name)") {
+    val offenders = for {
+      file <- {
+        val s = Files.walk(Paths.get("src", "main", "scala"))
+        try s.iterator().asScala.toVector finally s.close()
+      }
+      if file.toString.endsWith(".scala") &&
+        !file.startsWith(Paths.get("src", "main", "scala", "graft", "lake"))
+      (line, i) <- Files.readAllLines(file).asScala.zipWithIndex
+      if line.contains("input_file_name")
+    } yield s"$file:${i + 1}: ${line.trim}"
+    assert(offenders.isEmpty,
+      offenders.mkString("input_file_name outside graft/lake (use LakeTable.sourceFile):\n", "\n", ""))
+  }
+
   test("concurrent adopters of one orphan both end in a retryable conflict") {
     val t = LakeTable.create(spark, tmpDir("adopt-race"), TranscriptSynth.schema)
     t.append(TranscriptSynth.turns(spark, 5, seed = 42L), "first")

@@ -498,6 +498,22 @@ class LakeSpec extends AnyFunSuite {
     }
   }
 
+  test("dedupe: whitespace-only turns are never victims; edge tabs and newlines are ignored") {
+    import spark.implicits._
+    val texts = Seq("\t", " \n", "copy me\n", "\tcopy me", "copy me")
+    assert(texts.toDF("text").select(graft.functions.Dedup.normalizedText(col("text")))
+      .as[String].collect().toSeq == Seq("", "", "copy me", "copy me", "copy me"))
+    val t = LakeTable.create(spark, tmpTable("dedupe-ws"), TranscriptSynth.schema)
+    t.append(texts.zipWithIndex.map { case (x, i) =>
+      (f"c$i%03d", 0, "user", x, null: String, new java.sql.Timestamp(1704067200000L + i))
+    }.toDF("conv_id", "turn_idx", "role", "text", "tool", "ts"), "init")
+    val res = Dedupe.runPass(t, "dd-ws")
+    assert(res.duplicateRows == 2)
+    val after = t.scan().df.select("conv_id").as[String].collect().toSet
+    assert(after == Set("c000", "c001", "c002"),
+      s"both whitespace-only turns and the min-key copy survive; got $after")
+  }
+
   test("dedupe unit=conversation: whole-conv dups removed, intra-conv repeats kept") {
     import spark.implicits._
     def ts(i: Int) = new java.sql.Timestamp(1704067200000L + i * 1000L)
