@@ -6,7 +6,7 @@ import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 
-import graft.functions.Sanitize
+import graft.functions.{Cached, Sanitize}
 import graft.lake.LakeTable
 import graft.maintain.{Clustering, Compaction, MergeInto}
 
@@ -82,14 +82,13 @@ object LakeFixtures {
       LakeTable.deleteRecursively(Paths.get(root))
       val t = LakeTable.create(spark, root,
         org.apache.spark.sql.types.StructType(graft.synth.TranscriptSynth.schema))
-      // persist across the range-sample + write double-read (see
+      // cached across the range-sample + write double-read (see
       // encryptedForDir)
-      val tr = transcripts(spark, sfDir)
-        .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-      try t.append(tr
-        .repartitionByRange(8, org.apache.spark.sql.functions.col("conv_id"),
-          org.apache.spark.sql.functions.col("turn_idx")), s"dload-$tag")
-      finally tr.unpersist(blocking = false)
+      Cached.withCached(transcripts(spark, sfDir)) { tr =>
+        t.append(tr
+          .repartitionByRange(8, org.apache.spark.sql.functions.col("conv_id"),
+            org.apache.spark.sql.functions.col("turn_idx")), s"dload-$tag")
+      }
       graft.maintain.Dedupe.runPass(t, s"dedupe-$tag", targetFileRows = 4000)
       val post = t.currentSnapshotId.get
       graft.maintain.DeleteFrom.run(t, s"delete-$tag",
@@ -122,14 +121,13 @@ object LakeFixtures {
       val t = LakeTable.create(spark, root,
         org.apache.spark.sql.types.StructType(graft.synth.TranscriptSynth.schema))
       // base feeds itself + the planted copies + the range sampler —
-      // persist so the events window runs once, not four times
-      val base = transcripts(spark, sfDir)
-        .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-      val copies = base.where(col("conv_id") < "u000050")
-        .withColumn("conv_id", concat(lit("z"), col("conv_id")))
-      try t.append(base.unionByName(copies)
-        .repartitionByRange(8, col("conv_id"), col("turn_idx")), s"cload-$tag")
-      finally base.unpersist(blocking = false)
+      // cached so the events window runs once, not four times
+      Cached.withCached(transcripts(spark, sfDir)) { base =>
+        val copies = base.where(col("conv_id") < "u000050")
+          .withColumn("conv_id", concat(lit("z"), col("conv_id")))
+        t.append(base.unionByName(copies)
+          .repartitionByRange(8, col("conv_id"), col("turn_idx")), s"cload-$tag")
+      }
       graft.maintain.Dedupe.runPass(t, s"dedupe-conv-$tag",
         unit = "conversation", targetFileRows = 4000)
       t
@@ -161,13 +159,11 @@ object LakeFixtures {
         encrypted = true)
       // transcripts (a window over events) is read TWICE by a
       // repartitionByRange append — the range-boundary sampling pass and
-      // the write itself; persist so the window runs once (q39 pays this
+      // the write itself; cache so the window runs once (q39 pays this
       // fixture inside its timed query)
-      val tr = transcripts(spark, sfDir)
-        .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-      try t.append(tr.repartitionByRange(8, col("conv_id"), col("turn_idx")),
-        s"eload-$tag")
-      finally tr.unpersist(blocking = false)
+      Cached.withCached(transcripts(spark, sfDir)) { tr =>
+        t.append(tr.repartitionByRange(8, col("conv_id"), col("turn_idx")), s"eload-$tag")
+      }
       t
     })
 

@@ -137,12 +137,6 @@ object Dedup {
       df.select(col(idCol), simhash64Native(col(textCol)).as("__fp")),
       idCol, "__fp", bands, maxHamming, maxBucket)
 
-  /** The banded-Hamming join half of [[simhashCandidatePairs]], over
-    * PRECOMPUTED 64-bit fingerprints — the seam for lake-persisted sketch
-    * columns ([[graft.maintain.Sketches]]), mirroring
-    * [[minhashPairsFromSignatures]]: candidate generation without
-    * re-hashing a single token.
-    */
   /** Candidate DISTINCT-fingerprint pairs (fp_a < fp_b, Hamming-filtered)
     * — the graph the lake dedupe pass propagates over WITHOUT ever
     * expanding members: a component of m exact copies costs m rows here,
@@ -169,13 +163,19 @@ object Dedup {
       .where(hamming64(col("fp_a"), col("fp_b")) <= maxHamming)
   }
 
+  /** The banded-Hamming join half of [[simhashCandidatePairs]], over
+    * PRECOMPUTED 64-bit fingerprints — the seam for lake-persisted sketch
+    * columns ([[graft.maintain.Sketches]]), mirroring
+    * [[minhashPairsFromSignatures]]: candidate generation without
+    * re-hashing a single token.
+    */
   def simhashPairsFromFingerprints(
       withFp: DataFrame, idCol: String, fpCol: String,
       bands: Int = 4, maxHamming: Int = 3,
-      maxBucket: Int = 200): DataFrame = {
-    // The fingerprint frame feeds its consumers below — persist makes the
+      maxBucket: Int = 200): DataFrame =
+    // The fingerprint frame feeds its consumers below — caching makes the
     // reuse explicit instead of relying on ReuseExchange surviving AQE
-    // replanning; released by materializeAndRelease before returning.
+    // replanning; released once the result is materialized.
     // Fingerprints come from the NATIVE kernel (one codegen'd pass in the
     // projection, no explode/shuffle — bit-identical to simhashDf, which
     // q16's oracle cross-checks against it corpus-wide).
@@ -186,37 +186,33 @@ object Dedup {
     // 8 parallel stages x the whole kernel scan at sf0.1) because no
     // stage waits for another to fill the cache. One count() up front
     // makes every consumer a cache read.
-    val fp = withFp.select(col(idCol).as("id"), col(fpCol).as("simhash"))
-      .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-    fp.count()
+    Cached.withCached(withFp.select(col(idCol).as("id"), col(fpCol).as("simhash"))) { fp =>
+      fp.count()
 
-    // One row per DISTINCT fingerprint; members expand at the end.
-    val fpPairs = simhashFpPairs(fp.select("simhash").distinct(), "simhash",
-      bands, maxHamming, maxBucket)
+      // One row per DISTINCT fingerprint; members expand at the end.
+      val fpPairs = simhashFpPairs(fp.select("simhash").distinct(), "simhash",
+        bands, maxHamming, maxBucket)
 
-    // Expansion back to doc pairs: cross-group (different fingerprints)...
-    val cross = fpPairs
-      .join(fp.select(col("id").as("ia"), col("simhash").as("fp_a")), Seq("fp_a"))
-      .join(fp.select(col("id").as("ib"), col("simhash").as("fp_b")), Seq("fp_b"))
-      .select(least(col("ia"), col("ib")).as("id_a"),
-        greatest(col("ia"), col("ib")).as("id_b"),
-        hamming64(col("fp_a"), col("fp_b")).as("hamming"))
-    // ...plus within-group (identical fingerprint, Hamming 0) pairs.
-    val within = fp.as("x").join(fp.as("y"),
-        col("x.simhash") === col("y.simhash") && col("x.id") < col("y.id"))
-      .select(col("x.id").as("id_a"), col("y.id").as("id_b"), lit(0L).as("hamming"))
-    materializeAndRelease(cross.unionByName(within), fp)
-  }
+      // Expansion back to doc pairs: cross-group (different fingerprints)...
+      val cross = fpPairs
+        .join(fp.select(col("id").as("ia"), col("simhash").as("fp_a")), Seq("fp_a"))
+        .join(fp.select(col("id").as("ib"), col("simhash").as("fp_b")), Seq("fp_b"))
+        .select(least(col("ia"), col("ib")).as("id_a"),
+          greatest(col("ia"), col("ib")).as("id_b"),
+          hamming64(col("fp_a"), col("fp_b")).as("hamming"))
+      // ...plus within-group (identical fingerprint, Hamming 0) pairs.
+      val within = fp.as("x").join(fp.as("y"),
+          col("x.simhash") === col("y.simhash") && col("x.id") < col("y.id"))
+        .select(col("x.id").as("id_a"), col("y.id").as("id_b"), lit(0L).as("hamming"))
+      materializeAndRelease(cross.unionByName(within))
+    }
 
   /** Materialize the (cap-bounded, ~linear-size) candidate-pair result into
-    * its own cache and RELEASE the corpus-scale sketch frame deterministically
-    * — relying on the ContextCleaner means the full fingerprint/signature
-    * cache (the largest block a dedup pass creates) stays resident in
-    * executor storage until the driver happens to GC the plan objects, which
-    * across a long session of repeated calls accumulates into spill pressure.
-    * The extra action costs nothing net: callers' first action would compute
-    * the same joins; later actions now hit the pair cache instead of
-    * re-running them.
+    * its own cache, so the corpus-scale sketch frame it was computed from
+    * ([[Cached.withCached]] in the caller) can be released as soon as this
+    * returns. The extra action costs nothing net: callers' first action
+    * would compute the same joins; later actions now hit the pair cache
+    * instead of re-running them.
     *
     * CALLER CONTRACT: the RETURNED frame is the one remaining cached handle
     * (orders of magnitude smaller than the released sketch frames, but not
@@ -225,10 +221,9 @@ object Dedup {
     * the releasable thing is the small output, never the corpus-scale
     * intermediate.
     */
-  private[functions] def materializeAndRelease(result: DataFrame, intermediates: DataFrame*): DataFrame = {
+  private[functions] def materializeAndRelease(result: DataFrame): DataFrame = {
     val out = result.persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
     out.count()
-    intermediates.foreach(_.unpersist())
     out
   }
 
@@ -316,7 +311,6 @@ object Dedup {
     */
   def dedupGroupsResult(ids: DataFrame, idCol: String, pairs: DataFrame,
                         maxIters: Int = 50): GroupsResult = {
-    import org.apache.spark.storage.StorageLevel
     // a cap of zero rounds allows no propagation at all: identity labels,
     // and no evidence of convergence
     if (maxIters < 1)
@@ -328,74 +322,74 @@ object Dedup {
     // first materializing job — for banding/ANN candidate generators that
     // is a second full corpus pass (guide §1.2: don't compute things
     // twice). Row set identical to the union formulation.
-    val edges = pairs
+    val pairEdges = pairs
       .select(explode(array(
         struct(col("id_a").as("src"), col("id_b").as("dst")),
         struct(col("id_b").as("src"), col("id_a").as("dst")))).as("e"))
       .select(col("e.src").as("src"), col("e.dst").as("dst"))
       .distinct()
-      .persist(StorageLevel.MEMORY_AND_DISK)
-    // Bridge.detach, NOT persist/localCheckpoint: each round's plan
-    // references the previous round's frame THREE times (neighbor join,
-    // label join, pointer-jump join), so (a) without lineage TRUNCATION the
-    // logical plan grows 3x per round — the driver OOMs just STRINGIFYING
-    // the tree for the SQL listener by round ~20 (persist caches blocks but
-    // leaves lineage intact) — and (b) localCheckpoint truncates the plan
-    // but CARRIES the computed statistics into the new leaf, and join-stat
-    // estimation MULTIPLIES child sizes, so the carried BigInt's digit
-    // count triples per round and by round ~25 the driver burns minutes in
-    // big-number arithmetic per size estimate. detach() cuts both: fresh
-    // leaf, constant stats, explicit block release one round later.
-    import org.apache.spark.sql.graftx.Bridge
-    // ROUND 1 SPECIALIZED (guide §2.4 — remove shuffles outright): with
-    // identity labels, the neighbor-label join degenerates to
-    // min(src) per dst over the edges alone, and the pointer-jump join is
-    // the identity (grp(g1) = g1), so round 1 is ONE aggregation + ONE
-    // left join instead of three joins — same labels, same changed-count.
-    val nbr0 = edges.groupBy(col("dst").as("id")).agg(min("src").as("nbr_grp"))
-    val grp1 = least(col("id"), coalesce(col("nbr_grp"), col("id")))
-    var (labels, releaseLabels) = Bridge.detach(
-      ids.select(col(idCol).as("id"))
-        .join(nbr0, Seq("id"), "left_outer")
-        .select(col("id"), grp1.as("grp"), (grp1 =!= col("id")).as("__chg")))
-    var converged = false
-    var i = 1
-    val changed0 = labels.agg(count(when(col("__chg"), lit(1)))).head().getLong(0)
-    labels = labels.drop("__chg")
-    converged = changed0 == 0
-    while (i < maxIters && !converged) {
-      // neighbor labels: for each edge dst, the src's current label
-      val nbr = edges.join(labels.select(col("id").as("src"), col("grp")), "src")
-        .groupBy(col("dst").as("id")).agg(min("grp").as("nbr_grp"))
-      val g1 = least(col("grp"), coalesce(col("nbr_grp"), col("grp")))
-      val cand = labels.join(nbr, Seq("id"), "left_outer")
-        .select(col("id"), col("grp"), g1.as("__g1"))
-      // POINTER JUMP: additionally adopt the label OF the label node —
-      // labels only shrink and grp(u) <= u, so this halves every chain's
-      // remaining distance per round: O(log diameter) rounds instead of
-      // O(diameter). Plain hop-propagation hit the round cap on corpus-
-      // scale near-dup graphs whose banding chains grow with corpus size.
-      val newGrp = least(col("__g1"), coalesce(col("__g2"), col("__g1")))
-      val (next, releaseNext) = Bridge.detach(cand
-        .join(labels.select(col("id").as("__g1"), col("grp").as("__g2")),
-          Seq("__g1"), "left_outer")
-        .select(col("id"), newGrp.as("__grp_next"),
-          (newGrp =!= col("grp")).as("__chg"))
-        .withColumnRenamed("__grp_next", "grp"))
-      // one job materializes the round's cache and counts the changes;
-      // only then is the previous round's cache released
-      val changed = next.agg(count(when(col("__chg"), lit(1)))).head().getLong(0)
+    Cached.withCached(pairEdges) { edges =>
+      // Bridge.detach, NOT persist/localCheckpoint: each round's plan
+      // references the previous round's frame THREE times (neighbor join,
+      // label join, pointer-jump join), so (a) without lineage TRUNCATION the
+      // logical plan grows 3x per round — the driver OOMs just STRINGIFYING
+      // the tree for the SQL listener by round ~20 (persist caches blocks but
+      // leaves lineage intact) — and (b) localCheckpoint truncates the plan
+      // but CARRIES the computed statistics into the new leaf, and join-stat
+      // estimation MULTIPLIES child sizes, so the carried BigInt's digit
+      // count triples per round and by round ~25 the driver burns minutes in
+      // big-number arithmetic per size estimate. detach() cuts both: fresh
+      // leaf, constant stats, explicit block release one round later.
+      import org.apache.spark.sql.graftx.Bridge
+      // ROUND 1 SPECIALIZED (guide §2.4 — remove shuffles outright): with
+      // identity labels, the neighbor-label join degenerates to
+      // min(src) per dst over the edges alone, and the pointer-jump join is
+      // the identity (grp(g1) = g1), so round 1 is ONE aggregation + ONE
+      // left join instead of three joins — same labels, same changed-count.
+      val nbr0 = edges.groupBy(col("dst").as("id")).agg(min("src").as("nbr_grp"))
+      val grp1 = least(col("id"), coalesce(col("nbr_grp"), col("id")))
+      var (labels, releaseLabels) = Bridge.detach(
+        ids.select(col(idCol).as("id"))
+          .join(nbr0, Seq("id"), "left_outer")
+          .select(col("id"), grp1.as("grp"), (grp1 =!= col("id")).as("__chg")))
+      var converged = false
+      var i = 1
+      val changed0 = labels.agg(count(when(col("__chg"), lit(1)))).head().getLong(0)
+      labels = labels.drop("__chg")
+      converged = changed0 == 0
+      while (i < maxIters && !converged) {
+        // neighbor labels: for each edge dst, the src's current label
+        val nbr = edges.join(labels.select(col("id").as("src"), col("grp")), "src")
+          .groupBy(col("dst").as("id")).agg(min("grp").as("nbr_grp"))
+        val g1 = least(col("grp"), coalesce(col("nbr_grp"), col("grp")))
+        val cand = labels.join(nbr, Seq("id"), "left_outer")
+          .select(col("id"), col("grp"), g1.as("__g1"))
+        // POINTER JUMP: additionally adopt the label OF the label node —
+        // labels only shrink and grp(u) <= u, so this halves every chain's
+        // remaining distance per round: O(log diameter) rounds instead of
+        // O(diameter). Plain hop-propagation hit the round cap on corpus-
+        // scale near-dup graphs whose banding chains grow with corpus size.
+        val newGrp = least(col("__g1"), coalesce(col("__g2"), col("__g1")))
+        val (next, releaseNext) = Bridge.detach(cand
+          .join(labels.select(col("id").as("__g1"), col("grp").as("__g2")),
+            Seq("__g1"), "left_outer")
+          .select(col("id"), newGrp.as("__grp_next"),
+            (newGrp =!= col("grp")).as("__chg"))
+          .withColumnRenamed("__grp_next", "grp"))
+        // one job materializes the round's cache and counts the changes;
+        // only then is the previous round's cache released
+        val changed = next.agg(count(when(col("__chg"), lit(1)))).head().getLong(0)
+        releaseLabels()
+        labels = next
+        releaseLabels = releaseNext
+        converged = changed == 0
+        i += 1
+      }
+      val out = materializeAndRelease(
+        labels.select(col("id").as(idCol), col("grp").as("group_id")))
       releaseLabels()
-      labels = next
-      releaseLabels = releaseNext
-      converged = changed == 0
-      i += 1
+      GroupsResult(out, converged, i)
     }
-    edges.unpersist()
-    val out = materializeAndRelease(
-      labels.select(col("id").as(idCol), col("grp").as("group_id")))
-    releaseLabels()
-    GroupsResult(out, converged, i)
   }
 
   /** [[dedupGroupsResult]] returning just the labeling; an unconverged run
@@ -448,13 +442,6 @@ object Dedup {
         minhashSignatureNative(col(textCol), shingleK, numHashes).as("__sig")),
       idCol, "__sig", numHashes, bands, maxBucket)
 
-  /** The banding/join half of [[minhashCandidatePairs]], over PRECOMPUTED
-    * signatures — the seam that lets lake-persisted per-file sketch columns
-    * ([[graft.maintain.Sketches]]) feed candidate generation without
-    * recomputing a single signature: at corpus scale the sketch build is
-    * the dominant cost of a dedup pass, and it only needs to happen once
-    * per immutable data file, not once per pass.
-    */
   /** Candidate DISTINCT-signature pairs (sig_a < sig_b in array order, with
     * shared-band counts) — the member-free graph for the lake dedupe pass,
     * mirroring [[simhashFpPairs]]. `sigs` must hold distinct signatures.
@@ -485,37 +472,43 @@ object Dedup {
     aggregate(zip_with(a, b, (x, y) => when(x === y, 1).otherwise(0)),
       lit(0), (acc, v) => acc + v)
 
+  /** The banding/join half of [[minhashCandidatePairs]], over PRECOMPUTED
+    * signatures — the seam that lets lake-persisted per-file sketch columns
+    * ([[graft.maintain.Sketches]]) feed candidate generation without
+    * recomputing a single signature: at corpus scale the sketch build is
+    * the dominant cost of a dedup pass, and it only needs to happen once
+    * per immutable data file, not once per pass.
+    */
   def minhashPairsFromSignatures(
       withSig: DataFrame, idCol: String, sigCol: String,
       numHashes: Int = 32, bands: Int = 8,
-      maxBucket: Int = 200): DataFrame = {
-    // persist: the signature frame feeds five consumers below — see
+      maxBucket: Int = 200): DataFrame =
+    // cached: the signature frame feeds five consumers below — see
     // simhashCandidatePairs. Signatures come from the NATIVE kernel (one
     // codegen'd pass per row, no shingle explode, no groupBy stage —
     // bit-identical to the explode->min shape, pinned by DedupSpec).
     // Materialized EAGERLY before the join tree: AQE runs the consumer
     // exchanges' stages concurrently, and against a lazy persist each one
     // recomputes the whole signature pass (see simhashPairsFromFingerprints).
-    val sig = withSig.select(col(idCol).as("id"), col(sigCol).as("sig"))
-      .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-    sig.count()
+    Cached.withCached(withSig.select(col(idCol).as("id"), col(sigCol).as("sig"))) { sig =>
+      sig.count()
 
-    val sigPairs = minhashSigPairs(sig.select("sig").distinct(), "sig",
-      numHashes, bands, maxBucket)
+      val sigPairs = minhashSigPairs(sig.select("sig").distinct(), "sig",
+        numHashes, bands, maxBucket)
 
-    // expand back to doc pairs: cross-group plus within-group (exact dups,
-    // which by construction share every band); the member joins are plain
-    // equi-joins — a hot signature (many exact copies) is AQE-skew-splittable
-    // and its quadratic within-group pairs are genuine output, not overhead
-    val cross = sigPairs
-      .join(sig.select(col("id").as("ia"), col("sig").as("sig_a")), Seq("sig_a"))
-      .join(sig.select(col("id").as("ib"), col("sig").as("sig_b")), Seq("sig_b"))
-      .select(least(col("ia"), col("ib")).as("id_a"),
-        greatest(col("ia"), col("ib")).as("id_b"), col("n_shared_bands"))
-    val within = sig.as("x").join(sig.as("y"),
-        col("x.sig") === col("y.sig") && col("x.id") < col("y.id"))
-      .select(col("x.id").as("id_a"), col("y.id").as("id_b"),
-        lit(bands.toLong).as("n_shared_bands"))
-    materializeAndRelease(cross.unionByName(within), sig)
-  }
+      // expand back to doc pairs: cross-group plus within-group (exact dups,
+      // which by construction share every band); the member joins are plain
+      // equi-joins — a hot signature (many exact copies) is AQE-skew-splittable
+      // and its quadratic within-group pairs are genuine output, not overhead
+      val cross = sigPairs
+        .join(sig.select(col("id").as("ia"), col("sig").as("sig_a")), Seq("sig_a"))
+        .join(sig.select(col("id").as("ib"), col("sig").as("sig_b")), Seq("sig_b"))
+        .select(least(col("ia"), col("ib")).as("id_a"),
+          greatest(col("ia"), col("ib")).as("id_b"), col("n_shared_bands"))
+      val within = sig.as("x").join(sig.as("y"),
+          col("x.sig") === col("y.sig") && col("x.id") < col("y.id"))
+        .select(col("x.id").as("id_a"), col("y.id").as("id_b"),
+          lit(bands.toLong).as("n_shared_bands"))
+      materializeAndRelease(cross.unionByName(within))
+    }
 }

@@ -53,7 +53,9 @@ object SketchKernels {
     * whitespace and the trailing empty token limit -1 keeps. Tokens are
     * ZERO-COPY slices of the input buffer — no UTF-16 decode, no Pattern
     * machinery, no per-token re-encode; the regex pass dominated every
-    * corpus sketch build. Invalid UTF-8 falls back to the legacy regex
+    * corpus sketch build. A slice points into the row's buffer, which
+    * Spark reuses for the next row: hash the tokens, never keep one past
+    * the row. Invalid UTF-8 falls back to the legacy regex
     * split, whose String round-trip substitutes replacement chars — the
     * fast path must not (and does not) second-guess that behavior.
     */

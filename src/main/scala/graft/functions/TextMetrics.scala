@@ -65,16 +65,6 @@ object TextMetrics {
     )
   }
 
-  /** Low-quality document predicate: too short, token-free, or extreme
-    * punctuation density (all-integer thresholds for oracle parity).
-    */
-  def isLowQuality(text: Column): Column = {
-    val m = qualityMetrics(text)
-    (m("n_tokens") < 5) ||
-      (m("n_punct") * 5 > m("n_chars")) ||
-      (m("avg_tok_len_x100") > 2000)
-  }
-
   /** Positional polynomial fingerprint of a document: sum over characters of
     * ascii(char_i) * ((i mod 31)+1). Order-sensitive (unlike a bag-of-chars
     * sum), exact 64-bit integer arithmetic, reproducible in ANSI SQL for the

@@ -126,9 +126,10 @@ final class IvfCentroids(val cells: Array[Int],
 
   /** Top-`nProbe` cell ids for one vector, ordered EXACTLY as the Window
     * shape it replaces — row_number() OVER (ORDER BY ccos DESC, cell ASC)
-    * with desc's default NULLS LAST, NaN above every number, -0.0 < 0.0
-    * (java.lang.Double.compare, the same total order Spark's double
-    * ordering uses). Element 0 is therefore also exactly
+    * with desc's default NULLS LAST, NaN above every number and
+    * -0.0 == 0.0 (Spark's double ordering: java.lang.Double.compare for
+    * unequal values, so a ±0.0 tie falls through to the cell order).
+    * Element 0 is therefore also exactly
     * max_by(cell, struct(ccos, -cell)) — the inverted-list assignment:
     * both orderings put the max-ccos cell (ties: smallest cell; all-null:
     * smallest cell) first for every null/NaN pattern.
@@ -168,12 +169,12 @@ final class IvfCentroids(val cells: Array[Int],
         if (d == null) isNull = true else cos = d.doubleValue() / (nv * ncv.doubleValue())
       }
       val cell = cells(ci)
-      // ranks-before: non-null before null; desc by cos (Double.compare —
-      // NaN largest); ties by smaller cell. Insertion keeps sel sorted.
+      // ranks-before: non-null before null; desc by cos (NaN largest,
+      // -0.0 == 0.0); ties by smaller cell. Insertion keeps sel sorted.
       def before(aCell: Int, aCos: Double, aNull: Boolean, j: Int): Boolean = {
         if (aNull != selNull(j)) !aNull
         else if (!aNull) {
-          val c = java.lang.Double.compare(selCos(j), aCos)
+          val c = if (selCos(j) == aCos) 0 else java.lang.Double.compare(selCos(j), aCos)
           if (c != 0) c < 0 else aCell < selCell(j)
         } else aCell < selCell(j)
       }

@@ -88,19 +88,6 @@ object VectorOps {
     bits.reduce((a, b) => a.bitwiseOR(b))
   }
 
-  /** Approximate top-k: join only within the LSH bucket (same sign pattern).
-    * Recall < 1.0 by construction; scale path for ANN over 100 TB — the
-    * cartesian becomes bucket-local (expected bucket size n / 2^planes).
-    * A DEGENERATE bucket (e.g. the all-zeros sign pattern collecting a
-    * constant-sign slice of the corpus) would go quadratic: buckets over
-    * `maxBucket` members are DOWN-SAMPLED to ~maxBucket deterministically
-    * (keep iff xxhash64(id) = 0 mod ceil(n/maxBucket)), bounding any
-    * bucket's join to ~maxBucket^2. SKEW-SAFE by construction: bucket sizes
-    * come from groupBy (map-side partial aggregation) and the heavy-bucket
-    * set — at most |rows|/maxBucket entries — broadcasts; a
-    * row_number-over-Window cap would first collect the degenerate bucket's
-    * every member on one task, the exact stall the cap exists to prevent.
-    */
   /** Deterministically down-sample rows of keys held by more than `maxN`
     * rows to ~maxN (keep iff xxhash64(id) = 0 mod ceil(n/maxN)) — the
     * degenerate-key cap shared by the LSH and IVF candidate paths. Sizes
@@ -120,39 +107,52 @@ object VectorOps {
       .drop("__n")
   }
 
+  /** Approximate top-k: join only within the LSH bucket (same sign pattern).
+    * Recall < 1.0 by construction; scale path for ANN over 100 TB — the
+    * cartesian becomes bucket-local (expected bucket size n / 2^planes).
+    * A DEGENERATE bucket (e.g. the all-zeros sign pattern collecting a
+    * constant-sign slice of the corpus) would go quadratic: buckets over
+    * `maxBucket` members are DOWN-SAMPLED to ~maxBucket deterministically
+    * (keep iff xxhash64(id) = 0 mod ceil(n/maxBucket)), bounding any
+    * bucket's join to ~maxBucket^2. SKEW-SAFE by construction: bucket sizes
+    * come from groupBy (map-side partial aggregation) and the heavy-bucket
+    * set — at most |rows|/maxBucket entries — broadcasts; a
+    * row_number-over-Window cap would first collect the degenerate bucket's
+    * every member on one task, the exact stall the cap exists to prevent.
+    */
   def lshBucketTopK(
       df: DataFrame, idCol: String, vecCol: String,
       k: Int, nPlanes: Int = 8, maxBucket: Int = 10000): DataFrame = {
     import org.apache.spark.sql.expressions.Window
-    // persisted + materialized eagerly: the frame feeds BOTH join sides and
+    // cached + materialized eagerly: the frame feeds BOTH join sides and
     // the down-sampler's bucket-size aggregation — lazily each of the three
     // would recompute the scan + bucket kernel (and AQE materializes their
     // exchanges concurrently, so no one fills the cache for the others).
-    // Released by materializeAndRelease once the (cap-bounded) result is
-    // computed, same contract as the minhash/simhash/IVF paths.
+    // Released once the (cap-bounded) result is materialized, same
+    // contract as the minhash/simhash/IVF paths.
     // norms ride along from the single bucketing pass: scoring a pair then
     // costs ONE dot product instead of three (cosine() re-derives both
     // norms per pair). The zero guard stays on the norm PRODUCT — exactly
     // cosine()'s `when(norm(a)*norm(b) === 0, 0)` semantics, underflow
     // included — so the scores are bit-identical.
-    val bucketed = df.select(col(idCol).as("id"), col(vecCol).as("v"),
+    Cached.withCached(df.select(col(idCol).as("id"), col(vecCol).as("v"),
         norm(col(vecCol)).as("nv"),
-        lshBucket(col(vecCol), nPlanes).as("bucket"))
-      .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-    bucketed.count()
-    val withB = downsampleHeavyKeys(bucketed, "bucket", "id", maxBucket)
-    val a = withB.select(col("id").as("query_id"), col("v").as("qv"),
-      col("nv").as("qn"), col("bucket"))
-    val b = withB.select(col("id").as("cand_id"), col("v").as("cv"),
-      col("nv").as("cn"), col("bucket"))
-    val d = col("qn") * col("cn")
-    val scored = a.join(b, Seq("bucket"))
-      .where(col("query_id") =!= col("cand_id"))
-      .select(col("query_id"), col("cand_id"),
-        when(d === 0.0, lit(0.0)).otherwise(dot(col("qv"), col("cv")) / d).as("cos"))
-    val w = Window.partitionBy("query_id").orderBy(col("cos").desc, col("cand_id").asc)
-    val out = scored.withColumn("rank", row_number().over(w)).where(col("rank") <= k)
-    Dedup.materializeAndRelease(out, bucketed)
+        lshBucket(col(vecCol), nPlanes).as("bucket"))) { bucketed =>
+      bucketed.count()
+      val withB = downsampleHeavyKeys(bucketed, "bucket", "id", maxBucket)
+      val a = withB.select(col("id").as("query_id"), col("v").as("qv"),
+        col("nv").as("qn"), col("bucket"))
+      val b = withB.select(col("id").as("cand_id"), col("v").as("cv"),
+        col("nv").as("cn"), col("bucket"))
+      val d = col("qn") * col("cn")
+      val scored = a.join(b, Seq("bucket"))
+        .where(col("query_id") =!= col("cand_id"))
+        .select(col("query_id"), col("cand_id"),
+          when(d === 0.0, lit(0.0)).otherwise(dot(col("qv"), col("cv")) / d).as("cos"))
+      val w = Window.partitionBy("query_id").orderBy(col("cos").desc, col("cand_id").asc)
+      val out = scored.withColumn("rank", row_number().over(w)).where(col("rank") <= k)
+      Dedup.materializeAndRelease(out)
+    }
   }
 
   /** IVF (inverted-file) approximate top-k — the second scale path next to
@@ -189,93 +189,93 @@ object VectorOps {
     import org.apache.spark.sql.graftx.{Bridge, IvfProbesF32}
     // norms computed ONCE per row — the final pair scoring then costs one
     // dot product per (query, candidate) instead of re-deriving both norms
-    val base = df.select(col(idCol).as("id"), col(vecCol).as("v"),
-        norm(col(vecCol)).as("nv"))
-      .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-    def pairCos: Column =
-      when(col("nv") === 0.0 || col("ncv") === 0.0, lit(0.0))
-        .otherwise(dot(col("v"), col("cv")) / (col("nv") * col("ncv")))
+    Cached.withCached(df.select(col(idCol).as("id"), col(vecCol).as("v"),
+        norm(col(vecCol)).as("nv"))) { base =>
+      def pairCos: Column =
+        when(col("nv") === 0.0 || col("ncv") === 0.0, lit(0.0))
+          .otherwise(dot(col("v"), col("cv")) / (col("nv") * col("ncv")))
 
-    // deterministic seed centroids: the nLists vectors of smallest
-    // xxhash64(id) — RNG-free sampling. The collect is bounded by the
-    // nLists CONSTANT (<= 64 in every caller), never by data size, and the
-    // collected table becomes the kernel's reference object: scoring a row
-    // against every centroid is ONE codegen'd pass inside the projection
-    // ([[org.apache.spark.sql.graftx.IvfProbesF32]]) — the old
-    // corpus x nLists crossJoin, the groupBy(id) argmax shuffle (which
-    // carried every vector nLists times) and the per-id probe Window all
-    // collapse into per-row expressions with ZERO exchanges (guide §2.4,
-    // §8: decide with small rows — here, decide per row against a
-    // driver-broadcast constant).
-    def toVec(a: Any): Array[java.lang.Double] = a match {
-      case null => null
-      case s: scala.collection.Seq[_] =>
-        s.map {
-          case null => null
-          case x: java.lang.Number => java.lang.Double.valueOf(x.doubleValue())
-        }.toArray
-    }
-    val seedRows = base.select(col("v").as("cv"), xxhash64(col("id")).as("__h"))
-      .orderBy("__h").limit(nLists)
-      .collect()
-    var cents = new IvfCentroids(
-      Array.tabulate(seedRows.length)(_ + 1), seedRows.map(r => toVec(r.get(0))))
-
-    def probesCol(c: IvfCentroids, n: Int): Column =
-      Bridge.toColumn(IvfProbesF32(Bridge.toExpression(col("v")), c, n))
-    // inverted-list assignment == first probe (the orderings agree on
-    // element 0 for every tie/null/NaN pattern — see IvfCentroids.probes)
-    def assignCol(c: IvfCentroids): Column = get(probesCol(c, 1), lit(0))
-
-    // Lloyd refinement: assign every vector to its nearest cell (per-row
-    // kernel, no shuffle), then move each cell to the mean of its members,
-    // per-dimension (posexplode -> avg -> re-assemble ordered by dimension
-    // index); cells that lose every member simply disappear. The <= nLists
-    // refined rows are re-collected into the next kernel table.
-    for (_ <- 1 to refineIters) {
-      // one shuffle: per-(cell, dimension) means; the re-assembly into
-      // centroid vectors happens DRIVER-side on <= nLists x dim rows
-      // (bounded by the nLists constant and the embedding dimension, never
-      // by data size) — the old second groupBy(cell) +
-      // collect_list/array_sort exchange produced exactly these rows first
-      val refined = base
-        .select(assignCol(cents).as("cell"), col("v"))
-        .select(col("cell"), posexplode(col("v")).as(Seq("i", "x")))
-        .groupBy("cell", "i").agg(avg("x").as("m"))
-        .collect()
-      val byCell = refined.groupBy(_.getInt(0)).toArray.map { case (cell, rows) =>
-        // means sorted by dimension index; cast to float like the Column
-        // shape's cast(FloatType) (same double -> float rounding)
-        val vec = rows.sortBy(_.getInt(1)).map { r =>
-          if (r.isNullAt(2)) null
-          else java.lang.Double.valueOf(r.getDouble(2).toFloat.toDouble)
-        }
-        (cell, vec)
+      // deterministic seed centroids: the nLists vectors of smallest
+      // xxhash64(id) — RNG-free sampling. The collect is bounded by the
+      // nLists CONSTANT (<= 64 in every caller), never by data size, and the
+      // collected table becomes the kernel's reference object: scoring a row
+      // against every centroid is ONE codegen'd pass inside the projection
+      // ([[org.apache.spark.sql.graftx.IvfProbesF32]]) — the old
+      // corpus x nLists crossJoin, the groupBy(id) argmax shuffle (which
+      // carried every vector nLists times) and the per-id probe Window all
+      // collapse into per-row expressions with ZERO exchanges (guide §2.4,
+      // §8: decide with small rows — here, decide per row against a
+      // driver-broadcast constant).
+      def toVec(a: Any): Array[java.lang.Double] = a match {
+        case null => null
+        case s: scala.collection.Seq[_] =>
+          s.map {
+            case null => null
+            case x: java.lang.Number => java.lang.Double.valueOf(x.doubleValue())
+          }.toArray
       }
-      cents = new IvfCentroids(byCell.map(_._1), byCell.map(_._2))
+      val seedRows = base.select(col("v").as("cv"), xxhash64(col("id")).as("__h"))
+        .orderBy("__h").limit(nLists)
+        .collect()
+      var cents = new IvfCentroids(
+        Array.tabulate(seedRows.length)(_ + 1), seedRows.map(r => toVec(r.get(0))))
+
+      def probesCol(c: IvfCentroids, n: Int): Column =
+        Bridge.toColumn(IvfProbesF32(Bridge.toExpression(col("v")), c, n))
+      // inverted-list assignment == first probe (the orderings agree on
+      // element 0 for every tie/null/NaN pattern — see IvfCentroids.probes)
+      def assignCol(c: IvfCentroids): Column = get(probesCol(c, 1), lit(0))
+
+      // Lloyd refinement: assign every vector to its nearest cell (per-row
+      // kernel, no shuffle), then move each cell to the mean of its members,
+      // per-dimension (posexplode -> avg -> re-assemble ordered by dimension
+      // index); cells that lose every member simply disappear. The <= nLists
+      // refined rows are re-collected into the next kernel table.
+      for (_ <- 1 to refineIters) {
+        // one shuffle: per-(cell, dimension) means; the re-assembly into
+        // centroid vectors happens DRIVER-side on <= nLists x dim rows
+        // (bounded by the nLists constant and the embedding dimension, never
+        // by data size) — the old second groupBy(cell) +
+        // collect_list/array_sort exchange produced exactly these rows first
+        val refined = base
+          .select(assignCol(cents).as("cell"), col("v"))
+          .select(col("cell"), posexplode(col("v")).as(Seq("i", "x")))
+          .groupBy("cell", "i").agg(avg("x").as("m"))
+          .collect()
+        val byCell = refined.groupBy(_.getInt(0)).toArray.map { case (cell, rows) =>
+          // means sorted by dimension index; cast to float like the Column
+          // shape's cast(FloatType) (same double -> float rounding)
+          val vec = rows.sortBy(_.getInt(1)).map { r =>
+            if (r.isNullAt(2)) null
+            else java.lang.Double.valueOf(r.getDouble(2).toFloat.toDouble)
+          }
+          (cell, vec)
+        }
+        cents = new IvfCentroids(byCell.map(_._1), byCell.map(_._2))
+      }
+
+      // inverted lists, degenerate cells down-sampled to ~maxList (list-side
+      // only: every query keeps its answer, the join stays queries x maxList)
+      val lists = downsampleHeavyKeys(
+          base.select(assignCol(cents).as("cell"), col("id"), col("v"), col("nv")),
+          "cell", "id", maxList)
+        .select(col("cell"), col("id").as("cand_id"), col("v").as("cv"),
+          col("nv").as("ncv"))
+
+      // probe: every row queries its nProbe nearest cells — per-row kernel
+      // output exploded, no Window, no scored intermediate
+      val probed = base.select(col("id").as("query_id"), col("v"), col("nv"),
+        explode(probesCol(cents, nProbe)).as("cell"))
+
+      // no dedup needed: a candidate lives in exactly ONE cell (argmax
+      // assignment), so a (query, cand) pair arises through at most one of
+      // the query's probed cells
+      val pairs = probed.join(lists, Seq("cell"))
+        .where(col("query_id") =!= col("cand_id"))
+        .select(col("query_id"), col("cand_id").as("cand_id"), pairCos.as("cos"))
+      val w = Window.partitionBy("query_id").orderBy(col("cos").desc, col("cand_id").asc)
+      val out = pairs.withColumn("rank", row_number().over(w)).where(col("rank") <= k)
+      Dedup.materializeAndRelease(out)
     }
-
-    // inverted lists, degenerate cells down-sampled to ~maxList (list-side
-    // only: every query keeps its answer, the join stays queries x maxList)
-    val lists = downsampleHeavyKeys(
-        base.select(assignCol(cents).as("cell"), col("id"), col("v"), col("nv")),
-        "cell", "id", maxList)
-      .select(col("cell"), col("id").as("cand_id"), col("v").as("cv"),
-        col("nv").as("ncv"))
-
-    // probe: every row queries its nProbe nearest cells — per-row kernel
-    // output exploded, no Window, no scored intermediate
-    val probed = base.select(col("id").as("query_id"), col("v"), col("nv"),
-      explode(probesCol(cents, nProbe)).as("cell"))
-
-    // no dedup needed: a candidate lives in exactly ONE cell (argmax
-    // assignment), so a (query, cand) pair arises through at most one of
-    // the query's probed cells
-    val pairs = probed.join(lists, Seq("cell"))
-      .where(col("query_id") =!= col("cand_id"))
-      .select(col("query_id"), col("cand_id").as("cand_id"), pairCos.as("cos"))
-    val w = Window.partitionBy("query_id").orderBy(col("cos").desc, col("cand_id").asc)
-    val out = pairs.withColumn("rank", row_number().over(w)).where(col("rank") <= k)
-    Dedup.materializeAndRelease(out, base)
   }
 }

@@ -51,15 +51,6 @@ object ZOrder {
     byDigits.otherwise(shiftright(lex, 1).cast(IntegerType))
   }
 
-  /** The maintenance engine's clustering key:
-    * interleave(convOrderKey(conv_id), turn_idx). NOTE: raw interleave is
-    * only balanced when both dimensions span similar magnitudes — the
-    * clustering job uses [[scaledClusterKey]] instead, which normalizes
-    * both dimensions onto a 16-bit bucket grid first.
-    */
-  def clusterKey(convId: Column, turnIdx: Column): Column =
-    zorder64(convOrderKey(convId), coalesce(turnIdx.cast(IntegerType), lit(0)))
-
   /** Driver-side twin of [[convOrderKey]] (same per-row logic) so manifest
     * min/max conv strings can be mapped to key-space bounds without a scan.
     */
@@ -75,31 +66,6 @@ object ZOrder {
       (acc >> 1).toInt // halved like convOrderKey: stays non-negative
     }
   }
-
-  private val Buckets = 1 << 16 // 16-bit grid per dimension
-
-  private def bucket(v: Column, min: Long, max: Long): Column = {
-    val span = math.max(1L, max - min + 1)
-    // (v - min) * B / span, clamped to [0, B-1]; Long arithmetic, no overflow
-    // for 32-bit inputs.
-    val b = (v.cast(LongType) - lit(min)) * lit(Buckets.toLong) / lit(span)
-    least(greatest(b, lit(0L)), lit((Buckets - 1).toLong)).cast(IntegerType)
-  }
-
-  /** Balanced Z-order key: both dimensions are scaled to [0, 2^16) using
-    * key-space bounds (from manifest stats — no data scan), THEN
-    * interleaved. Without this, a dimension with a larger magnitude (e.g.
-    * turn_idx up to 10^3 vs dense conv keys) monopolizes the high bits and
-    * range predicates on the other dimension stop pruning. With it, a
-    * conv_id range covering fraction f of the key space selects ~f of the
-    * files (the north-rule >=90% prune criterion).
-    */
-  def scaledClusterKey(convId: Column, turnIdx: Column,
-                       convKeyMin: Long, convKeyMax: Long,
-                       turnMin: Long, turnMax: Long): Column =
-    zorder64(
-      bucket(convOrderKey(convId), convKeyMin, convKeyMax),
-      bucket(coalesce(turnIdx.cast(IntegerType), lit(0)), turnMin, turnMax))
 
   /** Quantile bucket of a long column given driver-computed sorted cuts. */
   def bucketByCuts(v: Column, cuts: Array[Long]): Column =

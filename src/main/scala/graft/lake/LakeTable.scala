@@ -1,6 +1,9 @@
 package graft.lake
 
+import org.apache.hadoop.mapreduce.Job
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
+import org.apache.spark.sql.execution.datasources.OutputWriterFactory
+import org.apache.spark.sql.execution.datasources.parquet.ParquetFileFormat
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types.StructType
 
@@ -268,13 +271,9 @@ class LakeTable(val root: String, val spark: SparkSession,
     // TIMESTAMP_MICROS (not Spark's INT96 default): INT96 persists NO
     // footer statistics, and the event-time min/max per file is what lets
     // a row-retention DELETE prune to the files that can contain expired
-    // rows instead of reading the whole table every cadence tick.
-    // Set via a depth-counted push/pop (parquet offers no per-write option
-    // for this key — prepareWrite overwrites the job conf from SQLConf),
-    // so the session's own value is RESTORED once the write (or the last
-    // of several concurrent lake writes) finishes: a library call must not
-    // permanently switch the user's unrelated parquet writes to MICROS.
-    LakeTable.pushMicrosTimestampConf(spark)
+    // rows instead of reading the whole table every cadence tick. Parquet
+    // offers no per-write option for it; [[LakeTable.MicrosParquet]] sets
+    // it on this write's job alone, so no session conf is touched.
     // zstd: ~2x smaller files than snappy for this text-heavy schema —
     // scans read fewer bytes and maintenance I/O shifts toward CPU, which
     // scales with executors while disks don't. For an encrypted table the
@@ -284,9 +283,8 @@ class LakeTable(val root: String, val spark: SparkSession,
     // at most that many rows (0 keeps the session's setting).
     val split = if (maxRecordsPerFile > 0) Map("maxRecordsPerFile" -> maxRecordsPerFile.toString)
                 else Map.empty[String, String]
-    try df.write.mode("overwrite").options(dataWriteOptions).options(split)
-      .option("compression", "zstd").parquet(staging)
-    finally LakeTable.popMicrosTimestampConf(spark)
+    df.write.mode("overwrite").format(classOf[LakeTable.MicrosParquet].getName)
+      .options(dataWriteOptions).options(split).option("compression", "zstd").save(staging)
     val conf = spark.sessionState.newHadoopConf()
     if (encrypted) Crypto.configureRead(conf, masterKeyB64)
     val parts = io.list(staging).filter(_.endsWith(".parquet"))
@@ -526,34 +524,19 @@ class LakeTable(val root: String, val spark: SparkSession,
 object LakeTable {
   val DefaultEntriesPerManifest = 1000
 
-  private val TsTypeKey = "spark.sql.parquet.outputTimestampType"
-  private val tsConfLock = new Object
-  private var tsConfDepth = 0
-  private var tsConfPrev: String = _
-
-  /** Depth-counted session-conf override for the staging write's
-    * TIMESTAMP_MICROS requirement: maintenance runs lake writes from
-    * several threads (DeleteFrom/Compaction groups), so a naive
-    * save/restore would race and could leave the OVERRIDE behind as the
-    * "saved" value. The outermost push saves the user's value, the last
-    * pop restores it. (While any lake write is in flight the session-wide
-    * value is MICROS — unavoidable for a key parquet only reads from
-    * SQLConf — but between lake writes the user's setting is back.)
+  /** Parquet with TIMESTAMP_MICROS timestamps for one write. Parquet reads
+    * the type from the write job's Hadoop conf, which `prepareWrite` fills
+    * from the session conf; overriding it there, after, leaves the session
+    * and every other write as they were.
     */
-  private[lake] def pushMicrosTimestampConf(spark: SparkSession): Unit =
-    tsConfLock.synchronized {
-      if (tsConfDepth == 0) {
-        tsConfPrev = spark.conf.get(TsTypeKey)
-        spark.conf.set(TsTypeKey, "TIMESTAMP_MICROS")
-      }
-      tsConfDepth += 1
+  final class MicrosParquet extends ParquetFileFormat {
+    override def prepareWrite(spark: SparkSession, job: Job, options: Map[String, String],
+                              dataSchema: StructType): OutputWriterFactory = {
+      val factory = super.prepareWrite(spark, job, options, dataSchema)
+      job.getConfiguration.set("spark.sql.parquet.outputTimestampType", "TIMESTAMP_MICROS")
+      factory
     }
-
-  private[lake] def popMicrosTimestampConf(spark: SparkSession): Unit =
-    tsConfLock.synchronized {
-      tsConfDepth -= 1
-      if (tsConfDepth == 0) spark.conf.set(TsTypeKey, tsConfPrev)
-    }
+  }
 
   /** Age gate splitting crash-orphan snap files between the two mechanisms
     * that may touch them, so they can never race on the same file:

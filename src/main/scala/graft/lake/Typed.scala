@@ -1,6 +1,6 @@
 package graft.lake
 
-import org.apache.spark.sql.{DataFrame, Dataset, SparkSession}
+import org.apache.spark.sql.Dataset
 import org.apache.spark.sql.functions._
 
 /** Typed facade over the transcript table (input_hint: typed Dataset /
@@ -26,25 +26,5 @@ object Typed {
       .select(col("conv_id"), col("turn_idx"), col("role"), col("text"),
         col("tool"), col("ts"))
       .as[Turn]
-  }
-
-  /** Snapshot metadata listing, newest first — the engine's analogue of the
-    * reference's `list_files()` metadata scan sorted by created_at desc
-    * (file_repository.py:112-118).
-    */
-  def snapshotsDf(table: LakeTable): DataFrame = {
-    val spark = table.spark
-    import spark.implicits._
-    // committedSnapshots, not allSnapshots: a crashed commit's orphan snap
-    // file (id beyond the pointer, possibly torn mid-write) must neither
-    // appear in a user-facing listing nor break it with a parse error.
-    table.committedSnapshots.map { s =>
-      (s.id, s.parentId, s.sequence, s.timestampMs, s.operation,
-        s.manifestPaths.size,
-        s.summary.getOrElse("total_files", "0").toLong,
-        s.summary.getOrElse("total_rows", "0").toLong)
-    }.toDF("snapshot_id", "parent_id", "sequence", "timestamp_ms",
-      "operation", "n_manifests", "total_files", "total_rows")
-      .orderBy(desc("timestamp_ms"), desc("snapshot_id"))
   }
 }

@@ -1,8 +1,9 @@
 package graft.maintain
 
+import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 
-import graft.functions.ZOrder
+import graft.functions.{Cached, ZOrder}
 import graft.lake.{DataFile, LakeTable, Snapshot}
 
 /** Z-order clustering on (conv_id, turn_idx) — the 64-bit interleave of the
@@ -165,15 +166,13 @@ object Clustering {
     val fraction = math.min(1.0, 2e6 / totalRows)
     val base = table.readData(files.map(f => table.absData(f.path)))
     val sampled = if (fraction < 1.0) base.sample(fraction, seed = 42L) else base
-    val df = sampled.select(
-      ZOrder.convOrderKey(col("conv_id")).cast("long").as("__ck"),
-      coalesce(col("turn_idx").cast("long"), lit(0L)).as("__tk"))
-      .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-    def probs(n: Int) = (1 until n).map(_.toDouble / n).toArray
-    val ck = df.stat.approxQuantile("__ck", probs(convBuckets), 0.004)
-    val tk = df.stat.approxQuantile("__tk", probs(turnBuckets), 0.004)
-    df.unpersist()
-    (ck.map(_.toLong).distinct.sorted, tk.map(_.toLong).distinct.sorted)
+    def cuts(df: DataFrame, c: String, n: Int) = df.stat
+      .approxQuantile(c, (1 until n).map(_.toDouble / n).toArray, 0.004).map(_.toLong).distinct.sorted
+    Cached.withCached(sampled.select(
+        ZOrder.convOrderKey(col("conv_id")).cast("long").as("__ck"),
+        coalesce(col("turn_idx").cast("long"), lit(0L)).as("__tk"))) { df =>
+      (cuts(df, "__ck", convBuckets), cuts(df, "__tk", turnBuckets))
+    }
   }
 
   /** Locality-aware planning. Incremental mode (files already carry tight

@@ -5,7 +5,7 @@ import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types.{StringType, StructField, StructType}
 
-import graft.functions.Dedup
+import graft.functions.{Cached, Dedup}
 import graft.lake.{FileIO, LakeTable, Snapshot}
 
 /** Lake-integrated deduplication: the dedup suite's groups APPLIED to the
@@ -99,17 +99,16 @@ object Dedupe {
       val skipped =
         if (rebuild) 0L
         else {
-          val (victims, oversized) =
-            if (unit == "conversation")
-              computeConvVictims(table, mode, minTokens, minJaccard, maxIters,
-                maxConvChars)
-            else (computeVictims(table, mode, minTokens, minJaccard, maxIters), 0L)
           // atomic publish: write to a tmp dir, rename over — a crash
           // mid-write can never leave a torn victim set a resume would trust
           val tmp = victimsDir + ".tmp"
           table.io.delete(tmp)
-          victims.write.mode("overwrite").parquet(tmp)
-          victims.unpersist() // no-op for the exact mode's unpersisted frame
+          def write(victims: DataFrame): Unit = victims.write.mode("overwrite").parquet(tmp)
+          val oversized =
+            if (unit == "conversation")
+              computeConvVictims(table, mode, minTokens, minJaccard, maxIters,
+                maxConvChars)(write)
+            else { computeVictims(table, mode, minTokens, minJaccard, maxIters)(write); 0L }
           table.io.delete(victimsDir)
           table.io.rename(tmp, victimsDir)
           oversized
@@ -183,58 +182,58 @@ object Dedupe {
     * the propagated `group_id` (min node id over the component) EXACTLY the
     * component's keeper key — no separate keeper aggregation needed.
     *
-    * Returns `df` with a `group_id` column joined in (the keeper key: a
-    * member is a victim iff its own key differs), plus a release thunk the
-    * caller invokes AFTER materializing anything derived from it. Throws
-    * (and releases) on non-convergence — partial groups must never drive
-    * deletions.
+    * Runs `use` over `df` with a `group_id` column joined in (the keeper
+    * key: a member is a victim iff its own key differs) while the node and
+    * label caches it reads are held; both are released when `use` returns
+    * or throws. Throws on non-convergence — partial groups must never
+    * drive deletions.
     */
-  private def sketchComponents(df: DataFrame, keyCol: String, mode: String,
-                               minJaccard: Double, maxIters: Int,
-                               what: String): (DataFrame, () => Unit) = {
-    val nodes = df.groupBy(col("__sk")).agg(min(col(keyCol)).as("__nid"))
-      .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-    nodes.count() // materialize once for the three consumers below
-    val need = math.ceil(32 * minJaccard).toInt
-    val pairs =
-      if (mode == "minhash") {
-        // pair set is cap-bounded and post-verify sparse: the two
-        // array-keyed id lookups are joins over a SMALL frame
-        Dedup.minhashSigPairs(nodes.select(col("__sk")), "__sk")
-          .where(Dedup.sigAgreement(col("sig_a"), col("sig_b")) >= need)
-          .join(nodes.select(col("__sk").as("sig_a"), col("__nid").as("id_a")), Seq("sig_a"))
-          .join(nodes.select(col("__sk").as("sig_b"), col("__nid").as("id_b")), Seq("sig_b"))
+  private def sketchComponents[T](df: DataFrame, keyCol: String, mode: String,
+                                  minJaccard: Double, maxIters: Int,
+                                  what: String)(use: DataFrame => T): T =
+    Cached.withCached(df.groupBy(col("__sk")).agg(min(col(keyCol)).as("__nid"))) { nodes =>
+      nodes.count() // materialize once for the three consumers below
+      val need = math.ceil(32 * minJaccard).toInt
+      val pairs =
+        if (mode == "minhash") {
+          // pair set is cap-bounded and post-verify sparse: the two
+          // array-keyed id lookups are joins over a SMALL frame
+          Dedup.minhashSigPairs(nodes.select(col("__sk")), "__sk")
+            .where(Dedup.sigAgreement(col("sig_a"), col("sig_b")) >= need)
+            .join(nodes.select(col("__sk").as("sig_a"), col("__nid").as("id_a")), Seq("sig_a"))
+            .join(nodes.select(col("__sk").as("sig_b"), col("__nid").as("id_b")), Seq("sig_b"))
+            .select("id_a", "id_b")
+        } else Dedup.simhashFpPairs(nodes.select(col("__sk")), "__sk")
+          .join(nodes.select(col("__sk").as("fp_a"), col("__nid").as("id_a")), Seq("fp_a"))
+          .join(nodes.select(col("__sk").as("fp_b"), col("__nid").as("id_b")), Seq("fp_b"))
           .select("id_a", "id_b")
-      } else Dedup.simhashFpPairs(nodes.select(col("__sk")), "__sk")
-        .join(nodes.select(col("__sk").as("fp_a"), col("__nid").as("id_a")), Seq("fp_a"))
-        .join(nodes.select(col("__sk").as("fp_b"), col("__nid").as("id_b")), Seq("fp_b"))
-        .select("id_a", "id_b")
-    val r = Dedup.dedupGroupsResult(nodes.select(col("__nid")), "__nid",
-      pairs, maxIters)
-    if (!r.converged) {
-      nodes.unpersist(); r.groups.unpersist()
-      throw new IllegalStateException(
-        s"dedupe($what): label propagation did not converge — refusing " +
-          "to delete rows based on partial duplicate groups; raise " +
-          "maxIters or investigate the candidate graph")
+      val r = Dedup.dedupGroupsResult(nodes.select(col("__nid")), "__nid",
+        pairs, maxIters)
+      // the labels come back cached (Dedup's result handoff): released here
+      try {
+        if (!r.converged)
+          throw new IllegalStateException(
+            s"dedupe($what): label propagation did not converge — refusing " +
+              "to delete rows based on partial duplicate groups; raise " +
+              "maxIters or investigate the candidate graph")
+        use(df.join(nodes, Seq("__sk")).join(r.groups, Seq("__nid")).drop("__nid"))
+      } finally r.groups.unpersist()
     }
-    (df.join(nodes, Seq("__sk")).join(r.groups, Seq("__nid")).drop("__nid"),
-      () => { nodes.unpersist(); r.groups.unpersist(); () })
-  }
 
-  /** The victim rows (conv_id, turn_idx, __src): every row that is NOT its
-    * duplicate group's keeper, the smallest (conv_id, turn_idx) struct in
-    * the group (rows sharing it all survive) — the reference's
-    * first-occurrence-survives rule under the table's stable key order.
-    * `exact` reads the files once into a window keyed on the full
-    * normalized text (no hash collision merges groups): one task with no
-    * Exchange when they fit one ([[LakeTable.fitsOneTask]]), else one
-    * hash Exchange on the text.
+  /** Runs `use` over the victim rows (conv_id, turn_idx, __src): every row
+    * that is NOT its duplicate group's keeper, the smallest
+    * (conv_id, turn_idx) struct in the group (rows sharing it all survive)
+    * — the reference's first-occurrence-survives rule under the table's
+    * stable key order. `exact` reads the files once into a window keyed on
+    * the full normalized text (no hash collision merges groups): one task
+    * with no Exchange when they fit one ([[LakeTable.fitsOneTask]]), else
+    * one hash Exchange on the text. The near-dup modes hold their caches
+    * only while `use` runs.
     */
-  private[maintain] def computeVictims(table: LakeTable, mode: String,
-                                       minTokens: Int,
-                                       minJaccard: Double = 0.9,
-                                       maxIters: Int = 50): DataFrame = {
+  private[maintain] def computeVictims[T](table: LakeTable, mode: String,
+                                          minTokens: Int,
+                                          minJaccard: Double = 0.9,
+                                          maxIters: Int = 50)(use: DataFrame => T): T = {
     require(table.currentFiles.nonEmpty, s"no data files to dedupe at ${table.root}")
 
     mode match {
@@ -247,11 +246,11 @@ object Dedupe {
         // a non-empty text has at least one token: the token bar only
         // filters when it is above one
         val tokens = if (minTokens > 1) size(split(col("__tn"), " ")) >= minTokens else lit(true)
-        table.oneTaskIfFits(rows, files.map(_.bytes).sum)
+        use(table.oneTaskIfFits(rows, files.map(_.bytes).sum)
           .where(length(col("__tn")) > 0 && tokens)
           .withColumn("__keep", min(key).over(Window.partitionBy("__tn")))
           .where(key =!= col("__keep"))
-          .select("conv_id", "turn_idx", "__src")
+          .select("conv_id", "turn_idx", "__src"))
 
       case "minhash" | "simhash" =>
         // Signatures come from the LAKE-MANAGED SKETCH STORE ([[Sketches]]):
@@ -277,36 +276,33 @@ object Dedupe {
         // (numeric turn order within a conv is not required, only a stable
         // canonical pick) — same rule as the row-pair formulation this
         // replaces.
-        val keyed = sk.sketches
-          .where(col("n_tokens") >= math.max(1, minTokens))
-          .select(col("conv_id"), col("turn_idx"), col("__src"),
-            col(sketchCol).as("__sk"),
-            concat_ws("\u0001", col("conv_id"), col("turn_idx").cast("string"))
-              .as("__k"))
-          .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-        val (comp, release) = sketchComponents(keyed, "__k", mode, minJaccard,
-          maxIters, what = mode)
-        // group_id IS the component's keeper key (min member key): a row is
-        // a victim iff its own key differs — one membership join, no
-        // separate keeper aggregation
-        val out = comp.where(col("__k") =!= col("group_id"))
-          .select("conv_id", "turn_idx", "__src")
-          .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-        // materialize BEFORE releasing the node/label caches — the victim
-        // frame's lineage reaches back through the whole propagation
-        out.count()
-        keyed.unpersist(); release()
-        out
+        Cached.withCached(sk.sketches
+            .where(col("n_tokens") >= math.max(1, minTokens))
+            .select(col("conv_id"), col("turn_idx"), col("__src"),
+              col(sketchCol).as("__sk"),
+              concat_ws("\u0001", col("conv_id"), col("turn_idx").cast("string"))
+                .as("__k"))) { keyed =>
+          sketchComponents(keyed, "__k", mode, minJaccard, maxIters, what = mode) { comp =>
+            // group_id IS the component's keeper key (min member key): a
+            // row is a victim iff its own key differs — one membership
+            // join, no separate keeper aggregation
+            Cached.withCached(comp.where(col("__k") =!= col("group_id"))
+                .select("conv_id", "turn_idx", "__src")) { out =>
+              out.count() // one job computes the victims; `use` reads the cache
+              use(out)
+            }
+          }
+        }
     }
   }
 
-  /** Victim rows for `unit = "conversation"`, and the number of
-    * conversations skipped as oversized: whole conversations whose
-    * CONCATENATED normalized text duplicates another conversation's are
-    * removed entirely (all their turns), keeping the smallest conv_id —
-    * the dedup granularity a training pipeline usually wants for dialog
-    * data, where a turn repeated WITHIN one conversation ("ok", a retried
-    * tool call) is structure, not redundancy.
+  /** Runs `use` over the victim rows for `unit = "conversation"` and
+    * returns the number of conversations skipped as oversized: whole
+    * conversations whose CONCATENATED normalized text duplicates another
+    * conversation's are removed entirely (all their turns), keeping the
+    * smallest conv_id — the dedup granularity a training pipeline usually
+    * wants for dialog data, where a turn repeated WITHIN one conversation
+    * ("ok", a retried tool call) is structure, not redundancy.
     *
     * Shape: one groupBy(conv_id) assembles each conversation's ordered
     * text (a conversation fits a task trivially; the hot-conv skew the
@@ -319,64 +315,67 @@ object Dedupe {
                                            minTokens: Int,
                                            minJaccard: Double = 0.9,
                                            maxIters: Int = 50,
-                                           maxConvChars: Long = 8L << 20): (DataFrame, Long) = {
+                                           maxConvChars: Long = 8L << 20)
+                                          (use: DataFrame => Unit): Long = {
     val paths = table.currentFiles.map(f => table.absData(f.path))
-    val rows = table.readData(paths)
-      .select(col("conv_id"), col("turn_idx"), LakeTable.sourceFile,
-        Dedup.normalizedText(col("text")).as("__tn"))
-      .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
+    Cached.withCached(table.readData(paths)
+        .select(col("conv_id"), col("turn_idx"), LakeTable.sourceFile,
+          Dedup.normalizedText(col("text")).as("__tn"))) { rows =>
 
-    // Robustness gate BEFORE the text assembly: per-conv total length is a
-    // cheap map-side-combining agg, and only conversations under the cap
-    // reach the collect_list — one degenerate 10^8-turn conversation must
-    // fail GRACEFULLY (skipped with a loud note, never a victim) instead
-    // of OOMing the task that concatenates it. The count is reported as
-    // the Result's `skippedConvs`.
-    val lens = rows.groupBy(col("conv_id"))
-      .agg(sum(length(col("__tn")) + lit(1)).as("__clen"))
-    val nOversized = lens.where(col("__clen") > maxConvChars).count()
-    val eligible = lens.where(col("__clen") <= maxConvChars).select("conv_id")
+      // Robustness gate BEFORE the text assembly: per-conv total length is
+      // a cheap map-side-combining agg, and only conversations under the
+      // cap reach the collect_list — one degenerate 10^8-turn conversation
+      // must fail GRACEFULLY (skipped with a loud note, never a victim)
+      // instead of OOMing the task that concatenates it. The count is
+      // reported as the Result's `skippedConvs`.
+      val lens = rows.groupBy(col("conv_id"))
+        .agg(sum(length(col("__tn")) + lit(1)).as("__clen"))
+      val nOversized = lens.where(col("__clen") > maxConvChars).count()
+      val eligible = lens.where(col("__clen") <= maxConvChars).select("conv_id")
 
-    val conv = rows.join(eligible, Seq("conv_id"))
-      .groupBy(col("conv_id"))
-      .agg(array_join(
-        transform(array_sort(collect_list(struct(col("turn_idx"), col("__tn")))),
-          s => s.getField("__tn")), "\n").as("__ctext"))
-      .where(length(col("__ctext")) > 0 &&
-        size(split(col("__ctext"), "[ \n]+")) >= minTokens)
+      val conv = rows.join(eligible, Seq("conv_id"))
+        .groupBy(col("conv_id"))
+        .agg(array_join(
+          transform(array_sort(collect_list(struct(col("turn_idx"), col("__tn")))),
+            s => s.getField("__tn")), "\n").as("__ctext"))
+        .where(length(col("__ctext")) > 0 &&
+          size(split(col("__ctext"), "[ \n]+")) >= minTokens)
 
-    val victimConvs = mode match {
-      case "exact" =>
-        // the same window as the turn unit: `conv` is computed once
-        conv.withColumn("__keep", min(col("conv_id")).over(Window.partitionBy("__ctext")))
-          .where(col("conv_id") =!= col("__keep"))
-          .select("conv_id")
-      case _ =>
-        // conversation sketches are computed fresh on the conv-level frame
-        // (the per-file store is per-turn), then the SAME distinct-sketch
-        // component machinery as the turn path runs — a conversation
-        // duplicated 10^5 times costs member rows, never member pairs
-        val convSk = (if (mode == "minhash")
-            conv.withColumn("__sk",
-              Dedup.minhashSignatureNative(col("__ctext"), 3, 32))
-          else conv.withColumn("__sk", Dedup.simhash64Native(col("__ctext"))))
-          .select(col("conv_id"), col("__sk"))
-        val (comp, release) = sketchComponents(convSk, "conv_id", mode,
-          minJaccard, maxIters, what = s"$mode, conversation")
-        val v = comp.where(col("conv_id") =!= col("group_id"))
-          .select("conv_id")
-          .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-        v.count()
-        release()
-        v
+      // every turn of a victim conversation, materialized once
+      def turnsOf(victimConvs: DataFrame): Unit =
+        Cached.withCached(rows.join(victimConvs, Seq("conv_id"))
+            .select("conv_id", "turn_idx", "__src")) { out =>
+          out.count()
+          use(out)
+        }
+
+      mode match {
+        case "exact" =>
+          // the same window as the turn unit: `conv` is computed once
+          turnsOf(conv.withColumn("__keep", min(col("conv_id")).over(Window.partitionBy("__ctext")))
+            .where(col("conv_id") =!= col("__keep"))
+            .select("conv_id"))
+        case _ =>
+          // conversation sketches are computed fresh on the conv-level
+          // frame (the per-file store is per-turn), then the SAME
+          // distinct-sketch component machinery as the turn path runs — a
+          // conversation duplicated 10^5 times costs member rows, never
+          // member pairs
+          val convSk = (if (mode == "minhash")
+              conv.withColumn("__sk",
+                Dedup.minhashSignatureNative(col("__ctext"), 3, 32))
+            else conv.withColumn("__sk", Dedup.simhash64Native(col("__ctext"))))
+            .select(col("conv_id"), col("__sk"))
+          sketchComponents(convSk, "conv_id", mode, minJaccard, maxIters,
+              what = s"$mode, conversation") { comp =>
+            Cached.withCached(comp.where(col("conv_id") =!= col("group_id"))
+                .select("conv_id")) { v =>
+              v.count()
+              turnsOf(v)
+            }
+          }
+      }
+      nOversized
     }
-
-    val out = rows.join(victimConvs, Seq("conv_id"))
-      .select("conv_id", "turn_idx", "__src")
-      .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-    out.count()
-    rows.unpersist()
-    victimConvs.unpersist() // no-op for the exact branch's unpersisted frame
-    (out, nOversized)
   }
 }

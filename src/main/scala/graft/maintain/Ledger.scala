@@ -375,8 +375,13 @@ object Ledger {
       o
     }
     val plan = planOrResume(table, jobId, operation, kind) {
-      val base = table.currentSnapshotId.get
+      val before = table.currentSnapshotId.get
       val c = count(false)
+      // a near-dup count may first cover the table with sketches, a
+      // metadata-only commit: the plan is based on the snapshot it made,
+      // or a resume would find the plan stale
+      val base = table.currentSnapshot
+        .filter(s => s.operation == "sketch" && s.parentId == before).fold(before)(_.id)
       writeCounts(c)
       val files = c.perFile.keys.toVector
         .sortBy(f => (f.minConv.getOrElse(""), f.minTurn.getOrElse(0), f.path))

@@ -9,8 +9,8 @@ import org.apache.spark.sql.catalyst.types.PhysicalDataType
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.graftx.Bridge
 import org.apache.spark.sql.types.{StringType, StructType}
-import org.apache.spark.storage.StorageLevel
 
+import graft.functions.Cached
 import graft.ingest.Normalize
 import graft.lake.{FieldDef, IntervalDnf, LakeTable, Snapshot, TableSchema}
 
@@ -36,7 +36,7 @@ import graft.lake.{FieldDef, IntervalDnf, LakeTable, Snapshot, TableSchema}
   *     projection and sort plan with no Exchange, and the writer's
   *     `maxRecordsPerFile` splits the sorted output into key-tight files.
   *     Such a merge is one Spark job, the write;
-  *   - any other drop is persisted (and released in a `finally`), its counts
+  *   - any other drop is cached for the merge (`Cached.withCached`), its counts
   *     and key range come from one aggregate, and the join and output
   *     shuffle: a full-outer sort-merge join on the key, then a
   *     range-repartition + sort on the key (full outer cannot broadcast).
@@ -96,20 +96,16 @@ object MergeInto {
       val keyed = StructType(Seq(st(ci), st(ti)) ++ dataFields.map(f => st(f.name)))
       run(Staged(Bridge.localRelation(spark, keyed, dedup).coalesce(1),
         dedup.size.toLong, range, rejected.size.toLong, local = true))
-    } else {
-      val cached = aligned.persist(StorageLevel.MEMORY_AND_DISK)
-      try {
-        val (valid, rejected) = Normalize.routeInvalid(cached)
-        val dedup = dedupOf(valid, dataFields).persist(StorageLevel.MEMORY_AND_DISK)
-        try {
-          // ONE action computes count + key range (materializing the cache);
-          // rejectedRows then reads the cached aligned frame.
-          val aggRow = dedup.agg(count(lit(1)), min("conv_id"), max("conv_id")).head()
-          val range = for (l <- Option(aggRow.getString(1)); h <- Option(aggRow.getString(2)))
-            yield (l, h)
-          run(Staged(dedup, aggRow.getLong(0), range, rejected.count(), local = false))
-        } finally dedup.unpersist()
-      } finally cached.unpersist()
+    } else Cached.withCached(aligned) { cached =>
+      val (valid, rejected) = Normalize.routeInvalid(cached)
+      Cached.withCached(dedupOf(valid, dataFields)) { dedup =>
+        // ONE action computes count + key range (materializing the cache);
+        // rejectedRows then reads the cached aligned frame.
+        val aggRow = dedup.agg(count(lit(1)), min("conv_id"), max("conv_id")).head()
+        val range = for (l <- Option(aggRow.getString(1)); h <- Option(aggRow.getString(2)))
+          yield (l, h)
+        run(Staged(dedup, aggRow.getLong(0), range, rejected.count(), local = false))
+      }
     }
   }
 

@@ -37,13 +37,23 @@ import graft.lake.{DataFile, FileIO, LakeTable, MetaJson}
   *     healed by [[ensure]]: one consolidated batch for all missing files
   *     plus a METADATA-ONLY commit stamping their entries.
   *
-  * Params are pinned store-wide in `_meta.json`: two signature generations
-  * must never silently mix into one banding pass. GC: [[orphans]] names
-  * the batch dirs referenced by no snapshot or ledger checkpoint.
+  * Params and the text normalization are pinned store-wide in
+  * `_meta.json`: two signature generations must never silently mix into
+  * one banding pass. GC: [[orphans]] names the batch dirs referenced by no
+  * snapshot or ledger checkpoint.
   */
 object Sketches {
 
   final case class Params(shingleK: Int = 3, numHashes: Int = 32)
+
+  /** The `normalization` tag of the sketches this code computes: the text
+    * is [[Dedup.normalizedText]], which collapses every whitespace run
+    * before trimming. A store tagged otherwise (or untagged) was built by
+    * the earlier rule, `lower-ws-collapse`, which trimmed only U+0020
+    * first: its signatures and `n_tokens` disagree for texts with edge
+    * tabs or newlines.
+    */
+  private val Normalization = "lower-ws-collapse-trim"
 
   final case class EnsureResult(
       sketches: DataFrame, // (conv_id, turn_idx, minhash, simhash, n_tokens, __src)
@@ -77,7 +87,9 @@ object Sketches {
     */
   def sketchOnWrite(table: LakeTable, entries: Vector[DataFile],
                     tag: String): Vector[DataFile] = {
-    val params = if (entries.isEmpty) None else readParams(table)
+    // a store of another normalization gets no new batch: ensure refuses it
+    val params = if (entries.isEmpty) None else readMeta(table)
+      .collect { case (p, Normalization) => p }
     params.filter(_ => canSketch(table)).fold(entries) { p =>
       val batch = computeBatch(table, entries.map(f => table.absData(f.path)), tag, p)
       entries.map(_.copy(sketch = Some(batch)))
@@ -181,26 +193,28 @@ object Sketches {
         !name.startsWith("_") && !referencedBatches(s"sketches/$name")
     }.map(name => s"sketches/$name")
 
-  /** The store's pinned params. The store is ACTIVE once `_meta.json`
-    * exists (the first `ensure` writes it); only then do writes pay the
-    * sketch pass.
+  /** The store's pinned params and normalization tag (a store written
+    * before the tag existed has the earlier rule's). The store is ACTIVE
+    * once `_meta.json` exists (the first `ensure` writes it); only then do
+    * writes pay the sketch pass.
     */
-  private def readParams(table: LakeTable): Option[Params] =
+  private def readMeta(table: LakeTable): Option[(Params, String)] =
     table.io.read(metaPath(table)).map(MetaJson.read).map(n =>
-      Params(n.get("shingle_k").asInt, n.get("num_hashes").asInt))
+      (Params(n.get("shingle_k").asInt, n.get("num_hashes").asInt),
+        Option(n.get("normalization")).fold("lower-ws-collapse")(_.asText)))
 
   private def checkOrWriteMeta(table: LakeTable, params: Params): Unit =
-    readParams(table) match {
+    readMeta(table) match {
       case Some(existing) =>
-        require(existing == params,
+        require(existing == (params, Normalization),
           s"sketch store at ${storeDir(table)} was built with $existing, called " +
-            s"with $params — two signature generations must not mix; delete the " +
-            "store to rebuild")
+            s"with ${(params, Normalization)} — two signature generations must " +
+            "not mix; delete the store to rebuild")
       case None =>
         val o = MetaJson.mapper.createObjectNode()
         o.put("shingle_k", params.shingleK)
         o.put("num_hashes", params.numHashes)
-        o.put("normalization", "lower-ws-collapse")
+        o.put("normalization", Normalization)
         table.io.replace(metaPath(table), MetaJson.write(o))
     }
 }

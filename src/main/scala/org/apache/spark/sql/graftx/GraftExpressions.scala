@@ -80,10 +80,6 @@ object Bridge {
       .queryExecution.explainString(
         org.apache.spark.sql.execution.ExplainMode.fromString("formatted"))
 
-  /** Register the engine's custom expressions for SQL callers:
-    * `SELECT zorder64(a, b)` works after this (FunctionRegistry is a
-    * private[sql] seam, hence registration lives in this bridge package).
-    */
   /** Cut a DataFrame's LINEAGE and its STATISTICS chain for iterative
     * algorithms: materializable cached rows behind a fresh [[LogicalRDD]]
     * leaf whose stats are a caller-supplied CONSTANT.
@@ -117,11 +113,6 @@ object Bridge {
       () => { rdd.unpersist(blocking = false); () })
   }
 
-  def registerFunctions(spark: org.apache.spark.sql.SparkSession): Unit = {
-    val reg = spark.sessionState.functionRegistry
-    reg.createOrReplaceTempFunction("zorder64",
-      exprs => ZOrder64(exprs.head, exprs(1)), "scala_udf")
-  }
 }
 
 /** `zorder64(a, b)` — native Catalyst expression computing the 64-bit Morton

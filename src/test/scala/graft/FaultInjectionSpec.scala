@@ -27,8 +27,9 @@ import graft.synth.TranscriptSynth
   *     files and no `_staging-*` dir is left.
   * Templates keep every operation to one rewrite group, so a crashed run
   * leaves no sibling Spark job writing behind the recovery. Dedupe and
-  * clustering crash on both rewrite plans, and every crashed run of them
-  * and of MERGE must leave no frame cached.
+  * clustering crash on both rewrite plans, and every crashed run of them,
+  * of MERGE and of the minhash and conversation-unit dedupe must leave no
+  * frame cached.
   */
 class FaultInjectionSpec extends AnyFunSuite {
   private lazy val spark = TestSpark.spark
@@ -172,6 +173,32 @@ class FaultInjectionSpec extends AnyFunSuite {
     val (n, m) = crashOnBothPlans("dedupe", tpl)(t => Dedupe.runPass(t, "fault-dedupe"))
     // victims tmp + publish, counts sidecar, plan, task row, commit, marker
     assert(n >= 9 && m >= 9, s"only $n / $m mutating calls")
+  }
+
+  test("crash at every storage step: minhash dedupe, with its sketch store, releases its caches") {
+    val tpl = template("minhash") { t =>
+      t.append(synth(4), "init")
+      t.append(synth(4).where(col("turn_idx") === 0).orderBy("conv_id").limit(2)
+        .withColumn("conv_id", concat(lit("z"), col("conv_id"))), "copies")
+    }
+    val n = crashAtEveryStep("minhash", tpl, checkReleased = true) { t =>
+      Dedupe.runPass(t, "fault-minhash", mode = "minhash")
+    }
+    // the store's meta, batch and coverage commit come before the pass's own
+    assert(n >= 12, s"only $n mutating calls")
+  }
+
+  test("crash at every storage step: a conversation-unit dedupe releases its caches") {
+    val tpl = template("dedupe-conv") { t =>
+      t.append(synth(4), "init")
+      // whole copies of two conversations under new ids: the victims
+      t.append(synth(4).where(col("conv_id") <= "c00000001")
+        .withColumn("conv_id", concat(lit("z"), col("conv_id"))), "copies")
+    }
+    val n = crashAtEveryStep("dedupe-conv", tpl, checkReleased = true) { t =>
+      Dedupe.runPass(t, "fault-dedupe-conv", unit = "conversation")
+    }
+    assert(n >= 9, s"only $n mutating calls")
   }
 
   test("crash at every storage step: clustering resumes its ledger job on both plans") {

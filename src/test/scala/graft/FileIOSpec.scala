@@ -97,6 +97,37 @@ class FileIOSpec extends AnyFunSuite {
     assert(offenders.isEmpty, offenders.mkString("direct file I/O outside FileIO:\n", "\n", ""))
   }
 
+  /** Every `file:line: text` under `src/main/scala` matching `pattern`,
+    * in the given `graft` packages (all files when `packages` is empty).
+    */
+  private def sourceLines(pattern: scala.util.matching.Regex,
+                          packages: Seq[String] = Nil): Seq[String] = for {
+    dir <- if (packages.isEmpty) Seq(Paths.get("src", "main", "scala"))
+           else packages.map(Paths.get("src", "main", "scala", "graft", _))
+    file <- {
+      val s = Files.walk(dir)
+      try s.iterator().asScala.toVector finally s.close()
+    }
+    if file.toString.endsWith(".scala")
+    (line, i) <- Files.readAllLines(file).asScala.zipWithIndex
+    if pattern.findFirstIn(line).isDefined
+  } yield s"$file:${i + 1}: ${line.trim}"
+
+  test("engine packages never write a session conf") {
+    // a lake write sets its Parquet timestamp type on its own write job;
+    // Crypto's Hadoop `Configuration.set` is per read, not a session write
+    val offenders = sourceLines("""\.conf\.(set|setConf|unset)\(""".r,
+      Seq("lake", "maintain", "ingest", "functions", "plans"))
+    assert(offenders.isEmpty, offenders.mkString("session conf writes:\n", "\n", ""))
+  }
+
+  test("frames are cached only through Cached.withCached, Bridge.detach and materializeAndRelease") {
+    val persists = sourceLines("""\.(persist|cache)\(""".r)
+    assert(persists.map(l => Paths.get(l.takeWhile(_ != ':')).getFileName.toString).sorted ==
+      Seq("Cached.scala", "Dedup.scala", "GraftExpressions.scala"),
+      persists.mkString("cache sites:\n", "\n", ""))
+  }
+
   test("only the lake package names a row's source file (input_file_name)") {
     val offenders = for {
       file <- {

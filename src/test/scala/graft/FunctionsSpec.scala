@@ -527,6 +527,35 @@ class VectorOpsSpec extends AnyFunSuite {
     }
   }
 
+  test("IvfProbesF32 ranks a -0.0 cosine level with 0.0, as Spark orders doubles") {
+    import spark.implicits._
+    import org.apache.spark.sql.graftx.{Bridge, IvfProbesF32}
+    import org.apache.spark.sql.expressions.Window
+    // cell 1's cosine underflows to -0.0 (a tiny negative dot over a huge
+    // norm), cell 2's is an exact 0.0, cell 3's is positive
+    val centRows: Seq[(Int, Seq[Double])] = Seq(
+      (1, Seq(-1e-300, 1e150)), (2, Seq(0.0, 1.0)), (3, Seq(1.0, 1.0)))
+    val df = Seq((1L, Seq(1.0, 0.0)), (2L, Seq(0.0, -1.0))).toDF("id", "v")
+    val cents = new IvfCentroids(centRows.map(_._1).toArray,
+      centRows.map(_._2.map(java.lang.Double.valueOf).toArray).toArray)
+    val cdf = centRows.toDF("cell", "cv")
+    val ccos = df.crossJoin(cdf).select(col("id"), col("cell"),
+      (VectorOps.dot(col("v"), col("cv")) /
+        (VectorOps.norm(col("v")) * VectorOps.norm(col("cv")))).as("ccos"))
+    val z = ccos.where(col("id") === 1 && col("cell") === 1).select("ccos").as[Double].head()
+    assert(z == 0.0 && 1 / z < 0, s"the corpus needs a -0.0 cosine, got $z")
+    for (nProbe <- 1 to 3) {
+      val fast = df.select(col("id"), Bridge.toColumn(IvfProbesF32(
+          Bridge.toExpression(col("v")), cents, nProbe)).as("probes"))
+        .as[(Long, Seq[Int])].collect().toMap
+      val w = Window.partitionBy("id").orderBy(col("ccos").desc, col("cell").asc)
+      val ref = ccos.withColumn("pr", row_number().over(w)).where(col("pr") <= nProbe)
+        .as[(Long, Int, Double, Int)].collect()
+        .groupBy(_._1).view.mapValues(_.sortBy(_._4).map(_._2).toSeq).toMap
+      assert(fast == ref, s"nProbe=$nProbe")
+    }
+  }
+
   test("ivfTopK: planted copies always retrieved; clustered top-1 matches brute force") {
     import spark.implicits._
     // three well-separated clusters with deterministic jitter

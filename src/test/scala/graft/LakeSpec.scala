@@ -50,6 +50,74 @@ class LakeSpec extends AnyFunSuite {
     } finally spark.conf.set(key, before)
   }
 
+  test("concurrent lake writes on two sessions keep each session's timestamp type") {
+    import scala.concurrent.{Await, Future}
+    import scala.concurrent.ExecutionContext.Implicits.global
+    import scala.concurrent.duration._
+    val key = "spark.sql.parquet.outputTimestampType"
+    val (a, b) = (spark.newSession(), spark.newSession())
+    a.conf.set(key, "INT96")
+    b.conf.set(key, "TIMESTAMP_MILLIS")
+    val ta = LakeTable.create(a, tmpTable("ts-session-a"), TranscriptSynth.schema)
+    val tb = LakeTable.create(b, tmpTable("ts-session-b"), TranscriptSynth.schema)
+    // A's write task blocks on its first row until B's write is done
+    WriteGate.reset()
+    val held = udf((s: String) => { WriteGate.pass(); s })
+    val writeA = Future(ta.append(TranscriptSynth.turns(a, 3, seed = 42L)
+      .withColumn("text", held(col("text"))).coalesce(1), "held"))
+    try {
+      assert(WriteGate.entered.await(120, java.util.concurrent.TimeUnit.SECONDS),
+        "session A's write never reached its task")
+      assert(a.conf.get(key) == "INT96", "a lake write in flight switched its session")
+      val dropB = TranscriptSynth.turns(b, 4, seed = 7L)
+      tb.append(dropB, "free")
+      val (lo, hi) = dropB.select(unix_micros(min(col("ts"))), unix_micros(max(col("ts"))))
+        .collect().map(r => (r.getLong(0), r.getLong(1))).head
+      assert(tb.currentFiles.flatMap(_.minTsUs).minOption.contains(lo) &&
+        tb.currentFiles.flatMap(_.maxTsUs).maxOption.contains(hi),
+        s"session B's files need microsecond ts stats: ${tb.currentFiles}")
+      assert(a.conf.get(key) == "INT96")
+    } finally WriteGate.open.countDown()
+    Await.result(writeA, 120.seconds)
+    assert(ta.currentFiles.nonEmpty && ta.currentFiles.forall(_.minTsUs.isDefined))
+    assert(a.conf.get(key) == "INT96" && b.conf.get(key) == "TIMESTAMP_MILLIS")
+  }
+
+  test("the shuffled MERGE writes its data files from the cached drop") {
+    import spark.implicits._
+    import org.apache.spark.sql.execution.{QueryExecution, SparkPlan}
+    import org.apache.spark.sql.execution.adaptive.{AdaptiveSparkPlanExec, QueryStageExec}
+    import org.apache.spark.sql.util.QueryExecutionListener
+    def nodes(p: SparkPlan): Seq[String] = p match {
+      case a: AdaptiveSparkPlanExec => nodes(a.executedPlan)
+      case q: QueryStageExec => nodes(q.plan)
+      case other => other.nodeName +: other.children.flatMap(nodes)
+    }
+    // final plans of the data-file writes
+    val writes = new java.util.concurrent.ConcurrentLinkedQueue[Seq[String]]()
+    val listener = new QueryExecutionListener {
+      override def onSuccess(f: String, qe: QueryExecution, ns: Long): Unit = {
+        val n = nodes(qe.executedPlan)
+        if (n.exists(_.contains("InsertIntoHadoopFsRelation"))) writes.add(n)
+      }
+      override def onFailure(f: String, qe: QueryExecution, e: Exception): Unit = ()
+    }
+    val t = LakeTable.create(spark, tmpTable("merge-cached-drop"), TranscriptSynth.schema)
+    t.append(synth(10), "init")
+    val staged = Seq(("c00000001", "0", "user", "UPDATED", "", 0L),
+      ("c99999999", "0", "user", "new conv", "", 1L))
+      .toDF("conv_id", "turn_idx", "role", "text", "tool", "_seq")
+    val manager = spark.asInstanceOf[org.apache.spark.sql.classic.SparkSession].listenerManager
+    manager.register(listener)
+    try TestSpark.withShuffledMerge(MergeInto.merge(t, staged, "drop-cached"))
+    finally {
+      org.apache.spark.sql.graftx.TestBridge.drainListenerBus(spark.sparkContext)
+      manager.unregister(listener)
+    }
+    assert(writes.size == 1, s"one data-file write: $writes")
+    assert(writes.peek.contains("InMemoryTableScan"), s"the write reads the cached drop: $writes")
+  }
+
   test("append + scan roundtrip preserves every turn") {
     val t = LakeTable.create(spark, tmpTable("roundtrip"), TranscriptSynth.schema)
     val data = synth(50)
@@ -786,6 +854,27 @@ class LakeSpec extends AnyFunSuite {
     // current files' batch survives and still covers the table
     assert(Sketches.ensure(t).computedFiles == 0)
     assert(Sketches.sketchesFrame(t).count() == t.scan().df.count())
+  }
+
+  test("sketches: a store built under another normalization is refused until rebuilt") {
+    val t = LakeTable.create(spark, tmpTable("sketches-norm"), TranscriptSynth.schema)
+    t.append(synth(10).repartition(2), "init")
+    Sketches.ensure(t)
+    val meta = FileIO.path(t.root, "sketches", "_meta.json")
+    // stores written before the tag was compared: untagged, or the old rule's
+    for (old <- Seq("""{"shingle_k":3,"num_hashes":32}""",
+        """{"shingle_k":3,"num_hashes":32,"normalization":"lower-ws-collapse"}""")) {
+      FileIO.Local.replace(meta, old)
+      val e = intercept[IllegalArgumentException](Sketches.ensure(t))
+      assert(e.getMessage.contains("delete the store to rebuild"), e.getMessage)
+    }
+    // a write adds no batch to the stale store
+    t.append(synth(3).withColumn("conv_id", concat(lit("z"), col("conv_id"))).coalesce(1), "more")
+    assert(t.currentFiles.count(_.sketch.isEmpty) == 1)
+    FileIO.Local.delete(FileIO.path(t.root, "sketches"))
+    val rebuilt = Sketches.ensure(t)
+    assert(rebuilt.computedFiles == rebuilt.totalFiles)
+    assert(rebuilt.sketches.count() == t.scan().df.count())
   }
 
   test("DELETE FROM: predicate rows removed, non-overlapping files untouched") {
@@ -1801,5 +1890,24 @@ class LakeSpec extends AnyFunSuite {
     val sizes = synth(25).groupBy("conv_id").count().collect()
       .map(r => r.getString(0) -> r.getLong(1)).toMap
     assert(sizes("c00000000") > 10 * (sizes.values.sum / sizes.size))
+  }
+}
+
+/** A gate a task can block on: JVM-global, so a UDF reaches it without
+  * capturing (and serializing) a latch of its own.
+  */
+object WriteGate {
+  @volatile var entered = new java.util.concurrent.CountDownLatch(1)
+  @volatile var open = new java.util.concurrent.CountDownLatch(1)
+
+  def reset(): Unit = {
+    entered = new java.util.concurrent.CountDownLatch(1)
+    open = new java.util.concurrent.CountDownLatch(1)
+  }
+
+  /** Signal arrival, then wait (at most two minutes) for the gate. */
+  def pass(): Unit = {
+    entered.countDown()
+    open.await(120, java.util.concurrent.TimeUnit.SECONDS)
   }
 }

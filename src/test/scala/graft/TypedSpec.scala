@@ -4,6 +4,7 @@ import org.scalatest.funsuite.AnyFunSuite
 
 import graft.lake.{LakeTable, Typed}
 import graft.maintain.Compaction
+import graft.plans.GraftPlans
 import graft.synth.TranscriptSynth
 
 class TypedSpec extends AnyFunSuite {
@@ -20,7 +21,7 @@ class TypedSpec extends AnyFunSuite {
     assert(first.turn_idx == 0 && Set("user", "assistant", "tool")(first.role))
     assert(turns.count() == t.scan().df.count())
 
-    val snaps = Typed.snapshotsDf(t).collect()
+    val snaps = GraftPlans.snapshots(spark, t).collect()
     assert(snaps.length == 3) // create, append, compact
     assert(snaps.head.getString(4) == "compact") // newest first
     assert(snaps.map(_.getLong(0)).toSeq == snaps.map(_.getLong(0)).sorted.reverse.toSeq)

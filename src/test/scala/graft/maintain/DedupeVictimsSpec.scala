@@ -78,11 +78,11 @@ class DedupeVictimsSpec extends AnyFunSuite {
         victims += expected.size
         withClue(s"rows $rows, again ($c, $ti, $x), minTokens $minTokens: ") {
           val (one, oneWork) = TestSpark.countWork(
-            sorted(Dedupe.computeVictims(t, "exact", minTokens)))
+            Dedupe.computeVictims(t, "exact", minTokens)(sorted))
           assert(one == expected)
           assert(oneWork.exchanges == 0, s"one-task plan: $oneWork")
           val (shuffled, shuffledWork) = TestSpark.withShuffledRewrites(
-            TestSpark.countWork(sorted(Dedupe.computeVictims(t, "exact", minTokens))))
+            TestSpark.countWork(Dedupe.computeVictims(t, "exact", minTokens)(sorted)))
           assert(shuffled == expected)
           assert(shuffledWork.exchanges >= 1, s"shuffled plan: $shuffledWork")
         }
