@@ -114,9 +114,11 @@ object Clustering {
     }
 
   /** Groups containing at least one DIRTY file — a file not present in the
-    * most recent cluster commit's file set (i.e. added by a merge/append/
-    * compaction since). No previous cluster commit (or its metadata already
-    * expired) -> everything is dirty -> full clustering.
+    * most recent cluster commit's file set (i.e. added by a merge/append
+    * drop or a dedupe/delete/compaction rewrite since). Reclustering these
+    * groups is what packs a maintenance cycle's new small files, so the
+    * cycle runs no separate compaction. No previous cluster commit (or its
+    * metadata already expired) -> everything is dirty -> full clustering.
     */
   def dirtyGroups(table: LakeTable,
                   groups: Vector[Vector[DataFile]]): Vector[Vector[DataFile]] = {

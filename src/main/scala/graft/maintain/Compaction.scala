@@ -17,19 +17,11 @@ object Compaction {
   final case class Result(snapshot: Option[Snapshot], bins: Int, resumedBins: Int,
                           filesCompacted: Int)
 
-  /** `excludePaths`: files never considered for packing even when small —
-    * [[Maintenance.runCycle]] passes the last cluster commit's file set so
-    * compaction only packs NEW drop debris, not freshly clustered slabs
-    * (re-packing those would dirty every slab and force the next recluster
-    * to be full instead of incremental).
-    */
   def compact(table: LakeTable, jobId: String,
               smallFileBytes: Long = 32L << 20,
-              targetBytes: Long = 128L << 20,
-              excludePaths: Set[String] = Set.empty): Result = {
+              targetBytes: Long = 128L << 20): Result = {
     val plan = Ledger.planOrResume(table, jobId, "compact", kind = "compact") {
-      val small = table.currentFiles.filter(f =>
-        f.bytes < smallFileBytes && !excludePaths(f.path))
+      val small = table.currentFiles.filter(_.bytes < smallFileBytes)
       val bins = firstFitDecreasing(small, targetBytes)
         .filter(_.size > 1) // a lone small file gains nothing from rewrite
         .map(_.map(_.path))

@@ -202,8 +202,8 @@ object Ledger {
     * and OrphanGc's data-sweep protection — depend on. Losing an OLD
     * committed job's marker only costs the idempotence short-circuit; a
     * replayed ancient jobId re-plans against the current snapshot, which for
-    * incremental clustering/compaction is a cheap no-op, not a correctness
-    * hazard.
+    * the cycle's incremental jobs (dedupe, row retention, recluster) costs
+    * only what changed since, not a correctness hazard.
     */
   def expireJobs(table: LakeTable, olderThanMs: Long,
                  nowMs: Long = System.currentTimeMillis()): ExpireResult = {

@@ -170,7 +170,7 @@ object MergeInto {
     // NOTHING. Writing an empty data file per no-op merge would litter one
     // manifest entry per maintenance cadence tick on sparse drop streams —
     // 60-minute cadence, quiet weekend => dozens of empty files for
-    // compaction to sweep. EXCEPT a schema-only drop: a zero-row batch that
+    // maintenance to sweep. EXCEPT a schema-only drop: a zero-row batch that
     // still carries NEW columns must commit the widened schema (metadata
     // only, no data files) — silently dropping the evolution would lose the
     // one thing that batch said.

@@ -64,9 +64,9 @@ object LakeDemo {
       .select("conv_id", "turn_idx", "text").show(false)
 
     // a second drop (with a planted duplicate-text turn), then ONE
-    // maintenance-cycle call (the cron analogue): compact new debris,
-    // DEDUPE duplicate texts (sketch-store-backed), incrementally recluster
-    // the dirty slab, expire, GC
+    // maintenance-cycle call (the cron analogue): DEDUPE duplicate texts
+    // (sketch-store-backed), incrementally recluster the dirty slab (which
+    // packs the drop's new files too), expire, GC
     val staged2 = Seq(
       ("c00000042", "0", "user", "second drop", "", 200L),
       ("c88888888", "0", "user", "brand new conversation", "", 201L) // dup of c77777777/0

@@ -28,8 +28,8 @@ import graft.synth.TranscriptSynth
   * Templates keep every operation to one rewrite group, so a crashed run
   * leaves no sibling Spark job writing behind the recovery. Dedupe and
   * clustering crash on both rewrite plans, and every crashed run of them,
-  * of MERGE and of the minhash and conversation-unit dedupe must leave no
-  * frame cached.
+  * of MERGE, of the minhash and conversation-unit dedupe and of a whole
+  * maintenance cycle must leave no frame cached.
   */
 class FaultInjectionSpec extends AnyFunSuite {
   private lazy val spark = TestSpark.spark
@@ -210,6 +210,24 @@ class FaultInjectionSpec extends AnyFunSuite {
       Clustering.cluster(t, "fault-cluster", targetFileRows = 500)
     }
     assert(n >= 6 && m >= 6, s"only $n / $m mutating calls")
+  }
+
+  test("crash at every storage step: a whole maintenance cycle finishes when rerun") {
+    val tpl = template("cycle") { t =>
+      t.append(synth(4), "init")
+      t.append(synth(4).where(col("turn_idx") === 0).orderBy("conv_id").limit(2)
+        .withColumn("conv_id", concat(lit("z"), col("conv_id"))), "copies")
+    }
+    // dedupe drops the copies, retention conversation 0, and the first
+    // clustering rewrites what is left; expiry keeps every snapshot, so the
+    // pinned one still reads
+    val n = crashAtEveryStep("cycle", tpl, checkReleased = true) { t =>
+      Maintenance.runCycle(t, "fault-cycle", targetFileRows = 500, retainLast = 100,
+        retentionMs = None, dedupeMode = Some("exact"), rowRetentionMs = Some(1000L),
+        nowMs = TranscriptSynth.BaseTsMillis + 61000L)
+    }
+    // three ledger jobs, each with a plan, task rows, a commit and a marker
+    assert(n >= 20, s"only $n mutating calls")
   }
 
   test("crash at every storage step: expire + orphan GC finish on rerun") {

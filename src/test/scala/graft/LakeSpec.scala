@@ -417,6 +417,23 @@ class LakeSpec extends AnyFunSuite {
     intercept[InterruptedException](DeleteFrom.run(t, "x", "turn_idx = 1", interruptAfter = 0))
     val (x, delete) = TestSpark.countWork(DeleteFrom.run(t, "x", "turn_idx = 1"))
     assert(x.deletedRows > 0 && delete == TestSpark.Work(1, 0))
+    // a whole cycle on a clustered table after two small drops: exact
+    // dedupe, row retention of conversations 0-4, a recluster of the groups
+    // those wrote, expire and GC; it runs no compaction job
+    val c = rewriteTable("rewrite-work-cycle")
+    Clustering.cluster(c, "ck", targetFileRows = 50)
+    for (i <- 0 until 2)
+      c.append(synth(40).where(col("conv_id") === f"c0000003$i")
+        .withColumn("conv_id", concat(lit("n"), col("conv_id")))
+        .withColumn("text", concat(lit("new "), col("text"))).coalesce(1), s"drop$i")
+    val (cr, cycle) = TestSpark.countWork(Maintenance.runCycle(c, "cw",
+      targetFileRows = 50, retentionMs = None, dedupeMode = Some("exact"),
+      rowRetentionMs = Some(1000L), nowMs = TranscriptSynth.BaseTsMillis + 5L * 60000 + 1000L))
+    assert(cr.dedupe.get.duplicateRows > 0 && cr.rowRetention.get.deletedRows > 0)
+    assert(cr.cluster.rowsRewritten > 0)
+    assert(FileIO.Local.list(c.ledgerDir).filter(_.startsWith("cw-")).toSet ==
+      Set("cw-dedupe", "cw-rowexpire", "cw-cluster"))
+    assert(cycle == TestSpark.Work(6, 0), s"whole cycle: $cycle")
     // a recluster reuses the first clustering's cuts: one job per dirty group
     Clustering.cluster(t, "k1", targetFileRows = 50)
     MergeInto.merge(t, spark.createDataFrame(Seq(("c00000003", "0", "EDITED")))
@@ -444,9 +461,8 @@ class LakeSpec extends AnyFunSuite {
         s"c0000000$i,0,user,edit $i,\nn$i,0,user,copy $i,\nn$i,1,user,copy $i,\n" +
         s"o$i,0,user,old $i,2020-01-01 00:00:00\n"
       MergeInto.merge(t, graft.ingest.Ingest.parseContent(spark, drop).records, s"drop-$i")
-      val r = Maintenance.runCycle(t, s"cycle-$i", smallFileBytes = 48L << 10,
-        targetBytes = 192L << 10, targetFileRows = 100, groupTargetBytes = 64L << 10,
-        retentionMs = None, dedupeMode = Some("exact"),
+      val r = Maintenance.runCycle(t, s"cycle-$i", targetFileRows = 100,
+        groupTargetBytes = 64L << 10, retentionMs = None, dedupeMode = Some("exact"),
         rowRetentionMs = Some(1000L), nowMs = 1600000000000L)
       assert(r.dedupe.get.duplicateRows == 1 && r.rowRetention.get.deletedRows >= 1)
       compiles - c0
@@ -1000,9 +1016,8 @@ class LakeSpec extends AnyFunSuite {
     t2.append(synth(40).repartitionByRange(4, col("conv_id"), col("turn_idx"))
       .sortWithinPartitions("conv_id", "turn_idx"), "init")
     val cut2 = TranscriptSynth.BaseTsMillis + 20L * 60000
-    // mirror a real crashed cycle: its compaction phase COMMITTED, then the
-    // row-retention delete died after pinning its plan
-    Compaction.compact(t2, "cyc-x-compact")
+    // mirror a real crashed cycle: the row-retention delete died after
+    // pinning its plan
     intercept[Exception] { // crash AFTER the plan is pinned
       DeleteFrom.run(t2, "cyc-x-rowexpire", s"ts < timestamp_millis(${cut2}L)",
         interruptAfter = 0)
@@ -1484,11 +1499,11 @@ class LakeSpec extends AnyFunSuite {
     val t = LakeTable.create(spark, tmpTable("empty-plan"), TranscriptSynth.schema)
     t.append(synth(60).repartition(6), "init")
     Seq("cyc-1", "cyc-2", "cyc-3").foreach(c => Maintenance.runCycle(t, c, targetFileRows = 100))
-    // cycles 2 and 3 found nothing to compact or recluster: their jobs are
-    // still marked committed, exactly like a job that rewrote files
-    for (c <- Seq("cyc-2", "cyc-3"); op <- Seq("compact", "cluster"))
-      assert(Files.exists(Paths.get(t.ledgerDir, s"$c-$op/commit-$op.json")),
-        s"empty job $c-$op must be marked committed")
+    // cycles 2 and 3 found nothing to recluster: their jobs are still
+    // marked committed, exactly like a job that rewrote files
+    for (c <- Seq("cyc-2", "cyc-3"))
+      assert(Files.exists(Paths.get(t.ledgerDir, s"$c-cluster/commit-cluster.json")),
+        s"empty job $c-cluster must be marked committed")
 
     // replaying a cycle after a later commit answers from the markers
     // instead of failing on a stale empty plan
@@ -1497,13 +1512,13 @@ class LakeSpec extends AnyFunSuite {
     MergeInto.merge(t, staged, "late-drop", targetFileRows = 100)
     val current = t.currentSnapshotId.get
     val replay = Maintenance.runCycle(t, "cyc-2", targetFileRows = 100)
-    assert(replay.compact.bins == 0 && replay.cluster.groups == 0)
+    assert(replay.cluster.groups == 0)
     assert(t.currentSnapshotId.get == current, "a replayed cycle commits nothing")
 
     // marked jobs age out of the ledger like any finished job
     val swept = Ledger.expireJobs(t, olderThanMs = 0,
       nowMs = System.currentTimeMillis() + 10L * 24 * 3600 * 1000)
-    val all = for (c <- 1 to 3; op <- Seq("cluster", "compact")) yield s"cyc-$c-$op"
+    val all = for (c <- 1 to 3) yield s"cyc-$c-cluster"
     assert(swept.deletedJobs.sorted == all.sorted, s"swept ${swept.deletedJobs}")
   }
 
@@ -1849,17 +1864,18 @@ class LakeSpec extends AnyFunSuite {
     }
   }
 
-  test("maintenance cycle: compact+cluster+expire+gc in one idempotent call") {
+  test("maintenance cycle: cluster+expire+gc in one idempotent call") {
     import spark.implicits._
     val t = LakeTable.create(spark, tmpTable("cycle"), TranscriptSynth.schema)
     t.append(synth(600).repartition(30), "init") // 30 small files
     val pre = sortedRows(t.scan().df)
 
-    val r1 = Maintenance.runCycle(t, "cycle-1",
-      smallFileBytes = 32L << 20, targetFileRows = 100,
+    val r1 = Maintenance.runCycle(t, "cycle-1", targetFileRows = 100,
       groupTargetBytes = 64L << 10, retainLast = 2)
-    assert(r1.compact.filesCompacted > 0)
     assert(r1.cluster.rowsRewritten > 0, "first cluster is full")
+    // the recluster packed the 30 small files: no other job wrote any
+    val clustered = Ledger.readTasks(t, "cycle-1-cluster").values.flatMap(_.outFiles)
+    assert(t.currentFiles.map(_.path).toSet == clustered.map(_.path).toSet)
     assert(sortedRows(t.scan().df) == pre, "cycle must not change content")
     assert(t.scan(convRange = Some(("c00000100", "c00000109"))).prune.ratio >= 0.9)
 
@@ -1878,7 +1894,6 @@ class LakeSpec extends AnyFunSuite {
     val r2b = Maintenance.runCycle(t, "cycle-2", targetFileRows = 100,
       groupTargetBytes = 64L << 10, retainLast = 2)
     assert(r2b.cluster.rowsRewritten == 0L)
-    assert(r2b.compact.resumedBins == 0 && r2b.compact.bins == 0)
     println(s"[cycle] ${r2.summary}")
   }
 
