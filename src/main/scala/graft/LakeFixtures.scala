@@ -92,8 +92,7 @@ object LakeFixtures {
       graft.maintain.Dedupe.runPass(t, s"dedupe-$tag", targetFileRows = 4000)
       val post = t.currentSnapshotId.get
       graft.maintain.DeleteFrom.run(t, s"delete-$tag",
-        "conv_id BETWEEN 'u000100' AND 'u000119'",
-        convRange = Some(("u000100", "u000119")), targetFileRows = 4000)
+        "conv_id BETWEEN 'u000100' AND 'u000119'", targetFileRows = 4000)
       val preRet = t.currentSnapshotId.get
       // retention cutoff = min event time + 1 day, taken from the MANIFEST
       // stats (no data scan) — the oracle states the same bound in SQL

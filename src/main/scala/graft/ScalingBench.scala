@@ -25,8 +25,8 @@ import graft.synth.TranscriptSynth
   *     /dev/shm/... to measure with node-local-speed storage; default
   *     target/scalebench on the shared sandbox disk).
   *
-  * Usage: `sbt "runMain graft.ScalingBench [nConvs]"` (default 60000
-  * conversations ~ 0.8M turns; deterministic seed 42).
+  * Usage: `scripts/scaling_bench.sh [nConvs]`, which runs the modes of
+  * [[main]] (deterministic seed 42).
   */
 object ScalingBench {
 
@@ -161,8 +161,7 @@ object ScalingBench {
     *     `taskset -c ...` so the JVM genuinely sees N CPUs: a local[8]
     *     session on a 32-core box otherwise still burns 32 cores in GC /
     *     shuffle / IO threads and flatters the small run);
-    *   `report <jsonN> <json4N>` — combine two pinned runs into BENCH.md;
-    *   `<nConvs>` — legacy one-JVM both-sizes run (unpinned, approximate).
+    *   `report <jsonN> <json4N>` — combine two pinned runs into BENCH.md.
     */
   def main(args: Array[String]): Unit = args match {
     case Array("single", cores, nConvs, out) =>
@@ -171,13 +170,13 @@ object ScalingBench {
       Files.writeString(Paths.get(out), resultJson(r))
       println(resultJson(r))
     case Array("report", p8, p32) =>
-      report(resultFromJson(p8), resultFromJson(p32), pinned = true)
+      report(resultFromJson(p8), resultFromJson(p32))
     case _ =>
-      val nConvs = args.headOption.map(_.toInt).getOrElse(60000)
-      report(runAt(8, nConvs), runAt(32, nConvs), pinned = false)
+      throw new IllegalArgumentException(
+        "usage: ScalingBench single <cores> <nConvs> <outJson> | report <jsonN> <json4N>")
   }
 
-  def report(r8: RunResult, r32: RunResult, pinned: Boolean): Unit = {
+  def report(r8: RunResult, r32: RunResult): Unit = {
     val factor = r32.cores.toDouble / r8.cores
     val efficiency = r32.throughput / (factor * r8.throughput)
     // Same job, same data: ideal scaling spends the SAME total CPU seconds
@@ -191,7 +190,7 @@ object ScalingBench {
 
     val md =
       f"""
-         |## Maintenance scaling run (${java.time.Instant.now()}${if (pinned) ", CPU-pinned via taskset" else ", unpinned"}, $storage)
+         |## Maintenance scaling run (${java.time.Instant.now()}, CPU-pinned via taskset, $storage)
          |
          |Identical compact+cluster job, identical deterministic input
          |(${r8.rows} turns, seed 42), two parallelism levels

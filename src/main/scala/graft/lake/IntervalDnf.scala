@@ -41,11 +41,6 @@ object IntervalDnf {
         case _ => true // missing stats: always scanned (safe)
       }
     def isAll: Boolean = lo.isEmpty && hi.isEmpty
-    /** Bounds lie INSIDE [l, h] — i.e. the predicate provably cannot match
-      * outside that range. An unbounded side is NOT contained.
-      */
-    def within(l: T, h: T)(implicit ord: Ordering[T]): Boolean =
-      lo.exists(ord.gteq(_, l)) && hi.exists(ord.lteq(_, h))
     def intersect(o: Bounds[T])(implicit ord: Ordering[T]): Option[Bounds[T]] = {
       val nlo = (lo.toSeq ++ o.lo.toSeq).reduceOption(ord.max(_, _))
       val nhi = (hi.toSeq ++ o.hi.toSeq).reduceOption(ord.min(_, _))
@@ -75,8 +70,6 @@ object IntervalDnf {
   object Conj {
     val all: Conj =
       Conj(Bounds[String](None, None), Bounds[Int](None, None), Bounds[Long](None, None))
-    def convRange(lo: String, hi: String): Conj =
-      all.copy(conv = Bounds(Some(lo), Some(hi)))
   }
 
   /** Resolve + constant-fold a predicate's SQL text against a table schema,

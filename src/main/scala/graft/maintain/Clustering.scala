@@ -48,27 +48,25 @@ object Clustering {
     * locality, no curve jumps). Persisted in the plan so a resumed job
     * keeps the exact curve it started with.
     *
-    * `incremental`: when true (default) and the table was already
-    * clustered, ONLY groups containing at least one file added since that
-    * cluster commit are rewritten — clean slabs carry forward untouched
-    * (files AND manifests). A merge touching 1% of conversations makes the
-    * follow-up recluster cost ~1% of the table, not 100% — without this,
-    * the maintenance cadence at 10^12 turns rewrites the world after every
+    * Incremental: once the table was clustered, ONLY groups containing at
+    * least one file added since that cluster commit are rewritten
+    * ([[dirtyGroups]]) — clean slabs carry forward untouched (files AND
+    * manifests). A merge touching 1% of conversations makes the follow-up
+    * recluster cost ~1% of the table, not 100% — without this, the
+    * maintenance cadence at 10^12 turns rewrites the world after every
     * drop. The first-ever clustering is always full.
     */
   def cluster(table: LakeTable, jobId: String,
               targetFileRows: Long = 1L << 20,
               groupTargetBytes: Long = 256L << 20,
               interruptAfter: Int = Int.MaxValue,
-              curve: String = "z",
-              incremental: Boolean = true): Result = {
+              curve: String = "z"): Result = {
     // Plan (or resume a previously persisted plan — NEVER replan mid-job;
     // the quantile cuts ARE the curve, so they persist with the plan).
     val plan = Ledger.planOrResume(table, jobId, "cluster", kind = "cluster") {
       val files = table.currentFiles
         .sortBy(f => (f.minConv.getOrElse(""), f.minTurn.getOrElse(0)))
-      val allGroups = planGroups(files, groupTargetBytes)
-      val toDo = if (incremental) dirtyGroups(table, allGroups) else allGroups
+      val toDo = dirtyGroups(table, planGroups(files, groupTargetBytes))
       // quantiles drift slowly under merges and only steer layout, never
       // correctness: a recluster reuses the last job's cuts, no sample pass
       val (convCuts, turnCuts) = previousCuts(table).getOrElse(quantileCuts(table, files))

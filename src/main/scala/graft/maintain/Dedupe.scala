@@ -59,6 +59,12 @@ object Dedupe {
   /** The per-file victim counts sidecar, beside the ledger plan. */
   private val CountsFile = "dedupe-victims.json"
 
+  /** Minhash signature length, and the estimated Jaccard a candidate pair
+    * must reach: ceil(32 * 0.9) = 29 agreeing positions.
+    */
+  private val SigHashes = 32
+  private val MinJaccard = 0.9
+
   /** Remove duplicate-text turns from the current snapshot. Idempotent per
     * (jobId): a committed pass returns its snapshot without rescanning.
     */
@@ -66,7 +72,6 @@ object Dedupe {
               mode: String = "exact",
               minTokens: Int = 1,
               unit: String = "turn",
-              minJaccard: Double = 0.9,
               maxIters: Int = 50,
               maxConvChars: Long = 8L << 20,
               targetFileRows: Long = 1L << 20,
@@ -92,27 +97,18 @@ object Dedupe {
       else s"dedupe:$mode:$unit:$minTokens"
 
     Ledger.deleteRows(table, jobId, "dedupe", planKind, CountsFile,
-      targetFileRows, groupTargetBytes, interruptAfter) { rebuild =>
-      // a plan written before the counts sidecar existed has none: unlike
-      // DELETE's, these counts rebuild from the published victim set (the
-      // oversized-conversation count does not, and reads 0)
+      targetFileRows, groupTargetBytes, interruptAfter) {
+      // atomic publish: write to a tmp dir, rename over — a crash
+      // mid-write can never leave a torn victim set a resume would trust
+      val tmp = victimsDir + ".tmp"
+      table.io.delete(tmp)
+      def write(victims: DataFrame): Unit = victims.write.mode("overwrite").parquet(tmp)
       val skipped =
-        if (rebuild) 0L
-        else {
-          // atomic publish: write to a tmp dir, rename over — a crash
-          // mid-write can never leave a torn victim set a resume would trust
-          val tmp = victimsDir + ".tmp"
-          table.io.delete(tmp)
-          def write(victims: DataFrame): Unit = victims.write.mode("overwrite").parquet(tmp)
-          val oversized =
-            if (unit == "conversation")
-              computeConvVictims(table, mode, minTokens, minJaccard, maxIters,
-                maxConvChars)(write)
-            else { computeVictims(table, mode, minTokens, minJaccard, maxIters)(write); 0L }
-          table.io.delete(victimsDir)
-          table.io.rename(tmp, victimsDir)
-          oversized
-        }
+        if (unit == "conversation")
+          computeConvVictims(table, mode, minTokens, maxIters, maxConvChars)(write)
+        else { computeVictims(table, mode, minTokens, maxIters)(write); 0L }
+      table.io.delete(victimsDir)
+      table.io.rename(tmp, victimsDir)
       // touched files = those holding at least one victim row: ONE
       // aggregate over the published set, in one task when it fits one
       val setBytes = table.io.list(victimsDir)
@@ -166,7 +162,7 @@ object Dedupe {
     * SKETCH graph:
     *   - minhash: LSH banding proposes candidate signature pairs, then the
     *     estimated-Jaccard VERIFY (agreeing positions are an unbiased
-    *     Jaccard estimator; requiring >= ceil(32 * minJaccard) turns raw
+    *     Jaccard estimator; requiring >= ceil(32 * MinJaccard) turns raw
     *     band collisions — a J~0.5 pair still shares one of 8 bands ~40%
     *     of the time — into high-confidence edges, and exact duplicates
     *     always pass);
@@ -189,11 +185,10 @@ object Dedupe {
     * drive deletions.
     */
   private def sketchComponents[T](df: DataFrame, keyCol: String, mode: String,
-                                  minJaccard: Double, maxIters: Int,
-                                  what: String)(use: DataFrame => T): T =
+                                  maxIters: Int, what: String)(use: DataFrame => T): T =
     Cached.withCached(df.groupBy(col("__sk")).agg(min(col(keyCol)).as("__nid"))) { nodes =>
       nodes.count() // materialize once for the three consumers below
-      val need = math.ceil(32 * minJaccard).toInt
+      val need = math.ceil(SigHashes * MinJaccard).toInt
       val pairs =
         if (mode == "minhash") {
           // pair set is cap-bounded and post-verify sparse: the two
@@ -232,7 +227,6 @@ object Dedupe {
     */
   private[maintain] def computeVictims[T](table: LakeTable, mode: String,
                                           minTokens: Int,
-                                          minJaccard: Double = 0.9,
                                           maxIters: Int = 50)(use: DataFrame => T): T = {
     require(table.currentFiles.nonEmpty, s"no data files to dedupe at ${table.root}")
 
@@ -282,7 +276,7 @@ object Dedupe {
               col(sketchCol).as("__sk"),
               concat_ws("\u0001", col("conv_id"), col("turn_idx").cast("string"))
                 .as("__k"))) { keyed =>
-          sketchComponents(keyed, "__k", mode, minJaccard, maxIters, what = mode) { comp =>
+          sketchComponents(keyed, "__k", mode, maxIters, what = mode) { comp =>
             // group_id IS the component's keeper key (min member key): a
             // row is a victim iff its own key differs — one membership
             // join, no separate keeper aggregation
@@ -312,10 +306,8 @@ object Dedupe {
     * would go stale on any merge touching the conversation.
     */
   private[maintain] def computeConvVictims(table: LakeTable, mode: String,
-                                           minTokens: Int,
-                                           minJaccard: Double = 0.9,
-                                           maxIters: Int = 50,
-                                           maxConvChars: Long = 8L << 20)
+                                           minTokens: Int, maxIters: Int,
+                                           maxConvChars: Long)
                                           (use: DataFrame => Unit): Long = {
     val paths = table.currentFiles.map(f => table.absData(f.path))
     Cached.withCached(table.readData(paths)
@@ -363,10 +355,10 @@ object Dedupe {
           // member pairs
           val convSk = (if (mode == "minhash")
               conv.withColumn("__sk",
-                Dedup.minhashSignatureNative(col("__ctext"), 3, 32))
+                Dedup.minhashSignatureNative(col("__ctext"), 3, SigHashes))
             else conv.withColumn("__sk", Dedup.simhash64Native(col("__ctext"))))
             .select(col("conv_id"), col("__sk"))
-          sketchComponents(convSk, "conv_id", mode, minJaccard, maxIters,
+          sketchComponents(convSk, "conv_id", mode, maxIters,
               what = s"$mode, conversation") { comp =>
             Cached.withCached(comp.where(col("conv_id") =!= col("group_id"))
                 .select("conv_id")) { v =>

@@ -34,10 +34,8 @@ import graft.lake.{DataFile, IntervalDnf, LakeTable, Snapshot}
   * The predicate is SQL text (the natural `DELETE FROM t WHERE <pred>`
   * surface), persisted verbatim in the job plan AND the counts sidecar so
   * a resumed job provably re-applies the same condition; a resume with a
-  * DIFFERENT predicate or range fails loudly. Optional `convRange`/
-  * `turnRange` hints are VALIDATED against the predicate's own boxes — a
-  * hint narrower than what the predicate can match would silently leave
-  * matching rows alive, so it is rejected instead of trusted.
+  * DIFFERENT predicate fails loudly, and so does one whose counts sidecar
+  * is missing.
   */
 object DeleteFrom {
 
@@ -49,16 +47,11 @@ object DeleteFrom {
 
   def run(table: LakeTable, jobId: String,
           predicateSql: String,
-          convRange: Option[(String, String)] = None,
-          turnRange: Option[(Int, Int)] = None,
           targetFileRows: Long = 1L << 20,
           groupTargetBytes: Long = 256L << 20,
           interruptAfter: Int = Int.MaxValue): Result = {
     val predSql = predicateSql.trim
     require(predSql.nonEmpty, "DELETE FROM needs a predicate")
-    val planKind = "delete:" + predSql +
-      convRange.map(r => s"|conv:${r._1}..${r._2}").getOrElse("") +
-      turnRange.map(r => s"|turn:${r._1}..${r._2}").getOrElse("")
 
     val snap0 = table.currentSnapshot.getOrElse(
       throw new IllegalStateException(s"no table at ${table.root}"))
@@ -71,29 +64,11 @@ object DeleteFrom {
     def fileCount(s: Snapshot): Long = s.manifests.map(_.entryCount).sum
     val totalFiles = fileCount(snap0)
 
-    Ledger.deleteRows(table, jobId, "delete", planKind, VictimsFile,
-      targetFileRows, groupTargetBytes, interruptAfter) { rebuild =>
-      // unlike dedupe's, these counts have nothing to rebuild from: the
-      // sidecar alone pins the predicate a resume re-applies
-      if (rebuild) throw new IllegalStateException(
-        s"plan for $jobId exists but its victim counts ($VictimsFile) are missing")
-      // The prune boxes come from the PREDICATE — hints are validated,
-      // never trusted: a hint that cannot contain every derived box means
-      // the predicate may match outside it (a partial DELETE that would
-      // look successful), so fail loudly instead.
+    Ledger.deleteRows(table, jobId, "delete", "delete:" + predSql, VictimsFile,
+      targetFileRows, groupTargetBytes, interruptAfter) {
+      // the prune boxes come from the predicate itself
       val boxes = IntervalDnf.extract(
         IntervalDnf.analyzedCondition(table.spark, table.schema.toStruct, predSql))
-      convRange.foreach { case (lo, hi) =>
-        require(boxes.forall(_.conv.within(lo, hi)(IntervalDnf.ConvOrder)),
-          s"convRange hint [$lo..$hi] is narrower than what the predicate " +
-            s"'$predSql' can match — a hinted DELETE must never silently " +
-            "skip matching rows; drop the hint or widen it")
-      }
-      turnRange.foreach { case (lo, hi) =>
-        require(boxes.forall(_.turn.within(lo, hi)),
-          s"turnRange hint [$lo..$hi] is narrower than what the predicate " +
-            s"'$predSql' can match; drop the hint or widen it")
-      }
       // ONE pass over the candidates: matching rows per file, in one task
       // when they fit one. Catalyst prunes the read to the predicate's
       // columns; the result is metadata-sized (one row per file WITH
@@ -124,8 +99,7 @@ object DeleteFrom {
       case Right(d) =>
         Result(d.snapshot, d.rows, d.touchedFiles, totalFiles - d.touchedFiles,
           d.resumedGroups, candidateFiles = d.touchedFiles, totalFiles = totalFiles,
-          prunedCandidateFiles = Option(d.sidecar.get("pruned_candidates"))
-            .map(_.asLong).getOrElse(d.touchedFiles.toLong))
+          prunedCandidateFiles = d.sidecar.get("pruned_candidates").asLong)
     }
   }
 

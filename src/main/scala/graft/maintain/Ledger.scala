@@ -46,37 +46,30 @@ object Ledger {
                         curve: String = "z", kind: String = "")
 
   /** Persist the job plan (task -> input files, base snapshot, quantile
-    * cuts) before any work starts; resume MUST reuse the stored plan — and
-    * the stored CURVE — not recompute them.
+    * cuts, curve, kind) before any work starts; resume MUST reuse the
+    * stored plan — and the stored CURVE — not recompute them.
     */
-  def writePlan(table: LakeTable, jobId: String, baseSnapshotId: Long,
-                groups: Vector[Vector[String]],
-                convCuts: Array[Long] = Array.empty,
-                turnCuts: Array[Long] = Array.empty,
-                curve: String = "z", kind: String = ""): Unit = {
+  def writePlan(table: LakeTable, jobId: String, plan: Plan): Unit = {
     val o = MetaJson.mapper.createObjectNode()
     o.put("job_id", jobId)
-    o.put("base_snapshot_id", baseSnapshotId)
-    o.put("curve", curve)
-    o.put("kind", kind)
+    o.put("base_snapshot_id", plan.baseSnapshotId)
+    o.put("curve", plan.curve)
+    o.put("kind", plan.kind)
     val arr = o.putArray("groups")
-    groups.foreach { g => val ga = arr.addArray(); g.foreach(ga.add) }
-    val cc = o.putArray("conv_cuts"); convCuts.foreach(cc.add)
-    val tc = o.putArray("turn_cuts"); turnCuts.foreach(tc.add)
+    plan.groups.foreach { g => val ga = arr.addArray(); g.foreach(ga.add) }
+    val cc = o.putArray("conv_cuts"); plan.convCuts.foreach(cc.add)
+    val tc = o.putArray("turn_cuts"); plan.turnCuts.foreach(tc.add)
     atomicWrite(table, jobId, "plan.json", MetaJson.write(o))
   }
 
+  /** The plan [[writePlan]] persisted for `jobId`, every field as written. */
   def readPlan(table: LakeTable, jobId: String): Option[Plan] =
     readJobFile(table, jobId, "plan.json").map { n =>
-      val groups = n.get("groups").elements().asScala.map { g =>
-        g.elements().asScala.map(_.asText).toVector
-      }.toVector
-      def longs(k: String): Array[Long] = Option(n.get(k)).map(
-        _.elements().asScala.map(_.asLong).toArray).getOrElse(Array.empty)
-      Plan(n.get("base_snapshot_id").asLong, groups,
-        longs("conv_cuts"), longs("turn_cuts"),
-        Option(n.get("curve")).map(_.asText).getOrElse("z"),
-        Option(n.get("kind")).map(_.asText).getOrElse(""))
+      def strings(a: JsonNode) = a.elements().asScala.map(_.asText).toVector
+      def longs(k: String) = n.get(k).elements().asScala.map(_.asLong).toArray
+      Plan(n.get("base_snapshot_id").asLong,
+        n.get("groups").elements().asScala.map(strings).toVector,
+        longs("conv_cuts"), longs("turn_cuts"), n.get("curve").asText, n.get("kind").asText)
     }
 
   // ---- job commit marker (O(1) idempotence) ------------------------------
@@ -107,13 +100,7 @@ object Ledger {
     */
   def committedJobSnapshot(table: LakeTable, jobId: String,
                            operation: String): Option[Snapshot] = {
-    // per-operation marker first, then the legacy single marker (matching
-    // operation only). A marker for a DIFFERENT operation proves nothing
-    // about this one — fall through to the chain walk, never early-None.
-    val marker = readJobFile(table, jobId, s"commit-$operation.json")
-      .orElse(readJobFile(table, jobId, "commit.json"))
-      .filter(_.get("operation").asText == operation)
-    marker.foreach { n =>
+    readJobFile(table, jobId, s"commit-$operation.json").foreach { n =>
       val sid = n.get("snapshot_id").asLong
       return try Some(table.snapshot(sid))
       catch { // snapshot metadata already expired: the job is still DONE —
@@ -213,7 +200,7 @@ object Ledger {
       val dir = jobDir(table, jobId)
       try {
         val files = table.io.list(dir) // empty for a stray non-directory
-        val committed = files.exists(n => n.startsWith("commit") && n.endsWith(".json"))
+        val committed = files.exists(n => n.startsWith("commit-") && n.endsWith(".json"))
         val allOld = files.nonEmpty && files.forall(n =>
           table.io.stat(FileIO.path(dir, n)).forall(_.mtimeMs < nowMs - olderThanMs))
         if (committed && allOld) {
@@ -236,17 +223,15 @@ object Ledger {
     * A stored plan is reused, NEVER recomputed (its groups, cuts and curve
     * are the job), and must match this invocation: same `kind` — the
     * operation plus whatever parameters change its meaning — and a base
-    * snapshot that is still current. A kind that is just the operation
-    * name pins no parameters, so it also accepts a legacy kind-less plan.
-    * `compute` runs only when no plan exists; its plan is persisted (with
-    * `kind`) before any group starts.
+    * snapshot that is still current. `compute` runs only when no plan
+    * exists; its plan is persisted (with `kind`) before any group starts.
     */
   def planOrResume(table: LakeTable, jobId: String, operation: String,
                    kind: String)(compute: => Plan): Either[Snapshot, Plan] = {
     committedJobSnapshot(table, jobId, operation).foreach(s => return Left(s))
     val plan = readPlan(table, jobId) match {
       case Some(p) =>
-        require(p.kind == kind || (p.kind.isEmpty && kind == operation),
+        require(p.kind == kind,
           s"ledger plan for $jobId is '${p.kind}' but this invocation is " +
             s"'$kind' — job-id collision, changed parameters or changed " +
             "predicate; use a fresh jobId")
@@ -256,8 +241,7 @@ object Ledger {
         p
       case None =>
         val p = compute.copy(kind = kind)
-        writePlan(table, jobId, p.baseSnapshotId, p.groups, p.convCuts,
-          p.turnCuts, p.curve, p.kind)
+        writePlan(table, jobId, p)
         p
     }
     if (plan.groups.forall(_.isEmpty)) {
@@ -344,14 +328,15 @@ object Ledger {
                            groups: Int, resumedGroups: Int, sidecar: JsonNode)
 
   /** THE row delete of DELETE FROM and dedupe: rewrite only the data files
-    * holding counted rows. A new plan runs `count(false)` and writes the
-    * sidecar `countsFile` BEFORE the plan, so a plan on disk implies its
-    * counts; groups cut the counted files in key order at
-    * `groupTargetBytes`. A resume whose sidecar is missing runs
-    * `count(true)`, which rebuilds it from what the plan published or
-    * refuses. Each group writes `survivors(paths, oneTask)` sorted on the
-    * key ([[LakeTable.writeSorted]], `oneTask` = [[LakeTable.fitsOneTask]]
-    * of its input) and must write its rows less its counts, or nothing
+    * holding counted rows. A new plan runs `count` and writes the sidecar
+    * `countsFile` BEFORE the plan, so a plan on disk implies its counts;
+    * groups cut the counted files in key order at `groupTargetBytes`. A
+    * resume whose sidecar is missing (an older engine's plan, or a file
+    * deleted by hand) throws `IllegalStateException` and commits nothing:
+    * the sidecar alone pins what the plan counted. Each group writes
+    * `survivors(paths, oneTask)` sorted on the key
+    * ([[LakeTable.writeSorted]], `oneTask` = [[LakeTable.fitsOneTask]] of
+    * its input) and must write its rows less its counts, or nothing
     * commits; an all-deleted group writes no file (an empty part would
     * enter the manifest stats-less, never pruned). The summary carries the
     * sidecar's facts, `deleted_rows` and `touched_files`. Data work is
@@ -360,9 +345,16 @@ object Ledger {
     */
   def deleteRows(table: LakeTable, jobId: String, operation: String, kind: String,
                  countsFile: String, targetFileRows: Long, groupTargetBytes: Long,
-                 interruptAfter: Int)(count: Boolean => Counted)(
+                 interruptAfter: Int)(count: => Counted)(
       survivors: (Vector[String], Boolean) => DataFrame): Either[Snapshot, Deleted] = {
-    def writeCounts(c: Counted): JsonNode = {
+    val plan = planOrResume(table, jobId, operation, kind) {
+      val before = table.currentSnapshotId.get
+      val c = count
+      // a near-dup count may first cover the table with sketches, a
+      // metadata-only commit: the plan is based on the snapshot it made,
+      // or a resume would find the plan stale
+      val base = table.currentSnapshot
+        .filter(s => s.operation == "sketch" && s.parentId == before).fold(before)(_.id)
       val o = MetaJson.mapper.createObjectNode()
       c.facts.foreach {
         case (k, v: Long) => o.put(k, v)
@@ -372,17 +364,6 @@ object Ledger {
       c.perFile.toSeq.map { case (f, n) => f.path -> n }.sorted
         .foreach { case (p, n) => counts.put(p, n) }
       atomicWrite(table, jobId, countsFile, MetaJson.write(o))
-      o
-    }
-    val plan = planOrResume(table, jobId, operation, kind) {
-      val before = table.currentSnapshotId.get
-      val c = count(false)
-      // a near-dup count may first cover the table with sketches, a
-      // metadata-only commit: the plan is based on the snapshot it made,
-      // or a resume would find the plan stale
-      val base = table.currentSnapshot
-        .filter(s => s.operation == "sketch" && s.parentId == before).fold(before)(_.id)
-      writeCounts(c)
       val files = c.perFile.keys.toVector
         .sortBy(f => (f.minConv.getOrElse(""), f.minTurn.getOrElse(0), f.path))
       Plan(base, Clustering.greedyGroups(files, groupTargetBytes).map(_.map(_.path)))
@@ -390,7 +371,9 @@ object Ledger {
       case Left(s) => return Left(s)
       case Right(p) => p
     }
-    val sidecar = readJobFile(table, jobId, countsFile).getOrElse(writeCounts(count(true)))
+    val sidecar = readJobFile(table, jobId, countsFile).getOrElse(
+      throw new IllegalStateException(
+        s"plan for $jobId exists but its victim counts ($countsFile) are missing"))
     val counts = sidecar.get("counts").fields().asScala
       .map(e => e.getKey -> e.getValue.asLong).toMap
     val touched = plan.groups.map(_.size).sum

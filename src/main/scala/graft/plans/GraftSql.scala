@@ -85,20 +85,22 @@ class GraftSqlParser(session: SparkSession, delegate: ParserInterface)
     * condition before it is re-rendered to SQL, because DeleteFrom.run
     * resolves the predicate against the BARE table schema (an aliased
     * `DELETE FROM transcripts t WHERE t.conv_id = ...` otherwise fails
-    * analysis on every reference).
+    * analysis on every reference). Only the leading name part is a
+    * qualifier (a registered target is a one-part name, see
+    * [[GraftSqlRegistry.lookup]]); the rest may be a struct field path
+    * (`t.meta.lang`).
     */
   private def stripTargetQualifier(cond: Expression,
                                    target: LogicalPlan): Expression = {
-    val quals: Set[Seq[String]] = (target match {
-      case SubqueryAlias(ident, u: UnresolvedRelation) =>
-        Seq(Seq(ident.name), u.multipartIdentifier)
-      case u: UnresolvedRelation => Seq(u.multipartIdentifier)
+    def lower(s: String) = s.toLowerCase(java.util.Locale.ROOT)
+    val quals: Set[String] = (target match {
+      case SubqueryAlias(ident, u: UnresolvedRelation) => ident.name +: u.multipartIdentifier
+      case u: UnresolvedRelation => u.multipartIdentifier
       case _ => Seq.empty
-    }).map(_.map(_.toLowerCase(java.util.Locale.ROOT))).toSet
+    }).map(lower).toSet
     cond.transform {
-      case a: UnresolvedAttribute if a.nameParts.length > 1 &&
-          quals(a.nameParts.init.map(_.toLowerCase(java.util.Locale.ROOT))) =>
-        UnresolvedAttribute(Seq(a.nameParts.last))
+      case a: UnresolvedAttribute if a.nameParts.length > 1 && quals(lower(a.nameParts.head)) =>
+        UnresolvedAttribute(a.nameParts.tail)
     }
   }
 

@@ -462,8 +462,12 @@ class VectorOpsSpec extends AnyFunSuite {
       s"cap must shrink the degenerate bucket; kept ${kept.length}")
     assert(q1.length == kept.length * math.min(2, kept.length - 1),
       "every kept member still gets its top-k within the sampled bucket")
-    val q2 = VectorOps.lshBucketTopK(vecs, "id", "v", 2, maxBucket = 5)
-      .select("query_id").as[Long].collect().sorted.toSeq
+    // both results come back persisted: released, so the repeat recomputes
+    // instead of reading `capped`'s cache
+    uncapped.unpersist(); capped.unpersist()
+    val again = VectorOps.lshBucketTopK(vecs, "id", "v", 2, maxBucket = 5)
+    val q2 = again.select("query_id").as[Long].collect().sorted.toSeq
+    again.unpersist()
     assert(q1 == q2, "down-sampling is deterministic")
   }
 

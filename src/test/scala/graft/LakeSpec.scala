@@ -503,19 +503,19 @@ class LakeSpec extends AnyFunSuite {
     }
   }
 
-  test("dedupe rebuilds a plan's missing victim counts; delete fails loudly without them") {
-    val (t, ref) = (dedupeTable("missing-counts"), dedupeTable("missing-counts-ref"))
-    val expected = Dedupe.runPass(ref, "dm")
-    // a plan written before the counts sidecar existed
-    intercept[InterruptedException](Dedupe.runPass(t, "dm", interruptAfter = 0))
-    FileIO.Local.delete(FileIO.path(t.ledgerDir, "dm", "dedupe-victims.json"))
-    val r = Dedupe.runPass(t, "dm")
-    assert(r.copy(snapshot = null) == expected.copy(snapshot = null))
-    assert(sortedRows(t.scan().df) == sortedRows(ref.scan().df))
-    intercept[InterruptedException](DeleteFrom.run(t, "xm", "turn_idx = 0", interruptAfter = 0))
-    FileIO.Local.delete(FileIO.path(t.ledgerDir, "xm", "delete-victims.json"))
-    val e2 = intercept[IllegalStateException](DeleteFrom.run(t, "xm", "turn_idx = 0"))
-    assert(e2.getMessage.contains("victim counts"))
+  test("dedupe and delete refuse to resume a plan whose victim counts are missing") {
+    val t = dedupeTable("missing-counts")
+    def refused(jobId: String, sidecar: String)(run: => Any): Unit = {
+      intercept[InterruptedException](run) // plans, then crashes before any group
+      FileIO.Local.delete(FileIO.path(t.ledgerDir, jobId, sidecar))
+      val before = t.currentSnapshotId
+      val e = intercept[IllegalStateException](run)
+      assert(e.getMessage == s"plan for $jobId exists but its victim counts ($sidecar) are missing")
+      assert(t.currentSnapshotId == before, "a refused resume commits nothing")
+    }
+    refused("dm", "dedupe-victims.json")(Dedupe.runPass(t, "dm", interruptAfter = 0))
+    refused("xm", "delete-victims.json")(
+      DeleteFrom.run(t, "xm", "turn_idx = 0", interruptAfter = 0))
   }
 
   private def dedupeFixtureRows: Seq[(String, Int, String, String, String, java.sql.Timestamp)] = {
@@ -903,23 +903,21 @@ class LakeSpec extends AnyFunSuite {
     val expectSurvive = data.where(
       !(col("conv_id").between("c00000010", "c00000019") && col("role") === "tool")).count()
 
-    // range-hinted predicate delete: only overlapping files are rewritten
+    // range predicate delete: only overlapping files are rewritten
     val res = DeleteFrom.run(t, "del1",
-      "conv_id BETWEEN 'c00000010' AND 'c00000019' AND role = 'tool'",
-      convRange = Some(("c00000010", "c00000019")))
+      "conv_id BETWEEN 'c00000010' AND 'c00000019' AND role = 'tool'")
     assert(res.deletedRows > 0)
     assert(t.scan().df.count() == expectSurvive)
     assert(t.scan().df.where(col("conv_id").between("c00000010", "c00000019") &&
       col("role") === "tool").count() == 0)
-    // files outside the hinted range carried forward verbatim
+    // files outside the predicate's range carried forward verbatim
     val filesAfter = t.currentFiles.map(_.path).toSet
     assert((filesBefore & filesAfter).size >= 7,
       s"non-overlapping files must carry: ${(filesBefore & filesAfter).size}")
     // snapshot isolation + idempotent replay
     assert(t.scan(snapshotId = Some(pre)).df.count() == data.count())
     val replay = DeleteFrom.run(t, "del1",
-      "conv_id BETWEEN 'c00000010' AND 'c00000019' AND role = 'tool'",
-      convRange = Some(("c00000010", "c00000019")))
+      "conv_id BETWEEN 'c00000010' AND 'c00000019' AND role = 'tool'")
     assert(replay.snapshot.id == res.snapshot.id && replay.deletedRows == 0)
 
     // a changed predicate on an IN-FLIGHT job fails loudly (a COMMITTED
@@ -1031,29 +1029,6 @@ class LakeSpec extends AnyFunSuite {
     assert(r.rowRetention.exists(_.deletedRows > 0))
     assert(t2.scan().df
       .where(col("ts") < timestamp_millis(lit(cut2))).count() == 0)
-  }
-
-  test("DELETE FROM: a hint narrower than the predicate fails loudly") {
-    val t = LakeTable.create(spark, tmpTable("delete-badhint"), TranscriptSynth.schema)
-    t.append(synth(30), "init")
-    // predicate can match c...00-c...29 but the hint claims only c...10-19:
-    // trusting it would leave matching rows alive — must refuse
-    val e = intercept[IllegalArgumentException] {
-      DeleteFrom.run(t, "bad-hint",
-        "conv_id BETWEEN 'c00000000' AND 'c00000029'",
-        convRange = Some(("c00000010", "c00000019")))
-    }
-    assert(e.getMessage.contains("narrower"))
-    // an unbounded predicate with any hint is also inconsistent
-    intercept[IllegalArgumentException] {
-      DeleteFrom.run(t, "bad-hint2", "role = 'tool'",
-        convRange = Some(("c00000010", "c00000019")))
-    }
-    // a hint that CONTAINS the predicate's range is fine
-    val ok = DeleteFrom.run(t, "good-hint",
-      "conv_id BETWEEN 'c00000010' AND 'c00000012'",
-      convRange = Some(("c00000000", "c00000019")))
-    assert(ok.deletedRows > 0)
   }
 
   test("DELETE FROM predicates over EVOLVED columns: correct, unpruned, loud on typos") {
@@ -1463,13 +1438,7 @@ class LakeSpec extends AnyFunSuite {
     val r2 = Clustering.cluster(t, "job-A")
     assert(r2.groups == 0 && r2.snapshot.id == r1.snapshot.id)
 
-    // a LEGACY single marker (pre-per-op layouts) still short-circuits when
-    // its operation matches
-    val legacy = Paths.get(t.ledgerDir, "job-A/commit.json")
-    java.nio.file.Files.move(marker, legacy)
-    assert(Ledger.committedJobSnapshot(t, "job-A", "cluster")
-      .exists(_.id == r1.snapshot.id), "legacy commit.json must still count")
-    java.nio.file.Files.delete(legacy)
+    java.nio.file.Files.delete(marker)
 
     // crash between commitDelta and marker write: the parent-chain walk
     // (bounded by the plan's base snapshot) finds the commit and re-marks
@@ -1482,8 +1451,15 @@ class LakeSpec extends AnyFunSuite {
     val t = LakeTable.create(spark, tmpTable("ledger-expiry"), TranscriptSynth.schema)
     t.append(synth(40).repartition(4), "init")
     Clustering.cluster(t, "old-cluster") // committed: marker + plan + tasks
-    Ledger.writePlan(t, "unfinished-job", t.currentSnapshotId.get,
-      Vector(Vector("data/x.parquet")), kind = "compact") // no commit marker
+    // no commit marker; every plan field set, and read back as written
+    val plan = Ledger.Plan(t.currentSnapshotId.get,
+      Vector(Vector("data/x.parquet", "data/y.parquet"), Vector("data/z.parquet")),
+      Array(3L, 7L), Array(1L), "hilbert", "compact")
+    Ledger.writePlan(t, "unfinished-job", plan)
+    val back = Ledger.readPlan(t, "unfinished-job").get
+    assert(back.copy(convCuts = null, turnCuts = null) ==
+      plan.copy(convCuts = null, turnCuts = null))
+    assert(back.convCuts.toSeq == plan.convCuts.toSeq && back.turnCuts.toSeq == plan.turnCuts.toSeq)
     val future = System.currentTimeMillis() + 60000
     val res = Ledger.expireJobs(t, olderThanMs = 0, nowMs = future)
     assert(res.deletedJobs == Vector("old-cluster"), s"got ${res.deletedJobs}")

@@ -313,6 +313,22 @@ class PlansSpec extends AnyFunSuite {
       """SELECT count(*) FROM sqldel_alias_t
         |WHERE conv_id BETWEEN 'c00000005' AND 'c00000009'""".stripMargin)
       .head().getLong(0) == 0)
+
+    // only the alias goes: the rest of `x.s.a` is a struct field path
+    val p = Paths.get("target", "test-lake", "plans-sqldelete-alias-nested-" + System.nanoTime())
+    val turns = TranscriptSynth.turns(spark, 20, seed = 42L)
+      .withColumn("s", struct((col("turn_idx") % 2).as("a")))
+    val nested = LakeTable.create(spark, p.toString, turns.schema)
+    nested.append(turns.repartitionByRange(2, col("conv_id"), col("turn_idx"))
+      .sortWithinPartitions("conv_id", "turn_idx"), "init")
+    GraftPlans.registerTable(spark, nested, "sqldel_alias_nested_t")
+    def odd() = spark.sql("SELECT count(*) FROM sqldel_alias_nested_t WHERE s.a = 1")
+      .head().getLong(0)
+    val nOdd = odd()
+    assert(nOdd > 0)
+    assert(spark.sql("DELETE FROM sqldel_alias_nested_t AS x WHERE x.s.a = 1")
+      .head().getLong(0) == nOdd)
+    assert(odd() == 0)
   }
 
   test("MERGE rejects same-side ON equalities (t.k = t.k)") {
