@@ -1,6 +1,6 @@
 #!/usr/bin/env bash
-# CPU-pinned maintenance scaling benchmark: runs the identical compact+
-# cluster job at 8 and 32 genuinely-available CPUs (taskset) in separate
+# CPU-pinned maintenance scaling benchmark: runs the identical clustering
+# job at 8 and 32 genuinely-available CPUs (taskset) in separate
 # JVMs, then combines the two measurements into BENCH.md.
 # Usage: scripts/scaling_bench.sh [nConvs]   (after `sbt compile`)
 set -euo pipefail

@@ -8,12 +8,12 @@ import org.apache.spark.sql.functions._
 
 import graft.functions.{Cached, Sanitize}
 import graft.lake.LakeTable
-import graft.maintain.{Clustering, Compaction, MergeInto}
+import graft.maintain.{Clustering, MergeInto}
 
 /** Deterministic lakehouse fixture for the driver-oracle queries: the
   * `events` test table is transcript-ized (same derivation is expressed in
   * the DuckDB oracle SQL), loaded into a lake table, then maintained:
-  * load -> compact -> cluster -> MERGE (error-turn corrections) -> cluster.
+  * load -> cluster -> MERGE (error-turn corrections) -> cluster.
   * Snapshot ids are pinned before/after the merge so oracle queries can
   * check snapshot isolation. Built once per (JVM, sfDir).
   */
@@ -174,7 +174,6 @@ object LakeFixtures {
     val t = LakeTable.create(spark, root,
       org.apache.spark.sql.types.StructType(graft.synth.TranscriptSynth.schema))
     t.append(transcripts(spark, sfDir).repartition(16), s"load-$tag")
-    Compaction.compact(t, s"compact-$tag", smallFileBytes = 8L << 20, targetBytes = 64L << 20)
     Clustering.cluster(t, s"cluster1-$tag", targetFileRows = 4000)
     val pre = t.currentSnapshotId.get
     MergeInto.merge(t, correctionDrop(spark, sfDir), s"merge-$tag", targetFileRows = 4000)

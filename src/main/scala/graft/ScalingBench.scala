@@ -6,11 +6,11 @@ import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.functions._
 
 import graft.lake.LakeTable
-import graft.maintain.{Clustering, Compaction, MergeInto}
+import graft.maintain.{Clustering, MergeInto}
 import graft.synth.TranscriptSynth
 
 /** Maintenance-throughput scaling evidence (BASELINE.json): the identical
-  * compact+cluster job over the identical synthetic transcript table at two
+  * clustering job over the identical synthetic transcript table at two
   * parallelism levels — taskset-pinned N vs 4N cores with shuffle
   * partitions scaled to cores (no real cluster exists in this sandbox; this
   * is the sanctioned stand-in for N vs 4N executors). Reports turns/sec at
@@ -33,7 +33,6 @@ object ScalingBench {
   final case class RunResult(cores: Int, rows: Long, loadSec: Double,
                              maintainSec: Double, throughput: Double,
                              pruneRatio: Double, files: Int,
-                             compactSec: Double = 0.0, clusterSec: Double = 0.0,
                              cpuSec: Double = 0.0,
                              mergeSec: Double = 0.0, mergeStaged: Long = 0L,
                              mergeTouched: Int = 0, mergeCarried: Int = 0,
@@ -80,20 +79,16 @@ object ScalingBench {
 
       val cpu0 = osBean.getProcessCpuTime
       val t1 = System.nanoTime()
-      Compaction.compact(t, "bench-compact", smallFileBytes = 4L << 20,
-        targetBytes = 32L << 20)
-      val t2 = System.nanoTime()
       Clustering.cluster(t, "bench-cluster",
         targetFileRows = math.max(10000L, rows / 64))
-      val t3 = System.nanoTime()
-      val maintainSec = (t3 - t1) / 1e9
+      val maintainSec = (System.nanoTime() - t1) / 1e9
       val cpuSec = (osBean.getProcessCpuTime - cpu0) / 1e9
 
       // prune ratio on a ~1% conv range
       val lo = f"c${nConvs / 2}%08d"; val hi = f"c${nConvs / 2 + nConvs / 100}%08d"
       val scan = t.scan(convRange = Some((lo, hi)))
 
-      // MERGE throughput (separate from the compact+cluster maintain
+      // MERGE throughput (separate from the clustering maintain
       // metric): a correction drop touching the same ~1% conv range —
       // evidence that a merge's cost follows the TOUCHED slice, not the
       // table (manifest pre-filter + commitDelta carry-forward).
@@ -121,7 +116,6 @@ object ScalingBench {
 
       RunResult(cores, rows, loadSec, maintainSec, rows / maintainSec,
         scan.prune.ratio, t.currentFiles.size,
-        compactSec = (t2 - t1) / 1e9, clusterSec = (t3 - t2) / 1e9,
         cpuSec = cpuSec,
         mergeSec = mergeSec, mergeStaged = mr.stagedRows,
         mergeTouched = mr.touchedFiles, mergeCarried = mr.carriedFiles,
@@ -137,7 +131,6 @@ object ScalingBench {
     s"""{"cores":${r.cores},"rows":${r.rows},"load_sec":${r.loadSec},""" +
       s""""maintain_sec":${r.maintainSec},"throughput":${r.throughput},""" +
       s""""prune_ratio":${r.pruneRatio},"files":${r.files},""" +
-      s""""compact_sec":${r.compactSec},"cluster_sec":${r.clusterSec},""" +
       s""""cpu_sec":${r.cpuSec},"merge_sec":${r.mergeSec},""" +
       s""""merge_staged":${r.mergeStaged},"merge_touched":${r.mergeTouched},""" +
       s""""merge_carried":${r.mergeCarried},"recluster_sec":${r.reclusterSec},""" +
@@ -149,7 +142,7 @@ object ScalingBench {
     RunResult(n.get("cores").asInt, n.get("rows").asLong, n.get("load_sec").asDouble,
       n.get("maintain_sec").asDouble, n.get("throughput").asDouble,
       n.get("prune_ratio").asDouble, n.get("files").asInt,
-      d("compact_sec"), d("cluster_sec"), d("cpu_sec"),
+      d("cpu_sec"),
       d("merge_sec"), Option(n.get("merge_staged")).map(_.asLong).getOrElse(0L),
       Option(n.get("merge_touched")).map(_.asInt).getOrElse(0),
       Option(n.get("merge_carried")).map(_.asInt).getOrElse(0),
@@ -192,14 +185,14 @@ object ScalingBench {
       f"""
          |## Maintenance scaling run (${java.time.Instant.now()}, CPU-pinned via taskset, $storage)
          |
-         |Identical compact+cluster job, identical deterministic input
+         |Identical clustering job, identical deterministic input
          |(${r8.rows} turns, seed 42), two parallelism levels
          |(stand-in for N vs 4N executors; shuffle partitions = cores):
          |
-         || cores | turns | maintain sec | compact/cluster sec | cpu sec | throughput (turns/s) | prune ratio | files |
-         ||---|---|---|---|---|---|---|---|
-         || ${r8.cores}  | ${r8.rows} | ${r8.maintainSec}%.1f | ${r8.compactSec}%.1f / ${r8.clusterSec}%.1f | ${r8.cpuSec}%.1f | ${r8.throughput}%.0f | ${r8.pruneRatio}%.3f | ${r8.files} |
-         || ${r32.cores} | ${r32.rows} | ${r32.maintainSec}%.1f | ${r32.compactSec}%.1f / ${r32.clusterSec}%.1f | ${r32.cpuSec}%.1f | ${r32.throughput}%.0f | ${r32.pruneRatio}%.3f | ${r32.files} |
+         || cores | turns | maintain sec | cpu sec | throughput (turns/s) | prune ratio | files |
+         ||---|---|---|---|---|---|---|
+         || ${r8.cores}  | ${r8.rows} | ${r8.maintainSec}%.1f | ${r8.cpuSec}%.1f | ${r8.throughput}%.0f | ${r8.pruneRatio}%.3f | ${r8.files} |
+         || ${r32.cores} | ${r32.rows} | ${r32.maintainSec}%.1f | ${r32.cpuSec}%.1f | ${r32.throughput}%.0f | ${r32.pruneRatio}%.3f | ${r32.files} |
          |
          |**Scaling efficiency (${r8.cores} -> ${r32.cores} cores) = ${efficiency}%.2f**
          |(target >= 0.8, BASELINE.json). CPU-share efficiency (cpu-seconds

@@ -340,8 +340,8 @@ object SparkEntry {
         .orderBy("query_id")
     }),
 
-    // --- the lakehouse maintenance engine (fixture: load -> compact ->
-    // cluster -> MERGE error-corrections -> cluster; see LakeFixtures) ---
+    // --- the lakehouse maintenance engine (fixture: load -> cluster ->
+    // MERGE error-corrections -> cluster; see LakeFixtures) ---
     "q19_lake_scan" -> ((s, d) => {
       val f = LakeFixtures.forDir(s, d)
       f.table.scan().df

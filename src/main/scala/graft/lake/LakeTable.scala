@@ -303,9 +303,9 @@ class LakeTable(val root: String, val spark: SparkSession,
     // An ACTIVE sketch store rides along with every write: computeBatch
     // re-reads the just-written parquet (page-cache hot, not in-memory
     // hot), so signatures cost one extra cached-read pass over this
-    // write's output instead of a later cold full re-read — and pure
-    // rewrites (compaction/clustering/delete survivors) keep the table
-    // sketch-covered with zero ensure()-time compute.
+    // write's output instead of a later cold full re-read — and group
+    // rewrites (clustering, dedupe and delete survivors, the maintenance
+    // cycle) keep the table sketch-covered with zero ensure()-time compute.
     graft.maintain.Sketches.sketchOnWrite(this, entries, s"$safeTag-$unique")
   }
 
@@ -321,7 +321,8 @@ class LakeTable(val root: String, val spark: SparkSession,
   def oneTaskIfFits(df: DataFrame, inputBytes: Long): DataFrame =
     if (fitsOneTask(inputBytes)) df.coalesce(1) else df
 
-  /** THE sorted rewrite of one group (merge, dedupe, delete, clustering):
+  /** THE sorted rewrite of one group (merge, and every ledger rewrite:
+    * clustering, dedupe, delete and the maintenance cycle):
     * `rows` rows of `df` in about ceil(rows / targetFileRows) files, each
     * holding a tight range of `key`. A group whose input [[fitsOneTask]]
     * is coalesced into one task that sorts it and writes runs of

@@ -14,10 +14,10 @@ import graft.lake.{DataFile, LakeTable, Snapshot}
   * incrementally). Each group independently: scan -> zkey -> sort ->
   * write, through [[LakeTable.writeSorted]]: a group within one scan split
   * and 16 MB is one task with no Exchange, split into files by row count;
-  * a larger one is range-repartitioned on (zkey, salt) first. Groups run
-  * through the ledger's job protocol ([[Ledger.planOrResume]],
-  * [[Ledger.runJob]]): each checkpoints before the one snapshot commit that
-  * swaps all inputs for all outputs atomically.
+  * a larger one is range-repartitioned on (zkey, salt) first. The job is
+  * the ledger's one group rewrite ([[Ledger.rewrite]]) with no rows to
+  * drop: each group checkpoints before the one snapshot commit that swaps
+  * all inputs for all outputs atomically, and must write every row it read.
   *
   * Why groups: (a) the checkpoint ledger gets real per-partition resume
   * granularity — a job killed at group 7/10 redoes only 3 groups; (b) at
@@ -48,58 +48,77 @@ object Clustering {
     * locality, no curve jumps). Persisted in the plan so a resumed job
     * keeps the exact curve it started with.
     *
-    * Incremental: once the table was clustered, ONLY groups containing at
-    * least one file added since that cluster commit are rewritten
-    * ([[dirtyGroups]]) — clean slabs carry forward untouched (files AND
-    * manifests). A merge touching 1% of conversations makes the follow-up
-    * recluster cost ~1% of the table, not 100% — without this, the
-    * maintenance cadence at 10^12 turns rewrites the world after every
-    * drop. The first-ever clustering is always full.
+    * Incremental: once the table was clustered, ONLY dirty groups are
+    * rewritten ([[layout]]) — clean slabs carry forward untouched (files
+    * AND manifests), so a merge touching 1% of conversations makes the
+    * follow-up recluster cost ~1% of the table, not 100%. The first-ever
+    * clustering is always full.
     */
   def cluster(table: LakeTable, jobId: String,
               targetFileRows: Long = 1L << 20,
               groupTargetBytes: Long = 256L << 20,
               interruptAfter: Int = Int.MaxValue,
-              curve: String = "z"): Result = {
-    // Plan (or resume a previously persisted plan — NEVER replan mid-job;
-    // the quantile cuts ARE the curve, so they persist with the plan).
-    val plan = Ledger.planOrResume(table, jobId, "cluster", kind = "cluster") {
-      val files = table.currentFiles
-        .sortBy(f => (f.minConv.getOrElse(""), f.minTurn.getOrElse(0)))
-      val toDo = dirtyGroups(table, planGroups(files, groupTargetBytes))
-      // quantiles drift slowly under merges and only steer layout, never
-      // correctness: a recluster reuses the last job's cuts, no sample pass
-      val (convCuts, turnCuts) = previousCuts(table).getOrElse(quantileCuts(table, files))
-      Ledger.Plan(table.currentSnapshotId.get, toDo.map(_.map(_.path)),
-        convCuts, turnCuts, curve)
+              curve: String = "z"): Result =
+    Ledger.rewrite(table, jobId, "cluster", "cluster", CountsFile, targetFileRows,
+        interruptAfter)(Ledger.Counted(Map.empty))(layout(table, _, groupTargetBytes, curve)) {
+      (paths, _) => table.readData(paths.map(table.absData))
     } match {
-      case Left(s) => return Result(s, 0, 0, 0L) // committed, or nothing dirty
-      case Right(p) => p
+      case Left(s) => Result(s, 0, 0, 0L) // committed, or nothing dirty
+      case Right(r) => Result(r.snapshot, r.groups, r.resumedGroups, r.rowsRewritten)
     }
 
-    // Groups are independent shuffles: submitted concurrently.
-    def rewritten(tasks: Vector[(Ledger.TaskRow, Boolean)]): Long =
-      tasks.collect { case (t, false) => t.rows }.sum
-    val (snap, tasks) = Ledger.runJob(table, jobId, "cluster", plan,
-      parallelism = Ledger.shuffleParallelism(table), interruptAfter) { (in, gi) =>
-      val zkey =
-        if (plan.curve == "hilbert")
-          ZOrder.quantileHilbertKey(col("conv_id"), col("turn_idx"),
-            plan.convCuts, plan.turnCuts)
-        else ZOrder.quantileClusterKey(col("conv_id"), col("turn_idx"),
-          plan.convCuts, plan.turnCuts)
-      table.writeSorted(
-        table.readData(in.map(f => table.absData(f.path))).withColumn("__zkey", zkey),
-        s"$jobId-g$gi", in.map(_.bytes).sum, in.map(_.rows).sum, targetFileRows,
+  /** The counts sidecar of a cluster job, beside the ledger plan. */
+  private[maintain] val CountsFile = "cluster-counts.json"
+
+  /** A cluster job's layout: the [[planGroups]] groups holding a DIRTY
+    * file — one not in the most recent cluster commit's file set (added by
+    * a merge/append drop or a dedupe/delete rewrite since), or one with
+    * `counted` rows to drop — sorted on `curve` over quantile cuts.
+    * Reclustering the dirty groups is what packs new small files, so no
+    * separate compaction exists. No previous cluster commit (or its
+    * metadata already expired) -> everything is dirty -> full clustering.
+    * Quantiles drift slowly under merges and only steer layout, never
+    * correctness: a recluster reuses the last job's cuts, no sample pass.
+    * The cuts ARE the curve, so they persist with the plan and a resume
+    * never recomputes them.
+    */
+  private[maintain] def layout(table: LakeTable, counted: Ledger.Counted,
+                               groupTargetBytes: Long, curve: String): Ledger.Layout = {
+    val files = table.currentFiles
+      .sortBy(f => (f.minConv.getOrElse(""), f.minTurn.getOrElse(0)))
+    val clean = lastClusterSnapshot(table).flatMap { s =>
+      try Some(table.dataFiles(s).map(_.path).toSet)
+      catch { case _: Exception => None }
+    }
+    val dropping = counted.perFile.keySet.map(_.path)
+    val toDo = planGroups(files, groupTargetBytes)
+      .filter(_.exists(f => !clean.exists(_(f.path)) || dropping(f.path)))
+    if (toDo.isEmpty) Ledger.Layout(Vector.empty)
+    else {
+      val (convCuts, turnCuts) = previousCuts(table).getOrElse(quantileCuts(table, files))
+      Ledger.Layout(toDo, convCuts, turnCuts, curve)
+    }
+  }
+
+  /** Write one group sorted as `plan` says ([[Ledger.Layout]]): on the
+    * table key when the plan has no cuts, else on the plan's curve over
+    * its cuts, salted so that duplicate keys split across range bounds.
+    */
+  private[maintain] def writeGroup(table: LakeTable, plan: Ledger.Plan, df: DataFrame,
+                                   tag: String, inputBytes: Long, rows: Long,
+                                   targetFileRows: Long): Vector[DataFile] =
+    if (plan.convCuts.isEmpty)
+      table.writeSorted(df, tag, inputBytes, rows, targetFileRows,
+        Seq(col("conv_id"), col("turn_idx")))
+    else {
+      val curve = if (plan.curve == "hilbert") ZOrder.quantileHilbertKey _
+        else ZOrder.quantileClusterKey _
+      val zkey = curve(col("conv_id"), col("turn_idx"), plan.convCuts, plan.turnCuts)
+      table.writeSorted(df.withColumn("__zkey", zkey), tag, inputBytes, rows, targetFileRows,
         Seq(col("__zkey")),
         salt = Some(pmod(xxhash64(col("conv_id"), col("turn_idx")), lit(Salts))),
         drop = Seq("__zkey"))
-    } { tasks =>
-      Map("groups" -> plan.groups.size.toString,
-        "rows_rewritten" -> rewritten(tasks).toString)
     }
-    Result(snap, plan.groups.size, tasks.count(_._2), rewritten(tasks))
-  }
 
   /** The most recent cluster commit, resolved in O(1) metadata reads via
     * the `last_cluster_id` pointer every commit propagates. None when the
@@ -110,25 +129,6 @@ object Clustering {
       try Some(table.snapshot(id.toLong))
       catch { case _: Exception => None } // expired metadata: no baseline
     }
-
-  /** Groups containing at least one DIRTY file — a file not present in the
-    * most recent cluster commit's file set (i.e. added by a merge/append
-    * drop or a dedupe/delete/compaction rewrite since). Reclustering these
-    * groups is what packs a maintenance cycle's new small files, so the
-    * cycle runs no separate compaction. No previous cluster commit (or its
-    * metadata already expired) -> everything is dirty -> full clustering.
-    */
-  def dirtyGroups(table: LakeTable,
-                  groups: Vector[Vector[DataFile]]): Vector[Vector[DataFile]] = {
-    val clean: Option[Set[String]] = lastClusterSnapshot(table).flatMap { s =>
-      try Some(table.dataFiles(s).map(_.path).toSet)
-      catch { case _: Exception => None }
-    }
-    clean match {
-      case None => groups
-      case Some(c) => groups.filter(_.exists(f => !c(f.path)))
-    }
-  }
 
   /** Cuts from the most recent committed cluster job's persisted plan, if
     * any (the job id lives in the cluster snapshot's summary; the cuts in
@@ -176,7 +176,7 @@ object Clustering {
   }
 
   /** Locality-aware planning. Incremental mode (files already carry tight
-    * conv ranges — the usual case after merges/compactions wrote
+    * conv ranges — the usual case after merges and rewrites wrote
     * range-partitioned output): greedy size-bounded groups over range-sorted
     * files, so each group is a disjoint conv slab and the job resumes at
     * group granularity. Cold mode (files span the whole key space — e.g.

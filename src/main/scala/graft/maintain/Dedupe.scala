@@ -6,7 +6,7 @@ import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types.{StringType, StructField, StructType}
 
 import graft.functions.{Cached, Dedup}
-import graft.lake.{FileIO, LakeTable, Snapshot}
+import graft.lake.{DataFile, FileIO, LakeTable, Snapshot}
 
 /** Lake-integrated deduplication: the dedup suite's groups APPLIED to the
   * transcript table as a maintenance operation — the reference's core
@@ -35,7 +35,7 @@ import graft.lake.{FileIO, LakeTable, Snapshot}
   * Scale shape (10^12 turns): the victim set is computed in one corpus pass
   * (a window over the text, or LSH banding) and persisted once under the
   * job's ledger dir; ONE aggregate over it counts victims per data file.
-  * [[Ledger.deleteRows]] then rewrites only the files containing victims,
+  * [[Ledger.rewrite]] then rewrites only the files containing victims,
   * each bounded group anti-joined against ITS OWN victims (pre-filtered by
   * file provenance), so a pass removing 0.1% of turns rewrites ~0.1% of
   * files, and a resume skips finished groups.
@@ -77,9 +77,7 @@ object Dedupe {
               targetFileRows: Long = 1L << 20,
               groupTargetBytes: Long = 256L << 20,
               interruptAfter: Int = Int.MaxValue): Result = {
-    require(Set("exact", "minhash", "simhash")(mode), s"unknown dedupe mode $mode")
-    require(Set("turn", "conversation")(unit), s"unknown dedupe unit $unit")
-
+    val kind = planKind(mode, unit, minTokens, maxConvChars)
     // empty table: nothing to dedupe — a no-op, not an error, so a
     // maintenance cycle with dedupe enabled runs cleanly on a fresh table
     if (table.currentFiles.isEmpty)
@@ -87,64 +85,90 @@ object Dedupe {
         throw new IllegalStateException(s"no table at ${table.root}")),
         0L, 0, 0, 0, converged = true)
 
-    val victimsDir = FileIO.path(table.ledgerDir, jobId, "victims.parquet")
-    // the plan kind pins the SEMANTICS-BEARING parameters: a resume with a
-    // different mode/unit/minTokens must fail loudly instead of silently
-    // applying a victim set computed under other rules (Clustering pins its
-    // curve in the plan for the same reason)
-    val planKind =
-      if (unit == "conversation") s"dedupe:$mode:$unit:$minTokens:cap$maxConvChars"
-      else s"dedupe:$mode:$unit:$minTokens"
-
-    Ledger.deleteRows(table, jobId, "dedupe", planKind, CountsFile,
-      targetFileRows, groupTargetBytes, interruptAfter) {
-      // atomic publish: write to a tmp dir, rename over — a crash
-      // mid-write can never leave a torn victim set a resume would trust
-      val tmp = victimsDir + ".tmp"
-      table.io.delete(tmp)
-      def write(victims: DataFrame): Unit = victims.write.mode("overwrite").parquet(tmp)
-      val skipped =
-        if (unit == "conversation")
-          computeConvVictims(table, mode, minTokens, maxIters, maxConvChars)(write)
-        else { computeVictims(table, mode, minTokens, maxIters)(write); 0L }
-      table.io.delete(victimsDir)
-      table.io.rename(tmp, victimsDir)
-      // touched files = those holding at least one victim row: ONE
-      // aggregate over the published set, in one task when it fits one
-      val setBytes = table.io.list(victimsDir)
-        .flatMap(n => table.io.stat(FileIO.path(victimsDir, n))).map(_.size).sum
-      val byPath = table.currentFiles.map(f => f.path -> f).toMap
-      val perFile = table.oneTaskIfFits(readVictims(table, victimsDir), setBytes)
-        .groupBy("__src").count().collect()
-        .map(r => byPath(r.getString(0)) -> r.getLong(1)).toMap
+    Ledger.rewrite(table, jobId, "dedupe", kind, CountsFile, targetFileRows, interruptAfter) {
+      val (perFile, skipped) =
+        publishVictims(table, jobId, mode, minTokens, unit, maxIters, maxConvChars)
       Ledger.Counted(perFile, "mode" -> mode, "skipped_convs" -> skipped)
-    } { (paths, oneTask) =>
-      require(table.io.stat(victimsDir).isDefined,
-        s"dedupe plan for $jobId exists but its victim set is missing")
-      // a group in one task joins in one partition: both sides coalesced,
-      // and a sort-merge join (a small victim set would otherwise be
-      // broadcast) plans with no Exchange. The join is a left outer one
-      // keeping unmatched rows, not a left anti one, which the optimizer
-      // would push below the coalesce. It adds no column: a victim's key
-      // is never null, so a null one marks an unmatched row.
-      def part(df: DataFrame) = if (oneTask) df.coalesce(1) else df
-      // this group's victims only: provenance pre-filter keeps the join
-      // proportional to the group, not the whole pass
-      val groupVictims = part(readVictims(table, victimsDir)
-        .where(col("__src").isin(paths: _*))
-        .select("conv_id", "turn_idx")).as("v")
-      part(table.readData(paths.map(table.absData))).as("t")
-        .join(if (oneTask) groupVictims.hint("merge") else groupVictims,
-          col("t.conv_id") === col("v.conv_id") &&
-            col("t.turn_idx") === col("v.turn_idx"), "left_outer")
-        .where(col("v.conv_id").isNull)
-        .select(col("t.*"))
+    }(Ledger.keyLayout(_, groupTargetBytes)) { (paths, oneTask) =>
+      withoutVictims(table, jobId, table.readData(paths.map(table.absData)), paths, oneTask)
     } match {
       case Left(s) => Result(s, 0L, 0, 0, 0, converged = true)
-      case Right(d) =>
-        Result(d.snapshot, d.rows, d.touchedFiles, d.groups, d.resumedGroups,
-          converged = true, skippedConvs = d.sidecar.get("skipped_convs").asLong)
+      case Right(r) =>
+        Result(r.snapshot, r.droppedRows, r.touchedFiles, r.groups, r.resumedGroups,
+          converged = true, skippedConvs = r.sidecar.get("skipped_convs").asLong)
     }
+  }
+
+  /** The plan kind pins the SEMANTICS-BEARING parameters: a resume with a
+    * different mode/unit/minTokens must fail loudly instead of silently
+    * applying a victim set computed under other rules. Throws on an unknown
+    * mode or unit.
+    */
+  private[maintain] def planKind(mode: String, unit: String, minTokens: Int,
+                                 maxConvChars: Long): String = {
+    require(Set("exact", "minhash", "simhash")(mode), s"unknown dedupe mode $mode")
+    require(Set("turn", "conversation")(unit), s"unknown dedupe unit $unit")
+    if (unit == "conversation") s"dedupe:$mode:$unit:$minTokens:cap$maxConvChars"
+    else s"dedupe:$mode:$unit:$minTokens"
+  }
+
+  private def victimsDir(table: LakeTable, jobId: String): String =
+    FileIO.path(table.ledgerDir, jobId, "victims.parquet")
+
+  /** Compute the victim set, publish it under `jobId`'s ledger dir, and
+    * count it per data file. Returns those counts and the conversations a
+    * `unit = "conversation"` pass skipped as oversized.
+    */
+  private[maintain] def publishVictims(table: LakeTable, jobId: String, mode: String,
+                                       minTokens: Int, unit: String, maxIters: Int,
+                                       maxConvChars: Long): (Map[DataFile, Long], Long) = {
+    val dir = victimsDir(table, jobId)
+    // atomic publish: write to a tmp dir, rename over — a crash
+    // mid-write can never leave a torn victim set a resume would trust
+    val tmp = dir + ".tmp"
+    table.io.delete(tmp)
+    def write(victims: DataFrame): Unit = victims.write.mode("overwrite").parquet(tmp)
+    val skipped =
+      if (unit == "conversation")
+        computeConvVictims(table, mode, minTokens, maxIters, maxConvChars)(write)
+      else { computeVictims(table, mode, minTokens, maxIters)(write); 0L }
+    table.io.delete(dir)
+    table.io.rename(tmp, dir)
+    // touched files = those holding at least one victim row: ONE
+    // aggregate over the published set, in one task when it fits one
+    val setBytes = table.io.list(dir)
+      .flatMap(n => table.io.stat(FileIO.path(dir, n))).map(_.size).sum
+    val byPath = table.currentFiles.map(f => f.path -> f).toMap
+    val perFile = table.oneTaskIfFits(readVictims(table, dir), setBytes)
+      .groupBy("__src").count().collect()
+      .map(r => byPath(r.getString(0)) -> r.getLong(1)).toMap
+    (perFile, skipped)
+  }
+
+  /** `rows` of the data files `paths` less the victims [[publishVictims]]
+    * published for `jobId`. With `oneTask` both sides are coalesced and a
+    * sort-merge join (a small victim set would otherwise be broadcast)
+    * plans with no Exchange. It is a left outer join keeping unmatched
+    * rows, not a left anti one, which the optimizer would push below the
+    * coalesce; a victim's key is never null, so a null one marks a survivor.
+    */
+  private[maintain] def withoutVictims(table: LakeTable, jobId: String, rows: DataFrame,
+                                       paths: Vector[String], oneTask: Boolean): DataFrame = {
+    val dir = victimsDir(table, jobId)
+    require(table.io.stat(dir).isDefined,
+      s"dedupe plan for $jobId exists but its victim set is missing")
+    def part(df: DataFrame) = if (oneTask) df.coalesce(1) else df
+    // the victims in these files only: provenance pre-filter keeps the
+    // join proportional to the group, not the whole pass
+    val victims = part(readVictims(table, dir)
+      .where(col("__src").isin(paths: _*))
+      .select("conv_id", "turn_idx")).as("v")
+    part(rows).as("t")
+      .join(if (oneTask) victims.hint("merge") else victims,
+        col("t.conv_id") === col("v.conv_id") &&
+          col("t.turn_idx") === col("v.turn_idx"), "left_outer")
+      .where(col("v.conv_id").isNull)
+      .select(col("t.*"))
   }
 
   /** The published victim set: (conv_id, turn_idx, __src), read with its

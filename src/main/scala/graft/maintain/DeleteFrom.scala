@@ -1,5 +1,6 @@
 package graft.maintain
 
+import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.functions._
 
 import graft.lake.{DataFile, IntervalDnf, LakeTable, Snapshot}
@@ -19,13 +20,10 @@ import graft.lake.{DataFile, IntervalDnf, LakeTable, Snapshot}
   *      the per-file event-time stats, so a daily tick plans only the
   *      files old enough to hold expired rows.
   *   2. ONE planning pass over the candidates counts matching rows PER
-  *      FILE (reads only the predicate's columns; candidates that fit one
-  *      task, [[LakeTable.fitsOneTask]], are coalesced into one, so the
-  *      count is one job with no Exchange); files with ZERO matches
-  *      leave the plan entirely — they are never read again, never
-  *      rewritten, their names never churn (and their sketch coverage
-  *      survives).
-  *   3. [[Ledger.deleteRows]] rewrites the files with matches, keeping the
+  *      FILE ([[countMatches]]); files with ZERO matches leave the plan
+  *      entirely — they are never read again, never rewritten, their
+  *      names never churn (and their sketch coverage survives).
+  *   3. [[Ledger.rewrite]] rewrites the files with matches, keeping the
   *      `NOT predicate` survivors, checked against the planned counts, and
   *      commits removing only those files. Its commit step reads every
   *      manifest once ([[LakeTable.currentEntries]]), so the metadata work
@@ -58,58 +56,62 @@ object DeleteFrom {
     if (table.currentFiles.isEmpty)
       return Result(snap0, 0L, 0, 0L, 0)
 
-    // SQL DELETE removes only rows where the condition is TRUE: a null
-    // result survives
-    val matches = coalesce(expr(predSql).cast("boolean"), lit(false))
     def fileCount(s: Snapshot): Long = s.manifests.map(_.entryCount).sum
     val totalFiles = fileCount(snap0)
 
-    Ledger.deleteRows(table, jobId, "delete", "delete:" + predSql, VictimsFile,
-      targetFileRows, groupTargetBytes, interruptAfter) {
-      // the prune boxes come from the predicate itself
-      val boxes = IntervalDnf.extract(
-        IntervalDnf.analyzedCondition(table.spark, table.schema.toStruct, predSql))
-      // ONE pass over the candidates: matching rows per file, in one task
-      // when they fit one. Catalyst prunes the read to the predicate's
-      // columns; the result is metadata-sized (one row per file WITH
-      // victims).
-      val candidates = table.overlappingEntriesBoxes(snap0, boxes).entries.map(_.file)
-      val byPath = candidates.map(f => f.path -> f).toMap
-      val perFile =
-        if (candidates.isEmpty) Map.empty[DataFile, Long]
-        else table.oneTaskIfFits(table.readData(candidates.map(f => table.absData(f.path))),
-            candidates.map(_.bytes).sum)
-          .where(matches)
-          .groupBy(LakeTable.sourceFile)
-          .count().collect().map(r => byPath(r.getString(0)) -> r.getLong(1)).toMap
-      // the stats-prune candidate set (files the counting pass had to
-      // SCAN) is recorded beside the matching-file counts: candidateFiles
-      // alone (files that CONTAIN victims) would overstate prune
-      // effectiveness and hide the clean-file scan cost
-      Ledger.Counted(perFile, "predicate" -> predSql,
-        "pruned_candidates" -> candidates.size.toLong)
-    } { (paths, _) =>
-      table.readData(paths.map(table.absData)).where(!matches)
+    Ledger.rewrite(table, jobId, "delete", "delete:" + predSql, VictimsFile,
+        targetFileRows, interruptAfter) {
+      val (perFile, candidates) = countMatches(table, snap0, predSql)((rows, _, _) => rows)
+      // the stats-prune candidates (files the count had to SCAN) are
+      // recorded too: candidateFiles (files that CONTAIN victims) alone
+      // would overstate prune effectiveness and hide the clean-file scans
+      Ledger.Counted(perFile, "predicate" -> predSql, "pruned_candidates" -> candidates)
+    }(Ledger.keyLayout(_, groupTargetBytes)) { (paths, _) =>
+      table.readData(paths.map(table.absData)).where(!matching(predSql))
     } match {
       // committed earlier, or the predicate matched nothing (then nothing
       // is committed: zero file churn) — either way every file carries
       case Left(s) => Result(s, 0L, 0, fileCount(s), 0, totalFiles = fileCount(s))
       // removed = ONLY the files with victims — everything else (files AND
       // manifests) carries forward untouched, names unchanged
-      case Right(d) =>
-        Result(d.snapshot, d.rows, d.touchedFiles, totalFiles - d.touchedFiles,
-          d.resumedGroups, candidateFiles = d.touchedFiles, totalFiles = totalFiles,
-          prunedCandidateFiles = d.sidecar.get("pruned_candidates").asLong)
+      case Right(r) =>
+        Result(r.snapshot, r.droppedRows, r.touchedFiles, totalFiles - r.touchedFiles,
+          r.resumedGroups, candidateFiles = r.touchedFiles, totalFiles = totalFiles,
+          prunedCandidateFiles = r.sidecar.get("pruned_candidates").asLong)
     }
   }
 
-  /** The predicate a previously PLANNED (possibly crashed) invocation of
-    * `jobId` pinned — so retry paths (e.g. a re-run maintenance cycle whose
-    * default `nowMs` moved) can replay the exact original condition instead
-    * of tripping the changed-predicate guard.
+  /** Rows `predSql` is TRUE on (SQL DELETE removes only those: a null
+    * result survives).
     */
-  def plannedPredicate(table: LakeTable, jobId: String): Option[String] =
-    Ledger.readJobFile(table, jobId, VictimsFile).map(_.get("predicate").asText)
+  private[maintain] def matching(predSql: String): Column =
+    coalesce(expr(predSql).cast("boolean"), lit(false))
+
+  /** ONE pass counting the rows that match `predSql` per data file of
+    * `snap`. It reads only the candidates of the predicate's interval-DNF
+    * prune boxes, and only the predicate's and the key's columns, in one
+    * partition when they fit one task ([[LakeTable.fitsOneTask]]), so the
+    * count is one job with no Exchange. `counted` takes the matching rows
+    * (conv_id, turn_idx, __src), the candidate paths and whether they fit
+    * one task, and gives the rows that count. Returns the counts (one per
+    * file with any) and the number of candidate files.
+    */
+  private[maintain] def countMatches(table: LakeTable, snap: Snapshot, predSql: String)(
+      counted: (DataFrame, Vector[String], Boolean) => DataFrame): (Map[DataFile, Long], Long) = {
+    val boxes = IntervalDnf.extract(
+      IntervalDnf.analyzedCondition(table.spark, table.schema.toStruct, predSql))
+    val candidates = table.overlappingEntriesBoxes(snap, boxes).entries.map(_.file)
+    val byPath = candidates.map(f => f.path -> f).toMap
+    val paths = candidates.map(_.path)
+    val bytes = candidates.map(_.bytes).sum
+    val perFile =
+      if (candidates.isEmpty) Map.empty[DataFile, Long]
+      else counted(table.oneTaskIfFits(table.readData(paths.map(table.absData))
+          .where(matching(predSql)).select(col("conv_id"), col("turn_idx"), LakeTable.sourceFile),
+          bytes), paths, table.fitsOneTask(bytes))
+        .groupBy("__src").count().collect().map(r => byPath(r.getString(0)) -> r.getLong(1)).toMap
+    (perFile, candidates.size.toLong)
+  }
 
   /** The per-file victim counts sidecar, beside the ledger plan. */
   private val VictimsFile = "delete-victims.json"

@@ -5,7 +5,6 @@ import java.util.concurrent.atomic.AtomicInteger
 import com.fasterxml.jackson.databind.JsonNode
 
 import org.apache.spark.sql.{DataFrame, SparkSession}
-import org.apache.spark.sql.functions.col
 
 import graft.lake.{DataFile, FileIO, LakeTable, MetaJson, Snapshot}
 
@@ -19,10 +18,11 @@ import scala.jdk.CollectionConverters._
   * (file_service.py:113-137: cached artifact served, missing one rebuilt)
   * generalized to distributed maintenance.
   *
-  * The job protocol lives here once — [[planOrResume]] then [[runJob]] —
-  * and every group-rewrite operation ([[Compaction]], [[Clustering]],
-  * [[Dedupe]], [[DeleteFrom]]) runs through it, supplying only how it
-  * plans groups, what it writes for one group, and how it reports.
+  * The job protocol lives here once — [[rewrite]] plans or resumes a job,
+  * then [[runJob]] runs and commits it — and every maintenance job runs
+  * through it: [[Clustering]], [[Dedupe]], [[DeleteFrom]] and the
+  * [[Maintenance]] cycle supply only the rows they drop, how they group
+  * files and what order a group's survivors sort in.
   *
   * Each task row is its own atomically-replaced JSON file, so a crash
   * mid-write can never corrupt previously checkpointed tasks.
@@ -214,52 +214,6 @@ object Ledger {
 
   // ---- job protocol -----------------------------------------------------
 
-  /** Idempotence guard, then resume-or-plan. `Left(snapshot)` means there
-    * is nothing to run: the job already committed (its snapshot), or its
-    * plan has no groups — then the job is marked committed at the current
-    * snapshot, so a replay is O(1) and the ledger dir is swept like any
-    * finished job's. `Right(plan)` is the persisted plan to run.
-    *
-    * A stored plan is reused, NEVER recomputed (its groups, cuts and curve
-    * are the job), and must match this invocation: same `kind` — the
-    * operation plus whatever parameters change its meaning — and a base
-    * snapshot that is still current. `compute` runs only when no plan
-    * exists; its plan is persisted (with `kind`) before any group starts.
-    */
-  def planOrResume(table: LakeTable, jobId: String, operation: String,
-                   kind: String)(compute: => Plan): Either[Snapshot, Plan] = {
-    committedJobSnapshot(table, jobId, operation).foreach(s => return Left(s))
-    val plan = readPlan(table, jobId) match {
-      case Some(p) =>
-        require(p.kind == kind,
-          s"ledger plan for $jobId is '${p.kind}' but this invocation is " +
-            s"'$kind' — job-id collision, changed parameters or changed " +
-            "predicate; use a fresh jobId")
-        require(table.currentSnapshotId.contains(p.baseSnapshotId),
-          s"stale $operation plan for $jobId: computed on snapshot " +
-            s"${p.baseSnapshotId} but current is ${table.currentSnapshotId}")
-        p
-      case None =>
-        val p = compute.copy(kind = kind)
-        writePlan(table, jobId, p)
-        p
-    }
-    if (plan.groups.forall(_.isEmpty)) {
-      // nothing to rewrite: no commit, no empty files (same rule as a
-      // no-op merge); the job is still marked so replays stay O(1)
-      val cur = table.currentSnapshot.get
-      markCommitted(table, jobId, operation, cur.id)
-      Left(cur)
-    } else Right(plan)
-  }
-
-  /** Group parallelism for jobs whose groups are shuffles: a few at a time,
-    * each already fans out over the executors. Single-task coalesce groups
-    * (compaction bins) use `defaultParallelism` instead.
-    */
-  def shuffleParallelism(table: LakeTable): Int =
-    math.max(2, table.spark.sparkContext.defaultParallelism / 8)
-
   /** Run every group of `plan` and commit the job. A group with a `done`
     * row is not run again: its checkpointed outputs are reused verbatim.
     * Any other group runs `rewrite(inputFiles, groupIndex)` and checkpoints
@@ -317,39 +271,76 @@ object Ledger {
     (snap, tasks)
   }
 
-  // ---- row delete ---------------------------------------------------------
+  // ---- group rewrite ------------------------------------------------------
 
-  /** Rows to delete per data file holding any, and the facts a resume
-    * reuses (each a String or a Long). */
+  /** Rows to drop per data file holding any, and facts a resume reuses. */
   final case class Counted(perFile: Map[DataFile, Long], facts: (String, Any)*)
 
-  /** A committed row delete; `sidecar` holds the counted facts. */
-  final case class Deleted(snapshot: Snapshot, rows: Long, touchedFiles: Int,
-                           groups: Int, resumedGroups: Int, sidecar: JsonNode)
+  /** The groups of data files a rewrite runs, every counted file among
+    * them, and the order each group's survivors sort in: the table key
+    * (conv_id, turn_idx) when there are no quantile cuts, else `curve` over
+    * the cuts ([[Clustering.writeGroup]]). */
+  final case class Layout(groups: Vector[Vector[DataFile]],
+                          convCuts: Array[Long] = Array.empty,
+                          turnCuts: Array[Long] = Array.empty,
+                          curve: String = "z")
 
-  /** THE row delete of DELETE FROM and dedupe: rewrite only the data files
-    * holding counted rows. A new plan runs `count` and writes the sidecar
-    * `countsFile` BEFORE the plan, so a plan on disk implies its counts;
-    * groups cut the counted files in key order at `groupTargetBytes`. A
-    * resume whose sidecar is missing (an older engine's plan, or a file
-    * deleted by hand) throws `IllegalStateException` and commits nothing:
-    * the sidecar alone pins what the plan counted. Each group writes
-    * `survivors(paths, oneTask)` sorted on the key
-    * ([[LakeTable.writeSorted]], `oneTask` = [[LakeTable.fitsOneTask]] of
-    * its input) and must write its rows less its counts, or nothing
-    * commits; an all-deleted group writes no file (an empty part would
-    * enter the manifest stats-less, never pruned). The summary carries the
-    * sidecar's facts, `deleted_rows` and `touched_files`. Data work is
-    * O(files holding deleted rows), but [[runJob]] reads every manifest
-    * ([[LakeTable.currentEntries]]). `Left` is [[planOrResume]]'s.
+  /** The counted files in key order, cut into groups of about
+    * `groupTargetBytes`: the layout of a row delete, which rewrites only
+    * the files holding rows it drops.
     */
-  def deleteRows(table: LakeTable, jobId: String, operation: String, kind: String,
-                 countsFile: String, targetFileRows: Long, groupTargetBytes: Long,
-                 interruptAfter: Int)(count: => Counted)(
-      survivors: (Vector[String], Boolean) => DataFrame): Either[Snapshot, Deleted] = {
-    val plan = planOrResume(table, jobId, operation, kind) {
+  def keyLayout(c: Counted, groupTargetBytes: Long): Layout =
+    Layout(Clustering.greedyGroups(c.perFile.keys.toVector
+      .sortBy(f => (f.minConv.getOrElse(""), f.minTurn.getOrElse(0), f.path)), groupTargetBytes))
+
+  /** A committed rewrite; `rowsRewritten` counts the groups this call ran. */
+  final case class Rewritten(snapshot: Snapshot, droppedRows: Long, touchedFiles: Int,
+                             groups: Int, resumedGroups: Int, rowsRewritten: Long,
+                             sidecar: JsonNode)
+
+  /** THE group rewrite of clustering, dedupe, DELETE FROM and the
+    * maintenance cycle. A job that already committed returns `Left(its
+    * snapshot)`. A stored plan is reused, NEVER recomputed (its groups,
+    * cuts and curve are the job), and must match this invocation: same
+    * `kind` (the operation plus whatever parameters change its meaning) and
+    * a base snapshot that is still current. Else a new plan runs `count`,
+    * then `layout` on its counts, and writes the sidecar `countsFile`, then
+    * the plan, before any group starts. A resume whose sidecar is missing
+    * throws `IllegalStateException` and commits nothing: the sidecar alone
+    * pins what the plan counted. A plan with no groups commits nothing and
+    * returns `Left(current snapshot)`, the job still marked committed, so a
+    * replay is O(1) and its ledger dir is swept like any finished job's.
+    *
+    * Each group reads `survivors(paths, oneTask)` (`oneTask` =
+    * [[LakeTable.fitsOneTask]] of its input), writes it sorted as the plan
+    * says ([[Clustering.writeGroup]]), and must write its rows less its
+    * counts, or nothing commits; an all-dropped group writes no file (an
+    * empty part would enter the manifest stats-less, never pruned). The
+    * summary carries the sidecar's facts, `deleted_rows`, `touched_files`,
+    * `groups` and `rows_rewritten`. Data work is O(files in the groups),
+    * but [[runJob]] reads every manifest ([[LakeTable.currentEntries]]).
+    */
+  def rewrite(table: LakeTable, jobId: String, operation: String, kind: String,
+              countsFile: String, targetFileRows: Long, interruptAfter: Int)(
+      count: => Counted)(layout: Counted => Layout)(
+      survivors: (Vector[String], Boolean) => DataFrame): Either[Snapshot, Rewritten] = {
+    committedJobSnapshot(table, jobId, operation).foreach(s => return Left(s))
+    val plan = readPlan(table, jobId).map { p =>
+      require(p.kind == kind,
+        s"ledger plan for $jobId is '${p.kind}' but this invocation is " +
+          s"'$kind' — job-id collision, changed parameters or changed " +
+          "predicate; use a fresh jobId")
+      require(table.currentSnapshotId.contains(p.baseSnapshotId),
+        s"stale $operation plan for $jobId: computed on snapshot " +
+          s"${p.baseSnapshotId} but current is ${table.currentSnapshotId}")
+      p
+    }.getOrElse {
       val before = table.currentSnapshotId.get
       val c = count
+      val l = layout(c)
+      val grouped = l.groups.flatten.map(_.path).toSet
+      require(c.perFile.keys.forall(f => grouped(f.path)),
+        s"$operation plan for $jobId leaves files with counted rows out of its groups")
       // a near-dup count may first cover the table with sketches, a
       // metadata-only commit: the plan is based on the snapshot it made,
       // or a resume would find the plan stale
@@ -364,12 +355,16 @@ object Ledger {
       c.perFile.toSeq.map { case (f, n) => f.path -> n }.sorted
         .foreach { case (p, n) => counts.put(p, n) }
       atomicWrite(table, jobId, countsFile, MetaJson.write(o))
-      val files = c.perFile.keys.toVector
-        .sortBy(f => (f.minConv.getOrElse(""), f.minTurn.getOrElse(0), f.path))
-      Plan(base, Clustering.greedyGroups(files, groupTargetBytes).map(_.map(_.path)))
-    } match {
-      case Left(s) => return Left(s)
-      case Right(p) => p
+      val p = Plan(base, l.groups.map(_.map(_.path)), l.convCuts, l.turnCuts, l.curve, kind)
+      writePlan(table, jobId, p)
+      p
+    }
+    if (plan.groups.forall(_.isEmpty)) {
+      // nothing to rewrite: no commit, no empty files (same rule as a
+      // no-op merge)
+      val cur = table.currentSnapshot.get
+      markCommitted(table, jobId, operation, cur.id)
+      return Left(cur)
     }
     val sidecar = readJobFile(table, jobId, countsFile).getOrElse(
       throw new IllegalStateException(
@@ -378,33 +373,40 @@ object Ledger {
       .map(e => e.getKey -> e.getValue.asLong).toMap
     val touched = plan.groups.map(_.size).sum
 
+    // a few groups at a time: a group larger than one task already fans
+    // out over the executors
     val (snap, tasks) = runJob(table, jobId, operation, plan,
-      shuffleParallelism(table), interruptAfter) { (in, gi) =>
+      math.max(2, table.spark.sparkContext.defaultParallelism / 8), interruptAfter) { (in, gi) =>
       val paths = in.map(_.path)
       val inBytes = in.map(_.bytes).sum
       val expected = in.map(_.rows).sum - paths.map(counts.getOrElse(_, 0L)).sum
       val out =
         if (expected == 0L) Vector.empty[DataFile]
-        else table.writeSorted(survivors(paths, table.fitsOneTask(inBytes)),
-          s"$jobId-g$gi", inBytes, expected, targetFileRows,
-          Seq(col("conv_id"), col("turn_idx")))
+        else Clustering.writeGroup(table, plan, survivors(paths, table.fitsOneTask(inBytes)),
+          s"$jobId-g$gi", inBytes, expected, targetFileRows)
       val written = out.map(_.rows).sum
       require(written == expected,
         s"$operation group $gi wrote $written survivors but the plan counted " +
-          s"$expected: rows to delete out of step with the table (a " +
+          s"$expected: rows to drop out of step with the table (a " +
           "non-deterministic predicate?); refusing to commit")
       out
     } { tasks =>
       sidecar.fields().asScala.filter(_.getKey != "counts")
         .map(e => e.getKey -> e.getValue.asText).toMap ++
-        Map("deleted_rows" -> deleted(tasks).toString, "touched_files" -> touched.toString)
+        Map("deleted_rows" -> dropped(tasks).toString, "touched_files" -> touched.toString,
+          "groups" -> plan.groups.size.toString, "rows_rewritten" -> rewritten(tasks).toString)
     }
-    Right(Deleted(snap, deleted(tasks), touched, plan.groups.size, tasks.count(_._2), sidecar))
+    Right(Rewritten(snap, dropped(tasks), touched, plan.groups.size, tasks.count(_._2),
+      rewritten(tasks), sidecar))
   }
 
   /** Rows a job's groups read minus those they wrote, resumed ones too. */
-  private def deleted(tasks: Vector[(TaskRow, Boolean)]): Long =
+  private def dropped(tasks: Vector[(TaskRow, Boolean)]): Long =
     tasks.map { case (t, _) => t.rows - t.outFiles.map(_.rows).sum }.sum
+
+  /** Rows read by the groups this call ran, not the resumed ones. */
+  private def rewritten(tasks: Vector[(TaskRow, Boolean)]): Long =
+    tasks.collect { case (t, false) => t.rows }.sum
 
   // ---- job files ----------------------------------------------------------
 

@@ -6,12 +6,13 @@ import java.util.concurrent.atomic.AtomicBoolean
 import scala.concurrent.{Await, ExecutionContext, Future}
 import scala.concurrent.duration.Duration
 
-/** Driver-side concurrent submission of independent Spark jobs (bins/groups
-  * are independent by construction). Spark schedules the concurrently
-  * submitted jobs across the same executors, so many single-partition bin
-  * rewrites fill the cluster instead of running one task at a time — the
-  * difference between compaction that scales with cores and compaction
-  * whose wall-clock is bins x per-job latency regardless of cluster size.
+/** Driver-side concurrent submission of independent Spark jobs (rewrite
+  * groups are independent by construction). Spark schedules the
+  * concurrently submitted jobs across the same executors, so many
+  * single-task group rewrites fill the cluster instead of running one task
+  * at a time — the difference between a rewrite that scales with cores and
+  * one whose wall-clock is groups x per-job latency regardless of cluster
+  * size.
   *
   * Failure semantics: fail-fast WITHOUT zombies. The first task failure (a)
   * stops queued tasks from starting (they see the failure flag and abort

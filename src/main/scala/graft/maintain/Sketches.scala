@@ -30,8 +30,8 @@ import graft.lake.{DataFile, FileIO, LakeTable, MetaJson}
   *     ZERO per-file filesystem stats);
   *   - an ACTIVE store (its `_meta.json` exists) makes every
   *     [[LakeTable.writeDataFiles]] sketch its own output while the rows
-  *     are hot ([[sketchOnWrite]]) — so pure rewrites (compaction,
-  *     clustering, dedupe/delete survivors) KEEP the table covered and a
+  *     are hot ([[sketchOnWrite]]) — so group rewrites (clustering,
+  *     dedupe/delete survivors, the maintenance cycle) KEEP the table covered and a
   *     recluster no longer invalidates the store (the round-4 finding #6);
   *   - files written before activation (or whose batch was GC'd) are
   *     healed by [[ensure]]: one consolidated batch for all missing files

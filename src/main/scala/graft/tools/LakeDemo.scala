@@ -7,8 +7,8 @@ import graft.lake.LakeTable
 import graft.maintain._
 import graft.synth.TranscriptSynth
 
-/** Maintenance-engine surface demo: synth -> load -> MERGE -> compact ->
-  * cluster -> pruned scan -> manifest rewrite -> expire, printing each
+/** Maintenance-engine surface demo: synth -> load -> MERGE -> cluster ->
+  * pruned scan -> manifest rewrite -> expire, printing each
   * snapshot and the prune ratio. Run:
   * `sbt "runMain graft.tools.LakeDemo target/lake-demo"`.
   */
@@ -47,9 +47,6 @@ object LakeDemo {
     ).toDF("conv_id", "turn_idx", "role", "text", "tool", "_seq")
     val m = MergeInto.merge(t, staged, "drop-a")
     println(s"[lake] merge: snapshot=${m.snapshot.id} touched=${m.touchedFiles} carried=${m.carriedFiles} rejected=${m.rejectedRows}")
-
-    val c = Compaction.compact(t, "compact-1")
-    println(s"[lake] compact: bins=${c.bins} files now=${t.currentFiles.size}")
 
     val cl = Clustering.cluster(t, "cluster-1", targetFileRows = 2000)
     println(s"[lake] cluster: groups=${cl.groups} rows=${cl.rowsRewritten} files now=${t.currentFiles.size}")

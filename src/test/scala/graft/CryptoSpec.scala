@@ -6,7 +6,7 @@ import org.scalatest.funsuite.AnyFunSuite
 import org.apache.spark.sql.functions._
 
 import graft.lake.{Crypto, FileIO, LakeTable}
-import graft.maintain.{Clustering, Compaction, Dedupe, DeleteFrom, Maintenance, MergeInto}
+import graft.maintain.{Clustering, Dedupe, DeleteFrom, Maintenance, MergeInto}
 import graft.synth.TranscriptSynth
 
 /** Encryption at rest (Parquet Modular Encryption): an encrypted table must

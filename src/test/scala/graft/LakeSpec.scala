@@ -324,6 +324,11 @@ class LakeSpec extends AnyFunSuite {
     * copies of four turns' texts, one from each of those files, under
     * smaller keys (so the originals are the victims).
     */
+  /** A cycle's `nowMs` that, with `rowRetentionMs = Some(1000L)`, expires
+    * the turns of synth conversations 0-4.
+    */
+  private val RetainConvs5 = TranscriptSynth.BaseTsMillis + 5L * 60000 + 1000L
+
   private def rewriteTable(name: String): LakeTable = {
     val t = LakeTable.create(spark, tmpTable(name), TranscriptSynth.schema)
     val base = synth(40)
@@ -339,9 +344,11 @@ class LakeSpec extends AnyFunSuite {
     // every Result field: the snapshot by id (its metadata paths are unique
     // per table), the rest as they are
     val ops: Seq[(String, LakeTable => Any)] = Seq(
-      "compact" -> { t =>
-        val r = Compaction.compact(t, "c", smallFileBytes = 1L << 30, targetBytes = 1L << 30)
-        (r.snapshot.map(_.id), r.copy(snapshot = None))
+      "cycle" -> { t =>
+        val r = Maintenance.runCycle(t, "y", targetFileRows = 50, retentionMs = None,
+          dedupeMode = Some("exact"), rowRetentionMs = Some(1000L), nowMs = RetainConvs5)
+        (r.cluster.snapshot.id, r.cluster.copy(snapshot = null),
+          r.dedupe.map(_.copy(snapshot = null)), r.rowRetention.map(_.copy(snapshot = null)))
       },
       "dedupe" -> { t =>
         val r = Dedupe.runPass(t, "d", targetFileRows = 50)
@@ -366,16 +373,14 @@ class LakeSpec extends AnyFunSuite {
       def outputs(t: LakeTable) = t.currentFiles.filterNot(f => inputs(f.path))
       val (ra, one) = TestSpark.countWork(op(a))
       val (rb, shuffled) = TestSpark.withShuffledRewrites(TestSpark.countWork(op(b)))
-      // compaction writes one file per bin in one task on either plan
-      if (name != "compact")
-        assert(shuffled.exchanges > one.exchanges, s"one task: $one, shuffled: $shuffled")
+      assert(shuffled.exchanges > one.exchanges, s"one task: $one, shuffled: $shuffled")
       assert(ra == rb)
       assert(sortedRows(a.scan().df) == sortedRows(b.scan().df))
       val (oa, ob) = (outputs(a), outputs(b))
       assert(oa.nonEmpty, "no output files")
       assert(oa.size == ob.size, s"output files: ${oa.map(_.rows)} vs ${ob.map(_.rows)}")
       assert(a.currentFiles.size < before + oa.size, "the rewrite removed its inputs")
-      if (name == "cluster")
+      if (name == "cluster" || name == "cycle")
         for (t <- Seq(a, b)) {
           val pr = t.scan(convRange = Some(("c00000010", "c00000011"))).prune
           assert(pr.selectedFiles < oa.size, s"clustered files must prune: $pr")
@@ -393,11 +398,68 @@ class LakeSpec extends AnyFunSuite {
     }
   }
 
+  /** A clustered table of 60 one-turn conversations `c000`-`c059` (turn
+    * `ts` one minute apart, six 10-row files, each its own cluster group),
+    * plus a drop file whose keys sort between `c009` and `c010`:
+    *   - `c0095` copies `c040`'s text: `c040`, in a clean group, is a victim;
+    *   - `c0096` copies stale `c005`'s: the keeper is stale, the copy fresh;
+    *   - `c0097` is stale and copies stale `c002`'s: a victim and stale;
+    *   - `c0098` is stale and unique.
+    * With the cutoff at `c010`'s `ts`, 3 turns are victims and 11 more stale.
+    */
+  private def fusionTable(name: String): LakeTable = {
+    import spark.implicits._
+    val t = LakeTable.create(spark, tmpTable(name), TranscriptSynth.schema)
+    def text(i: Int) = java.util.UUID.nameUUIDFromBytes(s"text-$i".getBytes).toString
+    def ts(min: Int) = new java.sql.Timestamp(TranscriptSynth.BaseTsMillis + min * 60000L)
+    def turns(rows: Seq[(String, String, Int)]) = rows
+      .map { case (c, x, min) => (c, 0, "user", x, null: String, ts(min)) }
+      .toDF("conv_id", "turn_idx", "role", "text", "tool", "ts").coalesce(1)
+    for (f <- 0 until 6)
+      t.append(turns((10 * f until 10 * f + 10).map(i => (f"c$i%03d", text(i), i))), s"init$f")
+    Clustering.cluster(t, "k0", targetFileRows = 10, groupTargetBytes = 1L)
+    t.append(turns(Seq(("c0095", text(40), 60), ("c0096", text(5), 60),
+      ("c0097", text(2), 0), ("c0098", text(100), 1))), "drop")
+    t
+  }
+
+  test("maintenance cycle: the fused rewrite drops what dedupe, DELETE and a recluster do") {
+    val nowMs = TranscriptSynth.BaseTsMillis + 10L * 60000
+    for (mode <- Seq("exact", "minhash"); shuffled <- Seq(false, true))
+      withClue(s"$mode, shuffled = $shuffled: ") {
+        def run[T](body: => T): T = if (shuffled) TestSpark.withShuffledRewrites(body) else body
+        val (f, s) = (fusionTable(s"fused-$mode-$shuffled"), fusionTable(s"seq-$mode-$shuffled"))
+        val fused = run(Maintenance.runCycle(f, "fc", targetFileRows = 10,
+          groupTargetBytes = 1L, retentionMs = None, dedupeMode = Some(mode),
+          rowRetentionMs = Some(1L), nowMs = nowMs + 1L))
+        val (d, x) = run {
+          val d = Dedupe.runPass(s, "sd", mode = mode, targetFileRows = 10, groupTargetBytes = 1L)
+          val x = DeleteFrom.run(s, "sx", s"ts < timestamp_millis(${nowMs}L)",
+            targetFileRows = 10, groupTargetBytes = 1L)
+          Clustering.cluster(s, "sk", targetFileRows = 10, groupTargetBytes = 1L)
+          (d, x)
+        }
+        assert((fused.dedupe.get.duplicateRows, fused.rowRetention.get.deletedRows) ==
+          (d.duplicateRows, x.deletedRows))
+        assert((d.duplicateRows, x.deletedRows) == (3L, 11L))
+        val live = sortedRows(f.scan().df)
+        assert(live == sortedRows(s.scan().df))
+        assert(live.map(_.getString(0)) == (10 until 60).filter(_ != 40)
+          .map(i => f"c$i%03d").patch(0, Seq("c0095"), 0))
+        // one rewrite job, which reread the counted groups and the drop's
+        assert(FileIO.Local.list(f.ledgerDir).filter(_.startsWith("fc-")) == Vector("fc-cluster"))
+        assert(fused.cluster.groups == 3, s"groups: ${fused.cluster}")
+        for (t <- Seq(f, s)) {
+          val byKey = t.currentFiles.sortBy(f => (f.minConv.get, f.maxConv.get))
+          byKey.zip(byKey.tail).foreach { case (a, b) =>
+            assert(a.maxConv.get <= b.minConv.get, s"overlapping ${a.path} and ${b.path}")
+          }
+        }
+      }
+  }
+
   test("group rewrites: a group within one split is one job with no Exchange") {
     val t = rewriteTable("rewrite-work")
-    val (_, compact) = TestSpark.countWork(
-      Compaction.compact(t, "c", smallFileBytes = 1L << 30, targetBytes = 1L << 30))
-    assert(compact == TestSpark.Work(1, 0))
     // whole passes on a one-task table: an exact dedupe publishes its
     // victims, counts them and rewrites one group; a DELETE counts and
     // rewrites one group (the keeper aggregate + join and the shuffled
@@ -417,9 +479,10 @@ class LakeSpec extends AnyFunSuite {
     intercept[InterruptedException](DeleteFrom.run(t, "x", "turn_idx = 1", interruptAfter = 0))
     val (x, delete) = TestSpark.countWork(DeleteFrom.run(t, "x", "turn_idx = 1"))
     assert(x.deletedRows > 0 && delete == TestSpark.Work(1, 0))
-    // a whole cycle on a clustered table after two small drops: exact
-    // dedupe, row retention of conversations 0-4, a recluster of the groups
-    // those wrote, expire and GC; it runs no compaction job
+    // a whole cycle on a clustered table after two small drops: ONE rewrite
+    // job that counts exact dedupe victims and the stale turns of
+    // conversations 0-4, reclusters the groups holding them or the drops,
+    // then expire and GC (three rewrite jobs gave Work(6, 0))
     val c = rewriteTable("rewrite-work-cycle")
     Clustering.cluster(c, "ck", targetFileRows = 50)
     for (i <- 0 until 2)
@@ -428,12 +491,12 @@ class LakeSpec extends AnyFunSuite {
         .withColumn("text", concat(lit("new "), col("text"))).coalesce(1), s"drop$i")
     val (cr, cycle) = TestSpark.countWork(Maintenance.runCycle(c, "cw",
       targetFileRows = 50, retentionMs = None, dedupeMode = Some("exact"),
-      rowRetentionMs = Some(1000L), nowMs = TranscriptSynth.BaseTsMillis + 5L * 60000 + 1000L))
+      rowRetentionMs = Some(1000L), nowMs = RetainConvs5))
     assert(cr.dedupe.get.duplicateRows > 0 && cr.rowRetention.get.deletedRows > 0)
     assert(cr.cluster.rowsRewritten > 0)
-    assert(FileIO.Local.list(c.ledgerDir).filter(_.startsWith("cw-")).toSet ==
-      Set("cw-dedupe", "cw-rowexpire", "cw-cluster"))
-    assert(cycle == TestSpark.Work(6, 0), s"whole cycle: $cycle")
+    assert(FileIO.Local.list(c.ledgerDir).filter(_.startsWith("cw-")).toSet == Set("cw-cluster"))
+    // publish the victims, count them, count the stale turns, rewrite one group
+    assert(cycle == TestSpark.Work(4, 0), s"whole cycle: $cycle")
     // a recluster reuses the first clustering's cuts: one job per dirty group
     Clustering.cluster(t, "k1", targetFileRows = 50)
     MergeInto.merge(t, spark.createDataFrame(Seq(("c00000003", "0", "EDITED")))
@@ -492,14 +555,14 @@ class LakeSpec extends AnyFunSuite {
         assert(got == expected)
       }
       check("merge")
-      run(Compaction.compact(t, "c", smallFileBytes = 1L << 30, targetBytes = 1L << 30))
-      check("compact")
+      assert(run(Clustering.cluster(t, "c", targetFileRows = 50)).rowsRewritten > 0)
+      check("cluster")
       assert(run(Dedupe.runPass(t, "d", targetFileRows = 50)).duplicateRows > 0)
       check("dedupe")
       assert(run(DeleteFrom.run(t, "x", "turn_idx = 0", targetFileRows = 50)).deletedRows > 0)
       check("delete")
       assert(run(Clustering.cluster(t, "k", targetFileRows = 50)).rowsRewritten > 0)
-      check("cluster")
+      check("recluster")
     }
   }
 
@@ -856,8 +919,8 @@ class LakeSpec extends AnyFunSuite {
     t.append(synth(20).repartition(6), "init")
     Sketches.ensure(t) // batch 1 covers the 6 loaded files
 
-    // compaction supersedes the small files — its output writes batch 2
-    Compaction.compact(t, "sg-compact", smallFileBytes = 1L << 30, targetBytes = 1L << 30)
+    // clustering supersedes the small files — its output writes batch 2
+    Clustering.cluster(t, "sg-cluster")
     assert(t.currentFiles.forall(_.sketch.isDefined))
     Expire.expire(t, retainLast = 1)
     // plant a crashed batch write's staging residue: swept past the grace age
@@ -1008,20 +1071,21 @@ class LakeSpec extends AnyFunSuite {
     assert(t.scan().df.count() == expect)
 
     // crashed-cycle resume with DEFAULT nowMs: the cycle replays the
-    // predicate its first invocation pinned instead of deriving a new
-    // cutoff from the wall clock and tripping the changed-predicate guard
+    // cutoff its first invocation pinned instead of deriving a new one from
+    // the wall clock and tripping the changed-kind guard
     val t2 = LakeTable.create(spark, tmpTable("delete-resume-now"), TranscriptSynth.schema)
     t2.append(synth(40).repartitionByRange(4, col("conv_id"), col("turn_idx"))
       .sortWithinPartitions("conv_id", "turn_idx"), "init")
     val cut2 = TranscriptSynth.BaseTsMillis + 20L * 60000
-    // mirror a real crashed cycle: the row-retention delete died after
-    // pinning its plan
-    intercept[Exception] { // crash AFTER the plan is pinned
-      DeleteFrom.run(t2, "cyc-x-rowexpire", s"ts < timestamp_millis(${cut2}L)",
-        interruptAfter = 0)
+    // a real crashed cycle: its rewrite died after pinning its counts (the
+    // first storage write) and plan (the second), at its first data file
+    intercept[java.io.IOException] {
+      Maintenance.runCycle(new LakeTable(t2.root, spark, new CrashingIO(2)), "cyc-x",
+        targetFileRows = 100, groupTargetBytes = 64L << 10, retainLast = 2,
+        rowRetentionMs = Some(1L), nowMs = cut2 + 1L)
     }
-    assert(DeleteFrom.plannedPredicate(t2, "cyc-x-rowexpire")
-      .contains(s"ts < timestamp_millis(${cut2}L)"))
+    assert(Ledger.readPlan(t2, "cyc-x-cluster").map(_.kind)
+      .contains(s"cluster+delete:ts < timestamp_millis(${cut2}L)"))
     // the retried cycle (fresh wall clock) must resume cleanly
     val r = Maintenance.runCycle(t2, "cyc-x", targetFileRows = 100,
       groupTargetBytes = 64L << 10, retainLast = 2,
@@ -1080,20 +1144,18 @@ class LakeSpec extends AnyFunSuite {
     }
   }
 
-  test("compaction: many small files bin-packed, content identical") {
-    val t = LakeTable.create(spark, tmpTable("compact"), TranscriptSynth.schema)
+  test("clustering packs many small files into few, content identical") {
+    val t = LakeTable.create(spark, tmpTable("pack"), TranscriptSynth.schema)
     val data = synth(60)
     t.append(data.repartition(40), "init") // 40 tiny files
     val before = t.currentFiles.size
     val pre = sortedRows(t.scan().df)
-    val res = Compaction.compact(t, "compact-job-1", smallFileBytes = 32L << 20,
-      targetBytes = 128L << 20)
-    assert(res.snapshot.isDefined)
+    val res = Clustering.cluster(t, "pack-job-1")
     assert(t.currentFiles.size < before / 2, s"files: $before -> ${t.currentFiles.size}")
-    assert(sortedRows(t.scan().df) == pre, "compaction must not change content")
+    assert(sortedRows(t.scan().df) == pre, "packing must not change content")
     // idempotent: same job id returns the committed snapshot, no new work
-    val again = Compaction.compact(t, "compact-job-1")
-    assert(again.snapshot.map(_.id) == res.snapshot.map(_.id))
+    val again = Clustering.cluster(t, "pack-job-1")
+    assert(again.snapshot.id == res.snapshot.id && again.rowsRewritten == 0L)
   }
 
   test("clustering cold pass: >=90% file prune on conv range from a random layout") {
@@ -1191,7 +1253,7 @@ class LakeSpec extends AnyFunSuite {
   test("expiry: old snapshots + unreferenced files deleted, current readable") {
     val t = LakeTable.create(spark, tmpTable("expire"), TranscriptSynth.schema)
     t.append(synth(20).repartition(10), "init")
-    Compaction.compact(t, "expire-compact", smallFileBytes = 32L << 20)
+    Clustering.cluster(t, "expire-cluster")
     val pre = sortedRows(t.scan().df)
     val nSnapshots = t.allSnapshots.size
     assert(nSnapshots >= 3)
@@ -1199,7 +1261,7 @@ class LakeSpec extends AnyFunSuite {
 
     val res = Expire.expire(t, retainLast = 1)
     assert(res.expiredSnapshots.nonEmpty)
-    assert(res.deletedDataFiles.nonEmpty, "compacted-away small files must be GC'd")
+    assert(res.deletedDataFiles.nonEmpty, "clustered-away small files must be GC'd")
     assert(res.failures.isEmpty)
     assert(Files.list(Paths.get(t.root, "data")).count() < filesOnDisk)
     assert(t.allSnapshots.size < nSnapshots)
@@ -1500,41 +1562,45 @@ class LakeSpec extends AnyFunSuite {
 
   test("job protocol: a failed group checkpoints an error, the rerun reuses done outputs") {
     val t = LakeTable.create(spark, tmpTable("job-crash"), TranscriptSynth.schema)
-    t.append(synth(40).repartition(8), "init")
+    // eight key-range files, one cluster group each
+    t.append(synth(40).repartitionByRange(8, col("conv_id"), col("turn_idx"))
+      .sortWithinPartitions("conv_id", "turn_idx"), "init")
     val pre = sortedRows(t.scan().df)
     val before = t.currentSnapshotId.get
     val files = t.currentFiles.map(_.path).sorted
-    val inputs = files.take(6) // three bins of two; two files stay out of the plan
-    val jobId = "crash-compact"
-    val plan = Ledger.planOrResume(t, jobId, "compact", kind = "compact")(
-      Ledger.Plan(before, inputs.grouped(2).toVector)).toOption.get
+    val jobId = "crash-cluster"
+    // the clustering persists its plan and counts, then stops before group 0
+    intercept[InterruptedException](
+      Clustering.cluster(t, jobId, groupTargetBytes = 1L, interruptAfter = 0))
+    val plan = Ledger.readPlan(t, jobId).get
+    assert(plan.groups.size == files.size)
 
     // group 1 fails; one-at-a-time submission stops there
     val e = intercept[IllegalStateException] {
-      Ledger.runJob(t, jobId, "compact", plan, parallelism = 1) { (in, gi) =>
-        if (gi == 1) throw new IllegalStateException("bin 1 failed")
+      Ledger.runJob(t, jobId, "cluster", plan, parallelism = 1) { (in, gi) =>
+        if (gi == 1) throw new IllegalStateException("group 1 failed")
         t.writeDataFiles(t.readData(in.map(f => t.absData(f.path))).coalesce(1),
           s"$jobId-b$gi")
       }(_ => Map.empty)
     }
-    assert(e.getMessage == "bin 1 failed")
+    assert(e.getMessage == "group 1 failed")
     val crashed = Ledger.readTasks(t, jobId)
     assert(crashed(0).state == "done")
-    assert(crashed(1).state == "error" && crashed(1).errorMessage == "bin 1 failed")
+    assert(crashed(1).state == "error" && crashed(1).errorMessage == "group 1 failed")
     assert(!crashed.contains(2))
     assert(t.currentSnapshotId.get == before, "a failed job commits nothing")
 
-    // compaction resumes the same plan: bin 0 reused, bins 1-2 rewritten
-    val res = Compaction.compact(t, jobId)
-    assert(res.bins == 3 && res.resumedBins == 1 && res.filesCompacted == 6)
+    // clustering resumes the same plan: group 0 reused, the rest rewritten
+    val res = Clustering.cluster(t, jobId, groupTargetBytes = 1L)
+    assert(res.groups == files.size && res.resumedGroups == 1)
     val after = Ledger.readTasks(t, jobId)
-    assert(after.size == 3 && after.values.forall(_.state == "done"),
+    assert(after.size == files.size && after.values.forall(_.state == "done"),
       "the rerun flips the error row to done")
     assert(after(0).outFiles.map(_.path) == crashed(0).outFiles.map(_.path),
       "a done group's output files are reused verbatim")
-    // the commit removed exactly the plan's inputs
+    // the commit replaced exactly the plan's inputs
     val outputs = after.values.flatMap(_.outFiles.map(_.path)).toSet
-    assert(t.currentFiles.map(_.path).toSet == (files.toSet -- inputs) ++ outputs)
+    assert(t.currentFiles.map(_.path).toSet == outputs)
     assert(sortedRows(t.scan().df) == pre, "resume must reproduce exact content")
   }
 
@@ -1828,16 +1894,16 @@ class LakeSpec extends AnyFunSuite {
       when(col("turn_idx") % 2 === 0, timestamp_millis(lit(TranscriptSynth.BaseTsMillis)))
         .otherwise(timestamp_millis(lit(now)))).repartition(4), "init")
     val target = 20L
-    Maintenance.runCycle(t, "cyc-rows", targetFileRows = target,
+    val r = Maintenance.runCycle(t, "cyc-rows", targetFileRows = target,
       groupTargetBytes = 64L << 10, retentionMs = None, dedupeMode = Some("exact"),
       rowRetentionMs = Some(3600000L), nowMs = now)
-    for (phase <- Seq("dedupe", "rowexpire")) withClue(s"$phase: ") {
-      val tasks = Ledger.readTasks(t, s"cyc-rows-$phase").values.toSeq
-      val written = tasks.flatMap(_.outFiles)
-      assert(tasks.exists(_.outFiles.map(_.rows).sum > target),
-        "no group wrote more than one file's rows: the bound is not exercised")
-      assert(written.forall(_.rows <= target), s"file rows: ${written.map(_.rows)}")
-    }
+    assert(r.dedupe.get.duplicateRows > 0 && r.rowRetention.get.deletedRows > 0)
+    // the one rewrite job drops both kinds of rows while it reclusters
+    val tasks = Ledger.readTasks(t, "cyc-rows-cluster").values.toSeq
+    val written = tasks.flatMap(_.outFiles)
+    assert(tasks.exists(_.outFiles.map(_.rows).sum > target),
+      "no group wrote more than one file's rows: the bound is not exercised")
+    assert(written.forall(_.rows <= target), s"file rows: ${written.map(_.rows)}")
   }
 
   test("maintenance cycle: cluster+expire+gc in one idempotent call") {

@@ -40,8 +40,8 @@ object TestSpark {
 
   /** Run `body` with `spark.sql.files.maxPartitionBytes` at 1 KB, below any
     * data file's size, which sends every dedupe, DELETE and cluster group
-    * (and the MERGE write) down its range-repartitioned plan; compaction
-    * bins stay one task. The session's own value is restored afterwards.
+    * (and the MERGE write) down its range-repartitioned plan. The
+    * session's own value is restored afterwards.
     */
   def withShuffledRewrites[T](body: => T): T =
     withConf("spark.sql.files.maxPartitionBytes", "1024")(body)

@@ -3,7 +3,7 @@ package graft
 import org.scalatest.funsuite.AnyFunSuite
 
 import graft.lake.{LakeTable, Typed}
-import graft.maintain.Compaction
+import graft.maintain.Clustering
 import graft.plans.GraftPlans
 import graft.synth.TranscriptSynth
 
@@ -14,7 +14,7 @@ class TypedSpec extends AnyFunSuite {
     val root = s"target/test-typed/${System.nanoTime()}"
     val t = LakeTable.create(spark, root, TranscriptSynth.schema)
     t.append(TranscriptSynth.turns(spark, 15, seed = 42L).repartition(6), "init")
-    Compaction.compact(t, "typed-compact", smallFileBytes = 32L << 20)
+    Clustering.cluster(t, "typed-cluster")
 
     val turns = Typed.scanTurns(t)
     val first = turns.filter(_.conv_id == "c00000001").collect().minBy(_.turn_idx)
@@ -22,8 +22,8 @@ class TypedSpec extends AnyFunSuite {
     assert(turns.count() == t.scan().df.count())
 
     val snaps = GraftPlans.snapshots(spark, t).collect()
-    assert(snaps.length == 3) // create, append, compact
-    assert(snaps.head.getString(4) == "compact") // newest first
+    assert(snaps.length == 3) // create, append, cluster
+    assert(snaps.head.getString(4) == "cluster") // newest first
     assert(snaps.map(_.getLong(0)).toSeq == snaps.map(_.getLong(0)).sorted.reverse.toSeq)
   }
 }

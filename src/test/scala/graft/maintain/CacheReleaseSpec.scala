@@ -66,9 +66,6 @@ class CacheReleaseSpec extends AnyFunSuite {
 
     releases("MERGE")(MergeInto.merge(t, drop, "drop-1"))
     releases("shuffled MERGE")(TestSpark.withShuffledMerge(MergeInto.merge(t, drop, "drop-2")))
-    releases("compaction") {
-      Compaction.compact(t, "r-compact", smallFileBytes = 1L << 30, targetBytes = 1L << 30)
-    }
     for (mode <- Seq("exact", "minhash", "simhash"))
       releases(s"$mode dedupe")(Dedupe.runPass(t, s"r-dedupe-$mode", mode = mode))
     for (mode <- Seq("exact", "minhash"))
