@@ -2,7 +2,7 @@ package graft
 import org.apache.spark.sql.SparkSession
 
 /** Driver-run benchmark: every SparkEntry query timed at SPARK_GRAFT_SF_DIR.
-  * The one-time lake fixture (load -> compact -> cluster -> merge -> cluster
+  * The one-time lake fixture (load -> cluster -> merge -> cluster
   * of the transcript-ized events table) is built BEFORE the timed loop and
   * reported as its own `fixture_sec` metric — otherwise it lands on whichever
   * lake query happens to run first and mis-attributes ~10s of maintenance

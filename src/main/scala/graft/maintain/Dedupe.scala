@@ -65,21 +65,26 @@ object Dedupe {
   private val SigHashes = 32
   private val MinJaccard = 0.9
 
+  /** `runPass`'s defaults, which the maintenance cycle's dedupe runs with. */
+  private[maintain] val DefaultMinTokens = 1
+  private[maintain] val DefaultUnit = "turn"
+  private[maintain] val DefaultMaxIters = 50
+  private[maintain] val DefaultMaxConvChars = 8L << 20
+
   /** Remove duplicate-text turns from the current snapshot. Idempotent per
     * (jobId): a committed pass returns its snapshot without rescanning.
     */
   def runPass(table: LakeTable, jobId: String,
               mode: String = "exact",
-              minTokens: Int = 1,
-              unit: String = "turn",
-              maxIters: Int = 50,
-              maxConvChars: Long = 8L << 20,
+              minTokens: Int = DefaultMinTokens,
+              unit: String = DefaultUnit,
+              maxIters: Int = DefaultMaxIters,
+              maxConvChars: Long = DefaultMaxConvChars,
               targetFileRows: Long = 1L << 20,
               groupTargetBytes: Long = 256L << 20,
               interruptAfter: Int = Int.MaxValue): Result = {
     val kind = planKind(mode, unit, minTokens, maxConvChars)
-    // empty table: nothing to dedupe — a no-op, not an error, so a
-    // maintenance cycle with dedupe enabled runs cleanly on a fresh table
+    // empty table: nothing to dedupe — a no-op, not an error
     if (table.currentFiles.isEmpty)
       return Result(table.currentSnapshot.getOrElse(
         throw new IllegalStateException(s"no table at ${table.root}")),

@@ -77,14 +77,11 @@ object Maintenance {
     *
     * The report's `dedupe` and `rowRetention` each carry their own rows,
     * and the rewrite's snapshot, groups, resumed groups and files.
-    *
-    * `smallFileBytes` and `targetBytes` are ignored (the cycle runs no
-    * compaction); they stay so that callers passing them by name compile.
     */
   def runCycle(table: LakeTable, cycleId: String,
-               @deprecated("ignored: the cycle runs no compaction", "0.1.0")
+               @deprecated("ignored (no compaction); kept for callers passing it by name", "0.1.0")
                smallFileBytes: Long = 32L << 20,
-               @deprecated("ignored: the cycle runs no compaction", "0.1.0")
+               @deprecated("ignored (no compaction); kept for callers passing it by name", "0.1.0")
                targetBytes: Long = 128L << 20,
                targetFileRows: Long = 1L << 20,
                groupTargetBytes: Long = 256L << 20,
@@ -103,8 +100,9 @@ object Maintenance {
       .flatMap(n => Option(n.get("predicate"))).map(_.asText)
     val predSql = rowRetentionMs.map(age =>
       pinned.getOrElse(s"ts < timestamp_millis(${nowMs - age}L)"))
-    val kind = ("cluster" +: (dedupeMode.map(Dedupe.planKind(_, "turn", 1, 0L)) ++
-      predSql.map("delete:" + _)).toSeq).mkString("+")
+    import Dedupe.{DefaultMaxConvChars, DefaultMaxIters, DefaultMinTokens, DefaultUnit}
+    val kind = ("cluster" +: (dedupeMode.map(Dedupe.planKind(_, DefaultUnit, DefaultMinTokens,
+      DefaultMaxConvChars)) ++ predSql.map("delete:" + _)).toSeq).mkString("+")
 
     // `rows` of `paths` less this job's dedupe victims
     def live(rows: DataFrame, paths: Vector[String], oneTask: Boolean) =
@@ -113,10 +111,9 @@ object Maintenance {
         targetFileRows, interruptAfter = Int.MaxValue) {
       if (table.currentFiles.isEmpty) Ledger.Counted(Map.empty)
       else {
-        // the victims a `Dedupe.runPass` with its defaults would remove
         val victims = dedupeMode.fold(Map.empty[DataFile, Long])(m =>
-          Dedupe.publishVictims(table, jobId, mode = m, minTokens = 1, unit = "turn",
-            maxIters = 50, maxConvChars = 0L)._1)
+          Dedupe.publishVictims(table, jobId, m, DefaultMinTokens, DefaultUnit,
+            DefaultMaxIters, DefaultMaxConvChars)._1)
         // on the snapshot the count above may have made (sketches only)
         val (expired, candidates) = predSql.fold((Map.empty[DataFile, Long], 0L))(
           DeleteFrom.countMatches(table, table.currentSnapshot.get, _)(live))

@@ -1883,27 +1883,43 @@ class LakeSpec extends AnyFunSuite {
   }
 
   test("maintenance cycle: dedupe and row retention write files of targetFileRows") {
-    val t = LakeTable.create(spark, tmpTable("cycle-file-rows"), TranscriptSynth.schema)
-    val base = synth(100)
-    val copies = base.where(col("conv_id") < "c00000030")
-      .withColumn("conv_id", concat(lit("z"), col("conv_id")))
     // even turns are a day old, odd ones new: every file, however the
     // dedupe rewrite sorted it, keeps some rows and expires others
     val now = TranscriptSynth.BaseTsMillis + 86400000L
-    t.append(base.unionByName(copies).withColumn("ts",
-      when(col("turn_idx") % 2 === 0, timestamp_millis(lit(TranscriptSynth.BaseTsMillis)))
-        .otherwise(timestamp_millis(lit(now)))).repartition(4), "init")
+    def table(name: String): LakeTable = {
+      val t = LakeTable.create(spark, tmpTable(name), TranscriptSynth.schema)
+      val base = synth(100)
+      val copies = base.where(col("conv_id") < "c00000030")
+        .withColumn("conv_id", concat(lit("z"), col("conv_id")))
+      t.append(base.unionByName(copies).withColumn("ts",
+        when(col("turn_idx") % 2 === 0, timestamp_millis(lit(TranscriptSynth.BaseTsMillis)))
+          .otherwise(timestamp_millis(lit(now)))).repartition(4), "init")
+      t
+    }
     val target = 20L
-    val r = Maintenance.runCycle(t, "cyc-rows", targetFileRows = target,
+    def bounded(t: LakeTable, jobId: String): Unit = withClue(s"$jobId: ") {
+      val tasks = Ledger.readTasks(t, jobId).values.toSeq
+      val written = tasks.flatMap(_.outFiles)
+      assert(tasks.exists(_.outFiles.map(_.rows).sum > target),
+        "no group wrote more than one file's rows: the bound is not exercised")
+      assert(written.forall(_.rows <= target), s"file rows: ${written.map(_.rows)}")
+    }
+    // the cycle's one rewrite job drops both kinds of rows while it
+    // reclusters: it writes on the curve
+    val c = table("cycle-file-rows")
+    val r = Maintenance.runCycle(c, "cyc-rows", targetFileRows = target,
       groupTargetBytes = 64L << 10, retentionMs = None, dedupeMode = Some("exact"),
       rowRetentionMs = Some(3600000L), nowMs = now)
     assert(r.dedupe.get.duplicateRows > 0 && r.rowRetention.get.deletedRows > 0)
-    // the one rewrite job drops both kinds of rows while it reclusters
-    val tasks = Ledger.readTasks(t, "cyc-rows-cluster").values.toSeq
-    val written = tasks.flatMap(_.outFiles)
-    assert(tasks.exists(_.outFiles.map(_.rows).sum > target),
-      "no group wrote more than one file's rows: the bound is not exercised")
-    assert(written.forall(_.rows <= target), s"file rows: ${written.map(_.rows)}")
+    bounded(c, "cyc-rows-cluster")
+    // the standalone ops write on the table key
+    val s = table("ops-file-rows")
+    assert(Dedupe.runPass(s, "ops-dedupe", targetFileRows = target,
+      groupTargetBytes = 64L << 10).duplicateRows > 0)
+    bounded(s, "ops-dedupe")
+    assert(DeleteFrom.run(s, "ops-delete", s"ts < timestamp_millis(${now - 3600000L}L)",
+      targetFileRows = target, groupTargetBytes = 64L << 10).deletedRows > 0)
+    bounded(s, "ops-delete")
   }
 
   test("maintenance cycle: cluster+expire+gc in one idempotent call") {
