@@ -96,9 +96,9 @@ object LakeFixtures {
       val preRet = t.currentSnapshotId.get
       // retention cutoff = min event time + 1 day, taken from the MANIFEST
       // stats (no data scan) — the oracle states the same bound in SQL
-      val minTsUs = t.currentFiles.flatMap(_.minTsUs).min
+      val firstTsUs = t.currentFiles.flatMap(_.keys.ts.lo).min
       graft.maintain.DeleteFrom.run(t, s"retention-$tag",
-        s"ts < timestamp_micros(${minTsUs + 86400000000L}L)",
+        s"ts < timestamp_micros(${firstTsUs + 86400000000L}L)",
         targetFileRows = 4000)
       DedupFixture(t, post, preRet)
     })

@@ -211,25 +211,23 @@ class LakeTable(val root: String, val spark: SparkSession,
   def overlappingEntries(snap: Snapshot,
                          convRange: Option[(String, String)],
                          turnRange: Option[(Int, Int)] = None): LakeTable.PrunedEntries = {
-    val box = IntervalDnf.Conj(
-      IntervalDnf.Bounds(convRange.map(_._1), convRange.map(_._2)),
-      IntervalDnf.Bounds(turnRange.map(_._1), turnRange.map(_._2)),
-      IntervalDnf.Bounds[Long](None, None))
-    overlappingEntriesBoxes(snap, Seq(box))
+    overlappingEntriesBoxes(snap, Seq(KeyRange(
+      Bounds(convRange.map(_._1), convRange.map(_._2)),
+      Bounds(turnRange.map(_._1), turnRange.map(_._2)), Bounds(None, None))))
   }
 
   /** The general form of the two-level prune: a file/manifest is a
-    * candidate iff its stats overlap ANY box of an interval DNF
-    * ([[IntervalDnf]] — 3 dimensions: conv, turn, event-time micros).
+    * candidate iff its [[KeyRange]] overlaps ANY box of an interval DNF
+    * ([[IntervalDnf]]).
     * An EMPTY box list (statically unsatisfiable predicate) selects
     * nothing while still opening zero manifests.
     */
   def overlappingEntriesBoxes(snap: Snapshot,
-                              boxes: Seq[IntervalDnf.Conj]): LakeTable.PrunedEntries = {
+                              boxes: Seq[KeyRange]): LakeTable.PrunedEntries = {
     val refs = snap.manifests
-    val overlapping = refs.filter(r => boxes.exists(_.overlapsManifest(r)))
+    val overlapping = refs.filter(r => boxes.exists(_.overlaps(r.keys)))
     val entries = overlapping.flatMap { r =>
-      manifest(r.path).entries.withFilter(f => boxes.exists(_.overlapsFile(f)))
+      manifest(r.path).entries.withFilter(f => boxes.exists(_.overlaps(f.keys)))
         .map(FileEntry(r.path, _))
     }
     LakeTable.PrunedEntries(entries, refs.map(_.entryCount).sum,
@@ -295,9 +293,7 @@ class LakeTable(val root: String, val spark: SparkSession,
         val rel = s"data/$safeTag-$unique-$i.parquet"
         io.rename(FileIO.path(staging, name), absData(rel))
         val st = ParquetStats.read(absData(rel), conf)
-        DataFile(rel, st.rows, st.bytes,
-          st.minConv, st.maxConv, st.minTurn, st.maxTurn,
-          minTsUs = st.minTsUs, maxTsUs = st.maxTsUs)
+        DataFile(rel, st.rows, st.bytes, st.keys)
     }
     io.delete(staging)
     // An ACTIVE sketch store rides along with every write: computeBatch
@@ -357,11 +353,13 @@ class LakeTable(val root: String, val spark: SparkSession,
       summary = Map("append_tag" -> tag))
   }
 
-  /** Delta commit — O(changed files), the only commit path maintenance
-    * should use. Parent manifests containing no `removed` entry are carried
-    * forward VERBATIM (their metadata file is reused, not rewritten);
-    * manifests that do contain removed entries are opened once, their
-    * surviving entries joining `added` in freshly written manifests.
+  /** THE commit — O(changed files). Parent manifests containing no
+    * `removed` entry are carried forward VERBATIM (their metadata file is
+    * reused, not rewritten); manifests that do contain removed entries are
+    * opened once, their surviving entries joining `added` in freshly
+    * written manifests. Table creation is a commit with no parent and
+    * nothing added or removed; [[graft.maintain.ManifestRewrite]] removes
+    * every entry and adds them all back, regrouping the whole table.
     */
   def commitDelta(added: Vector[DataFile], removed: Vector[FileEntry],
                   operation: String,
@@ -387,37 +385,18 @@ class LakeTable(val root: String, val spark: SparkSession,
     val survivors = touched.flatMap { r =>
       manifest(r.path).entries.filterNot(e => removedByManifest(r.path)(e.path))
     }
-    finishCommit(parent, carried, survivors ++ added, operation, newSchema,
-      summary, entriesPerManifest)
-  }
-
-  /** Full commit: regroup ALL `newFiles` into fresh manifests. O(total
-    * files) metadata — reserved for table creation and explicit
-    * [[graft.maintain.ManifestRewrite]]; incremental ops use [[commitDelta]].
-    */
-  def commit(newFiles: Vector[DataFile], operation: String,
-             newSchema: Option[TableSchema] = None,
-             summary: Map[String, String] = Map.empty,
-             entriesPerManifest: Int = DefaultEntriesPerManifest): Snapshot =
-    finishCommit(currentSnapshot, Vector.empty, newFiles, operation, newSchema,
-      summary, entriesPerManifest)
-
-  private def finishCommit(parent: Option[Snapshot], carried: Vector[ManifestRef],
-                           fresh: Vector[DataFile], operation: String,
-                           newSchema: Option[TableSchema],
-                           summary: Map[String, String],
-                           entriesPerManifest: Int): Snapshot = {
+    val fresh = survivors ++ added
     val id = parent.map(_.id + 1).getOrElse(1L)
     val seq = parent.map(_.sequence + 1).getOrElse(1L)
     val sch = newSchema.orElse(parent.map(_.schema)).getOrElse(
       throw new IllegalStateException("first commit must provide a schema"))
 
-    // New manifests grouped by key range (sorted by min conv/turn) so scan
+    // New manifests grouped by key range (sorted by low key) so scan
     // planning can skip whole manifests. Names carry a uuid segment: a
     // failed commit attempt's orphan can never be overwritten into a file
     // some committed snapshot references.
     val unique = java.util.UUID.randomUUID().toString.take(8)
-    val sorted = fresh.sortBy(f => (f.minConv.getOrElse(""), f.minTurn.getOrElse(0)))
+    val sorted = fresh.sortBy(_.keys)(KeyRange.ByLow)
     val newRefs = sorted.grouped(entriesPerManifest).zipWithIndex.map {
       case (group, k) =>
         val rel = s"manifest-$id-$unique-$k.json"
@@ -581,7 +560,7 @@ object LakeTable {
       require(spark.conf.get(Crypto.SessionKeyConf, "").nonEmpty,
         s"encrypted table needs ${Crypto.SessionKeyConf} set on the session")
     }
-    t.commit(Vector.empty, "create", Some(TableSchema.fromStruct(schema)),
+    t.commitDelta(Vector.empty, Vector.empty, "create", Some(TableSchema.fromStruct(schema)),
       summary = if (encrypted) Map("encrypted" -> "uniform-aes-gcm") else Map.empty)
     t
   }

@@ -7,10 +7,10 @@ import org.apache.parquet.io.api.Binary
 
 import scala.jdk.CollectionConverters._
 
-/** Per-file min/max stat collection from Parquet FOOTERS — metadata-only
+/** A data file's [[KeyRange]] from its Parquet FOOTER — metadata-only
   * reads (a few KB per file), never a data scan. This is what makes stat
   * collection viable at 10^12-turn scale: the write job already produced
-  * row-group statistics; we only aggregate them per file. For large file
+  * row-group statistics; we only take their hull per file. For large file
   * counts the per-file footer reads parallelize trivially (they are
   * independent); the driver loop here is fine for thousands of files.
   *
@@ -19,15 +19,9 @@ import scala.jdk.CollectionConverters._
   */
 object ParquetStats {
 
-  final case class FileStats(
-      rows: Long, bytes: Long,
-      minConv: Option[String], maxConv: Option[String],
-      minTurn: Option[Int], maxTurn: Option[Int],
-      minTsUs: Option[Long] = None, maxTsUs: Option[Long] = None)
+  final case class FileStats(rows: Long, bytes: Long, keys: KeyRange)
 
-  def read(absPath: String, conf: Configuration,
-           convCol: String = "conv_id", turnCol: String = "turn_idx",
-           tsCol: String = "ts"): FileStats = {
+  def read(absPath: String, conf: Configuration): FileStats = {
     val path = new org.apache.hadoop.fs.Path(absPath)
     val in = HadoopInputFile.fromPath(path, conf)
     // HadoopReadOptions wires FileDecryptionProperties from the conf when a
@@ -39,31 +33,20 @@ object ParquetStats {
       val blocks = reader.getFooter.getBlocks.asScala.toVector
       val rows = blocks.map(_.getRowCount).sum
 
-      // A column's file-level range is only trustworthy if EVERY row group
-      // carries stats for it; otherwise claim None (file always selected).
-      def ranged[T](col: String, parse: AnyRef => T)(implicit ord: Ordering[T])
-          : (Option[T], Option[T]) = {
-        val perGroup = blocks.map { b =>
-          b.getColumns.asScala.find(_.getPath.toDotString == col).flatMap { c =>
-            val st = c.getStatistics
-            if (st != null && st.hasNonNullValue)
-              Some((parse(st.genericGetMin.asInstanceOf[AnyRef]),
-                    parse(st.genericGetMax.asInstanceOf[AnyRef])))
-            else if (st != null && st.isNumNullsSet && st.getNumNulls == b.getRowCount)
-              None // all-null group: contributes no range but doesn't poison
-            else None
-          }
-        }
-        val known = perGroup.flatten
-        val allNullGroups = blocks.zip(perGroup).count { case (b, g) =>
-          g.isEmpty && {
-            val st = b.getColumns.asScala.find(_.getPath.toDotString == col).map(_.getStatistics)
-            st.exists(s => s != null && s.isNumNullsSet && s.getNumNulls == b.getRowCount)
-          }
-        }
-        if (known.size + allNullGroups < blocks.size || known.isEmpty) (None, None)
-        else (Some(known.map(_._1).min), Some(known.map(_._2).max))
-      }
+      // A column's file range is the hull of its row groups' ranges, in
+      // the column's own order. A group whose column is all null adds
+      // nothing; a group without stats for it (or a file with no value in
+      // it) leaves the column unknown, so the file is always selected.
+      def hull[T](col: String, parse: AnyRef => T, on: Bounds[T] => KeyRange): KeyRange =
+        KeyRange.hull(blocks.flatMap { b =>
+          val st = b.getColumns.asScala.find(_.getPath.toDotString == col)
+            .map(_.getStatistics).orNull
+          if (st != null && st.hasNonNullValue)
+            Some(on(Bounds(Some(parse(st.genericGetMin.asInstanceOf[AnyRef])),
+              Some(parse(st.genericGetMax.asInstanceOf[AnyRef])))))
+          else if (st != null && st.isNumNullsSet && st.getNumNulls == b.getRowCount) None
+          else Some(KeyRange.all)
+        })
 
       def asStr(o: AnyRef): String = o match {
         case b: Binary => b.toStringUsingUTF8
@@ -79,13 +62,12 @@ object ParquetStats {
         case other => other.toString.toLong
       }
 
-      val (minC, maxC) = ranged(convCol, asStr)
-      val (minT, maxT) = ranged(turnCol, asInt)
-      // epoch-microsecond range: present only when the writer used
-      // TIMESTAMP_MICROS (INT64) — INT96 carries no stats, and the all-null
-      // / missing-column cases degrade to None exactly like conv/turn
-      val (minTs, maxTs) = ranged(tsCol, asLong)
-      FileStats(rows, in.getLength, minC, maxC, minT, maxT, minTs, maxTs)
+      // the ts range is present only when the writer used TIMESTAMP_MICROS
+      // (INT64): INT96 carries no stats
+      FileStats(rows, in.getLength, KeyRange(
+        hull(KeyRange.ConvCol, asStr, KeyRange.onConv).conv,
+        hull(KeyRange.TurnCol, asInt, KeyRange.onTurn).turn,
+        hull(KeyRange.TsCol, asLong, KeyRange.onTs).ts))
     } finally reader.close()
   }
 }

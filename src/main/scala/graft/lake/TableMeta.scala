@@ -15,8 +15,8 @@ import org.apache.spark.sql.types._
   *   - [[TableSchema]]: insertion-ordered fields, each with a STABLE int
   *     field-ID — the reference's "append-only evolving field list"
   *     (docs/processing-engine.md:147-154) made rename/reorder-safe;
-  *   - [[DataFile]]: one Parquet file + per-file min/max stats on
-  *     (conv_id, turn_idx) driving scan pruning;
+  *   - [[DataFile]]: one Parquet file + its [[KeyRange]] stats on
+  *     (conv_id, turn_idx, ts) driving scan pruning;
   *   - [[Manifest]]: a group of DataFile entries (own JSON file);
   *   - [[Snapshot]]: an immutable table version pointing at manifests.
   *
@@ -59,28 +59,19 @@ object TableSchema {
     }.toVector, st.fields.length)
 }
 
-/** One immutable Parquet data file with pruning stats. `path` is relative
-  * to the table root. Missing stats (null mins) disable pruning for the
-  * file — it is always selected (safe).
-  *
-  * `minTsUs`/`maxTsUs`: event-time range in epoch MICROseconds (Parquet
-  * TIMESTAMP_MICROS footer stats), driving row-retention pruning the same
-  * way conv/turn ranges drive scan pruning. `sketch`: the consolidated
-  * sketch batch (table-relative dir) covering this file's near-dup
-  * signatures, if one was published — coverage truth lives HERE, in the
-  * manifest entry, not in a per-file directory stat (the 10^6-file
-  * design point makes dir-per-file listing the bottleneck).
+/** One immutable Parquet data file with its footer stats. `path` is
+  * relative to the table root. `keys`: the file's [[KeyRange]], driving
+  * scan, MERGE and row-retention pruning; a missing bound never prunes.
+  * `sketch`: the consolidated sketch batch (table-relative dir) covering
+  * this file's near-dup signatures, if one was published — coverage truth
+  * lives HERE, in the manifest entry, not in a per-file directory stat (the
+  * 10^6-file design point makes dir-per-file listing the bottleneck).
   */
 final case class DataFile(
     path: String,
     rows: Long,
     bytes: Long,
-    minConv: Option[String],
-    maxConv: Option[String],
-    minTurn: Option[Int],
-    maxTurn: Option[Int],
-    minTsUs: Option[Long] = None,
-    maxTsUs: Option[Long] = None,
+    keys: KeyRange,
     sketch: Option[String] = None)
 
 final case class Manifest(path: String, entries: Vector[DataFile])
@@ -88,37 +79,21 @@ final case class Manifest(path: String, entries: Vector[DataFile])
 /** Snapshot-level manifest entry: path + aggregate stats persisted IN the
   * snapshot, so scan planning prunes whole manifests without opening them
   * and commits sum file/row totals without re-reading carried manifests.
-  * Missing bounds (no stats in any entry) disable pruning — always scanned.
+  * `keys` is the hull of the entries' ranges: one stats-less entry widens a
+  * bound to unknown (never pruned), keeping manifest-level pruning exactly
+  * as safe as file-level pruning.
   */
 final case class ManifestRef(
     path: String,
     entryCount: Long,
     rows: Long,
-    minConv: Option[String],
-    maxConv: Option[String],
-    minTurn: Option[Int],
-    maxTurn: Option[Int],
-    bytes: Long = 0L, // 0 = written before byte sums were persisted
-    minTsUs: Option[Long] = None,
-    maxTsUs: Option[Long] = None)
+    keys: KeyRange,
+    bytes: Long = 0L) // 0 = written before byte sums were persisted
 
 object ManifestRef {
-  /** Aggregate a manifest's entries into its snapshot-level ref. A single
-    * stats-less entry widens the bound to "unknown" (never-pruned), keeping
-    * manifest-level pruning exactly as safe as file-level pruning.
-    */
-  def of(path: String, entries: Vector[DataFile]): ManifestRef = {
-    def agg[T](get: DataFile => Option[T], pick: Vector[T] => T): Option[T] = {
-      val vs = entries.map(get)
-      if (vs.isEmpty || vs.exists(_.isEmpty)) None else Some(pick(vs.flatten))
-    }
+  def of(path: String, entries: Vector[DataFile]): ManifestRef =
     ManifestRef(path, entries.size.toLong, entries.map(_.rows).sum,
-      agg[String](_.minConv, _.min(IntervalDnf.ConvOrder)),
-      agg[String](_.maxConv, _.max(IntervalDnf.ConvOrder)),
-      agg[Int](_.minTurn, _.min), agg[Int](_.maxTurn, _.max),
-      bytes = entries.map(_.bytes).sum,
-      minTsUs = agg[Long](_.minTsUs, _.min), maxTsUs = agg[Long](_.maxTsUs, _.max))
-  }
+      KeyRange.hull(entries.map(_.keys)), entries.map(_.bytes).sum)
 }
 
 final case class Snapshot(
@@ -157,23 +132,31 @@ object MetaJson {
     TableSchema(fields, n.get("last_field_id").asInt)
   }
 
+  /** The one writer of a [[KeyRange]]: each present bound as its own key,
+    * shared by the data-file and manifest-ref codecs. */
+  private def putKeys(o: ObjectNode, k: KeyRange): ObjectNode = {
+    k.conv.lo.foreach(o.put("min_conv", _)); k.conv.hi.foreach(o.put("max_conv", _))
+    k.turn.lo.foreach(o.put("min_turn", _)); k.turn.hi.foreach(o.put("max_turn", _))
+    k.ts.lo.foreach(o.put("min_ts_us", _)); k.ts.hi.foreach(o.put("max_ts_us", _))
+    o
+  }
+
+  private def keysFromJson(n: JsonNode): KeyRange = KeyRange(
+    Bounds(opt(n, "min_conv").map(_.asText), opt(n, "max_conv").map(_.asText)),
+    Bounds(opt(n, "min_turn").map(_.asInt), opt(n, "max_turn").map(_.asInt)),
+    Bounds(opt(n, "min_ts_us").map(_.asLong), opt(n, "max_ts_us").map(_.asLong)))
+
   def dataFileToJson(d: DataFile): ObjectNode = {
     val o = mapper.createObjectNode()
     o.put("path", d.path); o.put("rows", d.rows); o.put("bytes", d.bytes)
-    d.minConv.foreach(o.put("min_conv", _)); d.maxConv.foreach(o.put("max_conv", _))
-    d.minTurn.foreach(o.put("min_turn", _)); d.maxTurn.foreach(o.put("max_turn", _))
-    d.minTsUs.foreach(o.put("min_ts_us", _)); d.maxTsUs.foreach(o.put("max_ts_us", _))
+    putKeys(o, d.keys)
     d.sketch.foreach(o.put("sketch", _))
     o
   }
 
   def dataFileFromJson(n: JsonNode): DataFile = DataFile(
     n.get("path").asText, n.get("rows").asLong, n.get("bytes").asLong,
-    opt(n, "min_conv").map(_.asText), opt(n, "max_conv").map(_.asText),
-    opt(n, "min_turn").map(_.asInt), opt(n, "max_turn").map(_.asInt),
-    minTsUs = opt(n, "min_ts_us").map(_.asLong),
-    maxTsUs = opt(n, "max_ts_us").map(_.asLong),
-    sketch = opt(n, "sketch").map(_.asText))
+    keysFromJson(n), opt(n, "sketch").map(_.asText))
 
   def manifestToJson(m: Manifest): ObjectNode = {
     val o = mapper.createObjectNode()
@@ -189,19 +172,12 @@ object MetaJson {
     val o = mapper.createObjectNode()
     o.put("path", r.path); o.put("entry_count", r.entryCount); o.put("rows", r.rows)
     o.put("bytes", r.bytes)
-    r.minConv.foreach(o.put("min_conv", _)); r.maxConv.foreach(o.put("max_conv", _))
-    r.minTurn.foreach(o.put("min_turn", _)); r.maxTurn.foreach(o.put("max_turn", _))
-    r.minTsUs.foreach(o.put("min_ts_us", _)); r.maxTsUs.foreach(o.put("max_ts_us", _))
-    o
+    putKeys(o, r.keys)
   }
 
   def manifestRefFromJson(n: JsonNode): ManifestRef = ManifestRef(
     n.get("path").asText, n.get("entry_count").asLong, n.get("rows").asLong,
-    opt(n, "min_conv").map(_.asText), opt(n, "max_conv").map(_.asText),
-    opt(n, "min_turn").map(_.asInt), opt(n, "max_turn").map(_.asInt),
-    bytes = opt(n, "bytes").map(_.asLong).getOrElse(0L),
-    minTsUs = opt(n, "min_ts_us").map(_.asLong),
-    maxTsUs = opt(n, "max_ts_us").map(_.asLong))
+    keysFromJson(n), opt(n, "bytes").map(_.asLong).getOrElse(0L))
 
   def snapshotToJson(s: Snapshot): ObjectNode = {
     val o = mapper.createObjectNode()

@@ -4,7 +4,7 @@ import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 
 import graft.functions.{Cached, ZOrder}
-import graft.lake.{DataFile, LakeTable, Snapshot}
+import graft.lake.{DataFile, KeyRange, LakeTable, Snapshot}
 
 /** Z-order clustering on (conv_id, turn_idx) — the 64-bit interleave of the
   * order-preserving conv key and the turn index ([[graft.functions.ZOrder]]).
@@ -84,8 +84,7 @@ object Clustering {
     */
   private[maintain] def layout(table: LakeTable, counted: Ledger.Counted,
                                groupTargetBytes: Long, curve: String): Ledger.Layout = {
-    val files = table.currentFiles
-      .sortBy(f => (f.minConv.getOrElse(""), f.minTurn.getOrElse(0)))
+    val files = table.currentFiles.sortBy(_.keys)(KeyRange.ByLow)
     val clean = lastClusterSnapshot(table).flatMap { s =>
       try Some(table.dataFiles(s).map(_.path).toSet)
       catch { case _: Exception => None }
@@ -188,11 +187,11 @@ object Clustering {
     */
   def planGroups(files: Vector[DataFile], targetBytes: Long): Vector[Vector[DataFile]] = {
     if (files.isEmpty) return Vector.empty
-    val keys = files.flatMap(f => f.minConv.map(ZOrder.convOrderKeyScala).toSeq ++
-      f.maxConv.map(ZOrder.convOrderKeyScala).toSeq).map(_.toLong)
+    val keys = files.flatMap(f => f.keys.conv.lo.map(ZOrder.convOrderKeyScala).toSeq ++
+      f.keys.conv.hi.map(ZOrder.convOrderKeyScala).toSeq).map(_.toLong)
     val tableSpan = if (keys.isEmpty) 1L else math.max(1L, keys.max - keys.min)
     val spans = files.map { f =>
-      (f.minConv.map(ZOrder.convOrderKeyScala), f.maxConv.map(ZOrder.convOrderKeyScala)) match {
+      (f.keys.conv.lo.map(ZOrder.convOrderKeyScala), f.keys.conv.hi.map(ZOrder.convOrderKeyScala)) match {
         case (Some(a), Some(b)) => (b.toLong - a.toLong).toDouble / tableSpan
         case _ => 1.0
       }

@@ -204,8 +204,12 @@ object OrphanGc {
   * no data moves — keeping planning cost bounded as file counts grow.
   */
 object ManifestRewrite {
-  def rewrite(table: LakeTable, entriesPerManifest: Int = 1000): graft.lake.Snapshot =
-    table.commit(table.currentFiles, "rewrite-manifests",
+  def rewrite(table: LakeTable, entriesPerManifest: Int = 1000): graft.lake.Snapshot = {
+    // every manifest is touched and no entry survives, so the commit
+    // regroups all the files into fresh manifests
+    val entries = table.currentEntries
+    table.commitDelta(entries.map(_.file), entries, "rewrite-manifests",
       summary = Map("entries_per_manifest" -> entriesPerManifest.toString),
       entriesPerManifest = entriesPerManifest)
+  }
 }

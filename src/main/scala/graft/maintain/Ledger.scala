@@ -6,7 +6,7 @@ import com.fasterxml.jackson.databind.JsonNode
 
 import org.apache.spark.sql.{DataFrame, SparkSession}
 
-import graft.lake.{DataFile, FileIO, LakeTable, MetaJson, Snapshot}
+import graft.lake.{DataFile, FileIO, KeyRange, LakeTable, MetaJson, Snapshot}
 
 import scala.jdk.CollectionConverters._
 
@@ -290,8 +290,8 @@ object Ledger {
     * the files holding rows it drops.
     */
   def keyLayout(c: Counted, groupTargetBytes: Long): Layout =
-    Layout(Clustering.greedyGroups(c.perFile.keys.toVector
-      .sortBy(f => (f.minConv.getOrElse(""), f.minTurn.getOrElse(0), f.path)), groupTargetBytes))
+    Layout(Clustering.greedyGroups(c.perFile.keys.toVector.sortBy(f => (f.keys, f.path))(
+      Ordering.Tuple2(KeyRange.ByLow, Ordering.String)), groupTargetBytes))
 
   /** A committed rewrite; `rowsRewritten` counts the groups this call ran. */
   final case class Rewritten(snapshot: Snapshot, droppedRows: Long, touchedFiles: Int,

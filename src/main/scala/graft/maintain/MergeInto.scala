@@ -12,7 +12,7 @@ import org.apache.spark.sql.types.{StringType, StructType}
 
 import graft.functions.Cached
 import graft.ingest.Normalize
-import graft.lake.{FieldDef, IntervalDnf, LakeTable, Snapshot, TableSchema}
+import graft.lake.{FieldDef, KeyRange, LakeTable, Snapshot, TableSchema}
 
 /** MERGE INTO keyed on (conv_id, turn_idx) with the reference's
   * non-empty-wins update semantics (`_group_records_by_id`,
@@ -90,7 +90,7 @@ object MergeInto {
       val convs = dedup.map(_.getUTF8String(0).toString)
       val range =
         if (convs.isEmpty) None
-        else Some((convs.min(IntervalDnf.ConvOrder), convs.max(IntervalDnf.ConvOrder)))
+        else Some((convs.min(KeyRange.ConvOrder), convs.max(KeyRange.ConvOrder)))
       // every column nullable: one schema, whatever columns the drop
       // carries, keeps every drop on one plan (one set of generated classes)
       val keyed = StructType(Seq(st(ci), st(ti)) ++ dataFields.map(f => st(f.name)))

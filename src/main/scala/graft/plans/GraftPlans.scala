@@ -9,7 +9,7 @@ import org.apache.spark.sql.graftx.Bridge
 import org.apache.spark.sql.types.{LongType, StringType, StructField, StructType, TimestampType}
 import org.apache.spark.unsafe.types.UTF8String
 
-import graft.lake.{IntervalDnf, LakeTable}
+import graft.lake.{IntervalDnf, KeyRange, LakeTable}
 
 /** SQL-transparent lake scans: a custom Catalyst leaf [[GraftTableScan]] +
   * an optimizer [[Rule]] that plans it — the (c) tier of the build contract
@@ -223,13 +223,13 @@ class PruneGraftScans(spark: SparkSession) extends Rule[LogicalPlan] {
   }
 
   private def rewrite(g: GraftTableScan,
-                      conjs: Seq[IntervalDnf.Conj] = Seq(IntervalDnf.Conj.all)): LogicalPlan = {
+                      boxes: Seq[KeyRange] = Seq(KeyRange.all)): LogicalPlan = {
     val table = LakeTable.load(spark, g.root)
     val snap = g.snapshotId.map(table.snapshot)
       .getOrElse(table.currentSnapshot.get)
     // a file/manifest is scanned iff ANY box overlaps its stats; an EMPTY
     // box list (statically unsatisfiable predicate) scans nothing
-    val selected = table.overlappingEntriesBoxes(snap, conjs).entries.map(_.file)
+    val selected = table.overlappingEntriesBoxes(snap, boxes).entries.map(_.file)
     val st = snap.schema.toStruct
     val rel: LogicalPlan =
       if (selected.isEmpty) LocalRelation(g.output)

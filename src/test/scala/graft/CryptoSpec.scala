@@ -63,7 +63,7 @@ class CryptoSpec extends AnyFunSuite {
         assert(hay.startsWith("PARE"), s"${f.path} must carry the encrypted-parquet magic")
       }
       // footer stats STILL drive pruning (readable with the key)
-      assert(t.currentFiles.forall(f => f.minConv.isDefined && f.minTsUs.isDefined))
+      assert(t.currentFiles.forall(f => f.keys.conv.lo.isDefined && f.keys.ts.lo.isDefined))
 
       // merge + full maintenance cycle over ciphertext
       import spark.implicits._

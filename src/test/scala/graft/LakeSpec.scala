@@ -73,13 +73,13 @@ class LakeSpec extends AnyFunSuite {
       tb.append(dropB, "free")
       val (lo, hi) = dropB.select(unix_micros(min(col("ts"))), unix_micros(max(col("ts"))))
         .collect().map(r => (r.getLong(0), r.getLong(1))).head
-      assert(tb.currentFiles.flatMap(_.minTsUs).minOption.contains(lo) &&
-        tb.currentFiles.flatMap(_.maxTsUs).maxOption.contains(hi),
+      assert(tb.currentFiles.flatMap(_.keys.ts.lo).minOption.contains(lo) &&
+        tb.currentFiles.flatMap(_.keys.ts.hi).maxOption.contains(hi),
         s"session B's files need microsecond ts stats: ${tb.currentFiles}")
       assert(a.conf.get(key) == "INT96")
     } finally WriteGate.open.countDown()
     Await.result(writeA, 120.seconds)
-    assert(ta.currentFiles.nonEmpty && ta.currentFiles.forall(_.minTsUs.isDefined))
+    assert(ta.currentFiles.nonEmpty && ta.currentFiles.forall(_.keys.ts.lo.isDefined))
     assert(a.conf.get(key) == "INT96" && b.conf.get(key) == "TIMESTAMP_MILLIS")
   }
 
@@ -389,9 +389,9 @@ class LakeSpec extends AnyFunSuite {
         for (o <- Seq(oa, ob)) {
           // key-sorted outputs: each file's conv range ends where the next
           // starts (a hot conversation may fill several files)
-          val byKey = o.sortBy(f => (f.minConv.get, f.maxConv.get))
+          val byKey = o.sortBy(f => (f.keys.conv.lo.get, f.keys.conv.hi.get))
           byKey.zip(byKey.tail).foreach { case (x, y) =>
-            assert(x.maxConv.get <= y.minConv.get, s"overlapping ${x.path} and ${y.path}")
+            assert(x.keys.conv.hi.get <= y.keys.conv.lo.get, s"overlapping ${x.path} and ${y.path}")
           }
         }
       info(s"$name: ${oa.size} files; one task $one, shuffled $shuffled")
@@ -450,9 +450,9 @@ class LakeSpec extends AnyFunSuite {
         assert(FileIO.Local.list(f.ledgerDir).filter(_.startsWith("fc-")) == Vector("fc-cluster"))
         assert(fused.cluster.groups == 3, s"groups: ${fused.cluster}")
         for (t <- Seq(f, s)) {
-          val byKey = t.currentFiles.sortBy(f => (f.minConv.get, f.maxConv.get))
+          val byKey = t.currentFiles.sortBy(f => (f.keys.conv.lo.get, f.keys.conv.hi.get))
           byKey.zip(byKey.tail).foreach { case (a, b) =>
-            assert(a.maxConv.get <= b.minConv.get, s"overlapping ${a.path} and ${b.path}")
+            assert(a.keys.conv.hi.get <= b.keys.conv.lo.get, s"overlapping ${a.path} and ${b.path}")
           }
         }
       }
@@ -1054,7 +1054,7 @@ class LakeSpec extends AnyFunSuite {
     val data = synth(100).where(col("conv_id") =!= "c00000000")
     t.append(data.repartitionByRange(10, col("conv_id"), col("turn_idx"))
       .sortWithinPartitions("conv_id", "turn_idx"), "init")
-    assert(t.currentFiles.forall(f => f.minTsUs.isDefined && f.maxTsUs.isDefined),
+    assert(t.currentFiles.forall(f => f.keys.ts.lo.isDefined && f.keys.ts.hi.isDefined),
       "TIMESTAMP_MICROS writes must persist per-file event-time stats")
     val filesBefore = t.currentFiles.map(_.path).toSet
 
