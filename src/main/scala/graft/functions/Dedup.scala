@@ -4,6 +4,8 @@ import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types.LongType
 
+import graft.Log
+
 /** Deduplication primitives for training-data pipelines: exact keys,
   * word-shingles, MinHash signatures + LSH banding, SimHash. All pure
   * `Column` compositions over built-ins (xxhash64, transform, aggregate) —
@@ -393,14 +395,14 @@ object Dedup {
   }
 
   /** [[dedupGroupsResult]] returning just the labeling; an unconverged run
-    * (chain diameter beyond the cap) is surfaced loudly on stderr instead
-    * of silently returning split groups.
+    * (chain diameter beyond the cap) is logged as a warning instead of
+    * silently returning split groups.
     */
   def dedupGroups(ids: DataFrame, idCol: String, pairs: DataFrame,
                   maxIters: Int = 50): DataFrame = {
     val r = dedupGroupsResult(ids, idCol, pairs, maxIters)
     if (!r.converged)
-      System.err.println(s"[graft.dedup] WARNING: label propagation did not " +
+      Log.warn(s"dedup: label propagation did not " +
         s"converge within $maxIters rounds — groups may be split finer than " +
         "true components; re-run with a higher maxIters or use dedupGroupsResult")
     r.groups

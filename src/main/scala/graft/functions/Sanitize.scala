@@ -20,12 +20,14 @@ object Sanitize {
   def stripWs(c: Column): Column =
     regexp_replace(c, "^\\s+|\\s+$", "")
 
+  private val EdgeWs = java.util.regex.Pattern.compile("^\\s+|\\s+$")
+
   /** Driver-side scalar twin of [[stripWs]] — the SAME Java regex Spark's
-    * regexp_replace applies, so keys normalized on the driver (the
-    * transposer's) match the Column path exactly.
+    * regexp_replace applies (compiled once, not per cell), so cells
+    * sanitized on the driver match the Column path exactly.
     */
   def stripWsScala(s: String): String =
-    if (s == null) "" else s.replaceAll("^\\s+|\\s+$", "")
+    if (s == null) "" else EdgeWs.matcher(s).replaceAll("")
 
   /** Escape one string cell. Null-safe: null -> "". */
   def sanitizeCell(c: Column): Column = {

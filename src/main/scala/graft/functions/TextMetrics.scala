@@ -5,7 +5,7 @@ import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types.LongType
 
 /** Text-analysis primitives for large-scale training-data pipelines:
-  * tokenization, language-ID heuristic, quality scoring, fingerprinting.
+  * tokenization, language-ID heuristic, fingerprinting.
   * All pure `Column` compositions (codegen'd, no UDFs) so they vectorize
   * over 100 TB scans.
   */
@@ -48,21 +48,6 @@ object TextMetrics {
     }
     // foldLeft keeps the FIRST language reaching the max (deterministic).
     pick
-  }
-
-  /** Quality metrics struct: n_chars, n_tokens, avg token length (x100 as
-    * long, exact integer arithmetic), punctuation count, stopword hits.
-    */
-  def qualityMetrics(text: Column): Column = {
-    val t = coalesce(text, lit(""))
-    val nTok = tokenCount(t)
-    struct(
-      length(t).as("n_chars"),
-      nTok.as("n_tokens"),
-      (length(t) * 100L / greatest(nTok.cast(LongType), lit(1L))).as("avg_tok_len_x100"),
-      (length(t) - length(regexp_replace(t, "[\\p{Punct}]", ""))).as("n_punct"),
-      wordHits(t, StopwordTables.flatMap(_._2)).as("n_stopword"),
-    )
   }
 
   /** Positional polynomial fingerprint of a document: sum over characters of

@@ -1,17 +1,21 @@
 package graft.ingest
 
-import org.apache.spark.sql.{DataFrame, SparkSession}
-import org.apache.spark.sql.functions._
+import scala.jdk.CollectionConverters._
+
+import org.apache.spark.sql.{DataFrame, Row, SparkSession}
+import org.apache.spark.sql.types.{StringType, StructField, StructType}
 
 import graft.functions.Sanitize
 
-/** Horizontal (standard) CSV parsing with a detected dialect, followed by
-  * the reference's row/field sanitization (csv_handler.py:100-143):
-  * header names trimmed, empty header names dropped, every cell trimmed +
+/** Horizontal (standard) CSV parsing with a detected dialect, with the
+  * reference's row/field sanitization (csv_handler.py:100-143): header
+  * names trimmed, empty header names dropped, every cell trimmed +
   * formula-escape sanitized, null cells -> "".
   *
-  * Parses with [[StrictCsv]] (CPython csv.reader parity) on the driver;
-  * the sanitize projection runs in Spark over the parsed rows.
+  * Parses with [[StrictCsv]] (CPython csv.reader parity) on the driver and
+  * sanitizes each cell there with [[Sanitize.sanitizeCellScala]] while it
+  * builds the rows, as [[Transposer]] does, so the records are a local
+  * relation with no Spark projection of their own.
   */
 object Horizontal {
 
@@ -24,34 +28,23 @@ object Horizontal {
     * column order = first occurrence, value = LAST occurrence's cell.
     */
   def parseContent(spark: SparkSession, content: String, dialect: Dialect): DataFrame = {
-    import org.apache.spark.sql.Row
-    import org.apache.spark.sql.types.{StringType, StructField, StructType}
-    import scala.jdk.CollectionConverters._
     val rows = StrictCsv.parse(content, dialect.delimiter, dialect.quote, strict = false)
       .filter(_.nonEmpty) // DictReader skips blank rows
     if (rows.isEmpty)
       return spark.createDataFrame(new java.util.ArrayList[Row](), StructType(Nil))
-    val header = rows.head
-    // dedupe on the TRIMMED name (sanitizeColumns trims later): first-seen
-    // order, last occurrence's position supplies the value
-    val order = header.map(_.trim).distinct
-    val lastPos = header.zipWithIndex.groupBy(_._1.trim)
+    // dedupe on the TRIMMED name: first-seen order, last occurrence's
+    // position supplies the value; an empty name is dropped
+    val names = rows.head.map(_.trim)
+    val lastPos = names.zipWithIndex.groupBy(_._1)
       .map { case (n, occ) => n -> occ.last._2 }
-    val cols = order.map(n => (n, lastPos(n)))
-    val st = StructType(cols.map { case (n, _) => StructField(n, StringType) })
+    val cols = names.distinct.filter(_.nonEmpty).map(n => (n, lastPos(n)))
+    // a sanitized cell is never null: a short row's missing cell is ""
+    val st = StructType(cols.map { case (n, _) => StructField(n, StringType, nullable = false) })
     val data: java.util.List[Row] = rows.tail.map { r =>
-      Row.fromSeq(cols.map { case (_, i) => if (i < r.length) r(i) else null })
+      Row.fromSeq(cols.map { case (_, i) =>
+        Sanitize.sanitizeCellScala(if (i < r.length) r(i) else null)
+      })
     }.asJava
-    sanitizeColumns(spark.createDataFrame(data, st))
-  }
-
-  /** Trim header names, drop empty-named columns, sanitize every cell. */
-  def sanitizeColumns(df: DataFrame): DataFrame = {
-    val keep = df.columns.filter(_.trim.nonEmpty)
-    val cols = keep.map(c => Sanitize.sanitizeCell(col(s"`$c`")).as(c.trim))
-    val projected = df.select(cols.toIndexedSeq: _*)
-    // Reference `_sanitize_row` drops rows whose sanitized dict is empty —
-    // with a fixed header that is only the no-columns case, handled above.
-    projected
+    spark.createDataFrame(data, st)
   }
 }

@@ -8,7 +8,9 @@ import graft.lake.FileIO
 /** Adaptive ingest pipeline: Detect -> Decide -> Parse -> Sanitize
   * (reference: docs/processing-engine.md:20; csv_handler.py:114-148).
   * Detection and layout classification are O(1) driver-side sample work;
-  * parsing/sanitization run as Spark plans.
+  * a drop is bounded (50 MB cap), so it is parsed and sanitized on the
+  * driver into a local relation. [[graft.streaming.StreamIngest]] runs
+  * this same path for each streamed drop.
   */
 object Ingest {
 

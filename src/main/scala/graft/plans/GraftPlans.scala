@@ -128,14 +128,14 @@ object GraftPlans {
     * every query, so later commits are visible without re-registration
     * (pin explicitly with [[registerAsOf]]). A SQL user picks a version
     * from the snapshots listing and opens it with [[registerAsOf]].
-    * Also registers the name for SQL DML statements (`DELETE FROM <name>
-    * WHERE ...`) in sessions built with [[GraftSparkExtensions]].
+    * In sessions built with [[GraftSparkExtensions]], SQL DML statements
+    * (`DELETE FROM <name> WHERE ...`) route to the table for as long as
+    * `<name>` is this view.
     */
   def registerTable(spark: SparkSession, table: LakeTable, name: String): Unit = {
     install(spark)
     scan(spark, table).createOrReplaceTempView(name)
     snapshots(spark, table).createOrReplaceTempView(s"${name}_snapshots")
-    GraftSqlRegistry.register(spark, name, table.root)
   }
 
   /** SQL time travel: register view `name` pinned at `snapshotId`

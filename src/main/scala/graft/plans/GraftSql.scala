@@ -33,38 +33,11 @@ import graft.maintain.{DeleteFrom, MergeInto}
   * evolution, O(changed files) commit). Enabled per session via
   * [[GraftSparkExtensions]] (`injectParser` exists only at session build
   * time); Spark's own parser already produces `DeleteFromTable` /
-  * `MergeIntoTable` plans — this parser only REROUTES those targeting a
-  * registered lake view into runnable commands, everything else (including
-  * the statements over non-lake tables) passes through verbatim.
+  * `MergeIntoTable` plans — this parser only REROUTES those whose target
+  * is, when the statement is parsed, a live lake view into runnable
+  * commands; everything else (including the statements over non-lake
+  * tables and views) passes through verbatim.
   */
-object GraftSqlRegistry {
-  // weak session keys: a registry entry must not keep a closed session's
-  // whole object graph alive in a long-lived JVM hosting many sessions
-  private val roots = java.util.Collections.synchronizedMap(
-    new java.util.WeakHashMap[SparkSession,
-      java.util.concurrent.ConcurrentHashMap[String, String]]())
-
-  def register(spark: SparkSession, name: String, root: String): Unit = {
-    val m = roots.synchronized {
-      var cur = roots.get(spark)
-      if (cur == null) {
-        cur = new java.util.concurrent.ConcurrentHashMap[String, String]()
-        roots.put(spark, cur)
-      }
-      cur
-    }
-    m.put(name.toLowerCase(java.util.Locale.ROOT), root)
-  }
-
-  def lookup(spark: SparkSession, nameParts: Seq[String]): Option[String] =
-    nameParts match {
-      case Seq(one) =>
-        Option(roots.get(spark))
-          .flatMap(m => Option(m.get(one.toLowerCase(java.util.Locale.ROOT))))
-      case _ => None
-    }
-}
-
 class GraftSqlParser(session: SparkSession, delegate: ParserInterface)
     extends ParserInterface {
 
@@ -72,7 +45,7 @@ class GraftSqlParser(session: SparkSession, delegate: ParserInterface)
     rewrite(delegate.parsePlan(sqlText))
 
   /** `DELETE FROM t` / `MERGE INTO t [AS alias]` — the target may sit under
-    * a SubqueryAlias; the registry key is the bare relation name.
+    * a SubqueryAlias; the view is looked up by the bare relation name.
     */
   private def targetName(p: LogicalPlan): Option[Seq[String]] = p match {
     case u: UnresolvedRelation => Some(u.multipartIdentifier)
@@ -80,15 +53,29 @@ class GraftSqlParser(session: SparkSession, delegate: ParserInterface)
     case _ => None
   }
 
+  /** The (name, root) of the live lake table a DML target names: a one-part
+    * name whose temp view, as the session holds it now, is exactly the live
+    * scan [[GraftPlans.registerTable]] registers. A view pinned by
+    * [[GraftPlans.registerAsOf]], replaced by another plan, or dropped is
+    * not routed, so the statement follows Spark's own path.
+    */
+  private def lakeTarget(target: LogicalPlan): Option[(String, String)] =
+    targetName(target) match {
+      case Some(Seq(name)) =>
+        session.sessionState.catalog.getRawTempView(name).flatMap(_.plan).collect {
+          case g: GraftTableScan if g.snapshotId.isEmpty => (name, g.root)
+        }
+      case _ => None
+    }
+
   /** Qualifiers that may prefix a column of the DELETE target: the alias
     * (if any) and the relation name itself — both stripped from the
     * condition before it is re-rendered to SQL, because DeleteFrom.run
     * resolves the predicate against the BARE table schema (an aliased
     * `DELETE FROM transcripts t WHERE t.conv_id = ...` otherwise fails
     * analysis on every reference). Only the leading name part is a
-    * qualifier (a registered target is a one-part name, see
-    * [[GraftSqlRegistry.lookup]]); the rest may be a struct field path
-    * (`t.meta.lang`).
+    * qualifier (a routed target is a one-part name, see [[lakeTarget]]);
+    * the rest may be a struct field path (`t.meta.lang`).
     */
   private def stripTargetQualifier(cond: Expression,
                                    target: LogicalPlan): Expression = {
@@ -106,17 +93,16 @@ class GraftSqlParser(session: SparkSession, delegate: ParserInterface)
 
   private def rewrite(plan: LogicalPlan): LogicalPlan = plan match {
     case DeleteFromTable(target, cond) =>
-      targetName(target).flatMap(GraftSqlRegistry.lookup(session, _)) match {
-        case Some(root) =>
+      lakeTarget(target) match {
+        case Some((_, root)) =>
           GraftDeleteCommand(root, stripTargetQualifier(cond, target).sql)
         case None => plan
       }
     case m @ MergeIntoTable(target, source, cond,
         matched, notMatched, bySource, _) =>
-      targetName(target).flatMap(n =>
-        GraftSqlRegistry.lookup(session, n).map(r => (n, r))) match {
-        case Some((n, root)) =>
-          validateMergeShape(cond, matched, notMatched, bySource, n.mkString("."))
+      lakeTarget(target) match {
+        case Some((name, root)) =>
+          validateMergeShape(cond, matched, notMatched, bySource, name)
           GraftMergeCommand(root, source)
         case None => m
       }

@@ -385,6 +385,34 @@ class PlansSpec extends AnyFunSuite {
     assert(e.getMessage.contains("keyed upsert"))
   }
 
+  test("SQL DML follows the session's view: a replaced or dropped view no longer routes") {
+    import spark.implicits._
+    val t = freshTable("plans-sqlroute", 20, 2)
+    GraftPlans.registerTable(spark, t, "sqlroute_t")
+    Seq(("c00000001", "0", "user", "MERGED", "", 0L))
+      .toDF("conv_id", "turn_idx", "role", "text", "tool", "_seq")
+      .createOrReplaceTempView("sqlroute_src")
+    val n = t.scan().df.count()
+    val snap = t.currentSnapshotId
+    def dml(): Unit = {
+      scala.util.Try(spark.sql("DELETE FROM sqlroute_t WHERE turn_idx = 0").collect())
+      scala.util.Try(spark.sql(
+        """MERGE INTO sqlroute_t t USING sqlroute_src s
+          |ON t.conv_id = s.conv_id AND t.turn_idx = s.turn_idx
+          |WHEN MATCHED THEN UPDATE SET *
+          |WHEN NOT MATCHED THEN INSERT *""".stripMargin).collect())
+      assert(t.currentSnapshotId == snap && t.scan().df.count() == n,
+        "a DML statement reached the lake through a view that is no longer its scan")
+    }
+    spark.range(3).createOrReplaceTempView("sqlroute_t")
+    dml()
+    spark.catalog.dropTempView("sqlroute_t")
+    dml()
+    // a view pinned to a snapshot is not routed either
+    GraftPlans.registerAsOf(spark, t, "sqlroute_t", snapshotId = snap)
+    dml()
+  }
+
   test("ivfTopK works on array<double> embeddings (no float-encoder assumption)") {
     import spark.implicits._
     val vecs = (1L to 30L).map { i =>

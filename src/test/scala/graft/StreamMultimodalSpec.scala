@@ -21,30 +21,78 @@ class StreamIngestSpec extends AnyFunSuite {
     t.append(TranscriptSynth.turns(spark, 10, seed = 42L), "init")
     val before = t.scan().df.count()
 
-    // drop 1: new conversation + injection payload; drop 2: update turn 0
+    // drop 1: new conversation + injection payload; drop 2: update turn 0,
+    // its columns in another order (aligned by name, as a batch drop is)
     Files.writeString(dropDir.resolve("d1.csv"),
       "conv_id,turn_idx,role,text,tool\nzz001,0,user,=SUM(A1),\nzz001,1,assistant,ok,\n")
     Files.writeString(dropDir.resolve("d2.csv"),
-      "conv_id,turn_idx,role,text,tool\nzz001,0,user,updated,\n")
+      "text,turn_idx,conv_id,role,tool\nupdated,0,zz001,user,\n")
 
     val q = StreamIngest.start(t, dropDir.toString,
-      Seq("conv_id", "turn_idx", "role", "text", "tool"),
       checkpointDir = Some(base.resolve("ckpt").toString))
     try q.processAllAvailable() finally q.stop()
 
     val rows = t.scan(convRange = Some(("zz001", "zz001"))).df
       .orderBy("turn_idx").collect()
     assert(rows.length == 2)
-    // both drops may land in one micro-batch (file order = d1 before d2) or
-    // two; either way the final text must be the later drop's value OR the
-    // sanitized first (merge order within one batch has no _seq here) — the
-    // invariant that MUST hold: sanitization happened and the row exists.
+    // drops merge in (modification time, path) order, one MERGE each, so
+    // d2's value replaces d1's sanitized formula
     val texts = rows.map(_.getString(3)).toSet
     assert(texts.contains("ok"))
-    assert(rows(0).getString(3) == "updated" || rows(0).getString(3) == "'=SUM(A1)")
+    assert(rows(0).getString(3) == "updated")
     assert(t.scan().df.count() == before + 2)
     // at least one stream merge committed
     assert(t.allSnapshots.exists(_.summary.get("merge_tag").exists(_.startsWith("stream-"))))
+  }
+
+  test("a streamed drop takes the batch drop path: multiline, dialect, new column, vertical") {
+    val base = Paths.get("target", "test-stream", "s" + System.nanoTime())
+    val dropDir = base.resolve("drops"); Files.createDirectories(dropDir)
+    val t = LakeTable.create(spark, base.resolve("table").toString,
+      TranscriptSynth.schema)
+    t.append(TranscriptSynth.turns(spark, 10, seed = 42L), "init")
+    val before = t.scan().df.count()
+
+    // written in this order, each a second later than the one before
+    val drops = Seq(
+      "a1.csv" -> ("conv_id,turn_idx,role,text,tool\n" +
+        "zs001,0,user,\"line one\nline two\",\nzs001,1,assistant,first answer,\n"),
+      "a2.csv" -> ("conv_id;turn_idx;role;text;tool\n" +
+        "zs002;0;user;semi text;\nzs002;1;assistant;semi answer;\n"),
+      "a3.csv" -> "conv_id,turn_idx,role,text,tool,note\nzs003,0,user,noted,,hello note\n",
+      "a4.csv" -> ("conv_id,zs004\nturn_idx,0\nrole,user\ntext,vertical text\n" +
+        "conv_id,zs004\nturn_idx,1\nrole,assistant\ntext,vertical answer\n"),
+      "notes.txt" -> "not a drop\n",
+      "a5.csv" -> "conv_id,turn_idx,role,text,tool\nzs001,1,assistant,corrected answer,\n")
+    val t0 = System.currentTimeMillis() - 60000L
+    drops.zipWithIndex.foreach { case ((name, body), i) =>
+      val f = dropDir.resolve(name)
+      Files.writeString(f, body)
+      Files.setLastModifiedTime(f, java.nio.file.attribute.FileTime.fromMillis(t0 + i * 1000L))
+    }
+
+    val q = StreamIngest.start(t, dropDir.toString,
+      checkpointDir = Some(base.resolve("ckpt").toString))
+    try {
+      q.processAllAvailable()
+      // the stray file was skipped, not fatal
+      assert(q.isActive && q.exception.isEmpty)
+    } finally q.stop()
+
+    val got = t.scan(convRange = Some(("zs001", "zs004"))).df
+      .select("conv_id", "turn_idx", "role", "text", "note").collect()
+      .map(r => (r.getString(0), r.getInt(1)) -> r).toMap
+    assert(got.keySet == Set(("zs001", 0), ("zs001", 1), ("zs002", 0), ("zs002", 1),
+      ("zs003", 0), ("zs004", 0), ("zs004", 1)))
+    assert(got(("zs001", 0)).getString(3) == "line one\nline two")
+    assert(got(("zs001", 1)).getString(3) == "corrected answer")
+    assert(got(("zs002", 0)).getString(3) == "semi text")
+    assert(got(("zs002", 1)).getString(2) == "assistant")
+    assert(got(("zs003", 0)).getString(4) == "hello note")
+    assert(got(("zs004", 0)).getString(3) == "vertical text")
+    assert(got(("zs004", 1)).getString(2) == "assistant")
+    assert(t.schema.toStruct.fieldNames.contains("note"))
+    assert(t.scan().df.count() == before + 7)
   }
 }
 
